@@ -3,8 +3,9 @@
     python3 -m pytest perfbench/test_tracing.py -q
 
 Runs every workload's operations once with the layers wrapped and the
-event log on, then checks that each layer's job group reaches the log and
-that the layers' task times add up to the total of the traced stages.
+event log on, then checks that each layer's job group reaches the log,
+that the layers' task times add up to the task time the log gives the
+traced jobs, and that the per-operation coverage adds up.
 """
 
 from __future__ import annotations
@@ -61,13 +62,14 @@ def traced(tmp_path_factory):
         tracer.uninstall()
         spark.stop()
         mp.undo()
-    stages = T.parse(T.read_events(str(log_dir)))
+    events = T.read_events(str(log_dir))
+    stages = T.parse(events)
     T.attribute(stages, tracer.spans)
-    return stages, tracer.spans
+    return stages, tracer.spans, events
 
 
 def test_every_layer_reaches_the_log(traced):
-    stages, spans = traced
+    stages, spans, _ = traced
     groups = {s["group"] for s in stages.values()}
     for s in spans:
         if s["name"].startswith(T.OP_PREFIX):
@@ -80,18 +82,42 @@ def test_every_layer_reaches_the_log(traced):
 
 
 def test_layer_task_time_sums_to_total(traced):
-    stages, spans = traced
-    layers = T.fold(stages, spans, 1)
+    """The layers' task times, from stage accumulables, add up to the run
+    time of the tasks of every job started under a traced job group."""
+    stages, spans, events = traced
+    groups = {f"pb{s['id']}" for s in spans}
+    traced_stages = set()
+    for e in events:
+        if e["Event"] == "SparkListenerJobStart" and (
+            (e.get("Properties") or {}).get("spark.jobGroup.id") in groups
+        ):
+            traced_stages.update(e["Stage IDs"])
     total = sum(
-        s["metric"].get("internal.metrics.executorRunTime", 0.0)
-        for s in stages.values() if s["op"] is not None
+        (e.get("Task Metrics") or {}).get("Executor Run Time", 0)
+        for e in events
+        if e["Event"] == "SparkListenerTaskEnd" and e["Stage ID"] in traced_stages
     ) / 1000.0
+    layers = T.fold(stages, spans, 1)
     assert total > 0
     assert sum(layers[f"{name}.task_s"] for name in T.LAYERS) == pytest.approx(total)
 
 
+def test_coverage_adds_up(traced):
+    stages, spans, _ = traced
+    cov = T.coverage(stages, spans)
+    assert set(cov) == {op for ops in W.OPERATIONS.values() for op in ops}
+    for op, c in cov.items():
+        assert c["wall_s"] == pytest.approx(
+            c["driver_s"] + sum(c["layers"].values()) - c["overlap_s"]
+        ), op
+        assert c["overlap_s"] >= -1e-9, op
+        assert -1e-9 <= c["uncovered_s"] <= c["driver_s"] + 1e-9, op
+    guessed = sum(c["guessed_task_s"] for c in cov.values())
+    assert guessed == pytest.approx(T.guessed_task_seconds(stages.values()))
+
+
 def test_counts_come_from_plan_nodes(traced):
-    layers = T.fold(*traced, 1)
+    layers = T.fold(*traced[:2], 1)
     assert layers["distance_join.probe_rows"] > 0
     assert layers["distance_join.pair_rows"] > 0
     assert layers["dedup.lsh.candidate_pairs"] >= layers["dedup.lsh.verified_pairs"] > 0

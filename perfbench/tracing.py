@@ -13,12 +13,12 @@ one bucket:
   cell join inside the operation's final hash, is found;
 * else a stage run by a layer's own job group belongs to that layer;
 * else a stage of the operation's final action belongs to the last layer
-  the operation called directly;
+  the operation called directly. This is a guess; ``guessed_task_seconds``
+  reports how much task time it placed;
 * stages outside any traced operation (set-up, untraced passes, checks)
   go to ``untraced``.
 
-Every stage lands in exactly one bucket, so the buckets' task times add up
-to the run's total.
+``stage['by']`` records which rule placed the stage.
 """
 
 from __future__ import annotations
@@ -124,6 +124,14 @@ class Tracer:
             setattr(m, name, orig)
         self._patched.clear()
 
+    @contextlib.contextmanager
+    def installed(self):
+        self.install()
+        try:
+            yield self
+        finally:
+            self.uninstall()
+
 
 # ---------------------------------------------------------------- fold ---
 
@@ -218,7 +226,8 @@ def _op_of(spans, sid):
 
 
 def attribute(stages: dict, spans: list[dict]) -> None:
-    """Set ``stage['layer']`` and ``stage['op']`` (the op span id or None)."""
+    """Set ``stage['layer']``, ``stage['op']`` (the op span id or None) and
+    ``stage['by']``: ``signature``, ``group``, ``guess`` or None (untraced)."""
     children: dict[int, list[int]] = {}
     for s in spans:
         if s["parent"] is not None:
@@ -238,7 +247,7 @@ def attribute(stages: dict, spans: list[dict]) -> None:
         g = s.get("group") or ""
         sid = int(g[2:]) if g.startswith("pb") and g[2:].isdigit() else None
         op = _op_of(spans, sid) if sid is not None else None
-        s["op"] = op
+        s["op"], s["by"] = op, None
         if op is None:
             s["layer"] = spans[sid]["name"] if sid is not None else "untraced"
             continue
@@ -249,11 +258,12 @@ def attribute(stages: dict, spans: list[dict]) -> None:
              if any(sig in s["text"] for sig in SIGNATURES.get(name, ()))),
             None,
         )
+        s["by"] = "signature"
         if layer is None and sid != op:
-            layer = spans[sid]["name"]
+            layer, s["by"] = spans[sid]["name"], "group"
         if layer is None:
             top = [spans[c]["name"] for c in children.get(op, ())]
-            layer = top[-1] if top else "unattributed"
+            layer, s["by"] = (top[-1] if top else "unattributed"), "guess"
         s["layer"] = layer
 
 
@@ -353,22 +363,42 @@ def spark_totals(stages: dict, pass_windows: list[tuple[float, float]], n_passes
 
 
 def coverage(stages: dict, spans: list[dict]) -> dict[str, dict]:
-    """Per operation: its wall, each layer's stage wall inside it, the
-    driver time (wall not covered by any stage) and what neither covers."""
+    """Per operation, summed over its traced calls: its wall; each layer's
+    stage wall inside it; ``driver_s``, the wall no stage covers;
+    ``overlap_s``, the layers' stage walls that run at the same time, so
+    that wall = driver_s + sum(layers) - overlap_s; ``uncovered_s``, the
+    wall covered by neither a stage nor a layer call (driver-side work
+    outside the layers' calls, such as planning the final action); and ``guessed_task_s``, the task time placed by the
+    last-layer guess."""
     out: dict[str, dict] = {}
     for op in (s for s in spans if s["name"].startswith(OP_PREFIX)):
         st = [s for s in stages.values() if s["op"] == op["id"]]
-        rec = out.setdefault(op["name"][len(OP_PREFIX):], {"wall_s": 0.0, "driver_s": 0.0, "layers": {}})
+        calls = [(s["start"], s["end"]) for s in spans if s["parent"] == op["id"]]
+        rec = out.setdefault(op["name"][len(OP_PREFIX):], {
+            "wall_s": 0.0, "driver_s": 0.0, "overlap_s": 0.0, "uncovered_s": 0.0,
+            "guessed_task_s": 0.0, "layers": {},
+        })
+        ivs = [(s["start"], s["end"]) for s in st]
         wall = (op["end"] - op["start"]) / 1000.0
-        busy = _union([(s["start"], s["end"]) for s in st]) / 1000.0
+        busy = _union(ivs) / 1000.0
+        layers = {}
+        for layer in {s["layer"] for s in st}:
+            layers[layer] = _union([(s["start"], s["end"]) for s in st if s["layer"] == layer]) / 1000.0
+            rec["layers"][layer] = rec["layers"].get(layer, 0.0) + layers[layer]
         rec["wall_s"] += wall
         rec["driver_s"] += wall - busy
-        for layer in {s["layer"] for s in st}:
-            w = _union([(s["start"], s["end"]) for s in st if s["layer"] == layer]) / 1000.0
-            rec["layers"][layer] = rec["layers"].get(layer, 0.0) + w
-    for rec in out.values():
-        rec["uncovered_s"] = rec["wall_s"] - rec["driver_s"] - sum(rec["layers"].values())
+        rec["overlap_s"] += sum(layers.values()) - busy
+        rec["uncovered_s"] += wall - _union(ivs + calls) / 1000.0
+        rec["guessed_task_s"] += guessed_task_seconds(st)
     return out
+
+
+def guessed_task_seconds(stages) -> float:
+    """Task time of the given stages placed by the last-layer guess."""
+    return sum(
+        s["metric"].get("internal.metrics.executorRunTime", 0.0)
+        for s in stages if s["by"] == "guess"
+    ) / 1000.0
 
 
 def task_seconds(stages: dict) -> dict[str, float]:

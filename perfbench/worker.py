@@ -1,23 +1,25 @@
 """One benchmark run inside a fresh Spark driver process.
 
 Started by ``run.py``; prints one ``WORKER_RESULT <json>`` line. The run
-builds the workload's inputs ``SETUP_REPS`` times, runs ``WARMUP_PASSES``
-passes, then runs closed-loop passes over the workload's operations: one
-client, each operation starting when the previous one has ended.
+builds the workload's inputs once, runs ``WARMUP_PASSES`` passes, then
+runs closed-loop passes over the workload's operations: one client, each
+operation starting when the previous one has ended.
 
-With ``--trace 1`` the measured passes are split in two halves: untraced
-passes first, then passes with every layer wrapped (``tracing.Tracer``) and Spark's
-event log on, which ``tracing.fold`` turns into per-layer numbers.
+With ``--trace 1`` Spark's event log is on for the whole run and the
+measured passes alternate in the order untraced, traced, traced, untraced,
+... so JIT warm-up drift weighs on both sides alike. A traced pass runs with
+every layer wrapped (``tracing.Tracer``); ``tracing.fold`` turns the event
+log of the traced passes into per-layer numbers.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import resource
 import shutil
-import statistics
 import sys
 import time
 
@@ -27,18 +29,22 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import tracing as T  # noqa: E402
 import workloads as W  # noqa: E402
 
-SETUP_REPS = 3
 # Passes run before measuring: the first compiles each plan, the rest take
-# the JIT past its steepest gains. Pass walls keep falling slowly for about
-# 30 s; the fixed pass counts below keep each run on the same point of
+# the JIT past its steepest gains. Pass walls keep falling slowly after
+# that; the fixed pass counts below keep each run on the same point of
 # that curve.
-WARMUP_PASSES = {"uniform": 6, "curate": 3}
+WARMUP_PASSES = {"uniform": 4, "curate": 2}
 # Typical steady pass wall on 4 cores. The measured window is a fixed
 # number of passes, round(seconds / PASS_S), so every run times the same
 # passes of its process's life whatever the machine's speed that minute.
 PASS_S = {"uniform": 2.5, "curate": 4.5}
 PIN_SEED = 42
 EXPECTED = os.path.join(os.path.dirname(os.path.abspath(__file__)), "expected.json")
+
+
+def _traced(i: int) -> bool:
+    """Whether measured pass ``i`` of a traced run is traced: U T T U ..."""
+    return i % 4 in (1, 2)
 
 
 def _vm_hwm_kb(pid) -> int:
@@ -151,28 +157,43 @@ def main() -> None:
     session_s = time.time() - a.spawned
 
     run = Run(spark, a.workload, a.seed)
-    load_s = [run.load() for _ in range(SETUP_REPS)]
+    load_s = run.load()
     t0 = time.perf_counter()
     values = {o: run.op(o) for o in run.ops}
-    run.passes(WARMUP_PASSES[a.workload] - 1, values)
+    first_s = time.perf_counter() - t0
+    warmup_pass_s = [first_s] + run.passes(WARMUP_PASSES[a.workload] - 1, values)[0]
     warmup_s = time.perf_counter() - t0
-    window = a.seconds / 2 if a.trace else a.seconds
-    n = max(1, round(window / PASS_S[a.workload]))
-    pass_s, op_s, _ = run.passes(n, values)
-    traced = None
-    if a.trace:
-        run.tracer = T.Tracer(spark.sparkContext)
-        run.tracer.install()
-        try:
-            traced = run.passes(n, values)
-        finally:
-            run.tracer.uninstall()
-            spans, run.tracer = run.tracer.spans, None
+    if not a.trace:
+        n = max(1, round(a.seconds / PASS_S[a.workload]))
+        pass_s, op_s, _ = run.passes(n, values)
+    else:
+        # an even number of passes per side keeps the U T T U order balanced
+        n = 2 * max(1, round(a.seconds / (4 * PASS_S[a.workload])))
+        tracer = T.Tracer(spark.sparkContext)
+        pass_s, op_s = [], {o: [] for o in run.ops}
+        t_pass, windows = [], []
+        for i in range(2 * n):
+            run.tracer = tracer if _traced(i) else None
+            with tracer.installed() if run.tracer else contextlib.nullcontext():
+                p, o_s, w = run.passes(1, values)
+            if run.tracer:
+                t_pass += p
+                windows += w
+            else:
+                pass_s += p
+                for o, ts in o_s.items():
+                    op_s[o] += ts
+        run.tracer = None
     t0 = time.perf_counter()
     pins = run.check(values)
     check_s = time.perf_counter() - t0
 
     jvm = spark.sparkContext._jvm
+    heap_peak = sum(
+        p.getPeakUsage().getUsed()
+        for p in jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+        if p.getType().name() == "HEAP"
+    )
     peak_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss + _vm_hwm_kb(
         jvm.ProcessHandle.current().pid()
     )
@@ -183,25 +204,27 @@ def main() -> None:
         "session_s": session_s,
         "load_s": load_s,
         "warmup_s": warmup_s,
+        "warmup_pass_s": warmup_pass_s,
         "check_s": check_s,
-        "setup_s": session_s + statistics.median(load_s) + warmup_s,
+        "setup_s": session_s + load_s + warmup_s,
         "pass_s": pass_s,
         "op_s": op_s,
         "peak_rss_mb": peak_kb / 1024.0,
+        "peak_heap_mb": heap_peak / 2**20,
         "rows": {k: v.count() for k, v in run.tables.items()},
         "pyspark": pyspark.__version__,
         "java": jvm.System.getProperty("java.version"),
     }
     spark.stop()  # flushes the event log
-    if traced is not None:
-        t_pass, _, windows = traced
+    if a.trace:
         stages = T.parse(T.read_events(log_dir))
-        T.attribute(stages, spans)
+        T.attribute(stages, tracer.spans)
         result["trace"] = {
             "pass_s": t_pass,
-            "layers": T.fold(stages, spans, n),
+            "layers": T.fold(stages, tracer.spans, n),
             "spark": T.spark_totals(stages, windows, n),
-            "coverage": T.coverage(stages, spans),
+            "guessed_task_s": T.guessed_task_seconds(stages.values()) / n,
+            "coverage": T.coverage(stages, tracer.spans),
             "buckets": T.task_seconds(stages),
         }
         shutil.rmtree(log_dir, ignore_errors=True)

@@ -143,7 +143,10 @@ def run_op(name: str, t: dict[str, DataFrame]):
     if name == "voronoi":
         return force(voronoi.voronoi(t["pts"]))
     if name == "curate":
-        return force(dedup.curate_near(t["docs"]))
+        return force(
+            dedup.curate_near(t["docs"]),
+            F.sum(F.expr("CAST(doc_id % 7 IN (1, 2) AS INT)")), F.sum("doc_id"),
+        )
     raise ValueError(f"unknown operation {name!r}")
 
 
@@ -184,9 +187,14 @@ def check(name: str, value, t: dict[str, DataFrame]) -> tuple[list[str], list]:
         if share != value:
             bad.append(f"k_satisfaction {value} != {share} from the per-point k")
     elif name == "curate":
-        want = sum(1 for i in range(N_DOCS) if i % 7 not in (1, 2))
-        if value[1] != want:
-            bad.append(f"kept {value[1]} docs, want the {want} non-variant docs")
+        # as many docs as the non-variant ones, none a variant, and the
+        # same id sum: the non-variant docs, each once
+        want = [i for i in range(N_DOCS) if i % 7 not in (1, 2)]
+        if (value[1], value[2] or 0, value[3]) != (len(want), 0, sum(want)):
+            bad.append(
+                f"kept {value[1]} docs, {value[2]} variants, id sum {value[3]}; want "
+                f"exactly the {len(want)} non-variant docs, id sum {sum(want)}"
+            )
     return bad, pin
 
 

@@ -279,15 +279,16 @@ def k_anonymity_address(
         # 8-byte grouping key and one count buffer on the pair stream
         # (grouping keys can never be pruned, and float keys additionally
         # pay a normalize-NaN/zero wrapper per row).
-        # NOT the interior-cell count shape (radius_count_join): a
-        # 3-variant interleaved A/B at sf0.1 measured the within-radius
-        # pair stream as a non-bottleneck — removing 31.8M of 225.5M
-        # candidate evaluations and 30% of the aggregate input changed
-        # wall-time by ~0.2% — while the per-cell count rows' build-side
-        # union + aggregate added ~0.7 s of per-run stage overhead (see
-        # OPTIMIZATION_r06.md). The shortcut only pays where per-pair work
-        # dominates fixed stage costs; the machinery stays available and
-        # equivalence-gated for that regime.
+        # NOT the interior-cell count shape (a GeoBlocks-style per-cell
+        # pre-aggregate for cells inside a point's disk): a 3-variant
+        # interleaved A/B at sf0.1 measured the within-radius pair stream
+        # as a non-bottleneck — removing 31.8M of 225.5M candidate
+        # evaluations and 30% of the aggregate input changed wall-time by
+        # ~0.2% — while the per-cell count rows' build-side union +
+        # aggregate added ~0.7 s of per-run stage overhead (see
+        # OPTIMIZATION_r06.md, "Interior-cell count shortcut"). With no
+        # caller left, that machinery was removed; git history keeps it
+        # for a regime where per-pair work dominates fixed stage costs.
         pairs = distance_join(
             cand.select(key, x, y, "_radius"), address.select(*addr_cols),
             radius=float(max_radius), lx=x, ly=y, rx=ax, ry=ay, salt=salt,

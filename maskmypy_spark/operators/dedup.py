@@ -722,7 +722,13 @@ def minhash_lsh_pairs(
     candidate id came from ``df``'s signatures, so the semi-join below
     keeps exactly the same docs — but the filter lineage (which Spark does
     NOT push the semi-join beneath) is never re-evaluated, saving a full
-    corpus pass of gate metrics per query. Defaults to ``df``."""
+    corpus pass of gate metrics per query. Defaults to ``df``.
+
+    The candidate pairs and the candidate shingle set materialize through
+    ``localCheckpoint(eager=True)``: each runs its job when this function
+    is CALLED, before the caller's own action, and keeps its blocks only in
+    executor storage with the lineage cut, so an executor lost afterwards
+    makes a later action over the result fail instead of recomputing."""
     cand = _lsh_band_candidates(
         df, num_hashes, bands, key, text, n, hasher
     ).localCheckpoint(eager=True)

@@ -2,10 +2,19 @@
 
 Replaces geopandas' R-tree ``sjoin`` on buffers (reference
 ``masks/locationswap.py:105-111``, ``analysis.py:590``) with a shuffle
-equi-join on grid cells: the probe side explodes a neighbor ring sized to
+equi-join on grid cells: one side explodes a neighbor ring sized to
 guarantee every pair within ``radius`` meets in some cell; the exact
 distance predicate then drops false positives JVM-side (whole-stage
 codegen — no Python anywhere).
+
+:func:`cell_join` is the one cell join of the engine: ``distance_join``'s
+per-row-radius and fixed-radius paths and every kNN escalation round
+(``knn.py``) call it. It owns the ``_cell`` equi-key, the hot-cell salt
+(``_sk``: probe rows scatter over ``salt`` sub-keys, the build side
+replicates once per sub-key), the physical pin (broadcast the build side,
+broadcast a counted-small probe side, or a sort-merge join for fact x fact)
+and the join condition: the equi-keys plus the exact pair predicate, for
+inner or left outer joins.
 
 Scale design:
  - shuffle key = cell id; AQE skew-join splits hot cells at runtime, and
@@ -19,6 +28,7 @@ Scale design:
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -67,9 +77,17 @@ def sq_threshold_le(r: float) -> float:
     return s
 
 
-def pruned_ring_sql(x: str, y: str, cs: float, n_sql: str, r_sql: str) -> str:
-    """Cell-id array for the neighbor ring around (x, y), PRUNED to cells
-    whose minimum distance to the point is provably <= the radius.
+def explode_pruned_ring(
+    df: DataFrame,
+    x: str,
+    y: str,
+    cs: float,
+    max_n: int,
+    r_sql: str,
+    n_sql: str | None = None,
+) -> DataFrame:
+    """``df`` + ``_cell``, exploded to the neighbor-ring cells around (x, y)
+    whose minimum distance to the point is provably <= the radius ``r_sql``.
 
     The square (2n+1)² ring guarantees coverage but over-fetches: a disk of
     radius r covers ~pi/4 of its bounding square, and when r is just above
@@ -81,92 +99,40 @@ def pruned_ring_sql(x: str, y: str, cs: float, n_sql: str, r_sql: str) -> str:
     cells with mx² + my² > r² cannot contain a within-r partner, so
     dropping them can never change the post-distance-filter pair set. The
     comparison carries 1e-9 relative + absolute slack so float rounding in
-    the bound can only ever KEEP a boundary cell, never prune one — the
-    exactness proof does not depend on the bound's rounding. Measured at
-    sf0.1 this cuts candidate pairs ~1.8x on the per-row-radius
+    the bound can only ever KEEP a boundary cell, never prune one. Measured
+    at sf0.1 this cuts candidate pairs ~1.8x on the per-row-radius
     k-verification ring (small radii prune whole shells) and ~10-20% on
     fixed rings (corner cells only).
-    """
-    base = cells.cell_sql(x, y, cs)
-    fx = f"(({x}) - floor(({x}) / {flit(cs)}) * {flit(cs)})"
-    fy = f"(({y}) - floor(({y}) / {flit(cs)}) * {flit(cs)})"
-    mx = (
-        f"CASE WHEN dx > 0 THEN CAST(dx AS DOUBLE) * {flit(cs)} - {fx}"
-        f" WHEN dx < 0 THEN CAST(-dx - 1 AS DOUBLE) * {flit(cs)} + {fx}"
-        f" ELSE CAST(0.0 AS DOUBLE) END"
-    )
-    my = (
-        f"CASE WHEN dy > 0 THEN CAST(dy AS DOUBLE) * {flit(cs)} - {fy}"
-        f" WHEN dy < 0 THEN CAST(-dy - 1 AS DOUBLE) * {flit(cs)} + {fy}"
-        f" ELSE CAST(0.0 AS DOUBLE) END"
-    )
-    rr = f"(({r_sql}) * ({r_sql}) * 1.000000001E0 + 1.0E-9)"
-    return (
-        f"flatten(transform(sequence(-({n_sql}), ({n_sql})), dx -> "
-        f"transform(filter(sequence(-({n_sql}), ({n_sql})), dy -> "
-        f"({mx}) * ({mx}) + ({my}) * ({my}) <= {rr}), "
-        f"dy -> ({base}) + dx * {cells.CELL_K} + dy)))"
-    )
 
-
-def explode_pruned_ring(
-    df: DataFrame,
-    x: str,
-    y: str,
-    cs: float,
-    max_n: int,
-    r_sql: str,
-    n_sql: str | None = None,
-    cell_col: str = "_cell",
-    interior_col: str | None = None,
-) -> DataFrame:
-    """``df`` exploded to its pruned neighbor-ring cells as WHOLE-STAGE
-    CODEGEN: explode a LITERAL index array 0..(2*max_n+1)²-1 (a constant —
-    no per-row array allocation), derive (dx, dy) from the index, and apply
-    the :func:`pruned_ring_sql` min-distance bound plus the per-row ring
-    bound |dx|,|dy| <= n as ordinary codegen filters pipelined into the
-    Generate. Semantically identical to exploding ``pruned_ring_sql`` —
-    which, being a higher-order-function expression (CodegenFallback), is
-    evaluated INTERPRETED per row with nested array allocation; measured 2x
-    slower at sf0.1 (0.69 vs 0.35 s for the k-verify ring explode).
+    Runs as WHOLE-STAGE CODEGEN: explode a LITERAL index array
+    0..(2*max_n+1)²-1 (a constant — no per-row array allocation), derive
+    (dx, dy) from the index, and apply the bound plus the per-row ring bound
+    |dx|,|dy| <= n as ordinary codegen filters pipelined into the Generate.
+    A higher-order-function spelling (transform/filter over sequence) is
+    CodegenFallback, evaluated interpreted per row with nested array
+    allocation; measured 2x slower at sf0.1 (0.69 vs 0.35 s for the
+    k-verify ring explode).
 
     ``max_n`` must bound every row's ring (``ceil(r/cs)``); when ``n_sql``
     (a per-row ring count) is given, rows violating the bound raise via an
     ``assert_true`` folded into the filter — loud, never silently missing
     ring cells (the engine callers derive max_n from the declared/computed
-    max radius, so the guard never fires on contract inputs).
-
-    ``interior_col`` additionally emits an INT flag = 1 iff the cell is
-    PROVABLY INTERIOR to the row's radius-``r_sql`` disk: the max distance
-    from the point to the cell's closed region is sqrt(Mx² + My²) with
-    Mx = dx>0 ? (dx+1)*cs - fx : dx<0 ? (-dx)*cs + fx : max(fx, cs - fx),
-    and the flag tests Mx² + My² <= r²*(1 - 1e-9) - 1e-6. The slack runs
-    OPPOSITE to the keep bound's: float rounding can only ever DEMOTE a
-    true interior cell to boundary (safe — the exact per-pair predicate
-    still applies there), never promote a boundary cell, and the margin
-    (relative 1e-9 dominates for r >~ 0.03, absolute 1e-6 below) exceeds
-    the ~1e-8 worst-case rounding of the bound by orders of magnitude.
-    Every pair in a flagged cell also provably passes the per-pair band
-    predicate's fast branch (pair sq <= max² <= r²(1-1e-9)-1e-6 < the
-    band's r²(1-2^-48) low bound for every representable r), so counting
-    consumers may take the whole cell without evaluating pairs."""
+    max radius, so the guard never fires on contract inputs)."""
     w = 2 * max_n + 1
-    base = cells.cell_sql(x, y, cs)
-    fx = f"(({x}) - floor(({x}) / {flit(cs)}) * {flit(cs)})"
-    fy = f"(({y}) - floor(({y}) / {flit(cs)}) * {flit(cs)})"
+    c = flit(cs)
     out = df.withColumn("_rgi", F.explode(F.array(*[F.lit(i) for i in range(w * w)])))
     dx = f"(_rgi DIV {w} - {max_n})"
     dy = f"(_rgi % {w} - {max_n})"
-    mx = (
-        f"CASE WHEN {dx} > 0 THEN CAST({dx} AS DOUBLE) * {flit(cs)} - {fx}"
-        f" WHEN {dx} < 0 THEN CAST(-{dx} - 1 AS DOUBLE) * {flit(cs)} + {fx}"
-        f" ELSE CAST(0.0 AS DOUBLE) END"
-    )
-    my = (
-        f"CASE WHEN {dy} > 0 THEN CAST({dy} AS DOUBLE) * {flit(cs)} - {fy}"
-        f" WHEN {dy} < 0 THEN CAST(-{dy} - 1 AS DOUBLE) * {flit(cs)} + {fy}"
-        f" ELSE CAST(0.0 AS DOUBLE) END"
-    )
+
+    def gap(d: str, v: str) -> str:
+        f = f"(({v}) - floor(({v}) / {c}) * {c})"
+        return (
+            f"CASE WHEN {d} > 0 THEN CAST({d} AS DOUBLE) * {c} - {f}"
+            f" WHEN {d} < 0 THEN CAST(-{d} - 1 AS DOUBLE) * {c} + {f}"
+            f" ELSE CAST(0.0 AS DOUBLE) END"
+        )
+
+    mx, my = gap(dx, x), gap(dy, y)
     rr = f"(({r_sql}) * ({r_sql}) * 1.000000001E0 + 1.0E-9)"
     keep = f"({mx}) * ({mx}) + ({my}) * ({my}) <= {rr}"
     if n_sql is not None:
@@ -179,143 +145,70 @@ def explode_pruned_ring(
             f"abs({dx}) <= ({n_sql}) + {guard} AND abs({dy}) <= ({n_sql}) "
             f"AND {keep}"
         )
-    out = out.where(F.expr(keep)).withColumn(
-        cell_col, F.expr(f"({base}) + {dx} * {cells.CELL_K} + {dy}")
+    base = cells.cell_sql(x, y, cs)
+    return (
+        out.where(F.expr(keep))
+        .withColumn("_cell", F.expr(f"({base}) + {dx} * {cells.CELL_K} + {dy}"))
+        .drop("_rgi")
     )
-    if interior_col is not None:
-        Mx = (
-            f"CASE WHEN {dx} > 0 THEN CAST({dx} + 1 AS DOUBLE) * {flit(cs)} - {fx}"
-            f" WHEN {dx} < 0 THEN CAST(-{dx} AS DOUBLE) * {flit(cs)} + {fx}"
-            f" ELSE greatest({fx}, {flit(cs)} - {fx}) END"
-        )
-        My = (
-            f"CASE WHEN {dy} > 0 THEN CAST({dy} + 1 AS DOUBLE) * {flit(cs)} - {fy}"
-            f" WHEN {dy} < 0 THEN CAST(-{dy} AS DOUBLE) * {flit(cs)} + {fy}"
-            f" ELSE greatest({fy}, {flit(cs)} - {fy}) END"
-        )
-        rr_int = f"(({r_sql}) * ({r_sql}) * {flit(1.0 - 1e-9)} - 1.0E-6)"
-        out = out.withColumn(
-            interior_col,
-            F.expr(
-                f"CAST(({Mx}) * ({Mx}) + ({My}) * ({My}) <= {rr_int} AS INT)"
-            ),
-        )
-    return out.drop("_rgi")
 
 
-def radius_count_join(
-    left: DataFrame,
-    right: DataFrame,
-    radius: float,
-    lx: str = "x",
-    ly: str = "y",
-    rx: str = "ax",
-    ry: str = "ay",
-    cs: float | None = None,
+def cell_join(
+    lt: DataFrame,
+    rt: DataFrame,
+    x: str,
+    y: str,
+    *,
     salt: int = 0,
-    broadcast_right: bool = False,
-    left_radius_col: str = "_radius",
-    count_col: str = "_c",
+    pin: str | None = None,
+    on=(),
+    how: str = "inner",
+    cond=None,
 ) -> DataFrame:
-    """Per-row-radius candidate join shaped for COUNTING partners, with the
-    INTERIOR-CELL shortcut: returns one row per kept (probe row, ring cell)
-    with ``count_col`` = how many within-radius partners that row accounts
-    for (NULL when none), so ``sum(coalesce(count_col, 0))`` per key is the
-    exact within-disk partner count.
+    """Join two ``_cell``-tagged sides on the cell id: probe side ``lt``
+    (coordinates ``x``, ``y``), build side ``rt``.
 
-    Cells provably interior to the row's own disk
-    (explode_pruned_ring(interior_col=)) hold ONLY within-radius partners,
-    so instead of fanning out to every partner row and testing the distance
-    band per pair, an interior probe row matches a single per-cell COUNT
-    row. The build side is the union of the partner rows (tagged _int=0,
-    count 1) and the per-cell counts (tagged _int=1), and _int joins as an
-    EQUI-KEY next to the cell id — an interior probe row hash-probes
-    exactly one build row, a boundary row sees only true partner rows. At
-    sf0.1 bench geometry (~uniform radii 100-500 m, cs 250 m) interior
-    cells hold ~25-30% of all within-radius pairs; those pairs never enter
-    the join output or the downstream aggregate. The LEFT OUTER + predicate-
-    in-condition shape is preserved, so every probe row survives and
-    zero-partner keys aggregate to 0 without any join-back.
+    ``salt > 1`` scatters hot cells: each probe row hashes its (x, y) into
+    one of ``salt`` sub-keys ``_sk`` and the build side replicates once per
+    sub-key, so one dense cluster (a city) spreads over ``salt`` reducers
+    instead of one; AQE skew-join remains the adaptive backstop. ``on``
+    adds (left_col, right_col) equality keys next to the cell, e.g. a
+    group or simulation id that keeps co-grouped joins partition-pruned.
+    ``cond`` (the exact pair predicate) joins the equi-keys INSIDE the join
+    condition: for ``how='left'`` every probe row then survives,
+    null-extended when no cell-mate passes it (a post-join filter would drop
+    those rows too); for inner joins it is the same plan as a filter.
 
-    Equivalence to the pair-enumerating count (analysis.k_anonymity_address
-    general path / the DuckDB oracle): interior cells contribute exactly
-    their full partner count (every pair in them passes the exact predicate
-    — see explode_pruned_ring's interior_col proof), boundary cells apply
-    the IDENTICAL band predicate per pair, and the conservative interior
-    slack can only move a cell to the boundary class, never the reverse.
-    Intended for counting consumers only: partner identities/coordinates
-    and distances are not emitted (interior rows have none to emit).
-    """
-    cs = float(cs or radius / 2.0)
-    ring_n = f"CAST(ceil(({left_radius_col}) / {flit(cs)}) AS BIGINT)"
-    lt = explode_pruned_ring(
-        left, lx, ly, cs, cells.ring_for_radius(radius, cs),
-        left_radius_col, n_sql=ring_n, interior_col="_int",
-    )
-    # exact band bounds, same spelling as distance_join's per-row path
-    lt = lt.withColumn(
-        "_rlo",
-        F.expr(
-            f"({left_radius_col}) * ({left_radius_col}) * "
-            f"{flit(1.0 - 2.0 ** -48)}"
-        ),
-    ).withColumn(
-        "_rhi",
-        F.expr(
-            f"({left_radius_col}) * ({left_radius_col}) * "
-            f"{flit(1.0 + 2.0 ** -48)}"
-        ),
-    )
-    # The interior flag rides INSIDE the join key (one BIGINT: cell*2 +
-    # flag) rather than as a second key column: a single-LONG equi-key
-    # keeps the broadcast build in the specialized LongHashedRelation
-    # (primitive open-addressing); a composite (cell, int) key falls back
-    # to the generic unsafe-row relation, which measurably taxes every
-    # probe lookup on the exploded stream. Cell ids are < 2^42 (functions/
-    # cells.py encoding), so the *2 cannot overflow. An interior probe row
-    # (flag 1) thereby hash-matches exactly the one per-cell count row;
-    # a boundary row sees only the per-partner rows.
-    lt = lt.withColumn(
-        "_cellq", F.col("_cell") * F.lit(2) + F.col("_int")
-    ).drop("_cell")
-    rt0 = right.withColumn("_cell", F.expr(cells.cell_sql(rx, ry, cs)))
-    partner_rows = rt0.select(
-        (F.col("_cell") * F.lit(2)).alias("_cellq"), rx, ry,
-        F.lit(1).cast("long").alias(count_col),
-    )
-    cnt_rows = (
-        rt0.groupBy("_cell")
-        .agg(F.count(F.lit(1)).alias(count_col))
-        .select(
-            (F.col("_cell") * F.lit(2) + F.lit(1)).alias("_cellq"),
-            F.lit(None).cast("double").alias(rx),
-            F.lit(None).cast("double").alias(ry),
-            F.col(count_col),
-        )
-    )
-    rt = partner_rows.unionByName(cnt_rows)
+    ``pin`` picks the physical join. 'right' broadcasts a dimension build
+    side. 'left' broadcasts a probe side the caller has COUNTED small (a
+    driver-side bound like street's max_graph_nodes, never a planner
+    estimate), so the build side streams map-side instead of re-shuffling.
+    'merge' pins the shuffled sort-merge join for fact x fact joins:
+    Catalyst's sizeInBytes ignores the ring explode, so a mid-size exploded
+    side sneaks under the 64 MB auto-broadcast threshold and the planner
+    builds a hash relation from it through the driver (the r4 q_voronoi_nn
+    regression); SMJ also beats shuffled-hash ~2.5x here (round 3). None
+    leaves the choice to the planner.
+
+    Output: the probe columns then the build columns, without ``_cell``,
+    ``_sk`` and the build side's copy of any same-named key."""
+    keys = [("_cell", "_cell"), *on]
     if salt > 1:
-        lt = lt.withColumn("_salt", (F.xxhash64(lx, ly) % salt + salt) % salt)
-        rt = rt.withColumn(
-            "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-        )
-        on = ["_cellq", "_salt"]
-    else:
-        on = ["_cellq"]
-    if broadcast_right:
+        lt = lt.withColumn("_sk", (F.xxhash64(x, y) % salt + salt) % salt)
+        rt = rt.withColumn("_sk", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
+        keys.insert(1, ("_sk", "_sk"))
+    if pin == "right":
         rt = F.broadcast(rt)
-    sq = sq_dist_sql(lx, ly, rx, ry)
-    band_pred = F.expr(
-        f"(({sq}) <= _rlo OR (({sq}) <= _rhi AND "
-        f"{dist_sql(lx, ly, rx, ry)} <= ({left_radius_col})))"
-    )
-    cond = None
-    for c in on:
-        eq = lt[c] == rt[c]
-        cond = eq if cond is None else (cond & eq)
-    cond = cond & ((lt["_int"] == 1) | band_pred)
-    joined = lt.join(rt, cond, "left")
-    return joined.select(*[lt[c] for c in left.columns], rt[count_col])
+    elif pin == "left":
+        lt = F.broadcast(lt)
+    elif pin == "merge":
+        lt = lt.hint("merge")
+    jc = reduce(lambda p, q: p & q, [lt[lc] == rt[rc] for lc, rc in keys])
+    j = lt.join(rt, jc if cond is None else jc & cond, how)
+    for lc, rc in keys:
+        if lc == rc:
+            j = j.drop(rt[rc])
+    return j.drop("_cell", "_sk")
 
 
 def distance_join(
@@ -364,20 +257,43 @@ def distance_join(
     ``dist <= annulus_low`` — evaluated, like the radius bound, entirely in
     SQUARED space via :func:`sq_threshold_le` (pair set bit-identical to
     the sqrt formulation, but no sqrt per candidate pair; ``dist_col`` is
-    still emitted and prunes away when unused). ``how='left'`` on the
-    fixed-radius compact-dimension path (explode_side='left') moves the
-    radius/annulus predicate INTO the join condition so every probe row
-    survives (right side null when no partner) — the join-back-free
-    aggregation shape (see locationswap).
+    still emitted and prunes away when unused). ``how='left'`` (per-row
+    path, or the fixed-radius compact-dimension path explode_side='left')
+    moves the radius/annulus predicate INTO the join condition so every
+    probe row survives (right side null when no partner) — the
+    join-back-free aggregation shape (see locationswap and
+    analysis.k_anonymity_address slim).
+
+    ``right_cell_col`` = the 100 TB dimension pattern: a stored address/
+    node table persists its cell index once (cells.cell_sql at the SAME cs
+    — the caller owns cs agreement), ideally written BUCKETED on it
+    (sources/bucketed.py), so recurring joins scan the build side
+    exchange-free instead of re-tagging + re-shuffling it every query
+    (BENCH/NOTES.md, "Bucketed-dimension experiment", measures the effect).
     """
-    if annulus_low is not None and left_radius_col is not None:
+    per_row = left_radius_col is not None
+    if annulus_low is not None and per_row:
         raise ValueError("annulus_low applies to the fixed-radius path only.")
-    if left_radius_col is not None:
-        cs = float(cs or radius / 2.0)
-        ring_n = f"CAST(ceil(({left_radius_col}) / {flit(cs)}) AS BIGINT)"
+    explode_left = per_row or explode_side == "left"
+    if right_cell_col and not explode_left:
+        raise ValueError(
+            "right_cell_col requires the compact-dimension shape "
+            "(explode_side='left' or left_radius_col=): a stored single "
+            "cell id cannot seed the exploding side's neighbor ring."
+        )
+    if how == "left" and not per_row and (not explode_left or extra_on):
+        raise ValueError(
+            "how='left' requires the compact-dimension fixed-radius "
+            "shape (explode_side='left', no extra_on)."
+        )
+    cs = float(cs or (radius / 2.0 if per_row else radius))
+    ring = cells.ring_for_radius(radius, cs)
+    sq = sq_dist_sql(lx, ly, rx, ry)
+    if per_row:
+        r = left_radius_col
         lt = explode_pruned_ring(
-            left, lx, ly, cs, cells.ring_for_radius(radius, cs),
-            left_radius_col, n_sql=ring_n,
+            left, lx, ly, cs, ring, r,
+            n_sql=f"CAST(ceil(({r}) / {flit(cs)}) AS BIGINT)",
         )
         # Per-row-radius predicate via an exact BAND: sq <= r^2*(1-2^-48)
         # is provably within (true sqrt <= r(1 - 2^-49) even after the
@@ -389,155 +305,34 @@ def distance_join(
         # The band bounds are per-probe-row projections (2 multiplies)
         # computed once before the pair stream.
         lt = lt.withColumn(
-            "_rlo",
-            F.expr(
-                f"({left_radius_col}) * ({left_radius_col}) * "
-                f"{flit(1.0 - 2.0 ** -48)}"
-            ),
-        ).withColumn(
-            "_rhi",
-            F.expr(
-                f"({left_radius_col}) * ({left_radius_col}) * "
-                f"{flit(1.0 + 2.0 ** -48)}"
-            ),
-        )
-        sq = sq_dist_sql(lx, ly, rx, ry)
-        band_pred = F.expr(
+            "_rlo", F.expr(f"({r}) * ({r}) * {flit(1.0 - 2.0 ** -48)}")
+        ).withColumn("_rhi", F.expr(f"({r}) * ({r}) * {flit(1.0 + 2.0 ** -48)}"))
+        pred = (
             f"(({sq}) <= _rlo OR (({sq}) <= _rhi AND "
-            f"{dist_sql(lx, ly, rx, ry)} <= ({left_radius_col})))"
+            f"{dist_sql(lx, ly, rx, ry)} <= ({r})))"
         )
-        # right_cell_col = the 100 TB dimension pattern: a stored address/
-        # node table persists its cell index once (cells.cell_sql at the
-        # SAME cs — the caller owns cs agreement), ideally written BUCKETED
-        # on it (sources/bucketed.py), so recurring joins scan the build
-        # side exchange-free instead of re-tagging + re-shuffling it every
-        # query (BENCH/exp_bucketed.py measures the effect).
-        rt = (
-            right.withColumnRenamed(right_cell_col, "_cell")
-            if right_cell_col
-            else right.withColumn("_cell", F.expr(cells.cell_sql(rx, ry, cs)))
-        )
-        if salt > 1:
-            lt = lt.withColumn("_salt", (F.xxhash64(lx, ly) % salt + salt) % salt)
-            rt = rt.withColumn(
-                "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-            )
-            on = ["_cell", "_salt"]
+    else:
+        # Radius (and optional annulus) predicate in SQUARED space: bit-equal
+        # pair set to the sqrt formulation (sq_threshold_le proof above), one
+        # multiply-add chain instead of 1-2 sqrt calls per candidate pair.
+        pred = f"({sq}) <= {flit(sq_threshold_le(float(radius)))}"
+        if annulus_low is not None:
+            pred = f"({pred} AND ({sq}) > {flit(sq_threshold_le(float(annulus_low)))})"
+        if explode_left:
+            lt = explode_pruned_ring(left, lx, ly, cs, ring, flit(radius))
         else:
-            on = ["_cell"]
-        if broadcast_right:
-            rt = F.broadcast(rt)
-        d = F.expr(dist_sql(lx, ly, rx, ry))
-        if how == "left":
-            # LEFT OUTER with the distance predicate inside the join
-            # condition: every probe row survives (right side null when no
-            # within-radius partner), so counting consumers need no
-            # join-back / union branch to represent zero-neighbor rows —
-            # ``count(right_key)`` is exact. One exploded row per probe
-            # cell still, but unmatched rows cost less than re-deriving
-            # the left table a second time (see analysis.k_anonymity_address
-            # slim; measured 2.44 -> 1.65 s at sf0.1).
-            cond = None
-            for c in on:
-                eq = lt[c] == rt[c]
-                cond = eq if cond is None else (cond & eq)
-            cond = cond & band_pred
-            joined = lt.join(rt, cond, "left").drop(rt["_cell"])
-            if salt > 1:
-                joined = joined.drop(rt["_salt"])
-            return (
-                joined.withColumn(dist_col, d)
-                .drop("_cell", "_salt", "_rlo", "_rhi")
-            )
-        return (
-            lt.join(rt, on=on)
-            .where(band_pred)
-            .withColumn(dist_col, d)
-            .drop("_cell", "_salt", "_rlo", "_rhi")
-        )
-
-    cs = float(cs or radius)
-    ring = cells.ring_for_radius(radius, cs)
-
-    lcell = F.expr(cells.cell_sql(lx, ly, cs))
-
-    if explode_side == "left":
-        lt = explode_pruned_ring(left, lx, ly, cs, ring, flit(radius))
-        # stored-dimension pattern (ADVICE r05 #2 — previously only the
-        # per-row-radius path honored this): the build side's persisted
-        # cell index (cells.cell_sql at the SAME cs — caller owns cs
-        # agreement) joins without re-tagging, and a cell-bucketed table
-        # scans exchange-free.
-        rt = (
-            right.withColumnRenamed(right_cell_col, "_cell")
-            if right_cell_col
-            else right.withColumn("_cell", F.expr(cells.cell_sql(rx, ry, cs)))
-        )
-    else:
-        if right_cell_col:
-            raise ValueError(
-                "right_cell_col requires the compact-dimension shape "
-                "(explode_side='left' or left_radius_col=): a stored single "
-                "cell id cannot seed the exploding side's neighbor ring."
-            )
-        lt = left.withColumn("_cell", lcell)
+            lt = left.withColumn("_cell", F.expr(cells.cell_sql(lx, ly, cs)))
+    if not explode_left:
         rt = explode_pruned_ring(right, rx, ry, cs, ring, flit(radius))
-    if salt > 1:
-        # Explicit hot-cell salting: scatter the (large) probe side across
-        # `salt` sub-keys so one hot cell spreads over `salt` reducers, and
-        # replicate the build side once per sub-key.
-        lt = lt.withColumn("_salt", (F.xxhash64(lx, ly) % salt + salt) % salt)
-        rt = rt.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
-        on = ["_cell", "_salt"]
+    elif right_cell_col:
+        rt = right.withColumnRenamed(right_cell_col, "_cell")
     else:
-        on = ["_cell"]
-    if broadcast_right:
-        rt = F.broadcast(rt)
-
-    # Radius (and optional annulus) predicate in SQUARED space: bit-equal
-    # pair set to the sqrt formulation (sq_threshold_le proof above), one
-    # multiply-add chain instead of 1-2 sqrt calls per candidate pair.
-    sq = sq_dist_sql(lx, ly, rx, ry)
-    rpred = f"({sq}) <= {flit(sq_threshold_le(float(radius)))}"
-    if annulus_low is not None:
-        rpred = (
-            f"({rpred} AND ({sq}) > "
-            f"{flit(sq_threshold_le(float(annulus_low)))})"
-        )
-    d = F.expr(dist_sql(lx, ly, rx, ry))
-    if how == "left":
-        if explode_side != "left" or extra_on:
-            raise ValueError(
-                "how='left' requires the compact-dimension fixed-radius "
-                "shape (explode_side='left', no extra_on)."
-            )
-        # LEFT OUTER with the radius/annulus predicate inside the join
-        # condition: every exploded probe row survives (right side null
-        # when no within-annulus partner), so a downstream per-key
-        # aggregate covers zero-candidate keys without any join-back to
-        # the probe table (see locationswap's join-free pick).
-        cond = (lt["_cell"] == rt["_cell"]) & F.expr(rpred)
-        if salt > 1:
-            cond = (lt["_salt"] == rt["_salt"]) & cond
-        joined = lt.join(rt, cond, "left").drop(rt["_cell"])
-        if salt > 1:
-            joined = joined.drop(rt["_salt"])
-        return joined.withColumn(dist_col, d).drop("_cell", "_salt")
-
-    cond = None
-    for lc, rc in extra_on or []:
-        c = lt[lc] == rt[rc]
-        cond = c if cond is None else (cond & c)
-    if cond is not None:
-        for k in on:
-            cond = (lt[k] == rt[k]) & cond
-        joined = lt.join(rt, on=cond).drop(rt["_cell"])
-        if salt > 1:
-            joined = joined.drop(rt["_salt"])
-    else:
-        joined = lt.join(rt, on=on)
+        rt = right.withColumn("_cell", F.expr(cells.cell_sql(rx, ry, cs)))
     return (
-        joined.where(F.expr(rpred))
-        .withColumn(dist_col, d)
-        .drop("_cell", "_salt")
+        cell_join(
+            lt, rt, lx, ly, salt=salt, pin="right" if broadcast_right else None,
+            on=extra_on or (), how=how, cond=F.expr(pred),
+        )
+        .withColumn(dist_col, F.expr(dist_sql(lx, ly, rx, ry)))
+        .drop("_rlo", "_rhi")
     )

@@ -10,16 +10,17 @@ hard-part 1) and gives it an exact DuckDB oracle twin. No UDF, no shuffle:
 the whole mask is one whole-stage-codegen projection over the scan.
 
 Containment (``container=``) runs the reference's retry loop as driver-side
-rounds over the unconverged subset: attempt ``a`` uses draw index ``a``, so
-the result is "first attempt that lands in the home polygon" — order-free,
-partition-independent, and replayable.
+rounds over the unconverged subset (``escalate.escalate``): attempt ``a``
+uses draw index ``a``, so the result is "first attempt that lands in the
+home polygon" — order-free, partition-independent, and replayable.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions import masksql, rng
+from .escalate import escalate
 from .pip import pip_join
 
 
@@ -110,27 +111,23 @@ def donut(
     # fewer Spark jobs: expected rounds = O(log(points)/BLOCK) since
     # per-attempt success probability is bounded below.
     BLOCK = 8
-    parts: list[DataFrame] = []
-    remaining = pts
-    a0 = 0
-    while a0 < max_attempts:
+
+    def step(remaining: DataFrame, rnd: int, _n) -> tuple[DataFrame, Column]:
         # Never explode past the attempt budget: a partial last block keeps
         # attempt indices < max_attempts, so the composite key below cannot
         # collide across points and the semantics stay identical to the
         # oracle's range(0, max_attempts) unnest.
-        blk = min(BLOCK, max_attempts - a0)
-        att = remaining.withColumn(
-            "_att", F.explode(F.array(*[F.lit(a0 + i) for i in range(blk)]))
-        )
+        a0 = rnd * BLOCK
+        att = remaining.withColumn("_att", F.explode(F.array(
+            *[F.lit(a) for a in range(a0, min(a0 + BLOCK, max_attempts))]
+        )))
         stages = masksql.donut_stages(key, low, high, seed, distribution, attempt="_att", fast=True)
-        cand = _apply_stages(att, stages)
         cand = (
-            cand.withColumn("_mx", F.expr(f"{x} + _offx"))
+            _apply_stages(att, stages)
+            .withColumn("_mx", F.expr(f"{x} + _offx"))
             .withColumn("_my", F.expr(f"{y} + _offy"))
             .drop(*masksql.donut_temp_cols(stages))
-        )
-        cand = cand.withColumn(
-            "_ck", F.col(key) * (max_attempts + 1) + F.col("_att")
+            .withColumn("_ck", F.col(key) * (max_attempts + 1) + F.col("_att"))
         )
         landed = pip_join(
             cand, container, key="_ck", x="_mx", y="_my",
@@ -138,35 +135,28 @@ def donut(
         ).select("_ck", F.col("poly_id").alias("_landed"))
         # First in-home attempt per point: min over the attempt index alone
         # (a BIGINT -> map-side-combining HashAggregate; min(struct) would
-        # plan a SortAggregate over every candidate). The winning
-        # coordinates are recomputed from the deterministic stages at the
-        # picked attempt — a pure codegen projection, bit-identical to the
-        # candidate that won.
+        # plan a SortAggregate over every candidate). One LEFT join marks
+        # every residue point (null _batt = not yet home).
         ok = (
             cand.join(landed, "_ck")
             .where(F.col("_landed") == F.col("_home"))
             .groupBy(key)
             .agg(F.min("_att").alias("_batt"))
         )
-        resolved = remaining.join(ok, key, "inner")
-        rstages = masksql.donut_stages(key, low, high, seed, distribution, attempt="_batt", fast=True)
-        resolved = (
-            _apply_stages(resolved, rstages)
-            .withColumn(x, F.expr(f"{x} + _offx"))
-            .withColumn(y, F.expr(f"{y} + _offy"))
-            .drop(*masksql.donut_temp_cols(rstages), "_batt", "_home")
-        )
-        parts.append(resolved.localCheckpoint(eager=True))
-        remaining = remaining.join(ok.select(key), key, "left_anti").localCheckpoint(
-            eager=True
-        )
-        if remaining.isEmpty():
-            break
-        a0 += blk
-    else:
+        return remaining.join(ok, key, "left"), F.col("_batt").isNotNull()
+
+    def give_up(_remaining: DataFrame) -> None:
         raise RuntimeError(f"Containment retry did not converge in {max_attempts} attempts.")
 
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = escalate(pts, step, give_up, -(-max_attempts // BLOCK))
+    # The winning coordinates are recomputed from the deterministic stages
+    # at the picked attempt — a pure codegen projection, bit-identical to
+    # the candidate that won.
+    rstages = masksql.donut_stages(key, low, high, seed, distribution, attempt="_batt", fast=True)
+    out = (
+        _apply_stages(out, rstages)
+        .withColumn(x, F.expr(f"{x} + _offx"))
+        .withColumn(y, F.expr(f"{y} + _offy"))
+        .drop(*masksql.donut_temp_cols(rstages), "_batt", "_home")
+    )
     return _post(out)

@@ -7,131 +7,100 @@ NND statistics (``analysis.py:222-237``).
 Algorithm: join probe points to candidates sharing a 3x3 cell neighborhood
 at cell size ``cs``; a point's argmin is PROVEN exact when its best distance
 is <= cs (everything within cs was examined). Unconverged points escalate to
-3x coarser cells — a driver loop over a geometrically shrinking subset, each
-round one Spark job. Deterministic ties: lexicographic (dist, neighbor key).
+3x coarser cells — a driver loop over a geometrically shrinking subset
+(:func:`escalate.escalate`), each round one Spark job. Deterministic ties:
+lexicographic (dist, neighbor key).
 """
 
 from __future__ import annotations
 
 import math
+import operator
+from itertools import accumulate, repeat
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..functions import cells
 from ..functions.rng import flit
-from .distance_join import dist_sql, explode_pruned_ring
+from .distance_join import cell_join, dist_sql, explode_pruned_ring
+from .escalate import escalate
 
-
-def _ring1_pruned(df: DataFrame, x: str, y: str, cs: float) -> DataFrame:
-    """``df`` + ``_cell`` exploded to the 3x3 neighbor ring around (x, y),
-    pruned to cells whose min distance to the point is <= cs
-    (distance_join.explode_pruned_ring — literal-index explode, all
-    whole-stage codegen). Safe for the escalation loops: a neighbor in a
-    pruned cell is farther than cs, so it could never satisfy the round's
-    convergence proof (nn_dist <= cs resp. k-th distance <= cs) — points
-    whose best candidate lives in a pruned cell escalate in both variants,
-    and converged winners/top-k lists are within cs, hence in kept cells.
-    Drops the corner cells with probability 1 - pi/4 each (~10% fewer
-    candidate pairs, measured at sf0.1)."""
-    return explode_pruned_ring(df, x, y, cs, 1, flit(cs))
-
-
+# Ring rounds before the brute-force fallback; cs triples each round.
+MAX_ROUNDS = 12
+# A counted residue whose 3x3 ring explode stays within this many rows is
+# broadcast next round, so the full neighbor table streams map-side instead
+# of re-shuffling + re-sorting per round (at 100 TB that re-shuffle is a
+# full pass over the fact table per round).
+RESIDUE_BROADCAST_ROWS = 2_000_000
 _PACK = 1 << 32
 
 
-def _argmin_pick(cand: DataFrame, d, key: str, okey: str, max_d: float) -> DataFrame:
-    """Per-key argmin over candidate pairs as ONE packed-BIGINT HashAggregate
-    (the locationswap pick pattern, locationswap.py:87-97).
-
-    ``min(struct(_d, okey, ...))`` forces a SortAggregate over the ENTIRE
-    exploded candidate set (struct buffers are not hash-aggregable) — the
-    round-1 locationswap scale-killer; and a two-pass min+join-back re-
-    shuffles the 9x candidate volume twice (measured 1.5x slower than the
-    SortAggregate at bench scale). Instead pack ``floor(_d * S) * 2^32 +
-    okey`` into one BIGINT with ``S = (2^31 - 1) / max_d`` where ``max_d``
-    bounds every candidate distance this round (3*cs covers the 3x3 cell
-    neighborhood: the farthest corner-to-corner pair is 2*sqrt(2)*cs).
-    ``min(BIGINT)`` hash-aggregates with map-side partials, no sort
-    anywhere; ties in the quantized distance break deterministically by min
-    okey. Distance granularity is max_d / 2^31 (~1.4e-9 relative — sub-
-    micrometer at any geographic cell size), below which two DISTINCT
-    candidate distances tie; exact double ties quantize equal on both
-    engines, so the (d, okey) oracle order is reproduced for any physically
-    distinguishable data. Preconditions (as locationswap): 0 <= okey < 2^32
-    (re-key wider ids before calling).
-
-    Returns (key, okey) of the winner; the caller joins the (small)
-    neighbor dimension to recover coordinates and recomputes the exact
-    distance — ``nn_dist`` is never quantized.
-    """
-    s = float((_PACK // 2 - 1) / max_d)
-    q = F.floor(d * F.lit(s)).cast("long")
-    return (
-        cand.withColumn("_pk", q * F.lit(_PACK) + F.col(okey))
-        .groupBy(key)
-        .agg(F.min("_pk").alias("_pk"))
-        .select(key, (F.col("_pk") % F.lit(_PACK)).alias(okey))
-    )
-
-
-def _argmin_pick_coords(
-    cand: DataFrame, d, key: str, okey: str, ox: str, oy: str, max_d: float
-) -> DataFrame:
-    """:func:`_argmin_pick` + the winner's coordinates out of the SAME
-    HashAggregate: ``min_by(ox, _pk)`` / ``min_by(oy, _pk)`` ride the
-    packed-BIGINT ordering key with map-side ``partial_min_by`` combining
-    (still no sort anywhere), so the per-round equi-join back to the
-    neighbor table to recover (ox, oy) — a fact-sized join on the self-join
-    paths — disappears. The packed key embeds ``okey``, so it is unique per
-    candidate pair and min_by is deterministic; the recovered coordinates
-    are the candidate row's own ox/oy, bit-identical to what the join-back
-    produced. Same preconditions as :func:`_argmin_pick`."""
-    s = float((_PACK // 2 - 1) / max_d)
-    q = F.floor(d * F.lit(s)).cast("long")
-    return (
-        cand.withColumn("_pk", q * F.lit(_PACK) + F.col(okey))
-        .groupBy(key)
-        .agg(
-            F.min("_pk").alias("_pk"),
-            F.expr(f"min_by({ox}, _pk)").alias(ox),
-            F.expr(f"min_by({oy}, _pk)").alias(oy),
-        )
-        .select(key, (F.col("_pk") % F.lit(_PACK)).alias(okey), ox, oy)
-    )
+def _cell_candidates(remaining, others, x, y, ox, oy, cs, salt, pin, on=(),
+                     how="inner", cond=None) -> DataFrame:
+    """Candidate pairs of one escalation round: ``remaining`` exploded to
+    the 3x3 neighbor ring around (x, y), pruned to cells whose min distance
+    to the point is <= cs (distance_join.explode_pruned_ring), cell-joined
+    to ``others``. The pruning is safe for both escalation variants: a
+    neighbor in a pruned cell is farther than cs, so it could never satisfy
+    the round's convergence proof (nn_dist <= cs resp. k-th distance <=
+    cs) — points whose best candidate lives in a pruned cell escalate, and
+    converged winners/top-k lists are within cs, hence in kept cells. Drops
+    the corner cells with probability 1 - pi/4 each (~10% fewer candidate
+    pairs, measured at sf0.1)."""
+    lt = explode_pruned_ring(remaining, x, y, cs, 1, flit(cs))
+    rt = others.withColumn("_cell", F.expr(cells.cell_sql(ox, oy, cs)))
+    return cell_join(lt, rt, x, y, salt=salt, pin=pin, on=on, how=how, cond=cond)
 
 
 def _argmin_pick_rows(
-    cand: DataFrame, d, key_cols, cols, okey: str, ox: str, oy: str,
-    max_d: float
+    cand: DataFrame, d, key: str, cols, okey: str, ox: str, oy: str, max_d: float
 ) -> DataFrame:
-    """Group-carry variant of :func:`_argmin_pick_coords`: the grouping key
-    is the probe row's UNIQUE key alone (``key_cols``; row keys are unique
-    by contract — in group mode they are unique ACROSS groups too) and the
-    aggregate output IS the marked probe table — the per-round fact
-    join-back (``remaining JOIN picked``: a full fact shuffle + two sorts
-    per escalation round at 100 TB) disappears. The remaining probe columns
-    (``cols`` minus ``key_cols``) are constant per key, so they come out as
-    ``min()`` AGGREGATES over equal values (bit-identical) instead of extra
-    grouping keys: double grouping keys pay a normalize-NaN/zero wrapper
-    per CANDIDATE ROW on the pair stream and widen the hash-table key,
-    while plain buffers cost one compare per row (the locationswap /
-    k-verify slim aggregates take the same shape). Output column order is
-    ``cols..., ox, oy, okey`` — identical to the former group-by-everything
-    spelling. Meant for candidates from a LEFT OUTER cell join:
-    null-extended rows (no cell-mate passing exclude_self) carry null
-    ``_pk``/``ox``/``oy``; ``min``/``min_by`` ignore null ordering values,
-    so an all-null group yields a null winner (-> null nn_dist -> the point
-    escalates) — bit-identical to the former left-join-back semantics. Same
-    packing preconditions as :func:`_argmin_pick`."""
+    """Per-key argmin over candidate pairs as ONE HashAggregate: one output
+    row per ``key`` holding ``cols..., ox, oy, okey`` of the nearest
+    candidate.
+
+    ``min(struct(_d, okey, ...))`` forces a SortAggregate over the ENTIRE
+    exploded candidate set (struct buffers are not hash-aggregable).
+    Instead pack ``floor(_d * S) * 2^32 + okey`` into one BIGINT ``_pk``
+    with ``S = (2^31 - 1) / max_d``, where ``max_d`` bounds every candidate
+    distance (3*cs covers the 3x3 cell neighborhood: the farthest
+    corner-to-corner pair is 2*sqrt(2)*cs). ``min(_pk)`` hash-aggregates
+    with map-side partials; ties in the quantized distance break by min
+    okey. Distance granularity is max_d / 2^31 (~1.4e-9 relative —
+    sub-micrometer at any geographic cell size), below which two DISTINCT
+    candidate distances tie; exact double ties quantize equal on both
+    engines, so the (d, okey) oracle order is reproduced for any physically
+    distinguishable data. ``min_by(ox, _pk)`` / ``min_by(oy, _pk)`` ride
+    the same key, so the winner's coordinates come out of the aggregate
+    with no join back to the neighbor table; ``_pk`` embeds okey, so it is
+    unique per candidate pair and min_by is deterministic. ``nn_dist`` is
+    recomputed exactly from them by the caller — never quantized.
+
+    The grouping key is ``key`` alone, and the other ``cols`` ride as
+    ``min()`` aggregates, so the aggregate output IS the marked probe table
+    (no per-round fact join-back) and double columns pay no per-row
+    normalize-NaN/zero wrapper as grouping keys would. Null-extended rows
+    of a LEFT OUTER cell join carry null ``_pk``/``ox``/``oy``, which
+    min/min_by ignore: an all-null group yields a null winner (-> null
+    nn_dist -> the point escalates). Pass ``cols=[key]`` for a bare pick.
+
+    Preconditions, not checked here:
+     - ``key`` is unique per probe row (in group mode, across groups too):
+       rows sharing a key would merge into one hybrid row, each column's
+       min taken over both;
+     - every carried column (``cols`` minus ``key``) is primitive: a
+       string, binary or struct carry makes min() a SortAggregate over the
+       whole candidate stream (nearest_neighbor strips payload columns
+       before the escalation for this reason);
+     - 0 <= okey < 2^32 (re-key wider ids before calling)."""
     s = float((_PACK // 2 - 1) / max_d)
-    q = F.floor(d * F.lit(s)).cast("long")
-    carry = [c for c in cols if c not in key_cols]
+    pk = F.floor(d * F.lit(s)).cast("long") * F.lit(_PACK) + F.col(okey)
     return (
-        cand.withColumn("_pk", q * F.lit(_PACK) + F.col(okey))
-        .groupBy(*key_cols)
+        cand.withColumn("_pk", pk)
+        .groupBy(key)
         .agg(
-            *[F.min(c).alias(c) for c in carry],
+            *[F.min(c).alias(c) for c in cols if c != key],
             F.min("_pk").alias("_pk"),
             F.expr(f"min_by({ox}, _pk)").alias(ox),
             F.expr(f"min_by({oy}, _pk)").alias(oy),
@@ -141,62 +110,21 @@ def _argmin_pick_rows(
     )
 
 
-def _salt_cell_join(lt, rt, x, y, salt, broadcast_others, extra_on=(),
-                    broadcast_left=False, how="inner", extra_cond=None):
-    """Join the cell-tagged sides, optionally scattering hot cells: the
-    probe side hashes into ``salt`` sub-keys, the build side replicates
-    once per sub-key — one dense cluster (a city) then spreads over
-    ``salt`` reducers instead of one (north rule; same machinery as
-    distance_join.py). AQE skew-join remains the adaptive backstop.
-    ``extra_on`` columns (e.g. a group/side key) join alongside the cell.
+def _sizes(cs: float) -> list[float]:
+    """Cell size of each ring round: cs, then 3x per round (multiplied
+    round by round, as the rounds escalate)."""
+    return list(accumulate(repeat(3.0, MAX_ROUNDS - 1), operator.mul, initial=cs))
 
-    ``broadcast_left=True`` is the BOUNDED-RESIDUE escalation path: the
-    caller has COUNTED the probe side (a driver-side bound, like street's
-    max_graph_nodes — never a planner estimate) and knows the exploded
-    residue is tiny, so broadcasting it lets the full neighbor table
-    stream map-side instead of re-shuffling + re-sorting per escalation
-    round (at 100 TB that re-shuffle is a full pass over the fact table
-    per round)."""
-    if salt > 1:
-        lt = lt.withColumn("_sk", (F.xxhash64(x, y) % salt + salt) % salt)
-        rt = rt.withColumn(
-            "_sk", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-        )
-        on = ["_cell", "_sk", *extra_on]
-    else:
-        on = ["_cell", *extra_on]
-    if broadcast_others:
-        rt = F.broadcast(rt)
-    elif broadcast_left:
-        lt = F.broadcast(lt)
-    else:
-        # Catalyst's sizeInBytes for the probe side IGNORES the 9x cell
-        # explode, so a mid-size self-join sneaks under the session's 64 MB
-        # auto-broadcast threshold and the planner builds a hash relation
-        # from the EXPLODED side — millions of rows serialized through the
-        # driver, once per escalation round (the r4 q_voronoi_nn bench
-        # regression). Neither side of the cell join is a dimension unless
-        # the caller says so: pin the shuffled sort-merge join (SMJ also
-        # beats shuffled-hash ~2.5x here; measured round 3).
-        lt = lt.hint("merge")
-    if how != "inner" or extra_cond is not None:
-        # Explicit-condition form (LEFT OUTER keeps every probe-cell row,
-        # null-extended when no cell-mate passes ``extra_cond``, e.g. the
-        # exclude_self predicate — which must live IN the condition: a
-        # post-join filter would drop the null-extended rows too). The
-        # build side's join-key columns are dropped so downstream sees one
-        # copy, the probe side's (null-free on unmatched rows).
-        cond = None
-        for c in on:
-            eq = lt[c] == rt[c]
-            cond = eq if cond is None else (cond & eq)
-        if extra_cond is not None:
-            cond = cond & extra_cond
-        j = lt.join(rt, cond, how)
-        for c in on:
-            j = j.drop(rt[c])
-        return j.drop("_cell", *(["_sk"] if salt > 1 else []))
-    return lt.join(rt, on).drop("_cell", *(["_sk"] if salt > 1 else []))
+
+def _bcast(n: int | None) -> bool:
+    """Whether a residue COUNTED at ``n`` rows is broadcast: its 3x3 ring
+    explode stays within RESIDUE_BROADCAST_ROWS."""
+    return n is not None and 9 * n <= RESIDUE_BROADCAST_ROWS
+
+
+def _pin(broadcast_others: bool, n: int | None) -> str:
+    """cell_join pin of a round over a residue of ``n`` rows."""
+    return "right" if broadcast_others else "left" if _bcast(n) else "merge"
 
 
 def estimate_cell_size(df: DataFrame, x: str = "x", y: str = "y") -> float:
@@ -229,9 +157,7 @@ def knn_join(
     cs: float | None = None,
     exclude_self: bool = False,
     broadcast_others: bool = False,
-    max_rounds: int = 12,
     salt: int = 0,
-    residue_broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """Exact k-nearest-neighbors join (k rows per point, rank 1..k) by the
     same ring-escalation proof as ``nearest_neighbor``: a point's top-k is
@@ -244,77 +170,50 @@ def knn_join(
     unbounded sort buffer (plan-gated in tests/test_plans.py alongside the
     cs-independence and salted-equivalence gates, the same guarantees
     ``nearest_neighbor`` carries). ``salt`` scatters hot cells across
-    reducers (see ``_salt_cell_join``)."""
+    reducers (see ``distance_join.cell_join``)."""
     if cs is None:
         cs = estimate_cell_size(others, ox, oy)
-
+    sizes = _sizes(cs)
     d = F.expr(dist_sql(x, y, ox, oy))
-    parts: list[DataFrame] = []
-    remaining = points
-    bcast_residue = False
-    for rnd in range(max_rounds + 1):
-        final_round = rnd == max_rounds
-        if final_round:
-            # brute-force the (tiny) unconverged residue
-            cand = remaining.crossJoin(
-                F.broadcast(others) if broadcast_others else others
-            )
-        else:
-            rcell = F.expr(cells.cell_sql(ox, oy, cs))
-            lt = _ring1_pruned(remaining, x, y, cs)
-            rt = others.withColumn("_cell", rcell)
-            cand = _salt_cell_join(
-                lt, rt, x, y, salt, broadcast_others,
-                broadcast_left=bcast_residue,
-            )
-        if exclude_self:
-            cand = cand.where(F.col(okey) != F.col(key))
+    xcond = (F.col(okey) != F.col(key)) if exclude_self else None
+    out = [key, okey, ox, oy, F.col("_d").alias("nn_dist"), F.col("_rank").alias("rank")]
+
+    def topk(cand: DataFrame) -> DataFrame:
         w = Window.partitionBy(key).orderBy("_d", okey)
-        topk = (
+        return (
             cand.withColumn("_d", d)
             .withColumn("_rank", F.row_number().over(w))
             .where(F.col("_rank") <= k)
         )
-        if final_round:
-            parts.append(topk.select(
-                key, F.col(okey), F.col(ox), F.col(oy),
-                F.col("_d").alias("nn_dist"), F.col("_rank").alias("rank"),
-            ))
-            break
+
+    def step(remaining, rnd, n):
+        cs_r = sizes[rnd]
+        t = topk(_cell_candidates(
+            remaining, others, x, y, ox, oy, cs_r, salt,
+            _pin(broadcast_others, n), cond=xcond,
+        ))
         # converged iff the point HAS k candidates and its k-th dist <= cs.
         # Both facts come from window aggregates over the SAME (key)
         # partitioning the rank window established (the sort by (key, _d,
-        # okey) satisfies the unordered window's requirement), so the
-        # former per-round groupBy + semi-join — which re-executed the
-        # whole candidate pipeline a second time for the anti-join's
-        # lineage — collapses into the one windowed pass (VERDICT r05 #6).
+        # okey) satisfies the unordered window's requirement), so no
+        # per-round groupBy + semi-join re-executes the candidate pipeline
+        # for the anti-join's lineage (VERDICT r05 #6).
         wk = Window.partitionBy(key)
         resolved = (
-            topk.withColumn("_kn", F.count(F.lit(1)).over(wk))
+            t.withColumn("_kn", F.count(F.lit(1)).over(wk))
             .withColumn("_kd", F.max("_d").over(wk))
-            .where((F.col("_kn") == k) & (F.col("_kd") <= F.lit(float(cs))))
-            .select(
-                key, F.col(okey), F.col(ox), F.col(oy),
-                F.col("_d").alias("nn_dist"), F.col("_rank").alias("rank"),
-            )
+            .where((F.col("_kn") == k) & (F.col("_kd") <= F.lit(float(cs_r))))
         )
-        parts.append(resolved.localCheckpoint(eager=True))
-        # anti-join against the CHECKPOINTED resolved keys — no recompute
-        remaining = remaining.join(
-            parts[-1].select(key), key, "left_anti"
-        ).localCheckpoint(eager=True)
-        # counted residue -> broadcast the exploded residue next round (see
-        # nearest_neighbor): no full re-shuffle of `others` per escalation
-        n_rem = remaining.count()
-        if n_rem == 0:
-            break
-        bcast_residue = 9 * n_rem <= residue_broadcast_rows
-        cs *= 3.0
+        return resolved.select(*out), None
 
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    def fallback(remaining):
+        # brute-force the (tiny) unconverged residue
+        cand = remaining.crossJoin(F.broadcast(others) if broadcast_others else others)
+        if exclude_self:
+            cand = cand.where(xcond)
+        return topk(cand).select(*out)
+
+    return escalate(points.select(key, x, y), step, fallback, MAX_ROUNDS, key=key)
 
 
 def nearest_neighbor(
@@ -329,16 +228,15 @@ def nearest_neighbor(
     cs: float | None = None,
     exclude_self: bool = False,
     broadcast_others: bool = False,
-    max_rounds: int = 12,
     salt: int = 0,
     group: str | None = None,
-    residue_broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """points + (okey, ox, oy, nn_dist) of each point's exact nearest other.
 
     ``others`` must already carry columns (okey, ox, oy) disjoint from the
     point columns. ``exclude_self`` skips okey == key pairs (self-join mode).
-    ``salt`` scatters hot cells across reducers (see ``_salt_cell_join``).
+    ``salt`` scatters hot cells across reducers (see
+    ``distance_join.cell_join``).
 
     ``group`` names a column present in BOTH frames: neighbors are then
     searched within the group only (the column rides every cell join), so
@@ -346,107 +244,75 @@ def nearest_neighbor(
     before/after passes of ``analysis.nnd_delta`` collapse into a single
     run. Contract in group mode: ``key`` and ``okey`` values must be
     globally unique ACROSS groups (compose the group into them), because
-    the winner's coordinate recovery joins on ``okey`` alone.
+    the argmin pick groups by ``key`` alone.
+
+    Payload columns (anything besides key, x, y and the group — image
+    bytes, captions) never enter the candidate stream: the escalation runs
+    on the (key, x, y[, group]) projection and the payload joins back once
+    at the end. Bare frames skip that join.
     """
     if cs is None:
         cs = estimate_cell_size(others, ox, oy)
-
-    extra_on = (group,) if group else ()
+    sizes = _sizes(cs)
+    on = [(group, group)] if group else []
     d = F.expr(dist_sql(x, y, ox, oy))
-    parts: list[DataFrame] = []
-    remaining = points
-    bcast_residue = False
-    for _ in range(max_rounds):
-        rcell = F.expr(cells.cell_sql(ox, oy, cs))
-        lt = _ring1_pruned(remaining, x, y, cs)
-        rt = others.withColumn("_cell", rcell)
-        # candidate distance this round is < 3*cs (3x3 neighborhood bound);
-        # the pick aggregate carries the winner's coordinates via min_by,
-        # so no join-back to ``others`` is needed — and on the unbounded
-        # rounds the probe row's own columns ride as GROUPING KEYS of a
-        # LEFT OUTER cell join (exclude_self inside the join condition), so
-        # the aggregate output already IS the marked probe table: the
-        # per-round ``remaining JOIN picked`` fact join-back (a full fact
-        # shuffle + two sorts per round at 100 TB) is gone too. The
-        # counted-residue broadcast rounds keep the inner+join-back shape:
-        # a BroadcastHashJoin cannot build the LEFT side of a LEFT OUTER
-        # join, and with a counted-tiny residue the join-back is free.
-        if bcast_residue:
-            cand = _salt_cell_join(
-                lt, rt, x, y, salt, broadcast_others, extra_on,
-                broadcast_left=True,
-            )
-            if exclude_self:
-                cand = cand.where(F.col(okey) != F.col(key))
-            picked = _argmin_pick_coords(cand, d, key, okey, ox, oy, 3.0 * cs)
-            marked = (
-                remaining.join(picked, key, "left")
-                .withColumn("nn_dist", d)
-                .localCheckpoint(eager=True)
-            )
+    xcond = (F.col(okey) != F.col(key)) if exclude_self else None
+    core = [key, x, y] + ([group] if group else [])
+    probe = points.select(*core) if set(points.columns) - set(core) else points
+
+    def step(remaining, rnd, n):
+        cs_r = sizes[rnd]
+        # candidate distance this round is < 3*cs (3x3 neighborhood bound).
+        # Unbounded rounds: a LEFT OUTER cell join (exclude_self inside the
+        # join condition) keeps every probe row, so the pick aggregate's
+        # output already IS the marked probe table — no per-round
+        # ``remaining JOIN picked`` fact join-back (a full fact shuffle +
+        # two sorts per round at 100 TB). Counted-residue broadcast rounds
+        # keep the inner + join-back shape: a BroadcastHashJoin cannot
+        # build the LEFT side of a LEFT OUTER join, and with a
+        # counted-tiny residue the join-back is free.
+        how = "inner" if _bcast(n) else "left"
+        cand = _cell_candidates(
+            remaining, others, x, y, ox, oy, cs_r, salt,
+            _pin(broadcast_others, n), on, how, xcond,
+        )
+        if how == "inner":
+            picked = _argmin_pick_rows(cand, d, key, [key], okey, ox, oy, 3.0 * cs_r)
+            marked = remaining.join(picked, key, "left")
         else:
-            xcond = (F.col(okey) != F.col(key)) if exclude_self else None
-            cand = _salt_cell_join(
-                lt, rt, x, y, salt, broadcast_others, extra_on,
-                how="left", extra_cond=xcond,
+            marked = _argmin_pick_rows(
+                cand, d, key, remaining.columns, okey, ox, oy, 3.0 * cs_r
             )
-            marked = (
-                _argmin_pick_rows(
-                    cand, d, [key], remaining.columns, okey, ox, oy, 3.0 * cs
-                )
-                .withColumn("nn_dist", d)
-                .localCheckpoint(eager=True)
-            )
-        conv = F.col("nn_dist").isNotNull() & (F.col("nn_dist") <= F.lit(float(cs)))
-        parts.append(marked.where(conv))
-        remaining = marked.where(
-            F.col("nn_dist").isNull() | (F.col("nn_dist") > F.lit(float(cs)))
-        ).select(*remaining.columns)
-        # COUNT (not estimate) the residue: escalation rounds over a tiny
-        # unconverged set broadcast the exploded residue instead of
-        # re-shuffling + re-sorting the full neighbor table every round.
-        # The count reads the checkpointed `marked`, so it is one cheap
-        # local scan; the 9x ring explode is accounted for in the bound.
-        n_rem = remaining.count()
-        if n_rem == 0:
-            break
-        bcast_residue = 9 * n_rem <= residue_broadcast_rows
-        cs *= 3.0
-    else:
-        # Termination fallback: brute-force the (tiny) residue; the pack
-        # scale must bound ALL pair distances, so take the union-bbox
-        # diagonal (two scalar aggregates over the residue + the dimension).
-        rb = remaining.agg(
-            F.min(x), F.max(x), F.min(y), F.max(y)
-        ).first()
+        nd = F.col("nn_dist")
+        return marked.withColumn("nn_dist", d), nd.isNotNull() & (nd <= F.lit(float(cs_r)))
+
+    def fallback(remaining):
+        # Brute-force the (tiny) residue; the pack scale must bound ALL pair
+        # distances, so take the union-bbox diagonal (two scalar aggregates
+        # over the residue + the dimension).
+        rb = remaining.agg(F.min(x), F.max(x), F.min(y), F.max(y)).first()
         ob = others.agg(F.min(ox), F.max(ox), F.min(oy), F.max(oy)).first()
         if None in (*rb, *ob):
             # Degenerate input: one side is empty (its bbox aggregates are
-            # NULL) — there are no candidate neighbors, so skip the
-            # brute-force append and return what the ring rounds produced
-            # (possibly an empty result, matching the struct-argmin path).
-            pass
-        else:
-            diag = math.hypot(
-                max(rb[1], ob[1]) - min(rb[0], ob[0]),
-                max(rb[3], ob[3]) - min(rb[2], ob[2]),
-            ) + 1.0
-            oth = others
-            if group:
-                oth = oth.withColumnRenamed(group, "_og")
-            if broadcast_others:
-                oth = F.broadcast(oth)
-            cand = remaining.crossJoin(oth)
-            if group:
-                cand = cand.where(F.col(group) == F.col("_og")).drop("_og")
-            if exclude_self:
-                cand = cand.where(F.col(okey) != F.col(key))
-            picked = _argmin_pick_coords(cand, d, key, okey, ox, oy, diag)
-            parts.append(
-                remaining.join(picked, key, "inner").withColumn("nn_dist", d)
-            )
+            # NULL) — there are no candidate neighbors, so return nothing
+            # for the residue (possibly an empty result, matching the
+            # struct-argmin path).
+            return None
+        diag = math.hypot(
+            max(rb[1], ob[1]) - min(rb[0], ob[0]),
+            max(rb[3], ob[3]) - min(rb[2], ob[2]),
+        ) + 1.0
+        oth = others.withColumnRenamed(group, "_og") if group else others
+        cand = remaining.crossJoin(F.broadcast(oth) if broadcast_others else oth)
+        if group:
+            cand = cand.where(F.col(group) == F.col("_og")).drop("_og")
+        if exclude_self:
+            cand = cand.where(xcond)
+        picked = _argmin_pick_rows(cand, d, key, [key], okey, ox, oy, diag)
+        return remaining.join(picked, key, "inner").withColumn("nn_dist", d)
 
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    out = escalate(probe, step, fallback, MAX_ROUNDS)
+    if probe is points:
+        return out
+    res = [ox, oy, okey, "nn_dist"]
+    return points.join(out.select(key, *res), key).select(*points.columns, *res)

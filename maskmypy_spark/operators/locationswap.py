@@ -64,12 +64,14 @@ def locationswap(
     # ONE row per cell, so a planner/explicit broadcast builds the minimal
     # hash relation and — at scale — a stored/bucketed address table scans
     # exchange-free while only the exploded probe side moves (the shape
-    # BENCH/exp_bucketed.py measured fastest and most stable at 32 cores).
+    # measured fastest and most stable at 32 cores: BENCH/NOTES.md,
+    # "Bucketed-dimension experiment").
     # Exploding the dimension instead multiplies the build side ring² times.
     # cs = high/2 roughly halves candidate pairs vs the 1-ring cs=high
     # default (pi*(r + 0.6cs)² candidate area shrinks toward the disk), at
     # the cost of a (2*ceil(r/cs)+1)²-cell probe explode — measured optimum
-    # at bench scale (BENCH/exp_r06.py: cs sweep 500/250/167).
+    # at bench scale (OPTIMIZATION_r06.md, q_locationswap: the 1-JVM cs
+    # sweep 500/250/167).
     from ..functions import rng as _rng
     from ..functions.masksql import swap_pick_parts
 

@@ -61,7 +61,8 @@ def get_spark(
     # deploy/experiment hook: semicolon-separated key=value pairs applied
     # last (e.g. SPARK_GRAFT_EXTRA_CONF="spark.io.compression.codec=zstd;
     # spark.memory.offHeap.enabled=true") — cluster-level knobs without
-    # touching call sites; BENCH/exp_832.py drives its config matrix here.
+    # touching call sites; BENCH/NOTES.md ("8 -> 32 config-knob
+    # experiment") records a config matrix driven through this hook.
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for pair in filter(None, (p.strip() for p in extra.split(";"))):
         k, _, v = pair.partition("=")

@@ -182,15 +182,14 @@ def test_nearest_neighbor_unbounded_round_has_no_fact_join_back(spark, monkeypat
     round (a full fact shuffle + two sorts at 100 TB)."""
     from pyspark.sql.classic.dataframe import DataFrame
 
-    from maskmypy_spark.operators.knn import nearest_neighbor
+    from maskmypy_spark.operators import knn
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", lambda self, *a, **kw: self)
+    monkeypatch.setattr(knn, "MAX_ROUNDS", 1)
+    monkeypatch.setattr(knn, "RESIDUE_BROADCAST_ROWS", 0)
     pts = spark.createDataFrame(fixtures.sensitive_points_pdf(200, seed=42))
     others = pts.selectExpr("pid AS nn_id", "x AS nn_x", "y AS nn_y")
-    nn = nearest_neighbor(
-        pts, others, cs=50000.0, exclude_self=True, max_rounds=1,
-        residue_broadcast_rows=0,
-    )
+    nn = knn.nearest_neighbor(pts, others, cs=50000.0, exclude_self=True)
     simple = _plan(nn, mode="simple")
     n_joins = sum(1 for ln in simple.splitlines() if "Join" in ln)
     assert n_joins == 1, simple
@@ -217,6 +216,28 @@ def test_nearest_neighbor_argmin_hash_aggregates(spark, monkeypatch):
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+    # payload columns (a caption string, image bytes) must stay out of the
+    # candidate stream: min() over them would plan a SortAggregate
+    payload = pts.select(
+        "pid",
+        F.concat(F.lit("pt "), F.col("pid").cast("string")).alias("caption"),
+        F.expr("CAST(concat('img', CAST(pid AS STRING)) AS BINARY)").alias("image"),
+    )
+    withp = pts.join(payload, "pid")
+    plan = _plan(voronoi(withp, cs=1000.0))
+    assert "SortAggregate" not in plan
+    assert "HashAggregate" in plan
+
+    def rows(df):
+        return {
+            tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+            for r in df.collect()
+        }
+
+    got = rows(voronoi(withp, cs=1000.0))
+    assert got == rows(voronoi(pts, cs=1000.0).join(payload, "pid"))
+    assert len(got) == 200
 
     nodes = spark.createDataFrame(fixtures.road_nodes_pdf(500))
     plan = _plan(snap_to_nodes(pts, nodes, cs=1000.0))
@@ -252,7 +273,13 @@ def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypat
             if "Join" in ln and "_cell" in ln
         ]
 
+    from maskmypy_spark.operators import knn
     from maskmypy_spark.operators.knn import nearest_neighbor
+
+    def no_residue_broadcast(build):
+        with monkeypatch.context() as m:
+            m.setattr(knn, "RESIDUE_BROADCAST_ROWS", 0)
+            return build()
 
     pts = spark.createDataFrame(fixtures.sensitive_points_pdf(200, seed=42))
     others = pts.selectExpr("pid AS nn_id", "x AS nn_x", "y AS nn_y")
@@ -260,18 +287,16 @@ def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypat
     # with the bounded-residue escalation DISABLED, every cell join (all
     # rounds) must stay sort-merge at any size estimate — the original r4
     # gate, unchanged
-    lines = _cell_join_lines(
-        nearest_neighbor(
-            pts, others, cs=1000.0, exclude_self=True, residue_broadcast_rows=0
-        )
-    )
+    lines = _cell_join_lines(no_residue_broadcast(
+        lambda: nearest_neighbor(pts, others, cs=1000.0, exclude_self=True)
+    ))
     assert lines, "no cell join found in plan"
     assert all("SortMergeJoin" in ln for ln in lines), lines
 
     # default path: round 1 (the UNBOUNDED fact x fact join — printed first,
     # parts are unioned in round order) must still be sort-merge; later
     # rounds MAY broadcast because the driver has COUNTED the residue under
-    # residue_broadcast_rows (a bound, not a planner estimate), and results
+    # knn.RESIDUE_BROADCAST_ROWS (a bound, not a planner estimate), and results
     # must be identical either way
     lines = _cell_join_lines(voronoi(pts, cs=1000.0))
     assert lines, "no cell join found in plan"
@@ -280,20 +305,17 @@ def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypat
     a = {tuple(r) for r in voronoi(pts, cs=1000.0).collect()}
     b = {
         tuple(r)
-        for r in nearest_neighbor(
-            pts, others, cs=1000.0, exclude_self=True, residue_broadcast_rows=0
+        for r in no_residue_broadcast(
+            lambda: nearest_neighbor(pts, others, cs=1000.0, exclude_self=True)
         )
         .select("pid")
         .collect()
     }
     assert len(a) == 200 and {r[0] for r in a} == {r[0] for r in b}
 
-    lines = _cell_join_lines(
-        knn_join(
-            pts, others, k=2, cs=1000.0, exclude_self=True,
-            residue_broadcast_rows=0,
-        )
-    )
+    lines = _cell_join_lines(no_residue_broadcast(
+        lambda: knn_join(pts, others, k=2, cs=1000.0, exclude_self=True)
+    ))
     assert lines, "no cell join found in plan"
     assert all("SortMergeJoin" in ln for ln in lines), lines
     lines = _cell_join_lines(knn_join(pts, others, k=2, cs=1000.0, exclude_self=True))
@@ -428,71 +450,6 @@ def test_k_verify_pipeline_plan_quality(spark):
     a = {(r["pid"], r["k_anonymity"]) for r in ks.collect()}
     b = {(r["pid"], r["k_anonymity"]) for r in k.select("pid", "k_anonymity").collect()}
     assert a == b
-
-
-def test_radius_count_join_interior_grid_aligned_boundaries(spark):
-    """Adversarial float-boundary stress for the interior-cell count
-    machinery (distance_join.radius_count_join — equivalence-gated but not
-    the bench default; see OPTIMIZATION_r06.md's negative result):
-    addresses on EXACT cell-grid lines and points with radii at exact cell
-    multiples put candidate cells precisely on the interior/boundary
-    classification fence and pairs precisely at dist == r. The
-    conservative slack must only ever demote cells to the exact per-pair
-    boundary class, so interior-shortcut counts must equal the
-    pair-enumerating slim path bit-for-bit — and the shortcut must
-    actually engage (some interior cells classified)."""
-    import itertools
-
-    from pyspark.sql import functions as F
-
-    from maskmypy_spark import analysis
-    from maskmypy_spark.operators.distance_join import radius_count_join
-
-    # addresses: a 40x40 lattice ON the cs=250 grid lines (every coordinate
-    # an exact multiple of 125 — corners, edge midpoints, cell centers)
-    addr_rows = [
-        (i * 40 + j, i * 125.0, j * 125.0) for i in range(40) for j in range(40)
-    ]
-    addr = spark.createDataFrame(addr_rows, "aid LONG, ax DOUBLE, ay DOUBLE")
-    # points: on lattice nodes and generic offsets; radii exact cell
-    # multiples (250, 500), exact half-cells (125, 375), and generic
-    pts_rows = []
-    pid = itertools.count()
-    for px, py in [(1000.0, 1000.0), (1125.0, 875.0), (1010.0, 990.0),
-                   (1250.0, 1250.0), (937.5, 1062.5)]:
-        for r in [125.0, 250.0, 375.0, 500.0, 333.3]:
-            pts_rows.append((next(pid), px, py, r))
-    cand = spark.createDataFrame(
-        pts_rows, "pid LONG, x DOUBLE, y DOUBLE, _radius DOUBLE"
-    )
-    sens = cand.select("pid", "x", "y")
-    pairs = radius_count_join(
-        cand, addr.select("ax", "ay"), radius=500.0,
-        lx="x", ly="y", rx="ax", ry="ay", left_radius_col="_radius",
-    )
-    shortcut = pairs.groupBy("pid").agg(
-        (F.sum(F.coalesce(F.col("_c"), F.lit(0))) + 1)
-        .cast("long").alias("k_anonymity")
-    )
-    slim = analysis.k_anonymity_address(
-        sens, sens, addr, max_radius=500.0, disp=cand, slim=True,
-    )
-    a = {(r["pid"], r["k_anonymity"]) for r in shortcut.collect()}
-    b = {(r["pid"], r["k_anonymity"]) for r in slim.select("pid", "k_anonymity").collect()}
-    assert a == b
-    # sanity: the disks cover many addresses AND interior cells engage
-    assert min(k for _, k in a) > 1 and max(k for _, k in a) > 20, a
-    from maskmypy_spark.functions import cells as _cells
-    from maskmypy_spark.functions.rng import flit as _flit
-    from maskmypy_spark.operators.distance_join import explode_pruned_ring
-
-    lt = explode_pruned_ring(
-        cand, "x", "y", 250.0, _cells.ring_for_radius(500.0, 250.0),
-        "_radius", n_sql=f"CAST(ceil((_radius) / {_flit(250.0)}) AS BIGINT)",
-        interior_col="_int",
-    )
-    n_int = lt.where(F.col("_int") == 1).count()
-    assert n_int > 0, "interior classification never engaged — test is vacuous"
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):

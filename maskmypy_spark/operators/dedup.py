@@ -8,11 +8,24 @@ operators the engine adds for its 100 TB target workload. Everything is
 built from the same primitives as the spatial layer: declarative explode +
 equi-join + aggregate (JVM-side), with the engine's hash family for
 sketches so results are partitioning-independent.
-"""
+
+Each text and vector primitive has one private builder every operator
+shares: :func:`_grams_sql` (word n-grams), :func:`_h60_sql` (60-bit md5
+hash), :func:`_jaccard` (exact verify), :func:`_bands` +
+:func:`_band_pairs` (banded pigeonhole self-join), :func:`_vectors` +
+:func:`_dot` / :func:`_cos` (vector arithmetic; ``_dot`` is the one place
+to swap the kernel) and :func:`_pack_desc` + :func:`_nearest` (packed
+BIGINT argmax)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import warnings
+
+import numpy as np
+from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql.window import Window
+
+from ..functions.rng import u_sql
 
 TOKENIZE = r"\s+"
 STOPWORDS = ("the", "a", "an", "and", "of", "to", "in", "is", "on", "for")
@@ -61,20 +74,32 @@ def doc_quality(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataF
     )
 
 
+def _grams_sql(t: str, n: int) -> str:
+    """SQL array of the word ``n``-grams of token-array column ``t``, gram
+    i built by direct element references (``t[i] || ' ' || t[i+1] ...``)
+    instead of ``concat_ws(slice(...))`` — higher-order-function lambdas
+    run INTERPRETED (CodegenFallback), and the slice allocated a fresh
+    sub-array per gram per doc; the direct form measured 10x faster at 1M
+    docs (43 -> 4.3 s, BENCH/NOTES.md). Identical strings: whitespace-split
+    tokens can contain neither NULLs nor the joiner. Callers must guard
+    docs shorter than ``n`` tokens (and NULL text): there ``sequence(0,
+    size - n)`` descends and the element references leave the array."""
+    idx = " || ' ' || ".join(f"{t}[i + {j}]" for j in range(n))
+    return f"transform(sequence(0, size({t}) - {n}), i -> {idx})"
+
+
+def _h60_sql(c: str) -> str:
+    """60-bit hash of string column ``c``: its first 15 md5 hex digits as
+    a BIGINT (dialect-shared SQL, so DuckDB oracles compute it bit-equal)."""
+    return f"CAST(conv(substring(md5({c}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def _dup_ngram_col(tcol: str, n: int):
-    """Gopher dup-n-gram fraction over a PRE-PROJECTED token-array column
-    ``tcol``: gram i is built by direct element references
-    (``t[i] || ' ' || t[i+1] ...``) instead of ``concat_ws(slice(...))`` —
-    higher-order-function lambdas run INTERPRETED (CodegenFallback), and
-    the slice allocated a fresh sub-array per gram per doc; the direct
-    form measured 10x faster at 1M docs (43 -> 4.3 s, BENCH/NOTES.md).
-    Identical strings, hence identical fractions: whitespace-split tokens
-    can contain neither NULLs nor the joiner, so element concat equals
-    concat_ws over the slice. The caller must project ``tcol`` in its OWN
-    select so the tokenization runs once per row (CollapseProject keeps
-    non-cheap multi-referenced aliases staged)."""
-    idx = " || ' ' || ".join(f"{tcol}[i + {j}]" for j in range(n))
-    grams = F.expr(f"transform(sequence(0, size({tcol}) - {n}), i -> {idx})")
+    """Gopher dup-n-gram fraction (0.0 under ``n`` tokens) over a
+    PRE-PROJECTED token-array column ``tcol``, projected in the caller's
+    OWN select so the tokenization runs once per row (CollapseProject
+    keeps non-cheap multi-referenced aliases staged)."""
+    grams = F.expr(_grams_sql(tcol, n))
     cnt = F.size(F.col(tcol)) - F.lit(n - 1)
     return F.when(
         cnt >= 1,
@@ -166,8 +191,6 @@ def _quality_gated(
     metrics + threshold filters (+ optional deterministic hash sample) as
     ONE projection-and-filter over the scan — nothing shuffles. Returns
     (key, text, alpha_ratio, dup_ngram_frac)."""
-    from ..functions.rng import u_sql
-
     alpha = F.expr(
         f"round(length(regexp_replace({text}, '[^a-zA-Z]', '')) / "
         f"CAST(nullif(length({text}), 0) AS DOUBLE), 6)"
@@ -208,7 +231,7 @@ def _quality_gated(
         )
     )
     if sample_rate is not None:
-        gated = gated.where(F.expr(u_sql(key, TAG_SAMPLE, seed)) < float(sample_rate))
+        gated = hash_sample(gated, sample_rate, key, seed)
     return gated
 
 
@@ -298,8 +321,6 @@ def hash_sample(
     size, so a sample drawn at 1000 executors replays bit-identically on a
     laptop, and disjoint seeds give independent samples (train/val/test
     splits). Plain filter: pushes down, no shuffle."""
-    from ..functions.rng import u_sql
-
     return df.where(F.expr(u_sql(key, TAG_SAMPLE, seed)) < float(rate))
 
 
@@ -426,18 +447,31 @@ def shingles(
     signatures — min over a multiset equals min over its set) being the
     engine's case. Set-semantics consumers (|A|, |A ∩ B| Jaccard counts)
     must keep the default."""
-    idx = " || ' ' || ".join(f"_t[i + {j}]" for j in range(n))
     out = (
         df.select(key, tokens_col(text).alias("_t"))
         .where(F.size("_t") >= n)
-        .select(
-            key,
-            F.explode(
-                F.expr(f"transform(sequence(0, size(_t) - {n}), i -> {idx})")
-            ).alias("shingle"),
-        )
+        .select(key, F.explode(F.expr(_grams_sql("_t", n))).alias("shingle"))
     )
     return out.distinct() if distinct else out
+
+
+def _jaccard(common: DataFrame, sh: DataFrame, key: str, threshold: float) -> DataFrame:
+    """Exact Jaccard verify: ``common`` holds one (d1, d2) row per shingle
+    the pair shares, ``sh`` the (key, shingle) sets the sizes count.
+    Returns (d1, d2, jaccard) with the 6 dp-rounded jaccard >= threshold."""
+    sizes = sh.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
+    return (
+        common.groupBy("d1", "d2")
+        .agg(F.count(F.lit(1)).alias("_c"))
+        .join(sizes.select(F.col(key).alias("d1"), F.col("_n").alias("_na")), "d1")
+        .join(sizes.select(F.col(key).alias("d2"), F.col("_n").alias("_nb")), "d2")
+        .withColumn(
+            "jaccard",
+            F.round(F.col("_c") / (F.col("_na") + F.col("_nb") - F.col("_c")), 6),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("d1", "d2", "jaccard")
+    )
 
 
 def ngram_jaccard_pairs(
@@ -463,66 +497,44 @@ def ngram_jaccard_pairs(
     When the cap actually drops shingles a ``UserWarning`` reports how many
     (one cheap aggregate job): true pairs can then be missed — the
     denominator |A|+|B|-|A∩B| still counts dropped shingles, so a capped
-    run only UNDER-estimates jaccard (no false positives)."""
-    sh = shingles(df, key, text, n).cache()
-    sizes = sh.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
+    run only UNDER-estimates jaccard (no false positives).
+
+    The shingle index materializes once, through an EAGER
+    ``localCheckpoint``: its job runs when this function is CALLED, no cache
+    entry outlives the call, and an executor lost afterwards makes a later
+    action over the result fail instead of recomputing."""
+    sh = shingles(df, key, text, n).localCheckpoint(eager=True)
+    kept = sh
     if max_shingle_df == "auto":
         max_shingle_df = max(4096, int(df.count() * 0.01))
     if max_shingle_df is not None:
-        # The hot set must materialize anyway as the anti-join's broadcast
-        # build side; caching it makes the warn-count job the SAME aggregate
-        # the join reuses (the previous version ran the shingle groupBy
-        # twice — once eagerly for the count, once inside the join).
+        # The hot set must fit executor memory anyway (it is the anti-join's
+        # broadcast build side), so collecting it is no new bound: one
+        # aggregate job serves the warning, and the anti-join probes a
+        # LocalRelation that never re-runs the shingle aggregate.
         hot = (
             sh.groupBy("shingle")
             .count()
             .where(F.col("count") > max_shingle_df)
             .select("shingle")
-            .cache()
+            .collect()
         )
-        n_hot = hot.count()
-        if n_hot:
-            import warnings
-
+        if hot:
             warnings.warn(
-                f"ngram_jaccard_pairs: dropping {n_hot} shingles with doc "
+                f"ngram_jaccard_pairs: dropping {len(hot)} shingles with doc "
                 f"frequency > {max_shingle_df}; jaccard is under-estimated "
                 "for pairs sharing them (pass max_shingle_df=None for the "
                 "exact, skew-unbounded join)",
                 UserWarning,
                 stacklevel=2,
             )
-            # The hot set must fit executor memory anyway (it is the
-            # anti-join's broadcast build side), so pulling it to the driver
-            # is no new bound; the collect reads the warm cache, the cache
-            # is then released immediately (no session-lifetime pin), and
-            # the anti-join probes a LocalRelation that never re-runs the
-            # shingle aggregate.
-            hot_df = sh.sparkSession.createDataFrame(
-                hot.collect(), schema="shingle string"
-            )
-            sh = sh.join(F.broadcast(hot_df), "shingle", "left_anti")
-        # in both branches the aggregate has fully served its purpose here
-        hot.unpersist()
-    a = sh.select(F.col(key).alias("d1"), "shingle")
-    b = sh.select(F.col(key).alias("d2"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .where(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    na = sizes.select(F.col(key).alias("d1"), F.col("_n").alias("_na"))
-    nb = sizes.select(F.col(key).alias("d2"), F.col("_n").alias("_nb"))
-    return (
-        common.join(na, "d1")
-        .join(nb, "d2")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("_c") / (F.col("_na") + F.col("_nb") - F.col("_c")), 6),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
+            hot_df = sh.sparkSession.createDataFrame(hot, schema="shingle string")
+            kept = sh.join(F.broadcast(hot_df), "shingle", "left_anti")
+    # sizes count the FULL sets (dropped shingles included)
+    a = kept.select(F.col(key).alias("d1"), "shingle")
+    b = kept.select(F.col(key).alias("d2"), "shingle")
+    return _jaccard(
+        a.join(b, "shingle").where(F.col("d1") < F.col("d2")), sh, key, threshold
     )
 
 
@@ -542,22 +554,11 @@ def fingerprint_winnow(
     Fully declarative: posexplode the k-grams, one Window min over
     (doc, position), distinct. The hash is md5-derived (first 60 bits) so
     the DuckDB oracle computes bit-identical fingerprints."""
-    from pyspark.sql.window import Window
-
-    idx = " || ' ' || ".join(f"_t[i + {j}]" for j in range(k))
     grams = (
         df.select(key, tokens_col(text).alias("_t"))
         .where(F.size("_t") >= k)
-        .select(
-            key,
-            F.posexplode(
-                F.expr(f"transform(sequence(0, size(_t) - {k}), i -> {idx})")
-            ).alias("_pos", "_gram"),
-        )
-        .withColumn(
-            "_h",
-            F.expr("CAST(conv(substring(md5(_gram), 1, 15), 16, 10) AS BIGINT)"),
-        )
+        .select(key, F.posexplode(F.expr(_grams_sql("_t", k))).alias("_pos", "_gram"))
+        .withColumn("_h", F.expr(_h60_sql("_gram")))
     )
     # trailing partial windows are kept (same on both engines): they only
     # ever ADD suffix minima, preserving the shared-run guarantee
@@ -610,22 +611,16 @@ def minhash_signatures(
     the exchange (guide §2 "remove shuffles outright")."""
     sh = shingles(df, key, text, n, distinct=False)
     if hasher == "md5":
-        hp = (
-            f"(CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT)"
-            f" % {MINHASH_P})"
-        )
-        mins = [
-            F.min(F.expr(f"({hp} * {a} + {b}) % {MINHASH_P}")).alias(f"mh_{i}")
-            for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
+        hp = f"({_h60_sql('shingle')} % {MINHASH_P})"
+        mh = [
+            F.expr(f"({hp} * {a} + {b}) % {MINHASH_P}")
+            for a, b in minhash_coeffs(num_hashes)
         ]
     elif hasher == "xxhash64":
-        mins = [
-            F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"mh_{i}")
-            for i in range(num_hashes)
-        ]
+        mh = [F.xxhash64(F.col("shingle"), F.lit(i)) for i in range(num_hashes)]
     else:
         raise ValueError("hasher must be 'xxhash64' or 'md5'")
-    return sh.groupBy(key).agg(*mins)
+    return sh.groupBy(key).agg(*[F.min(h).alias(f"mh_{i}") for i, h in enumerate(mh)])
 
 
 def _lsh_band_candidates(
@@ -648,34 +643,17 @@ def _lsh_band_candidates(
     minhash_lsh_pairs checkpoints this stage's output."""
     rows = num_hashes // bands
     sig = minhash_signatures(df, num_hashes, key, text, n, hasher)
-    if hasher == "md5":
-        band_cols = [
-            F.concat_ws(
-                ",", F.lit(str(b)), *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
-            ).alias(f"band_{b}")
-            for b in range(bands)
-        ]
-    else:
-        band_cols = [
-            F.xxhash64(F.lit(b), *[F.col(f"mh_{b * rows + r}") for r in range(rows)]).alias(
-                f"band_{b}"
-            )
-            for b in range(bands)
-        ]
+    mh = [F.col(f"mh_{i}") for i in range(num_hashes)]
+    band_cols = [
+        (
+            F.concat_ws(",", F.lit(str(b)), *mh[b * rows:(b + 1) * rows])
+            if hasher == "md5"
+            else F.xxhash64(F.lit(b), *mh[b * rows:(b + 1) * rows])
+        ).alias(f"band_{b}")
+        for b in range(bands)
+    ]
     banded = sig.select(key, *band_cols)
-    bv = banded.select(
-        F.col(key),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"), F.col(f"band_{b}").alias("v")
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_band"),
-    ).select(key, F.col("_band.b").alias("_b"), F.col("_band.v").alias("_v"))
+    bv = _bands(banded, {key: F.col(key)}, [F.col(f"band_{b}") for b in range(bands)])
     # The self-join consumes bv TWICE; without a materialization each side
     # re-executes the whole signature pipeline (tokenize -> shingle ->
     # num_hashes mins) over the corpus — measured as a full duplicate pass
@@ -684,14 +662,7 @@ def _lsh_band_candidates(
     # persists anyway — so checkpointing it is a narrow per-doc index, not
     # a corpus-payload materialization.
     bv = bv.localCheckpoint(eager=True)
-    l = bv.select(F.col(key).alias("d1"), "_b", "_v")
-    r = bv.select(F.col(key).alias("d2"), "_b", "_v")
-    return (
-        l.join(r, ["_b", "_v"])
-        .where(F.col("d1") < F.col("d2"))
-        .select("d1", "d2")
-        .distinct()
-    )
+    return _band_pairs(bv, key).select("d1", "d2").distinct()
 
 
 def minhash_lsh_pairs(
@@ -754,25 +725,37 @@ def minhash_lsh_pairs(
         ),
         key, text, n,
     ).localCheckpoint(eager=True)
-    sizes = shc.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
     a = shc.select(F.col(key).alias("d1"), "shingle")
     b2 = shc.select(F.col(key).alias("d2"), "shingle")
-    common = (
-        a.join(cand, "d1")
-        .join(b2, ["shingle", "d2"])
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("_c"))
+    return _jaccard(
+        a.join(cand, "d1").join(b2, ["shingle", "d2"]), shc, key, threshold
     )
-    return (
-        common.join(sizes.select(F.col(key).alias("d1"), F.col("_n").alias("_na")), "d1")
-        .join(sizes.select(F.col(key).alias("d2"), F.col("_n").alias("_nb")), "d2")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("_c") / (F.col("_na") + F.col("_nb") - F.col("_c")), 6),
+
+
+def _bands(df: DataFrame, cols: dict[str, Column], values: list[Column]) -> DataFrame:
+    """One row per band: (``cols``' names, _b = band index, _v = the
+    band's value from ``values``) via a single struct-array explode."""
+    return df.select(
+        *[c.alias(name) for name, c in cols.items()],
+        F.explode(
+            F.array(
+                *[F.struct(F.lit(b).alias("b"), v.alias("v")) for b, v in enumerate(values)]
+            )
+        ).alias("_band"),
+    ).select(*cols, F.col("_band.b").alias("_b"), F.col("_band.v").alias("_v"))
+
+
+def _band_pairs(bv: DataFrame, key: str, carry: tuple[str, ...] = ()) -> DataFrame:
+    """The pigeonhole self-join of a :func:`_bands` frame: (d1 < d2) pairs
+    agreeing on (_b, _v), one row per shared band; each ``carry`` column
+    ``c`` rides along as ``c1`` / ``c2``."""
+    l, r = (
+        bv.select(
+            F.col(key).alias(f"d{s}"), *[F.col(c).alias(f"{c}{s}") for c in carry], "_b", "_v"
         )
-        .where(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
+        for s in (1, 2)
     )
+    return l.join(r, ["_b", "_v"]).where(F.col("d1") < F.col("d2"))
 
 
 def hamming_pairs(
@@ -802,22 +785,10 @@ def hamming_pairs(
         width = w if b < bands - 1 else 64 - w * (bands - 1)
         lo = b * w
         mask = -1 if width == 64 else (1 << width) - 1
-        parts.append(
-            F.struct(
-                F.lit(b).alias("b"),
-                (F.shiftright(F.col(col), lo).bitwiseAND(F.lit(mask))).alias("v"),
-            )
-        )
-    bv = df.select(
-        F.col(key).alias("_hk"),
-        F.col(col).alias("_hv"),
-        F.explode(F.array(*parts)).alias("_band"),
-    ).select("_hk", "_hv", F.col("_band.b").alias("_b"), F.col("_band.v").alias("_v"))
-    l = bv.select(F.col("_hk").alias("d1"), F.col("_hv").alias("_h1"), "_b", "_v")
-    r = bv.select(F.col("_hk").alias("d2"), F.col("_hv").alias("_h2"), "_b", "_v")
+        parts.append(F.shiftright(F.col(col), lo).bitwiseAND(F.lit(mask)))
+    bv = _bands(df, {"_hk": F.col(key), "_h": F.col(col)}, parts)
     return (
-        l.join(r, ["_b", "_v"])
-        .where(F.col("d1") < F.col("d2"))
+        _band_pairs(bv, "_hk", ("_h",))
         .withColumn(
             "hamming", F.bit_count(F.col("_h1").bitwiseXOR(F.col("_h2")))
         )
@@ -865,8 +836,6 @@ def dedup_clusters(
         .withColumn("label", F.col("a"))
         .localCheckpoint(eager=True)
     )
-    from pyspark.sql import Observation
-
     for _ in range(max_iter):
         nbr = edges.join(
             labels.select(F.col("a").alias("b"), F.col("label").alias("_nl")), "b"
@@ -927,41 +896,27 @@ def simhash64(
     downstream hamming pair) an EXACT cross-engine oracle; bits 60..63 are
     always 0."""
     if hasher == "md5":
-        toks = df.select(key, F.explode(tokens_col(text)).alias("_tok")).withColumn(
-            "_h", F.md5("_tok")
-        )
-        for j in range(15):
-            toks = toks.withColumn(f"_n{j}", F.expr(md5_nibble_sql("_h", j)))
-        votes = toks.groupBy(key).agg(
-            *[
-                F.sum(
-                    F.expr(f"CASE WHEN {md5_bit_sql(i)} = 1 THEN 1 ELSE -1 END")
-                ).alias(f"_v{i}")
-                for i in range(SIMHASH_MD5_BITS)
-            ]
-        )
-        expr = " + ".join(
-            f"(CASE WHEN _v{i} > 0 THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-            for i in range(SIMHASH_MD5_BITS)
-        )
-        return votes.select(key, F.expr(expr).alias("simhash"))
-    if hasher != "xxhash64":
+        h, nbits, bit = F.md5("_tok"), SIMHASH_MD5_BITS, md5_bit_sql
+        stage = {f"_n{j}": F.expr(md5_nibble_sql("_h", j)) for j in range(15)}
+    elif hasher == "xxhash64":
+        h, nbits, bit, stage = F.xxhash64("_tok"), 64, "(shiftright(_h, {}) & 1)".format, {}
+    else:
         raise ValueError("hasher must be 'xxhash64' or 'md5'")
     toks = (
         df.select(key, F.explode(tokens_col(text)).alias("_tok"))
-        .withColumn("_h", F.xxhash64("_tok"))
+        .withColumn("_h", h)
+        .withColumns(stage)
     )
     votes = toks.groupBy(key).agg(
         *[
-            F.sum(
-                F.when(F.shiftright(F.col("_h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"_v{i}")
-            for i in range(64)
+            F.sum(F.expr(f"CASE WHEN {bit(i)} = 1 THEN 1 ELSE -1 END")).alias(f"_v{i}")
+            for i in range(nbits)
         ]
     )
+    # bit 63 is the sign bit, weight -2^63 (md5 mode stops at bit 59)
     expr = " + ".join(
         f"IF(_v{i} > 0, CAST({1 << i if i < 63 else -(1 << 63)} AS BIGINT), CAST(0 AS BIGINT))"
-        for i in range(64)
+        for i in range(nbits)
     )
     return votes.select(key, F.expr(expr).alias("simhash"))
 
@@ -993,26 +948,74 @@ def embed_quantize(
     )
 
 
+_PACK = 1 << 32  # id slot of the packed argmax: ids must lie in [0, 2^32)
+
+
+def _vectors(emb: DataFrame, key: str, vec: str) -> DataFrame:
+    """(_id, _v): the embedding column cast element-wise to DOUBLE."""
+    return emb.select(
+        F.col(key).alias("_id"),
+        F.expr(f"transform({vec}, v -> CAST(v AS DOUBLE))").alias("_v"),
+    )
+
+
+def _dot(a: str, b: str) -> str:
+    """SQL dot product of two array<double> columns, summed in element
+    order — the one kernel every cosine path runs."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (p, q) -> p * q), CAST(0.0 AS DOUBLE), "
+        "(acc, z) -> acc + z)"
+    )
+
+
+def _cos(a: str, b: str) -> str:
+    """SQL cosine similarity of two array<double> columns."""
+    return f"({_dot(a, b)}) / (sqrt({_dot(a, a)}) * sqrt({_dot(b, b)}))"
+
+
+def _pack_desc(score: str, scale: int, id_col: str) -> Column:
+    """(``score`` desc, ``id_col`` asc) as one BIGINT whose MIN is the
+    argmax: (scale - round(score * scale)) * 2^32 + id, < 2^63 for scores
+    in [-1, 1] and scale <= 1e9. A min over it hash-aggregates with
+    map-side partials instead of planning a SortAggregate over a struct."""
+    return (
+        F.lit(scale) - F.round(F.col(score) * scale, 0).cast("bigint")
+    ) * F.lit(_PACK) + F.col(id_col)
+
+
+def _nearest(pairs: DataFrame, e: DataFrame, key: str, score: str) -> DataFrame:
+    """Score the distinct id_a != id_b candidates in ``pairs`` against the
+    :func:`_vectors` frame ``e`` with ``score`` (SQL over _va, _vb),
+    rounded to 6 dp, and keep each id_a's best (ties to the smaller id_b).
+    Returns (key, nn_id, cos)."""
+    cand = pairs.where(F.col("id_a") != F.col("id_b")).select("id_a", "id_b").distinct()
+    va = e.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"))
+    vb = e.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"))
+    packed = (
+        cand.join(va, "id_a")
+        .join(vb, "id_b")
+        .withColumn("cos", F.round(F.expr(score), 6))
+        .select("id_a", _pack_desc("cos", 1_000_000, "id_b").alias("_pk"))
+    )
+    best = packed.groupBy("id_a").agg(F.min("_pk").alias("_pk"))
+    return best.select(
+        F.col("id_a").alias(key),
+        (F.col("_pk") % _PACK).alias("nn_id"),
+        ((F.lit(1_000_000) - F.expr(f"_pk DIV {_PACK}")) / 1_000_000.0).alias("cos"),
+    )
+
+
 def cosine_nn(
     emb: DataFrame, key: str = "vec_id", vec: str = "embedding", k: int = 1
 ) -> DataFrame:
     """Brute-force exact cosine top-k join (the correctness baseline).
     O(n²·d) — fine for verification scales; ``cosine_nn_lsh`` is the
     scale path."""
-    from pyspark.sql.window import Window
-
-    e = emb.select(
-        F.col(key).alias("_id"),
-        F.expr(f"transform({vec}, v -> CAST(v AS DOUBLE))").alias("_v"),
-    )
+    e = _vectors(emb, key, vec)
     a = e.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"))
     b = e.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"))
-    dot = "aggregate(zip_with(_va, _vb, (p, q) -> p * q), CAST(0.0 AS DOUBLE), (acc, z) -> acc + z)"
-    na = "sqrt(aggregate(zip_with(_va, _va, (p, q) -> p * q), CAST(0.0 AS DOUBLE), (acc, z) -> acc + z))"
-    nb = "sqrt(aggregate(zip_with(_vb, _vb, (p, q) -> p * q), CAST(0.0 AS DOUBLE), (acc, z) -> acc + z))"
-    pairs = (
-        a.join(b, F.col("id_a") != F.col("id_b"))
-        .withColumn("cos", F.round(F.expr(f"({dot}) / ({na} * {nb})"), 6))
+    pairs = a.join(b, F.col("id_a") != F.col("id_b")).withColumn(
+        "cos", F.round(F.expr(_cos("_va", "_vb")), 6)
     )
     w = Window.partitionBy("id_a").orderBy(F.desc("cos"), F.asc("id_b"))
     return (
@@ -1044,8 +1047,6 @@ def ivf_cosine_nn(
     array columns, centroid tables broadcast (n_centroids rows). The Lloyd
     loop is a driver loop of bounded, fixed length — each iteration is one
     broadcast join + one aggregation over the fact table."""
-    import numpy as np
-
     spark = emb.sparkSession
     # L2-normalize once (cosine == dot product afterwards); the divisor is
     # floored at 1e-12 so a zero-norm embedding maps to the zero vector
@@ -1053,14 +1054,16 @@ def ivf_cosine_nn(
     # vanish from results. localCheckpoint (not cache) materializes the
     # normalized frame once for its ~4 downstream consumers and leaves no
     # persistent cache entry behind when the operator's result is dropped.
-    e = emb.select(
-        F.col(key).alias("_id"),
-        F.expr(
-            f"transform({vec}, v -> CAST(v AS DOUBLE) / "
-            f"greatest(sqrt(aggregate(zip_with({vec}, {vec}, (p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), "
-            f"CAST(0.0 AS DOUBLE), (acc, z) -> acc + z)), 1.0e-12))"
-        ).alias("_v"),
-    ).localCheckpoint(eager=True)
+    e = (
+        _vectors(emb, key, vec)
+        .select(
+            "_id",
+            F.expr(
+                f"transform(_v, v -> v / greatest(sqrt({_dot('_v', '_v')}), 1.0e-12))"
+            ).alias("_v"),
+        )
+        .localCheckpoint(eager=True)
+    )
 
     if centroids is not None:
         # caller-provided coarse quantizer (e.g. a frozen or closed-form
@@ -1070,8 +1073,6 @@ def ivf_cosine_nn(
     else:
         # deterministic seed centroids: the n_centroids vectors with the
         # smallest keyed hash (order- and partition-independent)
-        from ..functions.rng import u_sql
-
         seeds = (
             e.withColumn("_u", F.expr(u_sql("abs(xxhash64(_id))", 31, seed)))
             .orderBy("_u", "_id")
@@ -1081,30 +1082,16 @@ def ivf_cosine_nn(
         )
         cents = [(i, [float(x) for x in r["_v"]]) for i, r in enumerate(seeds)]
 
-    DOT = (
-        "aggregate(zip_with(_v, _c, (p, q) -> p * q), CAST(0.0 AS DOUBLE), "
-        "(acc, z) -> acc + z)"
-    )
-    PACK = 1 << 32
-
     def assign(cent_df, rank=1):
-        """(id[, _v], cid...) of each vector's `rank` nearest centroids."""
-        j = e.crossJoin(F.broadcast(cent_df)).withColumn("_dot", F.expr(DOT))
-        # pack (desc dot, asc cid): dot in [-1,1] rounded to 9 dp;
-        # (1e9 - dot9) in [0, 2e9], * 2^32 stays < 2^63
-        packed = j.select(
-            "_id",
-            "_cid",
-            (
-                (F.lit(1_000_000_000) - F.round(F.col("_dot") * 1_000_000_000, 0).cast("bigint"))
-                * F.lit(PACK) + F.col("_cid")
-            ).alias("_pk"),
+        """(_id, _cid) of each vector's `rank` nearest centroids."""
+        packed = (
+            e.crossJoin(F.broadcast(cent_df))
+            .withColumn("_dot", F.expr(_dot("_v", "_c")))
+            .select("_id", "_cid", _pack_desc("_dot", 1_000_000_000, "_cid").alias("_pk"))
         )
         if rank == 1:
             best = packed.groupBy("_id").agg(F.min("_pk").alias("_pk"))
-            return best.select("_id", (F.col("_pk") % PACK).alias("_cid"))
-        from pyspark.sql.window import Window
-
+            return best.select("_id", (F.col("_pk") % _PACK).alias("_cid"))
         w = Window.partitionBy("_id").orderBy("_pk")
         return (
             packed.withColumn("_rn", F.row_number().over(w))
@@ -1136,32 +1123,7 @@ def ivf_cosine_nn(
     probes = assign(cent_df, rank=n_probe)          # vector -> probed lists
     la = probes.select(F.col("_id").alias("id_a"), "_cid")
     lb = lists.select(F.col("_id").alias("id_b"), "_cid")
-    cand = (
-        la.join(lb, "_cid")
-        .where(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    va = e.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"))
-    vb = e.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"))
-    dot = "aggregate(zip_with(_va, _vb, (p, q) -> p * q), CAST(0.0 AS DOUBLE), (acc, z) -> acc + z)"
-    scored = (
-        cand.join(va, "id_a").join(vb, "id_b")
-        .withColumn("cos", F.round(F.expr(dot), 6))
-    )
-    packed = scored.select(
-        "id_a",
-        (
-            (F.lit(1_000_000) - F.round(F.col("cos") * 1_000_000, 0).cast("bigint")) * F.lit(PACK)
-            + F.col("id_b")
-        ).alias("_pk"),
-    )
-    best = packed.groupBy("id_a").agg(F.min("_pk").alias("_pk"))
-    return best.select(
-        F.col("id_a").alias(key),
-        (F.col("_pk") % PACK).alias("nn_id"),
-        ((F.lit(1_000_000) - F.expr(f"_pk DIV {PACK}")) / 1_000_000.0).alias("cos"),
-    )
+    return _nearest(la.join(lb, "_cid"), e, key, _dot("_va", "_vb"))
 
 
 def cosine_nn_lsh(
@@ -1183,13 +1145,9 @@ def cosine_nn_lsh(
     (tables * planes * dim literals in one expression tree). All ``tables``
     band joins collapse into ONE equi-join on (table id, bucket).
 
-    The per-vector argmax is min over a packed BIGINT — cos is already
-    rounded to 6 dp, so (round(cos*1e6), id) packs losslessly into 63 bits
-    and the aggregate hash-aggregates with map-side partials instead of
-    planning a SortAggregate over every candidate pair. Precondition:
-    0 <= id < 2^32."""
-    import numpy as np
-
+    The per-vector argmax is :func:`_nearest`'s packed BIGINT min over the
+    6 dp-rounded cos — lossless, and hash-aggregated instead of planning a
+    SortAggregate over every candidate pair. Precondition: 0 <= id < 2^32."""
     spark = emb.sparkSession
     dim = len(emb.select(vec).head()[0])
     rs = np.random.RandomState(seed)
@@ -1200,53 +1158,13 @@ def cosine_nn_lsh(
     ]
     pl = spark.createDataFrame(plane_rows, "t int, p int, plane array<double>")
 
-    e = emb.select(
-        F.col(key).alias("_id"),
-        F.expr(f"transform({vec}, v -> CAST(v AS DOUBLE))").alias("_v"),
-    )
+    e = _vectors(emb, key, vec)
     proj = e.crossJoin(F.broadcast(pl)).withColumn(
-        "_bit",
-        F.expr(
-            "CASE WHEN aggregate(zip_with(_v, plane, (a, b) -> a * b), "
-            "CAST(0.0 AS DOUBLE), (acc, z) -> acc + z) > 0 THEN 1 ELSE 0 END"
-        ),
+        "_bit", F.expr(f"CASE WHEN {_dot('_v', 'plane')} > 0 THEN 1 ELSE 0 END")
     )
     buckets = proj.groupBy("_id", "t").agg(
         F.sum(F.expr("_bit * shiftleft(CAST(1 AS BIGINT), p)")).alias("_bucket")
     )
     l = buckets.select(F.col("_id").alias("id_a"), "t", "_bucket")
     r = buckets.select(F.col("_id").alias("id_b"), "t", "_bucket")
-    cand = (
-        l.join(r, ["t", "_bucket"])
-        .where(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    va = e.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"))
-    vb = e.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"))
-    dot = "aggregate(zip_with(_va, _vb, (p, q) -> p * q), CAST(0.0 AS DOUBLE), (acc, z) -> acc + z)"
-    na = "sqrt(aggregate(zip_with(_va, _va, (p, q) -> p * q), CAST(0.0 AS DOUBLE), (acc, z) -> acc + z))"
-    nb = "sqrt(aggregate(zip_with(_vb, _vb, (p, q) -> p * q), CAST(0.0 AS DOUBLE), (acc, z) -> acc + z))"
-    scored = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cos", F.round(F.expr(f"({dot}) / ({na} * {nb})"), 6))
-    )
-    # pack (desc cos, asc id_b) into one BIGINT: minimize (-cos6, id_b)
-    PACK = 1 << 32
-    packed = scored.select(
-        "id_a",
-        (
-            (F.lit(1_000_000) - F.round(F.col("cos") * 1_000_000, 0).cast("bigint")) * F.lit(PACK)
-            + F.col("id_b")
-        ).alias("_pk"),
-    )
-    best = packed.groupBy("id_a").agg(F.min("_pk").alias("_pk"))
-    decoded = best.select(
-        "id_a",
-        (F.col("_pk") % F.lit(PACK)).alias("id_b"),
-        ((F.lit(1_000_000) - F.expr(f"_pk DIV {PACK}")) / 1_000_000.0).alias("cos"),
-    )
-    return decoded.select(
-        F.col("id_a").alias(key), F.col("id_b").alias("nn_id"), F.col("cos")
-    )
+    return _nearest(l.join(r, ["t", "_bucket"]), e, key, _cos("_va", "_vb"))

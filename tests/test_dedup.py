@@ -61,22 +61,39 @@ def test_minhash_lsh_single_banded_shuffle(docs):
     """VERDICT r04 next #6: the LSH candidate generation must be ONE
     exploded band self-join (like hamming_pairs' pigeonhole join), not one
     join per band — b shuffle stages collapse to a single (band, key)
-    shuffle."""
+    shuffle. hamming_pairs runs the same band self-join and is held to the
+    same shape."""
     import io
     from contextlib import redirect_stdout
 
     # the candidate stage is checkpointed inside minhash_lsh_pairs (its
     # bounded output feeds two consumers), which cuts it out of the final
     # explain — gate the stage's own plan via the extracted builder
-    df = dedup._lsh_band_candidates(docs, 32, 8, "doc_id", "text", 3, "xxhash64")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain(mode="simple")
-    plan = buf.getvalue()
-    band_joins = [
-        ln for ln in plan.splitlines() if "Join" in ln and "_v" in ln
-    ]
-    assert len(band_joins) == 1, plan
+    lsh = dedup._lsh_band_candidates(docs, 32, 8, "doc_id", "text", 3, "xxhash64")
+    ham = dedup.hamming_pairs(dedup.simhash64(docs), "simhash")
+    for df in (lsh, ham):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain(mode="simple")
+        plan = buf.getvalue()
+        band_joins = [
+            ln for ln in plan.splitlines() if "Join" in ln and "_v" in ln
+        ]
+        assert len(band_joins) == 1, plan
+
+
+def test_ngram_jaccard_leaves_no_cache_entry(spark, docs):
+    """The shingle index is an eager localCheckpoint, not a cache(): after
+    a call (default cap, no cap, or a cap that drops shingles) the
+    session's cache manager holds nothing."""
+    spark.catalog.clearCache()
+    raw = spark.createDataFrame(docs.collect(), docs.schema)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    dedup.ngram_jaccard_pairs(raw, 0.7).collect()
+    dedup.ngram_jaccard_pairs(raw, 0.7, max_shingle_df=None).collect()
+    with pytest.warns(UserWarning, match="dropping"):
+        dedup.ngram_jaccard_pairs(raw, 0.7, max_shingle_df=1).collect()
+    assert cm.isEmpty()
 
 
 def test_curate_near_elects_cluster_keepers(docs):
@@ -145,6 +162,31 @@ def test_simhash_hamming_close_for_neardups(docs):
     ids = [i for i in sh if i < 1000]
     rand = [ham(sh[a], sh[b]) for a, b in zip(rs.choice(ids, 30), rs.choice(ids, 30)) if a != b]
     assert np.mean(rand) > 12  # unrelated docs are far
+
+
+def test_simhash_xxhash64_matches_python_votes(docs):
+    """Default-hasher SimHash by value: rebuilt in Python from Spark's
+    per-token xxhash64 — one +1/-1 vote per bit per token, bit i set iff
+    its vote sum is positive, bit 63 the sign bit."""
+    from pyspark.sql import functions as F
+
+    toks = (
+        docs.select("doc_id", F.explode(dedup.tokens_col("text")).alias("tok"))
+        .select("doc_id", F.xxhash64("tok").alias("h"))
+        .collect()
+    )
+    votes: dict = {}
+    for r in toks:
+        v = votes.setdefault(r["doc_id"], [0] * 64)
+        for i in range(64):
+            v[i] += 1 if (r["h"] >> i) & 1 else -1
+    want = {}
+    for d, v in votes.items():
+        u = sum(1 << i for i in range(64) if v[i] > 0)
+        want[d] = u - (1 << 64) if u >> 63 else u
+    got = {r["doc_id"]: r["simhash"] for r in dedup.simhash64(docs).collect()}
+    assert got == want
+    assert any(s < 0 for s in got.values())  # bit 63 is exercised
 
 
 def test_simhash_md5_mode_semantics(docs):
@@ -390,9 +432,15 @@ def test_cosine_nn_lsh_recall(spark):
     pdf = pd.DataFrame({"vec_id": range(200), "embedding": [v.tolist() for v in vecs]})
     emb = spark.createDataFrame(pdf).cache()
     exact = {r["vec_id"]: r["nn_id"] for r in dedup.cosine_nn(emb).collect()}
-    approx = {r["vec_id"]: r["nn_id"] for r in dedup.cosine_nn_lsh(emb, planes=8, tables=6).collect()}
+    rows = dedup.cosine_nn_lsh(emb, planes=8, tables=6).collect()
+    approx = {r["vec_id"]: r["nn_id"] for r in rows}
     hits = sum(1 for k in exact if approx.get(k) == exact[k])
     assert hits / len(exact) >= 0.8  # high recall on genuinely-near pairs
+    # each returned score is the exact cosine of its (vec_id, nn_id) pair
+    v = vecs.astype(np.float64)
+    v /= np.linalg.norm(v, axis=1, keepdims=True)
+    for r in rows:
+        assert abs(r["cos"] - float(v[r["vec_id"]] @ v[r["nn_id"]])) <= 1e-6
 
 
 def test_ivf_cosine_nn_recall(spark):

@@ -11,7 +11,9 @@ sketches so results are partitioning-independent.
 
 Each text and vector primitive has one private builder every operator
 shares: :func:`_grams_sql` (word n-grams), :func:`_h60_sql` (60-bit md5
-hash), :func:`_jaccard` (exact verify), :func:`_bands` +
+hash), :func:`_jaccard_ratio` (the exact Jaccard filter, fed by the
+inverted-index :func:`_jaccard` or the per-doc-set :func:`_set_jaccard`),
+:func:`_bands` +
 :func:`_band_pairs` (banded pigeonhole self-join), :func:`_vectors` +
 :func:`_dot` / :func:`_cos` (vector arithmetic; ``_dot`` is the one place
 to swap the kernel) and :func:`_pack_desc` + :func:`_nearest` (packed
@@ -22,7 +24,9 @@ from __future__ import annotations
 import warnings
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..functions.rng import u_sql
@@ -81,11 +85,16 @@ def _grams_sql(t: str, n: int) -> str:
     run INTERPRETED (CodegenFallback), and the slice allocated a fresh
     sub-array per gram per doc; the direct form measured 10x faster at 1M
     docs (43 -> 4.3 s, BENCH/NOTES.md). Identical strings: whitespace-split
-    tokens can contain neither NULLs nor the joiner. Callers must guard
-    docs shorter than ``n`` tokens (and NULL text): there ``sequence(0,
-    size - n)`` descends and the element references leave the array."""
+    tokens can contain neither NULLs nor the joiner. Docs shorter than
+    ``n`` tokens (and NULL text) get a typed empty array: there
+    ``sequence(0, size - n)`` would count DOWN (a clamp to ``size - n =
+    -1`` still yields ``[0, -1]``, and an explicit step of 1 raises), so
+    the guard is an explicit ``IF``."""
     idx = " || ' ' || ".join(f"{t}[i + {j}]" for j in range(n))
-    return f"transform(sequence(0, size({t}) - {n}), i -> {idx})"
+    return (
+        f"IF(size({t}) >= {n}, transform(sequence(0, size({t}) - {n}), "
+        f"i -> {idx}), CAST(array() AS ARRAY<STRING>))"
+    )
 
 
 def _h60_sql(c: str) -> str:
@@ -259,7 +268,9 @@ def curate_near(
        all-pairs);
     3. connected components over the verified pairs
        (:func:`dedup_clusters`) — component sizes are bounded by real
-       near-dup cliques, not the corpus;
+       near-dup cliques, not the corpus; a pair graph within
+       ``LOCAL_COMPONENT_EDGES`` is collected once and resolved by a numpy
+       union-find in the Spark driver, a larger one by label propagation;
     4. cluster-keeper election: a gated doc survives iff it is in no
        near-dup pair or is its component's minimum key (= the component's
        cluster_id label).
@@ -447,30 +458,37 @@ def shingles(
     signatures — min over a multiset equals min over its set) being the
     engine's case. Set-semantics consumers (|A|, |A ∩ B| Jaccard counts)
     must keep the default."""
-    out = (
-        df.select(key, tokens_col(text).alias("_t"))
-        .where(F.size("_t") >= n)
-        .select(key, F.explode(F.expr(_grams_sql("_t", n))).alias("shingle"))
+    out = df.select(key, tokens_col(text).alias("_t")).select(
+        key, F.explode(F.expr(_grams_sql("_t", n))).alias("shingle")
     )
     return out.distinct() if distinct else out
 
 
-def _jaccard(common: DataFrame, sh: DataFrame, key: str, threshold: float) -> DataFrame:
-    """Exact Jaccard verify: ``common`` holds one (d1, d2) row per shingle
-    the pair shares, ``sh`` the (key, shingle) sets the sizes count.
-    Returns (d1, d2, jaccard) with the 6 dp-rounded jaccard >= threshold."""
-    sizes = sh.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
+def _jaccard_ratio(counted: DataFrame, threshold: float) -> DataFrame:
+    """The exact Jaccard filter both verifies share: from (d1, d2, _c =
+    |A ∩ B|, _na = |A|, _nb = |B|) rows, returns (d1, d2, jaccard) with
+    the 6 dp-rounded jaccard >= threshold."""
     return (
-        common.groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .join(sizes.select(F.col(key).alias("d1"), F.col("_n").alias("_na")), "d1")
-        .join(sizes.select(F.col(key).alias("d2"), F.col("_n").alias("_nb")), "d2")
-        .withColumn(
+        counted.withColumn(
             "jaccard",
             F.round(F.col("_c") / (F.col("_na") + F.col("_nb") - F.col("_c")), 6),
         )
         .where(F.col("jaccard") >= threshold)
         .select("d1", "d2", "jaccard")
+    )
+
+
+def _jaccard(common: DataFrame, sh: DataFrame, key: str, threshold: float) -> DataFrame:
+    """Exact Jaccard verify over an inverted index: ``common`` holds one
+    (d1, d2) row per shingle the pair shares, ``sh`` the (key, shingle)
+    sets the sizes count."""
+    sizes = sh.groupBy(key).agg(F.count(F.lit(1)).alias("_n"))
+    return _jaccard_ratio(
+        common.groupBy("d1", "d2")
+        .agg(F.count(F.lit(1)).alias("_c"))
+        .join(sizes.select(F.col(key).alias("d1"), F.col("_n").alias("_na")), "d1")
+        .join(sizes.select(F.col(key).alias("d2"), F.col("_n").alias("_nb")), "d2"),
+        threshold,
     )
 
 
@@ -556,7 +574,6 @@ def fingerprint_winnow(
     the DuckDB oracle computes bit-identical fingerprints."""
     grams = (
         df.select(key, tokens_col(text).alias("_t"))
-        .where(F.size("_t") >= k)
         .select(key, F.posexplode(F.expr(_grams_sql("_t", k))).alias("_pos", "_gram"))
         .withColumn("_h", F.expr(_h60_sql("_gram")))
     )
@@ -695,40 +712,61 @@ def minhash_lsh_pairs(
     NOT push the semi-join beneath) is never re-evaluated, saving a full
     corpus pass of gate metrics per query. Defaults to ``df``.
 
-    The candidate pairs and the candidate shingle set materialize through
-    ``localCheckpoint(eager=True)``: each runs its job when this function
-    is CALLED, before the caller's own action, and keeps its blocks only in
-    executor storage with the lineage cut, so an executor lost afterwards
-    makes a later action over the result fail instead of recomputing."""
+    Three stages materialize through ``localCheckpoint(eager=True)``: the
+    band index, the candidate pairs and the candidate docs' shingle sets.
+    Each runs its job when this function is CALLED, before the caller's
+    own action, and keeps its blocks only in executor storage with the
+    lineage cut, so an executor lost afterwards makes a later action over
+    the result fail instead of recomputing."""
     cand = _lsh_band_candidates(
         df, num_hashes, bands, key, text, n, hasher
     ).localCheckpoint(eager=True)
-    # Exact verify over CANDIDATE DOCS ONLY (guide §3 "pre-filter the big
-    # side when selective"): shingles of a doc in no candidate pair cannot
-    # touch any output row, so the corpus semi-join-reduces to the
-    # candidate ids BEFORE tokenization, and the bounded candidate shingle
-    # set materializes ONCE (localCheckpoint) for its three consumers —
-    # previously the corpus-wide tokenize+explode+distinct re-executed per
-    # consumer (sizes + both pair sides) and the FULL shingle index
-    # shuffled into the pair join. cand/shc are bounded by the LSH band
-    # collisions (never the corpus), so the documented no-corpus-scale-
-    # materialization rule holds; at sf-bench scale this took curate_near's
-    # verify stage from 3 corpus shingle passes to 1 bounded pass.
+    return _set_jaccard(
+        cand, shingle_source if shingle_source is not None else df,
+        key, text, n, threshold,
+    )
+
+
+def _set_jaccard(
+    cand: DataFrame, src: DataFrame, key: str, text: str, n: int, threshold: float
+) -> DataFrame:
+    """Exact Jaccard verify of the (d1, d2) candidate pairs ``cand`` over
+    the texts of ``src``, through per-doc shingle SETS. Candidate docs only
+    (guide §3 "pre-filter the big side when selective"): ``src``
+    semi-join-reduces to the candidate ids BEFORE tokenization, so the set
+    table is bounded by the candidates, never the corpus. Each doc's set
+    (array_distinct of its n-grams) and its size are built once behind an
+    eager ``localCheckpoint``, and each pair scores |A ∩ B| as
+    size(array_intersect) — no shingle strings shuffle, and no per-pair
+    count aggregate or size join runs. Pairs sharing no shingle are
+    dropped (_c > 0), as :func:`_jaccard`'s shingle join emits no row for
+    them."""
     cd = (
         cand.select(F.col("d1").alias(key))
         .unionByName(cand.select(F.col("d2").alias(key)))
         .distinct()
     )
-    shc = shingles(
-        (shingle_source if shingle_source is not None else df).join(
-            cd, key, "leftsemi"
-        ),
-        key, text, n,
-    ).localCheckpoint(eager=True)
-    a = shc.select(F.col(key).alias("d1"), "shingle")
-    b2 = shc.select(F.col(key).alias("d2"), "shingle")
-    return _jaccard(
-        a.join(cand, "d1").join(b2, ["shingle", "d2"]), shc, key, threshold
+    sets = (
+        src.join(cd, key, "leftsemi")
+        .select(key, tokens_col(text).alias("_t"))
+        .select(key, F.expr(f"array_distinct({_grams_sql('_t', n)})").alias("_s"))
+        .select(key, "_s", F.size("_s").alias("_n"))
+        .localCheckpoint(eager=True)
+    )
+    a, b = (
+        sets.select(
+            F.col(key).alias(f"d{i}"), F.col("_s").alias(f"_s{i}"), F.col("_n").alias(nc)
+        )
+        for i, nc in ((1, "_na"), (2, "_nb"))
+    )
+    return _jaccard_ratio(
+        cand.join(a, "d1")
+        .join(b, "d2")
+        .select(
+            "d1", "d2", F.size(F.array_intersect("_s1", "_s2")).alias("_c"), "_na", "_nb"
+        )
+        .where(F.col("_c") > 0),
+        threshold,
     )
 
 
@@ -812,21 +850,55 @@ def simhash_pairs(
     )
 
 
+# Edge bound of dedup_clusters' driver-side path: up to this many pair
+# rows are collected (Arrow) and resolved in numpy; the same scale as
+# knn.RESIDUE_BROADCAST_ROWS.
+LOCAL_COMPONENT_EDGES = 2_000_000
+
+
 def dedup_clusters(
     pairs: DataFrame, d1: str = "d1", d2: str = "d2", max_iter: int = 30
 ) -> DataFrame:
     """Resolve near-duplicate PAIRS into duplicate CLUSTERS (connected
     components) so a corpus can actually be deduplicated: every doc in a
     component maps to cluster_id = the component's minimum doc id (the
-    keeper). Iterative min-label propagation — each round is one equi-join
-    + min-aggregate; converges in O(component diameter) rounds, each round
-    checkpointed so lineage stays flat. Near-dup components in practice are
-    tiny cliques, so a handful of rounds suffices; raise ``max_iter`` for
-    pathological chain topologies.
+    keeper).
+
+    Two engines, same rows:
+
+    - **local** (integral or string keys): at most
+      ``LOCAL_COMPONENT_EDGES + 1`` pair rows are collected as Arrow in one
+      job; when the graph is within the bound (and has no NULL key), one
+      vectorised numpy union-find resolves it (:func:`_components`) and
+      the labels return through ``createDataFrame`` with the key's own
+      Spark type. Near-dup graphs are bounded by real duplicate cliques,
+      so this is the common path (``image_dedup``'s string ``image_id``
+      included).
+    - **propagation** (any other key type, or a graph over the bound):
+      iterative min-label propagation — each round is one equi-join +
+      min-aggregate, checkpointed so lineage stays flat; converges in
+      O(component diameter) rounds; raise ``max_iter`` for pathological
+      chain topologies. An over-bound graph pays the limited collect on
+      top of the propagation.
 
     Returns (doc_id, cluster_id); docs that appear in no pair are their own
     singletons and are simply absent (callers union them back if needed)."""
     e = pairs.select(F.col(d1).alias("a"), F.col(d2).alias("b"))
+    kt = e.schema["a"].dataType
+    # binary-collated strings only: a collation reorders the minimum
+    local = isinstance(kt, IntegralType) or kt == StringType()
+    if local and kt == e.schema["b"].dataType:
+        tbl = e.limit(LOCAL_COMPONENT_EDGES + 1).toArrow()
+        if tbl.num_rows <= LOCAL_COMPONENT_EDGES and not (
+            tbl.column("a").null_count or tbl.column("b").null_count
+        ):
+            doc, cid = _components(
+                tbl.column("a").to_numpy(), tbl.column("b").to_numpy()
+            )
+            return pairs.sparkSession.createDataFrame(
+                pa.table({"doc_id": doc, "cluster_id": cid}),
+                StructType([StructField("doc_id", kt), StructField("cluster_id", kt)]),
+            )
     edges = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct().localCheckpoint(eager=True)
@@ -863,6 +935,35 @@ def dedup_clusters(
     else:
         raise RuntimeError(f"dedup_clusters did not converge in {max_iter} rounds")
     return labels.select(F.col("a").alias("doc_id"), F.col("label").alias("cluster_id"))
+
+
+def _components(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Connected components of the edge list (a[i], b[i]) in numpy:
+    returns (node, component minimum) over every node on an edge, sorted
+    by node. Nodes map to their rank in the sorted distinct key set, so a
+    smaller index is a smaller key (for strings too: code-point order is
+    UTF-8 byte order, Spark's string order). Union-find by hooking: each
+    round hooks, for every edge whose endpoints sit under different roots,
+    the larger root under the smaller one (np.minimum.at keeps the
+    smallest offer), then pointer-jumps every node to its root. Every
+    round that finds a split edge merges at least two roots, and parents
+    only move down, so each root is its component's minimum."""
+    node, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = inv[: len(a)], inv[len(a):]
+    parent = np.arange(len(node))
+    while True:
+        pu, pv = parent[u], parent[v]
+        split = pu != pv
+        if not split.any():
+            return node, node[parent]
+        np.minimum.at(
+            parent, np.maximum(pu, pv)[split], np.minimum(pu, pv)[split]
+        )
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
 
 
 # --- md5 token-hash fragments, written in dialect-shared SQL (valid in

@@ -1174,9 +1174,10 @@ def _q_dedup_hamming():
 
 def _q_dedup_clusters():
     """Duplicate-cluster resolution (connected components over the exact
-    jaccard near-dup pairs): engine = iterative min-label propagation;
-    oracle = recursive-CTE transitive closure. Verifies pairs actually
-    resolve into keeper sets."""
+    jaccard near-dup pairs): engine = driver-side numpy union-find (the
+    pair graph is within dedup.LOCAL_COMPONENT_EDGES; label propagation
+    is the over-bound path); oracle = recursive-CTE transitive closure.
+    Verifies pairs actually resolve into keeper sets."""
     from ..operators import dedup
 
     def q(spark: SparkSession, sf: str) -> DataFrame:

@@ -19,8 +19,10 @@ engine algorithm with a different one:
   oracle works on raw pixel arrays and never touches functions/imagecodec.
 - near-dup pairs: brute-force all-pairs hamming (O(n^2) ground truth) vs
   the engine's banded pigeonhole join (operators/dedup.py:hamming_pairs).
-- clustering: union-find vs the engine's iterative min-label propagation
-  (operators/dedup.py:dedup_clusters).
+- clustering: a per-edge dict union-find with path halving vs the
+  engine's dedup_clusters (operators/dedup.py), which resolves a bounded
+  pair graph by vectorised numpy root hooking and a larger one by
+  iterative min-label propagation — the oracle shares neither.
 - audio resample: direct floor/lerp indexing vs the engine's np.interp
   binary-search path (operators/media.py:audio_resample). On the integer
   sample grid np.interp's slope division is by exactly 1.0, so both routes
@@ -119,8 +121,8 @@ def _hamming64(a: int, b: int) -> int:
 @lru_cache(maxsize=1)
 def phash_dedup_rows() -> tuple[tuple[str, str, int], ...]:
     """(image_id, cluster_id, keep) for the 120-image fixture corpus plus
-    its planted 5-bit re-encodes — brute-force pairs + union-find (vs the
-    engine's banded join + min-label propagation)."""
+    its planted 5-bit re-encodes — brute-force pairs + dict union-find
+    (vs the engine's banded join + dedup_clusters)."""
     hashes: dict[str, int] = {}
     for i in range(_N_IMAGES):
         img = fixture_image(i)

@@ -149,6 +149,24 @@ def test_curate_near_gate_stage_has_no_shuffle(docs):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_curate_near_job_budget(spark, docs):
+    """One curate_near collect runs a bounded number of Spark jobs: 15 at
+    4 and 8 cores (38 with the exploded-shingle verify and per-round label
+    propagation). A per-round loop coming back adds jobs per round and
+    fails the ceiling."""
+    sc = spark.sparkContext
+    docs.count()  # the fixture's cache build is not curate_near's
+    sc.setJobGroup("curate_near_job_budget", "curate_near job budget")
+    try:
+        rows = dedup.curate_near(
+            docs, min_alpha=0.0, max_repetition=1.0, threshold=0.7
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("curate_near_job_budget")
+    assert rows and len(jobs) <= 18, len(jobs)
+
+
 def test_simhash_hamming_close_for_neardups(docs):
     sh = {r["doc_id"]: r["simhash"] for r in dedup.simhash64(docs).collect()}
 
@@ -242,6 +260,115 @@ def test_dedup_clusters_recovers_planted_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
+@pytest.mark.parametrize(
+    "name", ["planted", "chain", "star", "clique", "strings", "random", "empty"]
+)
+def test_dedup_clusters_local_path_equals_propagation(spark, monkeypatch, name):
+    """The driver-side union-find and the label propagation (forced by an
+    edge bound of 0) return identical rows and schema on chains, stars,
+    cliques, string keys (image_dedup's shape), a random graph and an
+    empty pair frame."""
+    edges, schema = {
+        "planted": ([(1, 2), (2, 3), (10, 11), (20, 21), (3, 4)], "d1 long, d2 long"),
+        # descending ids: the minimum sits at the far end of a 40-hop chain
+        "chain": ([(i - 1, i) for i in range(40, 0, -1)], "d1 long, d2 long"),
+        "star": ([(0, i) for i in range(1, 30)] + [(5, 99)], "d1 int, d2 int"),
+        "clique": (
+            [(i, j) for i in range(7, 14) for j in range(i + 1, 14)],
+            "d1 long, d2 long",
+        ),
+        "strings": (
+            [("img_b", "img_a"), ("img_c", "img_b"), ("img_z", "img_y"), ("Z", "é")],
+            "d1 string, d2 string",
+        ),
+        # 110 random edges over ids < 120 (self-loops included): several
+        # hooking rounds, components of many sizes
+        "random": (
+            [tuple(map(int, e)) for e in np.random.RandomState(3).randint(0, 120, (110, 2))],
+            "d1 long, d2 long",
+        ),
+        "empty": ([], "d1 long, d2 long"),
+    }[name]
+    pairs = spark.createDataFrame(edges, schema)
+    local = dedup.dedup_clusters(pairs)
+    monkeypatch.setattr(dedup, "LOCAL_COMPONENT_EDGES", 0)
+    prop = dedup.dedup_clusters(pairs, max_iter=100)
+    assert local.schema == prop.schema
+    assert [f.name for f in local.schema] == ["doc_id", "cluster_id"]
+    got, want = sorted(local.collect()), sorted(prop.collect())
+    assert got == want
+    nodes = {x for e in edges for x in e}
+    assert {r["doc_id"] for r in got} == nodes
+    if name == "chain":
+        assert {r["cluster_id"] for r in got} == {0}
+    if name == "strings":
+        assert dict(got)["img_c"] == "img_a" and dict(got)["é"] == "Z"
+
+
+def _explode_verify(cand, src, threshold, key="doc_id", text="text", n=3):
+    """The shingle-row verify minhash_lsh_pairs ran before per-doc sets:
+    the candidate docs' distinct shingles as rows, |A ∩ B| counted by a
+    join on the shingle string (dedup._jaccard)."""
+    from pyspark.sql import functions as F
+
+    cd = (
+        cand.select(F.col("d1").alias(key))
+        .unionByName(cand.select(F.col("d2").alias(key)))
+        .distinct()
+    )
+    shc = dedup.shingles(src.join(cd, key, "leftsemi"), key, text, n)
+    a = shc.select(F.col(key).alias("d1"), "shingle")
+    b = shc.select(F.col(key).alias("d2"), "shingle")
+    return dedup._jaccard(
+        a.join(cand, "d1").join(b, ["shingle", "d2"]), shc, key, threshold
+    )
+
+
+def test_set_verify_equals_explode_verify(spark):
+    """The per-doc shingle-set verify returns exactly the rows of the
+    exploded-shingle join: a repeated trigram counts once, a candidate
+    pair sharing no shingle is absent even at threshold 0.0, and docs
+    under n tokens or with NULL text score nothing."""
+    src = spark.createDataFrame(
+        [
+            (1, "a b c a b c a b c d"),  # {abc, bca, cab, bcd}; abc x3
+            (2, "a b c d e"),  # {abc, bcd, cde}
+            (3, "x y z w"),  # shares nothing with 1 or 2
+            (4, "p q"),  # under n tokens
+            (5, None),
+        ],
+        "doc_id long, text string",
+    )
+    cand = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 3), (1, 4), (4, 5), (3, 5)], "d1 long, d2 long"
+    )
+    for threshold in (0.0, 0.4, 0.41):
+        got = sorted(dedup._set_jaccard(cand, src, "doc_id", "text", 3, threshold).collect())
+        want = sorted(_explode_verify(cand, src, threshold).collect())
+        assert got == want, threshold
+        # |{abc, bcd}| / |{abc, bca, cab, bcd, cde}| = 2 / 5
+        assert [tuple(r) for r in got] == ([(1, 2, 0.4)] if threshold <= 0.4 else [])
+
+
+def test_set_verify_md5_matches_oracle(spark):
+    """hasher='md5' candidates over the contract documents: the set verify
+    equals the explode-join verify and the dedup_minhash_lsh DuckDB
+    oracle."""
+    from maskmypy_spark.plans import contract
+    from maskmypy_spark.sources import tables
+    from test_contract import SF, _duck, _norm
+
+    docs_sf = tables.load(spark, SF, "documents")
+    cand = dedup._lsh_band_candidates(docs_sf, 32, 8, "doc_id", "text", 3, "md5")
+    t = contract.JACCARD_T
+    got = sorted(dedup._set_jaccard(cand, docs_sf, "doc_id", "text", 3, t).collect())
+    assert got == sorted(_explode_verify(cand, docs_sf, t).collect())
+    _, sql = contract.build()["dedup_minhash_lsh"]
+    con = _duck()
+    want = _norm(con.sql(sql).fetchall())
+    assert len(want) > 0 and _norm([tuple(r) for r in got]) == want
+
+
 def test_fingerprint_winnow_shared_run_guarantee(spark):
     """Winnowing guarantee: two docs sharing a run of >= k + window - 1
     tokens share at least one fingerprint; unrelated docs share none."""
@@ -300,6 +427,41 @@ def test_doc_repetition_planted(spark):
     )
     got = {r["doc_id"]: r["dup_ngram_frac"] for r in dedup.doc_repetition(df).collect()}
     assert got == {0: 0.6, 1: 0.0, 2: 0.75, 3: 0.0, 4: 0.0, 5: 0.0}
+
+
+def test_grams_sql_short_docs_need_no_guard(spark):
+    """_grams_sql returns a typed empty array for token arrays under n
+    (0, 1 and n-1 tokens) and for NULL, with no outside filter; the
+    shingle, fingerprint and gate consumers run over such docs with
+    codegen fallback disabled."""
+    from pyspark.sql import functions as F
+
+    toks = spark.createDataFrame(
+        [(0, []), (1, ["a"]), (2, ["a", "b"]), (3, None), (4, ["a", "b", "c", "d"])],
+        "doc_id long, _t array<string>",
+    )
+    grams = toks.select("doc_id", F.expr(dedup._grams_sql("_t", 3)).alias("g"))
+    assert grams.schema["g"].dataType.simpleString() == "array<string>"
+    assert {r["doc_id"]: r["g"] for r in grams.collect()} == {
+        0: [], 1: [], 2: [], 3: [], 4: ["a b c", "b c d"]
+    }
+    texts = spark.createDataFrame(
+        [(0, ""), (1, "a"), (2, "a b"), (3, None), (4, "a b c d")],
+        "doc_id long, text string",
+    )
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        assert sorted(tuple(r) for r in dedup.shingles(texts).collect()) == [
+            (4, "a b c"), (4, "b c d")
+        ]
+        assert {r["doc_id"] for r in dedup.fingerprint_winnow(texts).collect()} == {4}
+        gated = dedup._quality_gated(texts, "doc_id", "text", 1.0, 0.0, 3, None, 1)
+        assert {r["doc_id"]: r["dup_ngram_frac"] for r in gated.collect()} == {
+            1: 0.0, 2: 0.0, 4: 0.0
+        }
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
 
 
 def test_curate_pipeline_semantics(spark):

@@ -14,8 +14,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 
 def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
@@ -25,49 +23,25 @@ def main() -> None:
                            "plans", "r06")
     os.makedirs(out_dir, exist_ok=True)
 
+    from bench_common import forced, k_pipeline, pts_df, sf_tables
     from maskmypy_spark import analysis
     from maskmypy_spark.operators.donut import donut
     from maskmypy_spark.operators.locationswap import locationswap
     from maskmypy_spark.operators.voronoi import voronoi
     from maskmypy_spark.session import get_spark
-    from maskmypy_spark.sources import tables
 
     spark = get_spark(app="maskmypy-capture-plans", cores=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    par = spark.sparkContext.defaultParallelism
-    pts = tables.big_points_df(spark, sf_dir).repartition(2 * par).cache()
-    pts.count()
-    addr = tables.address_df(spark, sf_dir).repartition(par).cache()
-    addr.count()
-
-    def _forced(df):
-        return df.select(
-            F.xxhash64(*[F.col(c) for c in df.columns]).alias("h")
-        ).agg(F.expr("bit_xor(h)"))
-
-    def _k_joinfree():
-        m = donut(analysis.with_original(pts), 100.0, 500.0, seed=42)
-        disp = analysis.displacement_from_payload(m)
-        return analysis.k_anonymity_address(
-            pts, m.drop("_orig_x", "_orig_y"), addr, max_radius=500.0,
-            disp=disp, slim=True,
-        )
-
-    from maskmypy_spark.functions import rng as _rng
-
-    big = spark.range(1, 20_000_001, 1, 4 * par).selectExpr(
-        "id AS pid",
-        f"({_rng.u_sql('id', 101, 1234)}) * 2.0e4 AS x",
-        f"({_rng.u_sql('id', 102, 1234)}) * 1.0e4 AS y",
-    )
+    pts, addr, _ = sf_tables(spark, sf_dir)
+    big = pts_df(spark, 20_000_000)
 
     dfs = {
-        "q_donut_mask": _forced(donut(pts, 100.0, 500.0, seed=42).select("pid", "x", "y")),
-        "q_k_verify": _forced(_k_joinfree().select("pid", "x", "y", "k_anonymity")),
-        "q_locationswap": _forced(locationswap(pts, 100.0, 500.0, addr, seed=42)),
-        "q_voronoi_nn": _forced(voronoi(pts)),
-        "q_mask_20m": _forced(donut(big, 100.0, 500.0, seed=42).select("pid", "x", "y")),
+        "q_donut_mask": forced(donut(pts, 100.0, 500.0, seed=42).select("pid", "x", "y")),
+        "q_k_verify": forced(k_pipeline(pts, addr).select("pid", "x", "y", "k_anonymity")),
+        "q_locationswap": forced(locationswap(pts, 100.0, 500.0, addr, seed=42)),
+        "q_voronoi_nn": forced(voronoi(pts)),
+        "q_mask_20m": forced(donut(big, 100.0, 500.0, seed=42).select("pid", "x", "y")),
     }
     for name, df in dfs.items():
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
@@ -76,9 +50,9 @@ def main() -> None:
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
             ))
         print(f"wrote {path}")
-    # q_pipeline shares the _k_joinfree plan; its extra k_satisfaction agg is
+    # q_pipeline shares the k_pipeline plan; its extra k_satisfaction agg is
     # a one-row aggregate — capture it too for completeness.
-    ksat = analysis.k_satisfaction(_k_joinfree(), 10)
+    ksat = analysis.k_satisfaction(k_pipeline(pts, addr), 10)
     with open(os.path.join(out_dir, f"q_pipeline_{suffix}.txt"), "w") as f:
         f.write(ksat._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

@@ -96,9 +96,7 @@ def _hot_cluster(spark, sf_dir):
 def _child(job: str, salt: int) -> None:
     from pyspark.sql import functions as F
 
-    from maskmypy_spark import analysis
-    from maskmypy_spark.operators.donut import donut
-    from maskmypy_spark.operators.voronoi import voronoi
+    from bench_common import force, k_pipeline
     from maskmypy_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -106,24 +104,11 @@ def _child(job: str, salt: int) -> None:
     spark = get_spark(app="maskmypy-exp-skew", cores=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    def _force(df):
-        return (
-            df.select(F.xxhash64(*[F.col(c) for c in df.columns]).alias("h"))
-            .agg(F.expr("bit_xor(h)"))
-            .collect()[0][0]
-        )
-
     if job == "kv":
         pts, addr = _hot_tables(spark, sf_dir)
 
         def run():
-            m = donut(analysis.with_original(pts), 100.0, 500.0, seed=42)
-            disp = analysis.displacement_from_payload(m)
-            k = analysis.k_anonymity_address(
-                pts, m.drop("_orig_x", "_orig_y"), addr, max_radius=500.0,
-                disp=disp, slim=True, salt=salt,
-            )
-            return _force(k.select("pid", "k_anonymity"))
+            return force(k_pipeline(pts, addr, salt).select("pid", "k_anonymity"))[0]
     elif job == "vor":
         from maskmypy_spark.operators.knn import nearest_neighbor
 
@@ -145,7 +130,7 @@ def _child(job: str, salt: int) -> None:
                 .withColumn("y", F.expr("(y + _vy) / 2.0"))
                 .drop("_vkey", "_vx", "_vy", "nn_dist")
             )
-            return _force(out)
+            return force(out)[0]
     else:
         raise SystemExit(f"unknown job {job}")
 

@@ -48,9 +48,7 @@ SCALES = [600_000, 2_000_000, 6_000_000, 20_000_000]
 WORKER = r"""
 import json, os, sys, time
 sys.path.insert(0, %(repo)r)
-from pyspark.sql import functions as F
-from maskmypy_spark import analysis
-from maskmypy_spark.functions import rng as _rng
+from bench_common import addr_df, force, k_pipeline, pts_df
 from maskmypy_spark.operators.donut import donut
 from maskmypy_spark.operators.locationswap import locationswap
 from maskmypy_spark.session import get_spark
@@ -59,16 +57,6 @@ n = int(sys.argv[1]); w = float(sys.argv[2]); h = float(sys.argv[3])
 cores = int(sys.argv[4]); runs = int(sys.argv[5])
 spark = get_spark(app=f"scale-curve-{n}", cores=cores)
 spark.sparkContext.setLogLevel("ERROR")
-
-def pts_df(n, w, h, tag_salt=0):
-    df = spark.range(1, n + 1, 1, max(cores * 4, 8)).withColumnRenamed("id", "pid")
-    x = f"({_rng.u_sql('pid', 101 + tag_salt, 1234)}) * {_rng.flit(w)}"
-    y = f"({_rng.u_sql('pid', 102 + tag_salt, 1234)}) * {_rng.flit(h)}"
-    return df.select("pid", F.expr(x).alias("x"), F.expr(y).alias("y"))
-
-def force(df):
-    (df.select(F.xxhash64(*[F.col(c) for c in df.columns]).alias("h"))
-       .agg(F.expr("bit_xor(h)")).collect())
 
 def run_timed(fn, warmup=1):
     for _ in range(warmup):
@@ -80,22 +68,12 @@ def run_timed(fn, warmup=1):
         ts.append(round(time.perf_counter() - t0, 3))
     return ts  # every timed run; the parent takes min across JVMs
 
-pts = pts_df(n, w, h).cache(); pts.count()
-addr = (pts_df(max(n // 20, 1), w, h, tag_salt=50)
-        .withColumnsRenamed({"pid": "aid", "x": "ax", "y": "ay"})).cache()
-addr.count()
-
-def k_joinfree():
-    m = donut(analysis.with_original(pts), 100.0, 500.0, seed=42)
-    disp = analysis.displacement_from_payload(m)
-    return analysis.k_anonymity_address(
-        pts, m.drop("_orig_x", "_orig_y"), addr,
-        max_radius=500.0, disp=disp,
-    )
+pts = pts_df(spark, n, w, h).cache(); pts.count()
+addr = addr_df(spark, max(n // 20, 1), w, h).cache(); addr.count()
 
 timings = {
     "donut_mask": run_timed(lambda: force(donut(pts, 100.0, 500.0, seed=42))),
-    "k_verify": run_timed(lambda: force(k_joinfree())),
+    "k_verify": run_timed(lambda: force(k_pipeline(pts, addr))),
     "locationswap": run_timed(
         lambda: force(locationswap(pts, 100.0, 500.0, addr, seed=42))
     ),

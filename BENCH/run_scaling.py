@@ -51,39 +51,30 @@ WORKER = r"""
 import json, os, sys, time
 sys.path.insert(0, %(repo)r)
 os.environ.setdefault("SPARK_DRIVER_MEM", "48g")  # same heap at every level
-from pyspark.sql import functions as F
+from bench_common import addr_df, force, k_pipeline, pts_df
 from maskmypy_spark.session import get_spark
 from maskmypy_spark import analysis
 from maskmypy_spark.operators.donut import donut
 from maskmypy_spark.operators.locationswap import locationswap
-from maskmypy_spark.functions import rng as _rng
-from maskmypy_spark.sources import tables as _t
 
 cores = int(sys.argv[1]); n = int(sys.argv[2]); n_big = int(sys.argv[3])
 spark = get_spark(app=f"scaling-{cores}", cores=cores)
 spark.sparkContext.setLogLevel("ERROR")
 
-# Synthetic point tables generated JVM-side at any scale (no driver memory):
-# same derivation as sources/tables.py but over spark.range.
-import math
+# Synthetic point tables generated JVM-side at any scale (no driver memory).
 # box area scales with n (constant density): per-point work is then
 # n-independent, so row count controls TOTAL work without changing the
 # workload shape — necessary once the round-3 adaptive join made the jobs
 # fast enough to be overhead-bound at the old fixed 1M-row size
+import math
 _BS = math.sqrt(n / 1_000_000.0)
-
-def pts_df(n, tag_salt=0):
-    df = spark.range(1, n + 1, 1, max(cores * 4, 8)).withColumnRenamed("id", "pid")
-    x = f"({_rng.u_sql('pid', 101 + tag_salt, 1234)}) * {2.0e4 * _BS:.10e}"
-    y = f"({_rng.u_sql('pid', 102 + tag_salt, 1234)}) * {1.0e4 * _BS:.10e}"
-    return df.select("pid", F.expr(x).alias("x"), F.expr(y).alias("y"))
+W, H = 2.0e4 * _BS, 1.0e4 * _BS
 
 # address density calibrated to realistic k (~40 at the 100-500m donut):
 # denser would turn k-verify into an O(n * k) stress test rather than the
 # production-shaped workload the baseline metric describes.
-pts = pts_df(n).cache(); pts.count()
-addr = (pts_df(max(n // 20, 1), tag_salt=50)
-        .withColumnsRenamed({"pid": "aid", "x": "ax", "y": "ay"})).cache(); addr.count()
+pts = pts_df(spark, n, W, H).cache(); pts.count()
+addr = addr_df(spark, max(n // 20, 1), W, H).cache(); addr.count()
 
 RUNS = int(os.environ.get("SCALING_RUNS", "3"))
 
@@ -94,24 +85,9 @@ def run_timed(fn, runs=RUNS, warmup=1):
         t0 = time.perf_counter(); fn(); ts.append(round(time.perf_counter() - t0, 3))
     return ts  # all timed runs; the parent takes min across this level's JVMs
 
-def force(df):
-    # hash all columns: defeats aggregate pushdown / outer-join elimination;
-    # bit_xor aggregation cannot overflow under ANSI mode
-    (df.select(F.xxhash64(*[F.col(c) for c in df.columns]).alias("h"))
-       .agg(F.expr("bit_xor(h)")).collect())
-
-def k_joinfree():
-    # pipeline shape (see bench.py): originals ride through the mask as
-    # payload -> displacement radius is a projection, no fact-table pid-join
-    m = donut(analysis.with_original(pts), 100.0, 500.0, seed=42)
-    disp = analysis.displacement_from_payload(m)
-    return analysis.k_anonymity_address(
-        pts, m.drop("_orig_x", "_orig_y"), addr, max_radius=500.0, disp=disp
-    )
-
 jobs = {}
 jobs["donut_mask"] = lambda: force(donut(pts, 100.0, 500.0, seed=42))
-jobs["k_verify"] = lambda: force(k_joinfree())
+jobs["k_verify"] = lambda: force(k_pipeline(pts, addr))
 jobs["locationswap"] = lambda: force(locationswap(pts, 100.0, 500.0, addr, seed=42))
 
 out = {"cores": cores, "rows": n, "timings": {}}
@@ -119,7 +95,7 @@ for name, fn in jobs.items():
     out["timings"][name] = run_timed(fn)  # list of per-run seconds
 
 # mask throughput at fixed-overhead-free scale (pure codegen projection)
-big = pts_df(n_big)
+big = pts_df(spark, n_big, W, H)
 out["mask_big_rows"] = n_big
 out["mask_big_sec"] = run_timed(lambda: force(donut(big, 100.0, 500.0, seed=42)))  # list
 

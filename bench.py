@@ -31,82 +31,38 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def build_jobs(spark, sf_dir):
-    from pyspark.sql import functions as F
-
+    from bench_common import force, k_pipeline, pts_df, sf_tables
     from maskmypy_spark import analysis
     from maskmypy_spark.operators.donut import donut
     from maskmypy_spark.operators.locationswap import locationswap
     from maskmypy_spark.operators.voronoi import voronoi
-    from maskmypy_spark.sources import tables
 
-    # The small-SF fixtures are single parquet files -> 1-3 scan splits, so
-    # a no-shuffle pipeline (pure-projection mask, broadcast join probe)
-    # would run on 1-3 of the N cores — a local artifact. On a real cluster
-    # the 100 TB fact table scans as thousands of splits; mirror that here
-    # by repartitioning ONCE at setup (untimed, before cache).
-    par = spark.sparkContext.defaultParallelism
-    pts = tables.big_points_df(spark, sf_dir).repartition(2 * par).cache()
-    n_rows = pts.count()
-    addr = tables.address_df(spark, sf_dir).repartition(par).cache()
-    addr.count()
-
-    def _force(df):
-        # Force FULL execution of every column: xxhash64 over all output
-        # columns defeats Catalyst's aggregate pushdown / outer-join
-        # elimination (a bare count(*) prunes the k-join entirely).
-        # bit_xor aggregation cannot overflow under ANSI mode.
-        return (
-            df.select(F.xxhash64(*[F.col(c) for c in df.columns]).alias("h"))
-            .agg(F.expr("bit_xor(h)"))
-            .collect()[0][0]
-        )
+    pts, addr, n_rows = sf_tables(spark, sf_dir)
 
     def q_donut_mask(_=None):
         m = donut(pts, 100.0, 500.0, seed=42)
-        return _force(m.select("pid", "x", "y"))
-
-    def _k_joinfree():
-        # pipeline shape: originals ride through the mask as payload, so
-        # the displacement radius is a projection — NO pid-join of the fact
-        # table; slim=True additionally removes the final join-back (each
-        # point rides once into the pair stream, count = k). ZERO fact
-        # joins end-to-end; values identical to the general
-        # displacement-join path (contract-verified).
-        m = donut(analysis.with_original(pts), 100.0, 500.0, seed=42)
-        disp = analysis.displacement_from_payload(m)
-        return analysis.k_anonymity_address(
-            pts, m.drop("_orig_x", "_orig_y"), addr, max_radius=500.0,
-            disp=disp, slim=True,
-        )
+        return force(m.select("pid", "x", "y"))
 
     def q_k_verify(_=None):
-        return _force(_k_joinfree().select("pid", "k_anonymity"))
+        return force(k_pipeline(pts, addr).select("pid", "k_anonymity"))
 
     def q_locationswap(_=None):
         m = locationswap(pts, 100.0, 500.0, addr, seed=42)
-        return _force(m)
+        return force(m)
 
     def q_voronoi_nn(_=None):
         m = voronoi(pts)
-        return _force(m)
+        return force(m)
 
     def q_pipeline(_=None):
-        k = _k_joinfree()
-        return float(analysis.k_satisfaction(k, 10).collect()[0][0])
+        return float(analysis.k_satisfaction(k_pipeline(pts, addr), 10).collect()[0][0])
 
     def q_mask_20m(_=None):
         # mask throughput free of fixed overhead (the sf-table jobs are
         # scheduler/scan-bound at <1M rows): generate 20M rows JVM-side
         # and mask them — the BASELINE.json "masked points/sec" figure
-        from maskmypy_spark.functions import rng as _rng
-
-        big = spark.range(1, 20_000_001, 1, 4 * par).selectExpr(
-            "id AS pid",
-            f"({_rng.u_sql('id', 101, 1234)}) * 2.0e4 AS x",
-            f"({_rng.u_sql('id', 102, 1234)}) * 1.0e4 AS y",
-        )
-        m = donut(big, 100.0, 500.0, seed=42)
-        return _force(m.select("pid", "x", "y"))
+        m = donut(pts_df(spark, 20_000_000), 100.0, 500.0, seed=42)
+        return force(m.select("pid", "x", "y"))
 
     jobs = {
         "q_donut_mask": q_donut_mask,

@@ -70,6 +70,7 @@ def _docs(spark, n):
 def _worker() -> None:
     from pyspark.sql import functions as F
 
+    from bench_common import force
     from maskmypy_spark.operators.dedup import curate_near
     from maskmypy_spark.session import get_spark
 
@@ -83,14 +84,7 @@ def _worker() -> None:
     n = docs.count()  # untimed generation + cache, as bench.py's tables
 
     def run():
-        out = curate_near(docs)
-        return (
-            out.select(
-                F.xxhash64(*[F.col(c) for c in out.columns]).alias("h")
-            )
-            .agg(F.expr("bit_xor(h)"), F.expr("count(1)"))
-            .collect()[0]
-        )
+        return force(curate_near(docs), F.count(F.lit(1)))
 
     for _ in range(warmups):
         h0, kept = run()

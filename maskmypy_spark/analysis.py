@@ -12,11 +12,12 @@ Rounding matches the reference digit-for-digit: 6 dp distances
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .functions import geometry
-from .operators.distance_join import dist_sql, distance_join
+from .operators.distance_join import _core_then_payload, dist_sql, distance_join
 from .operators.knn import nearest_neighbor
+from .operators.pip import _bbox_cols, _bbox_join
 
 SENS_PREFIX = "_s_"
 
@@ -37,14 +38,21 @@ def displacement(
     :func:`displacement_from_payload` — originals ride through the mask as
     payload columns and the radius is a pure projection, skipping this
     join entirely (a full-fact-table shuffle at the 100 TB target)."""
+    return displacement_from_payload(
+        _with_sensitive(sensitive, candidate, key, x, y), x, y,
+        SENS_PREFIX + x, SENS_PREFIX + y, col,
+    )
+
+
+def _with_sensitive(
+    sensitive: DataFrame, candidate: DataFrame, key: str, x: str, y: str
+) -> DataFrame:
+    """candidate + the sensitive coordinates (``SENS_PREFIX`` + x, y),
+    joined on key: the one displacement join."""
     s = sensitive.select(
         key, F.col(x).alias(SENS_PREFIX + x), F.col(y).alias(SENS_PREFIX + y)
     )
-    return (
-        candidate.join(s, key)
-        .withColumn(col, F.expr(dist_sql(x, y, SENS_PREFIX + x, SENS_PREFIX + y)))
-        .drop(SENS_PREFIX + x, SENS_PREFIX + y)
-    )
+    return candidate.join(s, key)
 
 
 def with_original(
@@ -69,33 +77,45 @@ def displacement_from_payload(
     return out.drop(ox, oy) if drop_original else out
 
 
-def summarize_displacement(df: DataFrame, col: str = "_distance") -> DataFrame:
-    """One-row summary (analysis.py:197-219): min/max/med/mean @ 6 dp."""
-    return df.agg(
+# Metric column lists, shared by the one-metric public functions below and
+# evaluate()'s single aggregate jobs.
+def _displacement_stats(col: str) -> list[Column]:
+    return [
         F.round(F.min(col), 6).alias("displacement_min"),
         F.round(F.max(col), 6).alias("displacement_max"),
         F.round(F.median(col), 6).alias("displacement_med"),
         F.round(F.avg(col), 6).alias("displacement_mean"),
-    )
+    ]
 
 
-def summarize_k(df: DataFrame, col: str = "k_anonymity") -> DataFrame:
-    """analysis.py:172-194: int min/max, 2-dp median/mean."""
-    return df.agg(
+def _k_stats(col: str) -> list[Column]:
+    return [
         F.min(col).cast("bigint").alias("k_min"),
         F.max(col).cast("bigint").alias("k_max"),
         F.round(F.median(F.col(col).cast("double")), 2).alias("k_med"),
         F.round(F.avg(col), 2).alias("k_mean"),
-    )
+    ]
+
+
+def _k_satisfaction_stat(min_k: int, col: str) -> Column:
+    return F.round(
+        F.sum(F.when(F.col(col) >= min_k, 1).otherwise(0)) / F.count(col), 3
+    ).alias(f"k_satisfaction_{min_k}")
+
+
+def summarize_displacement(df: DataFrame, col: str = "_distance") -> DataFrame:
+    """One-row summary (analysis.py:197-219): min/max/med/mean @ 6 dp."""
+    return df.agg(*_displacement_stats(col))
+
+
+def summarize_k(df: DataFrame, col: str = "k_anonymity") -> DataFrame:
+    """analysis.py:172-194: int min/max, 2-dp median/mean."""
+    return df.agg(*_k_stats(col))
 
 
 def k_satisfaction(df: DataFrame, min_k: int, col: str = "k_anonymity") -> DataFrame:
     """analysis.py:150-169: share of rows with k >= min_k, 3 dp."""
-    return df.agg(
-        F.round(
-            F.sum(F.when(F.col(col) >= min_k, 1).otherwise(0)) / F.count(col), 3
-        ).alias(f"k_satisfaction_{min_k}")
-    )
+    return df.agg(_k_satisfaction_stat(min_k, col))
 
 
 def k_satisfaction_value(df: DataFrame, min_k: int, col: str = "k_anonymity") -> float:
@@ -210,7 +230,6 @@ def k_anonymity_address(
     ay: str = "ay",
     max_radius: float | None = None,
     salt: int = 0,
-    broadcast_addr: bool = False,
     disp: DataFrame | None = None,
     slim: bool = False,
     cs: float | None = None,
@@ -224,21 +243,19 @@ def k_anonymity_address(
     reference's geopandas buffers are 32-gon approximations whose boundary
     behavior is a numerical artifact (see tests/test_analysis_goldens.py).
 
-    This is the flagship k-verification join of BASELINE.json: a cell-
-    indexed distance join at the displacement cap + one count aggregate.
+    This is the flagship k-verification join of BASELINE.json: ONE plan
+    shape — a LEFT OUTER per-row-radius distance join (the predicate inside
+    the join condition, so a point with no address in its disk still
+    contributes one null-extended row) and ONE count aggregate keyed by
+    ``key``, ``k = 1 + count(akey)``. Candidate payload columns never enter
+    the pair stream; they join back once at the end, in their original
+    order (distance_join._core_then_payload). ``slim=True`` returns only
+    (key, x, y, k_anonymity) and skips that join — the shape for consumers
+    that only read k (the satisfaction pipeline, monitoring sinks).
 
     ``disp`` optionally reuses a precomputed displacement frame (a
     DataFrame with a ``_distance`` column from :func:`displacement`) so
     composite evaluations don't run the pid-join twice.
-
-    ``slim=True`` returns only (key, x, y, k_anonymity) — and removes the
-    fact-table join-back entirely: each point rides ONCE into the pair
-    stream (union-all) before the count aggregate, so ``count = npairs +
-    1 = k`` including the zero-address k=1 rows. One exchange total (the
-    aggregate) instead of aggregate + a second full-fact shuffle join —
-    the preferred shape when downstream only needs the k column (the
-    satisfaction pipeline, monitoring sinks). Values are identical to the
-    general path (contract-verified).
 
     ``addr_cell_col`` names a precomputed cell-id column on ``address``
     (requires pinning ``cs`` to the value it was computed at) — the stored-
@@ -261,24 +278,19 @@ def k_anonymity_address(
         cand = displacement(sensitive, candidate, key, x, y, col="_radius")
     if max_radius is None:
         max_radius = cand.agg(F.max("_radius")).collect()[0][0] or 1.0
-    # adaptive per-row ring (left_radius_col): each point probes only the
-    # cells its OWN displacement disk can reach — ~1.4x fewer candidate
-    # pairs than a max-radius ring at sf0.1, identical results
     addr_cols = [akey, ax, ay] + ([addr_cell_col] if addr_cell_col else [])
-    if slim:
-        # LEFT OUTER annulus join (distance predicate inside the join
-        # condition): every point's probe rows survive even with zero
-        # within-radius addresses, so k comes out of ONE aggregate —
-        # no union branch re-deriving the masked table (that branch
-        # recomputed the whole mask per query) and still one join total.
+
+    def count(pts: DataFrame) -> DataFrame:
+        # adaptive per-row ring (left_radius_col): each point probes only
+        # the cells its OWN displacement disk can reach — ~1.4x fewer
+        # candidate pairs than a max-radius ring at sf0.1, identical results.
         # x, y are constant per key (unique row keys), so they come out of
         # the aggregate as min() AGGREGATES rather than grouping keys:
         # bit-identical values (min over equals), but consumers that only
-        # read (key, k) — the satisfaction pipeline, monitoring sinks —
-        # let Catalyst PRUNE the coordinate buffers entirely, leaving an
-        # 8-byte grouping key and one count buffer on the pair stream
-        # (grouping keys can never be pruned, and float keys additionally
-        # pay a normalize-NaN/zero wrapper per row).
+        # read (key, k) let Catalyst PRUNE the coordinate buffers entirely,
+        # leaving an 8-byte grouping key and one count buffer on the pair
+        # stream (grouping keys can never be pruned, and float keys
+        # additionally pay a normalize-NaN/zero wrapper per row).
         # NOT the interior-cell count shape (a GeoBlocks-style per-cell
         # pre-aggregate for cells inside a point's disk): a 3-variant
         # interleaved A/B at sf0.1 measured the within-radius pair stream
@@ -290,31 +302,21 @@ def k_anonymity_address(
         # caller left, that machinery was removed; git history keeps it
         # for a regime where per-pair work dominates fixed stage costs.
         pairs = distance_join(
-            cand.select(key, x, y, "_radius"), address.select(*addr_cols),
+            pts, address.select(*addr_cols),
             radius=float(max_radius), lx=x, ly=y, rx=ax, ry=ay, salt=salt,
-            broadcast_right=broadcast_addr, left_radius_col="_radius",
-            cs=cs, right_cell_col=addr_cell_col, how="left",
+            left_radius_col="_radius", cs=cs, right_cell_col=addr_cell_col,
+            how="left",
         )
-        return (
-            pairs.groupBy(key)
-            .agg(
-                F.min(x).alias(x),
-                F.min(y).alias(y),
-                (F.count(akey) + 1).cast("long").alias("k_anonymity"),
-            )
+        return pairs.groupBy(key).agg(
+            F.min(x).alias(x),
+            F.min(y).alias(y),
+            (F.count(akey) + 1).cast("long").alias("k_anonymity"),
         )
-    pairs = distance_join(
-        cand.select(key, x, y, "_radius"), address.select(*addr_cols),
-        radius=float(max_radius), lx=x, ly=y, rx=ax, ry=ay, salt=salt,
-        broadcast_right=broadcast_addr, left_radius_col="_radius",
-        cs=cs, right_cell_col=addr_cell_col,
-    )
-    counts = pairs.groupBy(key).agg((F.count(F.lit(1)) + 1).alias("k_anonymity"))
-    return (
-        cand.join(counts, key, "left")
-        .withColumn("k_anonymity", F.coalesce("k_anonymity", F.lit(1)))
-        .drop("_radius")
-    )
+
+    core = [key, x, y, "_radius"]
+    if slim:
+        return count(cand.select(*core))
+    return _core_then_payload(cand, core, key, count)
 
 
 def k_anonymity_polygon(
@@ -341,18 +343,14 @@ def k_anonymity_polygon(
     FROM THE JOINED ROW (Arrow list column), vectorized per polygon group
     within each batch.
 
-    Pair prefilter has two plans:
-      * ``cell_size=None`` (default): broadcast bbox RANGE join — right for
-        city/regional layers that fit an executor broadcast.
-      * ``cell_size=<meters>``: cell-indexed EQUI-join — each polygon
-        explodes into the grid cells covering its bbox (expanded by the max
-        displacement radius), points join on their single cell. This is the
-        continent-scale path: both sides shuffle on the cell key, no
-        broadcast, AQE skew-splits hot cells."""
+    The point-polygon pair prefilter is pip's bbox join (each bbox grown
+    by the point's displacement radius), with its two plans:
+    ``cell_size=None`` (default) broadcasts the polygons into a bbox RANGE
+    join — right for city/regional layers that fit an executor broadcast;
+    ``cell_size=<meters>`` is the continent-scale cell equi-join (see
+    ``pip._bbox_join``)."""
     import numpy as np
     import pandas as pd
-
-    from .functions import cells as _cells
 
     # polygon geometry as columns: bbox via array min/max, signed shoelace
     # area via aggregate over the edge list — no collect, no closure state
@@ -368,45 +366,17 @@ def k_anonymity_polygon(
         F.expr("transform(ring, p -> p.x)").alias("_rx"),
         F.expr("transform(ring, p -> p.y)").alias("_ry"),
         F.expr(shoelace).alias("_parea"),
-        F.expr("array_min(transform(ring, p -> p.x))").alias("_xmin"),
-        F.expr("array_min(transform(ring, p -> p.y))").alias("_ymin"),
-        F.expr("array_max(transform(ring, p -> p.x))").alias("_xmax"),
-        F.expr("array_max(transform(ring, p -> p.y))").alias("_ymax"),
+        *_bbox_cols(),
     )
 
     cand = displacement(sensitive, candidate, key, x, y, col="_radius")
-    px, py, pr = F.col(x), F.col(y), F.col("_radius")
-    bbox_pred = (
-        (px + pr >= F.col("_xmin")) & (px - pr <= F.col("_xmax"))
-        & (py + pr >= F.col("_ymin")) & (py - pr <= F.col("_ymax"))
-    )
-    keep = [key, x, y, "_radius", "poly_id", "_pop", "_parea", "_rx", "_ry"]
-    if cell_size is None:
-        pairs = cand.select(key, x, y, "_radius").join(
-            F.broadcast(polys), bbox_pred
-        ).select(*keep)
-    else:
-        cs = float(cell_size)
+    r_max = 0.0  # the cell path grows each polygon's cell cover by the largest radius
+    if cell_size is not None:
         r_max = cand.agg(F.max("_radius")).collect()[0][0] or 1.0
-        # polygons explode into every cell their (radius-expanded) bbox
-        # covers; points carry ONE cell — shuffle equi-join, no broadcast
-        cell_list = (
-            "flatten(transform("
-            f"sequence(CAST(floor((_xmin - {float(r_max)}) / {cs}) AS BIGINT), "
-            f"CAST(floor((_xmax + {float(r_max)}) / {cs}) AS BIGINT)), ix -> "
-            f"transform(sequence(CAST(floor((_ymin - {float(r_max)}) / {cs}) AS BIGINT), "
-            f"CAST(floor((_ymax + {float(r_max)}) / {cs}) AS BIGINT)), iy -> "
-            f"(ix + {_cells.CELL_OFF}) * {_cells.CELL_K} + iy + {_cells.CELL_OFF})))"
-        )
-        pt = cand.select(key, x, y, "_radius").withColumn(
-            "_cell", F.expr(_cells.cell_sql(x, y, cs))
-        )
-        pg = polys.withColumn("_cell", F.explode(F.expr(cell_list)))
-        pairs = (
-            pt.join(pg, "_cell")
-            .where(bbox_pred)
-            .select(*keep)
-        )
+    pairs = _bbox_join(
+        cand.select(key, x, y, "_radius"), polys, x, y, cell_size,
+        pad="_radius", max_pad=r_max,
+    ).select(key, x, y, "_radius", "poly_id", "_pop", "_parea", "_rx", "_ry")
 
     def clip_batches(it):
         for pdf in it:
@@ -617,7 +587,8 @@ def k_anonymity(
     reference's polygon branch is unreachable through its public function
     (tools.py:165-169 raises instead of returning False — SURVEY §2.2 A3);
     ours dispatches on the declared schema: a ``ring`` column means
-    polygons, (ax, ay) means address points."""
+    polygons, the address x column (``ax=`` in ``kw``, default "ax") means
+    address points."""
     if "ring" in population.columns:
         if population_column not in population.columns:
             raise ValueError(
@@ -626,7 +597,7 @@ def k_anonymity(
         return k_anonymity_polygon(
             sensitive, candidate, population, population_column, key, x, y
         )
-    if "ax" in population.columns:
+    if kw.get("ax", "ax") in population.columns:
         return k_anonymity_address(sensitive, candidate, population, key, x, y, **kw)
     raise ValueError("population must include either Points (ax, ay) or Polygons (ring).")
 
@@ -703,11 +674,11 @@ def evaluate(
     (``skip_slow=False``, reference :64-65), and privacy metrics — k summary
     + satisfaction at 5/25/50 — when a population layer is given.
 
-    ``population`` dispatches like the reference (:68-74): a ``ring`` column
-    means polygon disaggregation (k_anonymity_polygon), (ax, ay) means
-    address points. ``address`` is the address-points shorthand kept from
-    the engine's original API. Returns a plain dict like the reference;
-    each stat is a tiny agg job.
+    ``population`` dispatches like the reference (:68-74), through
+    :func:`k_anonymity`: a ``ring`` column means polygon disaggregation
+    (k_anonymity_polygon), (ax, ay) means address points. ``address`` is the
+    address-points shorthand kept from the engine's original API. Returns a
+    plain dict like the reference; each stat is a tiny agg job.
 
     Completeness contract: ``central_drift`` and the sensitive-side mean
     center are derived from the inner-joined displacement frame, so they
@@ -725,16 +696,11 @@ def evaluate(
     # three separate actions; the per-table averages equal the joined-frame
     # averages because the key join is 1:1-complete — the reference's own
     # index-alignment contract, analysis.py:82-105).
-    s = sensitive.select(
-        key, F.col(x).alias(SENS_PREFIX + x), F.col(y).alias(SENS_PREFIX + y)
-    )
-    disp = (
-        candidate.join(s, key)
-        .withColumn(
-            "_distance", F.expr(dist_sql(x, y, SENS_PREFIX + x, SENS_PREFIX + y))
-        )
-        .localCheckpoint(eager=True)
-    )
+    sx, sy = SENS_PREFIX + x, SENS_PREFIX + y
+    disp = displacement_from_payload(
+        _with_sensitive(sensitive, candidate, key, x, y), x, y, sx, sy,
+        drop_original=False,
+    ).localCheckpoint(eager=True)
     if assert_complete:
         # count AND distinct-count in one aggregate: equal row counts alone
         # would let a drop+duplicate pair cancel out undetected
@@ -754,14 +720,11 @@ def evaluate(
             )
     head = (
         disp.agg(
-            F.round(F.min("_distance"), 6).alias("displacement_min"),
-            F.round(F.max("_distance"), 6).alias("displacement_max"),
-            F.round(F.median("_distance"), 6).alias("displacement_med"),
-            F.round(F.avg("_distance"), 6).alias("displacement_mean"),
+            *_displacement_stats("_distance"),
             F.avg(x).alias("_bx"),
             F.avg(y).alias("_by"),
-            F.avg(SENS_PREFIX + x).alias("_ax"),
-            F.avg(SENS_PREFIX + y).alias("_ay"),
+            F.avg(sx).alias("_ax"),
+            F.avg(sy).alias("_ay"),
         )
         .select(
             "displacement_min", "displacement_max",
@@ -775,7 +738,6 @@ def evaluate(
     )
     stats["central_drift"] = float(head.pop("central_drift"))
     stats.update(head)
-    disp = disp.drop(SENS_PREFIX + x, SENS_PREFIX + y)
     stats.update(nnd_delta(sensitive, candidate, key, x, y).collect()[0].asDict())
     if not skip_slow:
         stats["ripley_rmse"] = ripley_rmse(
@@ -784,28 +746,15 @@ def evaluate(
         )
     pop = population if population is not None else address
     if pop is not None:
-        if "ring" in pop.columns:
-            kdf = k_anonymity_polygon(
-                sensitive, candidate, pop, population_column, key, x, y
-            )
-        else:
-            kdf = k_anonymity_address(
-                sensitive, candidate, pop, key, x, y, akey, ax, ay, disp=disp
-            )
+        # the bare (key, x, y, _distance) frame: no payload join-back
+        kdf = k_anonymity(
+            sensitive, candidate, pop, population_column, key, x, y,
+            akey=akey, ax=ax, ay=ay, disp=disp.select(key, x, y, "_distance"),
+        )
         # k summary + the three satisfaction levels: ONE aggregate job
-        # (identical expressions to summarize_k / k_satisfaction)
-        kc = F.col("k_anonymity")
         krow = kdf.agg(
-            F.min("k_anonymity").cast("bigint").alias("k_min"),
-            F.max("k_anonymity").cast("bigint").alias("k_max"),
-            F.round(F.median(kc.cast("double")), 2).alias("k_med"),
-            F.round(F.avg("k_anonymity"), 2).alias("k_mean"),
-            *[
-                F.round(
-                    F.sum(F.when(kc >= mk, 1).otherwise(0)) / F.count("k_anonymity"), 3
-                ).alias(f"k_satisfaction_{mk}")
-                for mk in (5, 25, 50)
-            ],
+            *_k_stats("k_anonymity"),
+            *[_k_satisfaction_stat(mk, "k_anonymity") for mk in (5, 25, 50)],
         ).collect()[0].asDict()
         stats.update(
             {k: (int(v) if k in ("k_min", "k_max") else float(v))

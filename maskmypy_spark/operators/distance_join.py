@@ -8,13 +8,14 @@ distance predicate then drops false positives JVM-side (whole-stage
 codegen — no Python anywhere).
 
 :func:`cell_join` is the one cell join of the engine: ``distance_join``'s
-per-row-radius and fixed-radius paths and every kNN escalation round
-(``knn.py``) call it. It owns the ``_cell`` equi-key, the hot-cell salt
-(``_sk``: probe rows scatter over ``salt`` sub-keys, the build side
-replicates once per sub-key), the physical pin (broadcast the build side,
-broadcast a counted-small probe side, or a sort-merge join for fact x fact)
-and the join condition: the equi-keys plus the exact pair predicate, for
-inner or left outer joins.
+per-row-radius and fixed-radius paths (and through them locationswap,
+address k-anonymity and the streaming k-verify), every kNN escalation round
+(``knn.py``) and the polygon bbox joins (``pip.py``) call it. It owns the
+``_cell`` equi-key, the hot-cell salt (``_sk``: probe rows scatter over
+``salt`` sub-keys, the build side replicates once per sub-key), the
+physical pin (broadcast the build side, broadcast a counted-small probe
+side, or a sort-merge join for fact x fact) and the join condition: the
+equi-keys plus the exact pair predicate, for inner or left outer joins.
 
 Scale design:
  - shuffle key = cell id; AQE skew-join splits hot cells at runtime, and
@@ -29,6 +30,7 @@ from __future__ import annotations
 
 import math
 from functools import reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -211,6 +213,47 @@ def cell_join(
     return j.drop("_cell", "_sk")
 
 
+def _explode_box(df: DataFrame, cs: float, pad: float = 0.0) -> DataFrame:
+    """``df`` + ``_cell``, exploded to every cell its box (columns xmin,
+    ymin, xmax, ymax), grown by ``pad`` on each side, covers: the build side
+    of a bbox cell join whose probe rows carry their single cell."""
+    c, p = flit(float(cs)), flit(float(pad))
+
+    def span(lo: str, hi: str) -> str:
+        return (
+            f"sequence(CAST(floor(({lo} - {p}) / {c}) AS BIGINT), "
+            f"CAST(floor(({hi} + {p}) / {c}) AS BIGINT))"
+        )
+
+    cell_list = (
+        f"flatten(transform({span('xmin', 'xmax')}, ix -> "
+        f"transform({span('ymin', 'ymax')}, iy -> "
+        f"(ix + {cells.CELL_OFF}) * {cells.CELL_K} + iy + {cells.CELL_OFF})))"
+    )
+    return df.withColumn("_cell", F.explode(F.expr(cell_list)))
+
+
+def _core_then_payload(
+    df: DataFrame, core: list[str], key: str, run: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """The payload rule of the point operators: ``run`` sees only ``df``'s
+    ``core`` columns (key, coordinates, radius), and every other column
+    joins back ONCE on ``key`` at the end. The result keeps ``df``'s column
+    order (core columns as ``run`` returns them, minus any it consumed),
+    then the columns ``run`` adds. Payload (captions, image bytes) thus
+    never rides a candidate stream, where a string or binary ``min()``
+    carry would plan a SortAggregate. A bare frame goes to ``run``
+    untouched, with no join."""
+    payload = [c for c in df.columns if c not in core]
+    if not payload:
+        return run(df)
+    out = run(df.select(*core))
+    return df.select(key, *payload).join(out, key).select(
+        *[c for c in df.columns if c in payload or c in out.columns],
+        *[c for c in out.columns if c not in df.columns],
+    )
+
+
 def distance_join(
     left: DataFrame,
     right: DataFrame,
@@ -260,9 +303,10 @@ def distance_join(
     still emitted and prunes away when unused). ``how='left'`` (per-row
     path, or the fixed-radius compact-dimension path explode_side='left')
     moves the radius/annulus predicate INTO the join condition so every
-    probe row survives (right side null when no partner) — the
-    join-back-free aggregation shape (see locationswap and
-    analysis.k_anonymity_address slim).
+    probe row survives (right side null when no partner) — the one plan
+    shape of locationswap, analysis.k_anonymity_address and
+    streaming.k_verify_stream: a single aggregate over the pair stream,
+    with no join back to the probe table.
 
     ``right_cell_col`` = the 100 TB dimension pattern: a stored address/
     node table persists its cell index once (cells.cell_sql at the SAME cs

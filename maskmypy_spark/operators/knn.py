@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from ..functions import cells
 from ..functions.rng import flit
-from .distance_join import cell_join, dist_sql, explode_pruned_ring
+from .distance_join import _core_then_payload, cell_join, dist_sql, explode_pruned_ring
 from .escalate import escalate
 
 # Ring rounds before the brute-force fallback; cs triples each round.
@@ -249,7 +249,8 @@ def nearest_neighbor(
     Payload columns (anything besides key, x, y and the group — image
     bytes, captions) never enter the candidate stream: the escalation runs
     on the (key, x, y[, group]) projection and the payload joins back once
-    at the end. Bare frames skip that join.
+    at the end (distance_join._core_then_payload). Bare frames skip that
+    join.
     """
     if cs is None:
         cs = estimate_cell_size(others, ox, oy)
@@ -257,8 +258,6 @@ def nearest_neighbor(
     on = [(group, group)] if group else []
     d = F.expr(dist_sql(x, y, ox, oy))
     xcond = (F.col(okey) != F.col(key)) if exclude_self else None
-    core = [key, x, y] + ([group] if group else [])
-    probe = points.select(*core) if set(points.columns) - set(core) else points
 
     def step(remaining, rnd, n):
         cs_r = sizes[rnd]
@@ -311,8 +310,7 @@ def nearest_neighbor(
         picked = _argmin_pick_rows(cand, d, key, [key], okey, ox, oy, diag)
         return remaining.join(picked, key, "inner").withColumn("nn_dist", d)
 
-    out = escalate(probe, step, fallback, MAX_ROUNDS)
-    if probe is points:
-        return out
-    res = [ox, oy, okey, "nn_dist"]
-    return points.join(out.select(key, *res), key).select(*points.columns, *res)
+    core = [key, x, y] + ([group] if group else [])
+    return _core_then_payload(
+        points, core, key, lambda probe: escalate(probe, step, fallback, MAX_ROUNDS)
+    )

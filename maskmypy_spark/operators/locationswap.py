@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import rng
-from .distance_join import distance_join
+from .distance_join import _core_then_payload, distance_join
 
 
 def locationswap(
@@ -81,92 +81,78 @@ def locationswap(
     # mod-mul folds to one BIGINT add (exact and order-independent in
     # int64 — bit-identical to the inline swap_pick_key the oracle keeps).
     pp, ap = swap_pick_parts(key, akey)
-    # Bare (key, x, y) frames take the JOIN-FREE shape: a LEFT OUTER
-    # candidate join (annulus predicate inside the join condition, so
-    # zero-candidate points survive null-extended) + ONE aggregate keyed
-    # (key, x, y) — the final fact-table join-back disappears entirely.
-    # Frames carrying payload columns keep the pick + join-back shape
-    # (payloads never enter the candidate stream either way). The annulus
-    # itself runs in SQUARED space on both shapes
-    # (distance_join(annulus_low=), sq_threshold_le): bit-identical pair
-    # set, no sqrt per candidate pair — the old post-join
-    # ``where(dist > low)`` was pushed into the join condition by Catalyst
-    # and evaluated the sqrt TWICE per candidate (join-condition codegen
-    # has no common-subexpression elimination).
-    bare = set(df.columns) == {key, x, y}
-    cand = distance_join(
-        df.select(key, x, y).withColumn("_swp", F.expr(pp)),
-        address.select(akey, ax, ay).withColumn("_swa", F.expr(ap)),
-        radius=high,
-        lx=x, ly=y, rx=ax, ry=ay, salt=salt, cs=float(high) / 2.0,
-        explode_side="left",
-        annulus_low=float(low),
-        how="left" if bare else "inner",
-    )
-    # Micro-staged hash (same trick as the donut stages): the inlined
-    # one-expression rendering blows whole-stage codegen's method limit on
-    # the joined row (interpreted fallback is ~30x slower on the hot join);
-    # three tiny columns execute the identical arithmetic, in the Spark-side
-    # AND dialect (rng._and_m — bit-equal, cheaper codegen).
     PACK = 1 << 32
     _A = _rng._and_m
-    cand = (
-        cand.withColumn(
-            "_t", F.expr(_rng.t_sql("_swp + _swa", _rng.TAG_SWAP, seed, fast=True))
+
+    def swap(pts: DataFrame) -> DataFrame:
+        # ONE shape: a LEFT OUTER candidate join (annulus predicate inside
+        # the join condition, so zero-candidate points survive
+        # null-extended) + ONE aggregate keyed by ``key``, run on the bare
+        # (key, x, y) frame; payload columns join back once afterwards
+        # (distance_join._core_then_payload). The annulus runs in SQUARED
+        # space (distance_join(annulus_low=), sq_threshold_le):
+        # bit-identical pair set, no sqrt per candidate pair — the old
+        # post-join ``where(dist > low)`` was pushed into the join condition
+        # by Catalyst and evaluated the sqrt TWICE per candidate
+        # (join-condition codegen has no common-subexpression elimination).
+        cand = distance_join(
+            pts.withColumn("_swp", F.expr(pp)),
+            address.select(akey, ax, ay).withColumn("_swa", F.expr(ap)),
+            radius=high,
+            lx=x, ly=y, rx=ax, ry=ay, salt=salt, cs=float(high) / 2.0,
+            explode_side="left",
+            annulus_low=float(low),
+            how="left",
         )
-        .withColumn(
-            "_g",
-            F.expr(_A(f"{_A('_t * _t')} + {_A(f'_t * {_rng.B1}')} + {_rng.C1}")),
+        # Micro-staged hash (same trick as the donut stages): the inlined
+        # one-expression rendering blows whole-stage codegen's method limit
+        # on the joined row (interpreted fallback is ~30x slower on the hot
+        # join); three tiny columns execute the identical arithmetic, in the
+        # Spark-side AND dialect (rng._and_m — bit-equal, cheaper codegen).
+        cand = (
+            cand.withColumn(
+                "_t", F.expr(_rng.t_sql("_swp + _swa", _rng.TAG_SWAP, seed, fast=True))
+            )
+            .withColumn(
+                "_g",
+                F.expr(_A(f"{_A('_t * _t')} + {_A(f'_t * {_rng.B1}')} + {_rng.C1}")),
+            )
+            .withColumn(
+                "_h2",
+                F.expr(_A(f"{_A('_g * _g')} + {_A(f'_g * {_rng.B2}')} + {_rng.C2}")),
+            )
         )
-        .withColumn(
-            "_h2",
-            F.expr(_A(f"{_A('_g * _g')} + {_A(f'_g * {_rng.B2}')} + {_rng.C2}")),
-        )
-    )
-    # min_by rides the SAME packed-BIGINT ordering key in the SAME
-    # HashAggregate (partial_min_by map-side combines like partial_min), so
-    # the winner's coordinates come out of the pick aggregate itself — the
-    # equi-join back to the address dimension (one broadcast build + probe
-    # per query; a full dimension join at 100 TB) disappears. The packed key
-    # is unique per (point, address) candidate (it embeds akey), so min_by
-    # is deterministic; the coordinates are the candidate row's own ax/ay —
-    # bit-identical to the values the join-back recovered.
-    cand = cand.withColumn("_pk", F.col("_h2") * F.lit(PACK) + F.col(akey))
-    if bare:
-        # One aggregate, no join-back: (x, y) are constant per key (unique
-        # row keys), so they come out as min() AGGREGATES over equal values
-        # (bit-identical) rather than grouping keys — double grouping keys
-        # pay a normalize-NaN/zero wrapper PER PAIR ROW on the ~250M-row
-        # candidate stream and triple the hash-table key width; as plain
-        # buffers they cost one compare per row and the grouping key stays
-        # one BIGINT (the k-verify slim aggregate took the same shape).
+        # min_by rides the SAME packed-BIGINT ordering key in the SAME
+        # HashAggregate (partial_min_by map-side combines like partial_min),
+        # so the winner's coordinates come out of the pick aggregate itself
+        # — no equi-join back to the address dimension (one broadcast build
+        # + probe per query; a full dimension join at 100 TB). The packed
+        # key is unique per (point, address) candidate (it embeds akey), so
+        # min_by is deterministic; the coordinates are the candidate row's
+        # own ax/ay. (x, y) are constant per key (unique row keys), so they
+        # come out as min() AGGREGATES over equal values (bit-identical)
+        # rather than grouping keys — double grouping keys pay a
+        # normalize-NaN/zero wrapper PER PAIR ROW on the ~250M-row candidate
+        # stream and triple the hash-table key width; as plain buffers they
+        # cost one compare per row and the grouping key stays one BIGINT.
         # Null-extended probe rows carry a null _pk, which min_by ignores
-        # (all-null group => null swap => UNMASKED=1) — exactly the old
-        # left-join's null semantics.
-        out = (
-            cand.groupBy(key)
+        # (all-null group => null swap => UNMASKED=1).
+        return (
+            cand.withColumn("_pk", F.col("_h2") * F.lit(PACK) + F.col(akey))
+            .groupBy(key)
             .agg(
                 F.min(x).alias(x),
                 F.min(y).alias(y),
                 F.expr(f"min_by({ax}, _pk)").alias("_swap_x"),
                 F.expr(f"min_by({ay}, _pk)").alias("_swap_y"),
             )
+            .withColumn("UNMASKED", F.when(F.col("_swap_x").isNull(), 1).otherwise(0))
+            .withColumn(x, F.coalesce("_swap_x", x))
+            .withColumn(y, F.coalesce("_swap_y", y))
+            .drop("_swap_x", "_swap_y")
         )
-    else:
-        picked = (
-            cand.groupBy(key)
-            .agg(
-                F.expr(f"min_by({ax}, _pk)").alias("_swap_x"),
-                F.expr(f"min_by({ay}, _pk)").alias("_swap_y"),
-            )
-        )
-        out = df.join(picked, key, "left")
-    out = (
-        out.withColumn("UNMASKED", F.when(F.col("_swap_x").isNull(), 1).otherwise(0))
-        .withColumn(x, F.coalesce("_swap_x", x))
-        .withColumn(y, F.coalesce("_swap_y", y))
-        .drop("_swap_x", "_swap_y")
-    )
+
+    out = _core_then_payload(df, [key, x, y], key, swap)
     if snap_to_streets:  # reference masks/locationswap.py:73-74
         from .snap import snap_to_nodes
 

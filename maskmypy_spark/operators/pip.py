@@ -17,9 +17,10 @@ ANSI-mode divide-by-zero on horizontal edges.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.rng import flit
+from ..functions import cells
+from .distance_join import _explode_box, cell_join
 
 EDGE_EXPR = """
 explode(transform(sequence(0, size(ring) - 1), i -> struct(
@@ -29,17 +30,55 @@ explode(transform(sequence(0, size(ring) - 1), i -> struct(
 """
 
 
+def _bbox_cols() -> list[Column]:
+    """The ring's bounding box as columns xmin, ymin, xmax, ymax."""
+    return [
+        F.expr(f"array_{fn}(transform(ring, p -> p.{a}))").alias(f"{a}{fn}")
+        for fn in ("min", "max") for a in ("x", "y")
+    ]
+
+
+def _bbox_join(
+    points: DataFrame,
+    boxes: DataFrame,
+    x: str,
+    y: str,
+    cell_size: float | None = None,
+    pad: str | None = None,
+    max_pad: float = 0.0,
+) -> DataFrame:
+    """Inner join of ``points`` with every ``boxes`` row (columns xmin, ymin,
+    xmax, ymax) whose box, grown by the point's own ``pad`` column, holds
+    the point: the bbox prefilter of pip_join and polygon k-anonymity.
+
+    ``cell_size=None`` broadcasts ``boxes`` into a range join — right for
+    the reference's container and census layers (tens of polygons).
+    ``cell_size=<meters>`` is the continent-scale path: each box explodes
+    into the grid cells it covers (grown by ``max_pad``, the largest
+    ``pad``), each point carries its single cell, and the two sides meet in
+    :func:`distance_join.cell_join` — a shuffle equi-join on the cell key
+    (no broadcast; box bytes shuffle once per covered cell instead of
+    residing whole on every executor, and AQE skew-splits hot cells)."""
+    x0 = x1 = F.col(x)
+    y0 = y1 = F.col(y)
+    if pad:
+        r = F.col(pad)
+        x0, x1, y0, y1 = x0 + r, x1 - r, y0 + r, y1 - r
+    cond = (
+        (x0 >= F.col("xmin")) & (x1 <= F.col("xmax"))
+        & (y0 >= F.col("ymin")) & (y1 <= F.col("ymax"))
+    )
+    if cell_size is None:
+        return points.join(F.broadcast(boxes), cond)
+    cs = float(cell_size)
+    pt = points.withColumn("_cell", F.expr(cells.cell_sql(x, y, cs)))
+    return cell_join(pt, _explode_box(boxes, cs, max_pad), x, y, cond=cond)
+
+
 def polygon_edges(polygons: DataFrame, poly_id: str = "poly_id") -> DataFrame:
     """(poly_id, x1, y1, x2, y2, xmin, ymin, xmax, ymax) — one row per edge."""
     return (
-        polygons.select(
-            poly_id,
-            F.expr("array_min(transform(ring, p -> p.x))").alias("xmin"),
-            F.expr("array_min(transform(ring, p -> p.y))").alias("ymin"),
-            F.expr("array_max(transform(ring, p -> p.x))").alias("xmax"),
-            F.expr("array_max(transform(ring, p -> p.y))").alias("ymax"),
-            F.expr(EDGE_EXPR).alias("_e"),
-        )
+        polygons.select(poly_id, *_bbox_cols(), F.expr(EDGE_EXPR).alias("_e"))
         .select(poly_id, "xmin", "ymin", "xmax", "ymax", "_e.*")
     )
 
@@ -59,60 +98,23 @@ def pip_join(
     points in several polygons produce several rows (the donut container
     contract forbids overlap — the caller raises, donut.py:158-161).
 
-    Two physical plans (value-identical; mirrors k_anonymity_polygon):
-      * ``cell_size=None`` (default): broadcast the exploded edge table and
-        bbox-range-join — right for the reference's container layers (tens
-        of polygons).
-      * ``cell_size=<meters>``: cell-indexed EQUI-join — each polygon row
-        (carrying its ring) explodes into the grid cells covering its bbox,
-        each point carries its single cell; both sides shuffle on the cell
-        key (no broadcast), then the ring explodes into edges ON THE JOINED
-        ROW. This is the national-census-layer scale path: polygon bytes
-        shuffle once per covered cell instead of residing whole on every
-        executor, and AQE skew-splits hot cells.
+    Two physical plans (value-identical; see :func:`_bbox_join`, shared with
+    k_anonymity_polygon): ``cell_size=None`` (default) bbox-joins the
+    broadcast exploded edge table; ``cell_size=<meters>`` cell-joins each
+    polygon row (carrying its ring) and explodes the ring into edges ON THE
+    JOINED ROW.
     """
-    px, py = F.col(x), F.col(y)
+    pts = points.select(key, x, y)
     if cell_size is None:
-        cand = points.select(key, x, y).join(
-            F.broadcast(polygon_edges(polygons, poly_id)),
-            (px >= F.col("xmin")) & (px <= F.col("xmax"))
-            & (py >= F.col("ymin")) & (py <= F.col("ymax")),
-        )
+        cand = _bbox_join(pts, polygon_edges(polygons, poly_id), x, y)
     else:
-        from ..functions import cells as _cells
-
-        cs = float(cell_size)
-        cell_list = (
-            "flatten(transform("
-            f"sequence(CAST(floor(xmin / {flit(cs)}) AS BIGINT), "
-            f"CAST(floor(xmax / {flit(cs)}) AS BIGINT)), ix -> "
-            f"transform(sequence(CAST(floor(ymin / {flit(cs)}) AS BIGINT), "
-            f"CAST(floor(ymax / {flit(cs)}) AS BIGINT)), iy -> "
-            f"(ix + {_cells.CELL_OFF}) * {_cells.CELL_K} + iy + {_cells.CELL_OFF})))"
-        )
-        pg = (
-            polygons.select(
-                poly_id,
-                "ring",
-                F.expr("array_min(transform(ring, p -> p.x))").alias("xmin"),
-                F.expr("array_min(transform(ring, p -> p.y))").alias("ymin"),
-                F.expr("array_max(transform(ring, p -> p.x))").alias("xmax"),
-                F.expr("array_max(transform(ring, p -> p.y))").alias("ymax"),
-            )
-            .withColumn("_cell", F.explode(F.expr(cell_list)))
-        )
-        pt = points.select(key, x, y).withColumn(
-            "_cell", F.expr(_cells.cell_sql(x, y, cs))
-        )
+        pg = polygons.select(poly_id, "ring", *_bbox_cols())
         cand = (
-            pt.join(pg, "_cell")
-            .where(
-                (px >= F.col("xmin")) & (px <= F.col("xmax"))
-                & (py >= F.col("ymin")) & (py <= F.col("ymax"))
-            )
+            _bbox_join(pts, pg, x, y, cell_size)
             .select(key, x, y, poly_id, F.expr(EDGE_EXPR).alias("_e"))
             .select(key, x, y, poly_id, "_e.*")
         )
+    px, py = F.col(x), F.col(y)
     straddle = (F.col("y1") > py) != (F.col("y2") > py)
     lhs = (px - F.col("x1")) * (F.col("y2") - F.col("y1"))
     rhs = (F.col("x2") - F.col("x1")) * (py - F.col("y1"))

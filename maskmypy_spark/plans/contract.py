@@ -413,9 +413,10 @@ def _kdf(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_k_anonymity():
-    """Gates the ``slim=True`` union-all k path (no fact-table join-back);
-    the general join-back path stays gated via the suppress / k_satisfaction
-    / summarize_k / street_k entries, which all build on ``_kdf``."""
+    """Gates the ``slim=True`` k path: the LEFT OUTER pair stream and one
+    count aggregate, returning (key, x, y, k) with no payload join-back. The
+    suppress / k_satisfaction / summarize_k / street_k entries run the same
+    shape through ``_kdf``."""
 
     def q(spark: SparkSession, sf: str) -> DataFrame:
         sens = _sens(spark, sf)

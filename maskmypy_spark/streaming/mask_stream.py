@@ -50,52 +50,35 @@ def k_verify_stream(
 ) -> DataFrame:
     """Streaming privacy verification: donut-mask arriving points, then
     count addresses within each point's displacement disk via a
-    STREAM-STATIC cell join (static address side broadcast per micro-batch),
-    aggregated per event-time window with a watermark for late data. ONE
-    streaming aggregation (window + point) keeps the plan in append mode;
-    window-level k-satisfaction is a trivial batch query over the sink.
+    STREAM-STATIC ``distance_join`` (static address side broadcast per
+    micro-batch), aggregated per event-time window with a watermark for late
+    data. ONE streaming aggregation (window + point) keeps the plan in append
+    mode; window-level k-satisfaction is a trivial batch query over the sink.
 
-    The join is LEFT OUTER so points with ZERO addresses in their disk —
-    the least-private, k = 1 rows — still emit a row (k = 1 + count of
-    non-null address keys); an inner join would silently drop exactly the
-    points a k-satisfaction monitor most needs to see.
-
-    The stream side explodes an ADAPTIVE cell ring sized to each row's own
-    displacement (distance_join's left_radius_col pattern): small
-    displacements probe one cell, and a gaussian displacement exceeding
-    ``high`` still probes far enough — no under-count (a point exploded
-    into n cells still aggregates correctly: non-matching exploded rows
-    contribute NULL aid, and a pair meets in exactly one cell).
+    The join is the batch k-verify shape (analysis.k_anonymity_address):
+    LEFT OUTER, so points with ZERO addresses in their disk — the
+    least-private, k = 1 rows — still emit a row (k = 1 + count of non-null
+    address keys); an inner join would silently drop exactly the points a
+    k-satisfaction monitor most needs to see. The stream side explodes the
+    per-row ring sized to each point's own displacement
+    (``left_radius_col``): small displacements probe one cell. The uniform
+    donut's displacement is < ``high`` by construction
+    (masksql.donut_stages), so ``radius=high`` bounds every ring.
 
     Returns (window, pid, k_anonymity)."""
-    from ..functions import cells
-    from ..functions.rng import flit
-    from ..operators.distance_join import dist_sql
+    from ..analysis import displacement_from_payload, with_original
+    from ..operators.distance_join import distance_join
 
-    # keep originals as payload columns so the displacement radius is a
-    # stateless projection (no stream-stream join anywhere)
-    pts = stream.select(key, x, y, ts).withColumn("_orig_x", F.col(x)).withColumn(
-        "_orig_y", F.col(y)
-    )
+    # originals ride through the mask as payload, so the displacement
+    # radius is a stateless projection (no stream-stream join anywhere)
+    pts = with_original(stream.select(key, x, y, ts), x, y)
     masked = donut(pts, low, high, seed, key=key, x=x, y=y)
-    masked = masked.withColumn("_radius", F.expr(dist_sql(x, y, "_orig_x", "_orig_y")))
-    cs = float(high) / 2.0
-    base = cells.cell_sql(x, y, cs)
-    ring_n = f"CAST(ceil(_radius / {flit(cs)}) AS BIGINT)"
-    ringlist = (
-        f"flatten(transform(sequence(-{ring_n}, {ring_n}), dx -> "
-        f"transform(sequence(-{ring_n}, {ring_n}), dy -> "
-        f"({base}) + dx * {cells.CELL_K} + dy)))"
-    )
-    lt = masked.withWatermark(ts, watermark).withColumn(
-        "_cell", F.explode(F.expr(ringlist))
-    )
-    rt = F.broadcast(
-        address.withColumn("_cell", F.expr(cells.cell_sql("ax", "ay", cs)))
-    )
-    d = F.expr(dist_sql(x, y, "ax", "ay"))
-    pairs = lt.join(
-        rt, (lt["_cell"] == rt["_cell"]) & (d <= F.col("_radius")), "left"
+    pairs = distance_join(
+        displacement_from_payload(masked, x, y, col="_radius")
+        .withWatermark(ts, watermark),
+        address.select("aid", "ax", "ay"),
+        radius=float(high), lx=x, ly=y, left_radius_col="_radius",
+        broadcast_right=True, how="left",
     )
     return (
         pairs.groupBy(F.window(F.col(ts), window).alias("window"), F.col(key))

@@ -56,6 +56,20 @@ def test_address_k_goldens(spark, sens, masked, k_expected):
     assert k == k_expected
 
 
+def test_k_anonymity_dispatches_on_the_given_address_columns(spark):
+    """``k_anonymity`` picks the address path from the ``ax`` it is given,
+    not from a hard-coded "ax" column: addresses named (lon, lat) give the
+    same k as the default names."""
+    s = _pts(spark, [(0, 0), (-7, 0)])
+    m = _pts(spark, [(2, 0), (0, 0)])
+    a = _addr(spark, ADDRS)
+    renamed = a.withColumnsRenamed({"ax": "lon", "ay": "lat"})
+    got = analysis.k_anonymity(s, m, renamed, ax="lon", ay="lat")
+    want = analysis.k_anonymity(s, m, a)
+    assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
+    assert {r["pid"]: r["k_anonymity"] for r in got.collect()} == {0: 6, 1: 8}
+
+
 def test_polygon_k_goldens(spark):
     """reference test_analysis.py:84-126 with EXACT circle areas (the
     reference's expected values use shapely's 32-gon buffer area; ours is

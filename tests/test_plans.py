@@ -431,25 +431,66 @@ def test_k_verify_pipeline_plan_quality(spark):
     plan = _plan(k.select("pid", "k_anonymity"))
     assert "HashAggregate" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # exactly TWO join operators: the annulus cell join + the left join
-    # giving absent points k=1 — and NO displacement pid-join of the fact
-    # table (simple mode prints each operator once)
+    # a bare (key, x, y, _distance) frame: exactly ONE join operator, the
+    # LEFT OUTER annulus cell join — no displacement pid-join of the fact
+    # table and no join-back (simple mode prints each operator once)
     simple = _plan(k.select("pid", "k_anonymity"), mode="simple")
     n_joins = sum(1 for ln in simple.splitlines() if "Join" in ln)
-    assert n_joins <= 2, simple
+    assert n_joins == 1, simple
 
-    # slim path: the join-back disappears too — ONE join total (the
-    # annulus cell join), and values match the general path exactly
+    # slim path: the same single join, and values match the default exactly
     ks = analysis.k_anonymity_address(
         pts, m.drop("_orig_x", "_orig_y"), addr, max_radius=500.0,
         disp=disp, slim=True,
     )
     simple = _plan(ks.select("pid", "k_anonymity"), mode="simple")
     n_joins = sum(1 for ln in simple.splitlines() if "Join" in ln)
-    assert n_joins <= 1, simple
+    assert n_joins == 1, simple
     a = {(r["pid"], r["k_anonymity"]) for r in ks.collect()}
     b = {(r["pid"], r["k_anonymity"]) for r in k.select("pid", "k_anonymity").collect()}
     assert a == b
+
+
+def test_k_anonymity_address_payload_joins_back_once(spark):
+    """Payload columns (a caption string, image bytes) stay out of the pair
+    stream: the count aggregate hash-aggregates (a string/binary min()
+    carry would plan a SortAggregate), the payload comes back unchanged in
+    the candidate's column order, and k equals the bare run's."""
+    from maskmypy_spark import analysis
+    from maskmypy_spark.operators.donut import donut
+
+    pts = spark.createDataFrame(fixtures.sensitive_points_pdf(200, seed=42))
+    addr = spark.createDataFrame(fixtures.addresses_pdf(2000, seed=43))
+    m = donut(pts, 100.0, 500.0, seed=42)
+    withp = m.select(
+        "pid",
+        F.concat(F.lit("pt "), F.col("pid").cast("string")).alias("caption"),
+        "x",
+        F.expr("CAST(concat('img', CAST(pid AS STRING)) AS BINARY)").alias("image"),
+        "y",
+    )
+    k = analysis.k_anonymity_address(pts, withp, addr, max_radius=500.0)
+    plan = _plan(k)
+    assert "SortAggregate" not in plan
+    assert "HashAggregate" in plan
+    assert k.columns == ["pid", "caption", "x", "image", "y", "k_anonymity"]
+
+    def rows(df):
+        return {
+            tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+            for r in df.collect()
+        }
+
+    got = rows(k)
+    want = rows(
+        withp.join(
+            analysis.k_anonymity_address(pts, m, addr, max_radius=500.0)
+            .select("pid", "k_anonymity"),
+            "pid",
+        ).select(*k.columns)
+    )
+    assert got == want and len(got) == 200
+    assert len({r[-1] for r in got}) > 1  # k varies across the fixture
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):

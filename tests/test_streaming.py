@@ -82,6 +82,55 @@ def test_k_verify_stream_matches_batch(spark, tmp_path):
     assert any(v == 1 for v in want.values()), "fixture should exercise k=1"
 
 
+def test_k_verify_stream_runs_on_distance_join(spark, tmp_path):
+    """The streaming k-verify is the batch shape (distance_join's per-row
+    ring, LEFT OUTER, broadcast addresses): the executed plan explodes a
+    literal ring index — no interpreted ``flatten(transform(sequence(...)))``
+    ring list — and k equals the batch k, the k = 1 rows included."""
+    import io
+    from contextlib import redirect_stdout
+
+    from maskmypy_spark import analysis
+
+    pdf = fixtures.sensitive_points_pdf(120, seed=7)
+    pdf["timestamp"] = pd.Timestamp("2026-01-01 00:00:30")
+    src_dir = str(tmp_path / "src_kd")
+    spark.createDataFrame(pdf).write.parquet(src_dir)
+    addr = spark.createDataFrame(fixtures.addresses_pdf(2000, seed=11))
+
+    stream = spark.readStream.schema(
+        "pid long, x double, y double, timestamp timestamp"
+    ).parquet(src_dir)
+    kdf = k_verify_stream(stream, addr, 100.0, 500.0, seed=3)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        kdf.explain(extended=True)
+    plan = buf.getvalue().lower()
+    assert "join leftouter" in plan and "generate explode(" in plan, plan
+    assert "flatten(" not in plan and "sequence(" not in plan, plan
+    q = (
+        kdf.writeStream.format("memory")
+        .queryName("k_stream_dj")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    got = {
+        r["pid"]: r["k_anonymity"]
+        for r in spark.sql("SELECT * FROM k_stream_dj").collect()
+    }
+
+    pts = spark.read.parquet(src_dir).select("pid", "x", "y")
+    m = donut(pts, 100.0, 500.0, seed=3)
+    want = {
+        r["pid"]: r["k_anonymity"]
+        for r in analysis.k_anonymity_address(pts, m, addr, max_radius=500.0).collect()
+    }
+    assert got == want and len(got) == 120
+    assert any(v == 1 for v in want.values()) and any(v > 1 for v in want.values())
+
+
 def test_stream_checkpoint_resume(spark, tmp_path):
     """Checkpointed streaming resume: a restarted query with the same
     checkpointLocation processes ONLY files that arrived while it was down

@@ -37,37 +37,14 @@ def donut_stages(
 
     ``fast=True`` renders the mod-2^31 stages as bitwise ANDs — the
     Spark-side dialect (rng._and_m): bit-identical integers, one AND instead
-    of a 64-bit modulo per stage in codegen. Oracle SQL (donut_cte) must
-    keep the portable default — its text is hash-frozen.
+    of a 64-bit modulo per stage in codegen. Oracle SQL
+    (contract._masked_cte) must keep the portable default — its text is
+    hash-frozen.
     """
     low, high = float(low), float(high)
 
     def draw(name: str, tag: int) -> list[tuple[str, str]]:
-        # Micro-staged rendering of the hash-RNG: t -> h1 -> u as SEPARATE
-        # columns. One inlined mega-expression per draw blows whole-stage
-        # codegen's 64KB method limit (interpreted fallback, ~4x slower);
-        # staged columns keep every expression tiny and codegen-able while
-        # executing the exact same integer/float operation sequence.
-        t = f"_t{name}"
-        g = f"_g{name}"
-        if fast:
-            A = rng._and_m
-            g_expr = A(f"{A(f'{t} * {t}')} + {A(f'{t} * {rng.B1}')} + {rng.C1}")
-            h2_expr = A(f"{A(f'{g} * {g}')} + {A(f'{g} * {rng.B2}')} + {rng.C2}")
-            return [
-                (t, rng.t_sql(key, tag, seed, attempt, fast=True)),
-                (g, g_expr),
-                (name, f"{h2_expr} / {flit(rng.M)}"),
-            ]
-        return [
-            (t, rng.t_sql(key, tag, seed, attempt)),
-            (g, f"({t} * {t} % {rng.M} + {t} * {rng.B1} % {rng.M} + {rng.C1}) % {rng.M}"),
-            (
-                name,
-                f"(({g} * {g} % {rng.M} + {g} * {rng.B2} % {rng.M} + {rng.C2})"
-                f" % {rng.M}) / {flit(rng.M)}",
-            ),
-        ]
+        return rng.staged(name, key, tag, seed, attempt, fast)
 
     stages: list[tuple[str, str]] = [
         *draw("_u1", rng.TAG_DONUT_R),
@@ -116,40 +93,6 @@ def donut_stages(
         )
     )
     return stages
-
-
-def donut_temp_cols(stages: list[tuple[str, str]]) -> list[str]:
-    return [name for name, _ in stages]
-
-
-def donut_cte(
-    source_sql: str,
-    key: str,
-    x: str,
-    y: str,
-    low: float,
-    high: float,
-    seed: int,
-    distribution: str = "uniform",
-    attempt: int = 0,
-    round_dp: int = 6,
-) -> str:
-    """Full ANSI-SQL (DuckDB-ready) query: source -> masked (key, mx, my).
-
-    Used by the oracle side of the driver contract; the Spark side runs the
-    DataFrame operator built from the same stages.
-    """
-    stages = donut_stages(key, low, high, seed, distribution, attempt)
-    sql = f"WITH _s0 AS ({source_sql})"
-    prev = "_s0"
-    for i, (name, expr) in enumerate(stages, start=1):
-        sql += f", _s{i} AS (SELECT *, {expr} AS {name} FROM {prev})"
-        prev = f"_s{i}"
-    sql += (
-        f" SELECT {key}, round({x} + _offx, {round_dp}) AS mx,"
-        f" round({y} + _offy, {round_dp}) AS my FROM {prev}"
-    )
-    return sql
 
 
 def swap_pick_parts(pkey: str, akey: str) -> tuple[str, str]:

@@ -103,15 +103,7 @@ def _t_expr(key: str, c: int, draw: str | None = None, fast: bool = False) -> st
     return _and_m(body) if fast else f"({body} % {M})"
 
 
-def _mix_sql(t: str, fast: bool = False) -> str:
-    if fast:
-        h1 = _and_m(
-            f"{_and_m(f'({t}) * ({t})')} + {_and_m(f'({t}) * {B1}')} + {C1}"
-        )
-        h2 = _and_m(
-            f"{_and_m(f'({h1}) * ({h1})')} + {_and_m(f'({h1}) * {B2}')} + {C2}"
-        )
-        return f"(({h2}) / {flit(M)})"
+def _mix_sql(t: str) -> str:
     h1 = f"(({t}) * ({t}) % {M} + ({t}) * {B1} % {M} + {C1}) % {M}"
     h2 = f"(({h1}) * ({h1}) % {M} + ({h1}) * {B2} % {M} + {C2}) % {M}"
     return f"(({h2}) / {flit(M)})"
@@ -121,8 +113,8 @@ def u_sql(key: str, tag: int, seed: int, draw: int | str = 0) -> str:
     """Render u(key) as a single SQL scalar expression (valid in Spark SQL
     and DuckDB; ``key`` must be a non-negative BIGINT expression). The
     quadratic rounds inline the stage-1 expression multiple times; engines
-    CSE it. Prefer CTE-style queries (compute ``t`` once as a column, then
-    ``u_from_t_sql``) when hand-writing SQL.
+    CSE it. Prefer the column stages of :func:`staged` (t, then g, then u,
+    each computed once) when hand-writing SQL or on a hot Spark path.
 
     ``draw`` may be a SQL expression (str) — e.g. an attempt-counter column
     for the containment retry loop — entering the same affine stage as the
@@ -133,28 +125,46 @@ def u_sql(key: str, tag: int, seed: int, draw: int | str = 0) -> str:
     return _mix_sql(_t_expr(key, _const(tag, seed, draw)))
 
 
-def u_sql_fast(key: str, tag: int, seed: int, draw: int | str = 0) -> str:
-    """Spark-side fast dialect of :func:`u_sql`: identical integer sequence
-    with the mod-2^31 stages rendered as bitwise ANDs (see ``_and_m``).
-    NEVER use in oracle SQL — the portable renderer is the frozen one."""
-    if isinstance(draw, str):
-        return _mix_sql(_t_expr(key, _const(tag, seed, 0), draw, fast=True), fast=True)
-    return _mix_sql(_t_expr(key, _const(tag, seed, draw), fast=True), fast=True)
-
-
 def t_sql(key: str, tag: int, seed: int, draw: int | str = 0, fast: bool = False) -> str:
-    """Stage-1 (affine) value as a SQL expression — compute it once as a
-    CTE column named e.g. ``t1``, then apply ``u_from_t_sql('t1')``.
-    ``draw`` may be a SQL expression, as in ``u_sql``. ``fast=True`` is the
-    Spark-side AND dialect (oracle SQL must keep the default)."""
+    """Stage-1 (affine) value as a SQL expression — the first of the
+    :func:`staged` columns. ``draw`` may be a SQL expression, as in
+    ``u_sql``. ``fast=True`` is the Spark-side AND dialect (oracle SQL must
+    keep the default)."""
     if isinstance(draw, str):
         return _t_expr(key, _const(tag, seed, 0), draw, fast=fast)
     return _t_expr(key, _const(tag, seed, draw), fast=fast)
 
 
-def u_from_t_sql(t: str) -> str:
-    """Stage-2 mixing + divide, given a column/expression holding t."""
-    return _mix_sql(f"({t})")
+def staged(
+    name: str,
+    key: str,
+    tag: int,
+    seed: int,
+    draw: int | str = 0,
+    fast: bool = False,
+    unit: bool = True,
+) -> list[tuple[str, str]]:
+    """The hash as ordered (column_name, sql_expr) stages ``_t<name>`` ->
+    ``_g<name>`` -> ``name``, where ``name`` is the uniform u in [0, 1) or,
+    with ``unit=False``, the integer h2 in [0, 2^31) that u divides (pick
+    keys). Apply with sequential ``withColumn`` (Spark) or nested CTEs
+    (oracle SQL). One inlined expression per draw blows whole-stage
+    codegen's 64 KB method limit (interpreted fallback, ~4x slower); the
+    stages keep each expression tiny and run the same integer sequence as
+    :func:`u_sql`. ``fast=True`` renders each mod-2^31 as a bitwise AND
+    (``_and_m``): Spark-side only, since oracle SQL text is hash-frozen."""
+    t, g = f"_t{name}", f"_g{name}"
+    if fast:
+        g_expr = _and_m(f"{_and_m(f'{t} * {t}')} + {_and_m(f'{t} * {B1}')} + {C1}")
+        h2 = _and_m(f"{_and_m(f'{g} * {g}')} + {_and_m(f'{g} * {B2}')} + {C2}")
+    else:
+        g_expr = f"({t} * {t} % {M} + {t} * {B1} % {M} + {C1}) % {M}"
+        h2 = f"(({g} * {g} % {M} + {g} * {B2} % {M} + {C2}) % {M})"
+    return [
+        (t, t_sql(key, tag, seed, draw, fast=fast)),
+        (g, g_expr),
+        (name, f"{h2} / {flit(M)}" if unit else h2),
+    ]
 
 
 def h2_sql(key: str, tag: int, seed: int, draw: int = 0) -> str:

@@ -16,8 +16,9 @@ inverted-index :func:`_jaccard` or the per-doc-set :func:`_set_jaccard`),
 :func:`_bands` +
 :func:`_band_pairs` (banded pigeonhole self-join), :func:`_vectors` +
 :func:`_dot` / :func:`_cos` (vector arithmetic; ``_dot`` is the one place
-to swap the kernel) and :func:`_pack_desc` + :func:`_nearest` (packed
-BIGINT argmax)."""
+to swap the kernel) and :func:`_nearest` (the per-vector argmax, run on
+the engine's one packed-BIGINT pick, ``knn.packed_pick``, over the
+descending score ``scale - round(cos * scale)``)."""
 
 from __future__ import annotations
 
@@ -30,6 +31,7 @@ from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..functions.rng import u_sql
+from .knn import PACK, packed_pick
 
 TOKENIZE = r"\s+"
 STOPWORDS = ("the", "a", "an", "and", "of", "to", "in", "is", "on", "for")
@@ -1049,9 +1051,6 @@ def embed_quantize(
     )
 
 
-_PACK = 1 << 32  # id slot of the packed argmax: ids must lie in [0, 2^32)
-
-
 def _vectors(emb: DataFrame, key: str, vec: str) -> DataFrame:
     """(_id, _v): the embedding column cast element-wise to DOUBLE."""
     return emb.select(
@@ -1074,14 +1073,11 @@ def _cos(a: str, b: str) -> str:
     return f"({_dot(a, b)}) / (sqrt({_dot(a, a)}) * sqrt({_dot(b, b)}))"
 
 
-def _pack_desc(score: str, scale: int, id_col: str) -> Column:
-    """(``score`` desc, ``id_col`` asc) as one BIGINT whose MIN is the
-    argmax: (scale - round(score * scale)) * 2^32 + id, < 2^63 for scores
-    in [-1, 1] and scale <= 1e9. A min over it hash-aggregates with
-    map-side partials instead of planning a SortAggregate over a struct."""
-    return (
-        F.lit(scale) - F.round(F.col(score) * scale, 0).cast("bigint")
-    ) * F.lit(_PACK) + F.col(id_col)
+def _desc(score: str, scale: int) -> Column:
+    """``score`` in [-1, 1] as the BIGINT ``scale - round(score * scale)``
+    in [0, 2 * scale]: ascending in it is descending in ``score``, so the
+    packed pick's min is the argmax (scale <= 1e9 keeps it below 2^31)."""
+    return F.lit(scale) - F.round(F.col(score) * scale, 0).cast("bigint")
 
 
 def _nearest(pairs: DataFrame, e: DataFrame, key: str, score: str) -> DataFrame:
@@ -1092,17 +1088,16 @@ def _nearest(pairs: DataFrame, e: DataFrame, key: str, score: str) -> DataFrame:
     cand = pairs.where(F.col("id_a") != F.col("id_b")).select("id_a", "id_b").distinct()
     va = e.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"))
     vb = e.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"))
-    packed = (
+    scored = (
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .withColumn("cos", F.round(F.expr(score), 6))
-        .select("id_a", _pack_desc("cos", 1_000_000, "id_b").alias("_pk"))
     )
-    best = packed.groupBy("id_a").agg(F.min("_pk").alias("_pk"))
+    best = packed_pick(scored, "id_a", _desc("cos", 1_000_000), "id_b")
     return best.select(
         F.col("id_a").alias(key),
-        (F.col("_pk") % _PACK).alias("nn_id"),
-        ((F.lit(1_000_000) - F.expr(f"_pk DIV {_PACK}")) / 1_000_000.0).alias("cos"),
+        F.col("id_b").alias("nn_id"),
+        ((F.lit(1_000_000) - F.expr(f"_pk DIV {PACK}")) / 1_000_000.0).alias("cos"),
     )
 
 
@@ -1185,14 +1180,16 @@ def ivf_cosine_nn(
 
     def assign(cent_df, rank=1):
         """(_id, _cid) of each vector's `rank` nearest centroids."""
-        packed = (
-            e.crossJoin(F.broadcast(cent_df))
-            .withColumn("_dot", F.expr(_dot("_v", "_c")))
-            .select("_id", "_cid", _pack_desc("_dot", 1_000_000_000, "_cid").alias("_pk"))
+        scored = e.crossJoin(F.broadcast(cent_df)).withColumn(
+            "_dot", F.expr(_dot("_v", "_c"))
         )
+        desc = _desc("_dot", 1_000_000_000)
         if rank == 1:
-            best = packed.groupBy("_id").agg(F.min("_pk").alias("_pk"))
-            return best.select("_id", (F.col("_pk") % _PACK).alias("_cid"))
+            return packed_pick(scored, "_id", desc, "_cid").select("_id", "_cid")
+        # top-`rank` by the same (score desc, id asc) order as packed_pick
+        packed = scored.select(
+            "_id", "_cid", (desc * F.lit(PACK) + F.col("_cid")).alias("_pk")
+        )
         w = Window.partitionBy("_id").orderBy("_pk")
         return (
             packed.withColumn("_rn", F.row_number().over(w))

@@ -263,45 +263,43 @@ def distance_join(
     rx: str = "ax",
     ry: str = "ay",
     cs: float | None = None,
-    dist_col: str = "dist",
     broadcast_right: bool = False,
     salt: int = 0,
     extra_on: list[tuple[str, str]] | None = None,
-    explode_side: str = "right",
     left_radius_col: str | None = None,
     right_cell_col: str | None = None,
     how: str = "inner",
     annulus_low: float | None = None,
 ) -> DataFrame:
-    """Inner join of all (left, right) pairs with distance <= radius.
+    """All (left, right) pairs with distance <= radius.
 
     Column names must be disjoint between the two sides (the engine's
-    internal callers guarantee this). Adds ``dist_col``. ``extra_on`` adds
+    internal callers guarantee this). Adds ``dist``. ``extra_on`` adds
     (left_col, right_col) equality keys to the shuffle key — e.g. a
     simulation id, so co-grouped joins stay partition-pruned.
 
-    ``explode_side`` picks which side carries the neighbor-ring expansion
-    (the ring guarantee holds on either side). Explode the SMALLER side:
-    ring² copies of the dimension table shuffle far cheaper than of the
-    fact table. Default 'right' — engine callers pass the big point table
-    on the left and the dimension (addresses/nodes) on the right.
+    The LEFT (probe) side carries the neighbor-ring expansion and the right
+    side stays ONE row per cell: a dimension (addresses, nodes) then builds
+    the minimal hash relation, and a stored/bucketed one scans
+    exchange-free while only the exploded probe side moves (the shape
+    measured fastest and most stable at 32 cores: BENCH/NOTES.md,
+    "Bucketed-dimension experiment"). A self-join (Ripley's K) is
+    symmetric, so the side makes no difference there.
 
     ``left_radius_col`` switches to the PER-ROW-radius variant (the
     k-verification shape): the join predicate becomes ``dist <=
-    left[left_radius_col]`` and the LEFT side explodes an ADAPTIVE ring
-    sized to each row's own radius — a small-radius point probes 1 cell, a
-    max-radius point (2*ceil(r/cs)+1)². At the default ``cs = radius / 2``
-    this tracks each point's true disk instead of the global max, cutting
-    candidate volume ~1.4x on uniform-radius workloads (measured at sf0.1)
-    and more when radii are skewed small; the right side stays one row per
-    cell. ``radius`` only sizes the default cs (pass the TYPICAL max); rows
-    whose radius exceeds it are still found exactly — the ring is per-row.
-    ``annulus_low`` (fixed-radius path) additionally drops pairs with
-    ``dist <= annulus_low`` — evaluated, like the radius bound, entirely in
-    SQUARED space via :func:`sq_threshold_le` (pair set bit-identical to
-    the sqrt formulation, but no sqrt per candidate pair; ``dist_col`` is
-    still emitted and prunes away when unused). ``how='left'`` (per-row
-    path, or the fixed-radius compact-dimension path explode_side='left')
+    left[left_radius_col]`` and the ring is ADAPTIVE, sized to each row's
+    own radius — a small-radius point probes 1 cell, a max-radius point
+    (2*ceil(r/cs)+1)². At the default ``cs = radius / 2`` this tracks each
+    point's true disk instead of the global max, cutting candidate volume
+    ~1.4x on uniform-radius workloads (measured at sf0.1) and more when
+    radii are skewed small. ``radius`` only sizes the default cs (pass the
+    TYPICAL max); rows whose radius exceeds it are still found exactly —
+    the ring is per-row. ``annulus_low`` (fixed-radius path) additionally
+    drops pairs with ``dist <= annulus_low`` — evaluated, like the radius
+    bound, entirely in SQUARED space via :func:`sq_threshold_le` (pair set
+    bit-identical to the sqrt formulation, but no sqrt per candidate pair;
+    ``dist`` is still emitted and prunes away when unused). ``how='left'``
     moves the radius/annulus predicate INTO the join condition so every
     probe row survives (right side null when no partner) — the one plan
     shape of locationswap, analysis.k_anonymity_address and
@@ -318,18 +316,6 @@ def distance_join(
     per_row = left_radius_col is not None
     if annulus_low is not None and per_row:
         raise ValueError("annulus_low applies to the fixed-radius path only.")
-    explode_left = per_row or explode_side == "left"
-    if right_cell_col and not explode_left:
-        raise ValueError(
-            "right_cell_col requires the compact-dimension shape "
-            "(explode_side='left' or left_radius_col=): a stored single "
-            "cell id cannot seed the exploding side's neighbor ring."
-        )
-    if how == "left" and not per_row and (not explode_left or extra_on):
-        raise ValueError(
-            "how='left' requires the compact-dimension fixed-radius "
-            "shape (explode_side='left', no extra_on)."
-        )
     cs = float(cs or (radius / 2.0 if per_row else radius))
     ring = cells.ring_for_radius(radius, cs)
     sq = sq_dist_sql(lx, ly, rx, ry)
@@ -362,13 +348,8 @@ def distance_join(
         pred = f"({sq}) <= {flit(sq_threshold_le(float(radius)))}"
         if annulus_low is not None:
             pred = f"({pred} AND ({sq}) > {flit(sq_threshold_le(float(annulus_low)))})"
-        if explode_left:
-            lt = explode_pruned_ring(left, lx, ly, cs, ring, flit(radius))
-        else:
-            lt = left.withColumn("_cell", F.expr(cells.cell_sql(lx, ly, cs)))
-    if not explode_left:
-        rt = explode_pruned_ring(right, rx, ry, cs, ring, flit(radius))
-    elif right_cell_col:
+        lt = explode_pruned_ring(left, lx, ly, cs, ring, flit(radius))
+    if right_cell_col:
         rt = right.withColumnRenamed(right_cell_col, "_cell")
     else:
         rt = right.withColumn("_cell", F.expr(cells.cell_sql(rx, ry, cs)))
@@ -377,6 +358,6 @@ def distance_join(
             lt, rt, lx, ly, salt=salt, pin="right" if broadcast_right else None,
             on=extra_on or (), how=how, cond=F.expr(pred),
         )
-        .withColumn(dist_col, F.expr(dist_sql(lx, ly, rx, ry)))
+        .withColumn("dist", F.expr(dist_sql(lx, ly, rx, ry)))
         .drop("_rlo", "_rhi")
     )

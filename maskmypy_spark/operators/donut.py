@@ -36,7 +36,7 @@ def _offsets(df, key, low, high, seed, distribution, attempt, x, y) -> DataFrame
     stages = masksql.donut_stages(key, low, high, seed, distribution, attempt, fast=True)
     out = _apply_stages(df, stages)
     out = out.withColumn(x, F.expr(f"{x} + _offx")).withColumn(y, F.expr(f"{y} + _offy"))
-    return out.drop(*masksql.donut_temp_cols(stages))
+    return out.drop(*(n for n, _ in stages))
 
 
 def donut(
@@ -126,7 +126,7 @@ def donut(
             _apply_stages(att, stages)
             .withColumn("_mx", F.expr(f"{x} + _offx"))
             .withColumn("_my", F.expr(f"{y} + _offy"))
-            .drop(*masksql.donut_temp_cols(stages))
+            .drop(*(n for n, _ in stages))
             .withColumn("_ck", F.col(key) * (max_attempts + 1) + F.col("_att"))
         )
         landed = pip_join(
@@ -157,6 +157,6 @@ def donut(
         _apply_stages(out, rstages)
         .withColumn(x, F.expr(f"{x} + _offx"))
         .withColumn(y, F.expr(f"{y} + _offy"))
-        .drop(*masksql.donut_temp_cols(rstages), "_batt", "_home")
+        .drop(*(n for n, _ in rstages), "_batt", "_home")
     )
     return _post(out)

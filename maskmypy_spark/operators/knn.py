@@ -33,7 +33,7 @@ MAX_ROUNDS = 12
 # of re-shuffling + re-sorting per round (at 100 TB that re-shuffle is a
 # full pass over the fact table per round).
 RESIDUE_BROADCAST_ROWS = 2_000_000
-_PACK = 1 << 32
+PACK = 1 << 32  # id slot of packed_pick's BIGINT: ids must lie in [0, 2^32)
 
 
 def _cell_candidates(remaining, others, x, y, ox, oy, cs, salt, pin, on=(),
@@ -53,61 +53,66 @@ def _cell_candidates(remaining, others, x, y, ox, oy, cs, salt, pin, on=(),
     return cell_join(lt, rt, x, y, salt=salt, pin=pin, on=on, how=how, cond=cond)
 
 
+def packed_pick(cand: DataFrame, key: str, score, oid: str, carry=(), take=()) -> DataFrame:
+    """Per-``key`` argmin of (``score``, ``oid``) over the candidate pairs
+    ``cand``, as ONE HashAggregate: the engine's single pick aggregate
+    (kNN rounds, locationswap, the cosine ANN paths).
+
+    ``min(struct(score, oid, ...))`` would plan a SortAggregate over the
+    ENTIRE candidate stream (struct buffers are not hash-aggregable).
+    Instead ``_pk = score * 2^32 + oid`` packs the pair into one BIGINT, so
+    ``min(_pk)`` hash-aggregates with map-side partials and breaks score
+    ties by the smaller ``oid``. Each ``take`` column comes out as
+    ``min_by(c, _pk)``: the winning candidate's own value, deterministic
+    because ``_pk`` embeds ``oid`` and is unique per candidate pair. Each
+    ``carry`` column (constant per key) comes out as ``min(c)``, a plain
+    aggregate buffer rather than a grouping key: a double grouping key
+    would pay a normalize-NaN/zero wrapper per candidate row and widen the
+    hash key. Null-extended rows of a LEFT OUTER candidate join carry a
+    null ``_pk``, which min/min_by ignore: an all-null group yields null
+    ``take`` columns and a null ``oid``.
+
+    Output: ``key``, the ``carry`` columns, ``_pk`` (read the score back
+    as ``_pk DIV PACK``), the ``take`` columns, then the winner's ``oid``
+    unpacked as ``_pk % PACK``.
+
+    Preconditions, not checked here (tests/test_plans.py gates the plans):
+     - ``key`` is unique per probe row: rows sharing a key merge into one
+       hybrid row, each carry column's min taken over both;
+     - every ``carry`` column is primitive: a string, binary or struct
+       carry makes min() a SortAggregate over the whole candidate stream
+       (strip payload first, as distance_join._core_then_payload does);
+     - ``score`` is a BIGINT in [0, 2^31) and 0 <= ``oid`` < 2^32, so
+       ``_pk`` stays below 2^63 ((2^31-1)*2^32 + (2^32-1) == 2^63-1)."""
+    return (
+        cand.withColumn("_pk", score * F.lit(PACK) + F.col(oid))
+        .groupBy(key)
+        .agg(
+            *[F.min(c).alias(c) for c in carry],
+            F.min("_pk").alias("_pk"),
+            *[F.expr(f"min_by({c}, _pk)").alias(c) for c in take],
+        )
+        .withColumn(oid, F.col("_pk") % F.lit(PACK))
+    )
+
+
 def _argmin_pick_rows(
     cand: DataFrame, d, key: str, cols, okey: str, ox: str, oy: str, max_d: float
 ) -> DataFrame:
-    """Per-key argmin over candidate pairs as ONE HashAggregate: one output
-    row per ``key`` holding ``cols..., ox, oy, okey`` of the nearest
-    candidate.
-
-    ``min(struct(_d, okey, ...))`` forces a SortAggregate over the ENTIRE
-    exploded candidate set (struct buffers are not hash-aggregable).
-    Instead pack ``floor(_d * S) * 2^32 + okey`` into one BIGINT ``_pk``
-    with ``S = (2^31 - 1) / max_d``, where ``max_d`` bounds every candidate
-    distance (3*cs covers the 3x3 cell neighborhood: the farthest
-    corner-to-corner pair is 2*sqrt(2)*cs). ``min(_pk)`` hash-aggregates
-    with map-side partials; ties in the quantized distance break by min
-    okey. Distance granularity is max_d / 2^31 (~1.4e-9 relative —
-    sub-micrometer at any geographic cell size), below which two DISTINCT
-    candidate distances tie; exact double ties quantize equal on both
-    engines, so the (d, okey) oracle order is reproduced for any physically
-    distinguishable data. ``min_by(ox, _pk)`` / ``min_by(oy, _pk)`` ride
-    the same key, so the winner's coordinates come out of the aggregate
-    with no join back to the neighbor table; ``_pk`` embeds okey, so it is
-    unique per candidate pair and min_by is deterministic. ``nn_dist`` is
-    recomputed exactly from them by the caller — never quantized.
-
-    The grouping key is ``key`` alone, and the other ``cols`` ride as
-    ``min()`` aggregates, so the aggregate output IS the marked probe table
-    (no per-round fact join-back) and double columns pay no per-row
-    normalize-NaN/zero wrapper as grouping keys would. Null-extended rows
-    of a LEFT OUTER cell join carry null ``_pk``/``ox``/``oy``, which
-    min/min_by ignore: an all-null group yields a null winner (-> null
-    nn_dist -> the point escalates). Pass ``cols=[key]`` for a bare pick.
-
-    Preconditions, not checked here:
-     - ``key`` is unique per probe row (in group mode, across groups too):
-       rows sharing a key would merge into one hybrid row, each column's
-       min taken over both;
-     - every carried column (``cols`` minus ``key``) is primitive: a
-       string, binary or struct carry makes min() a SortAggregate over the
-       whole candidate stream (nearest_neighbor strips payload columns
-       before the escalation for this reason);
-     - 0 <= okey < 2^32 (re-key wider ids before calling)."""
-    s = float((_PACK // 2 - 1) / max_d)
-    pk = F.floor(d * F.lit(s)).cast("long") * F.lit(_PACK) + F.col(okey)
-    return (
-        cand.withColumn("_pk", pk)
-        .groupBy(key)
-        .agg(
-            *[F.min(c).alias(c) for c in cols if c != key],
-            F.min("_pk").alias("_pk"),
-            F.expr(f"min_by({ox}, _pk)").alias(ox),
-            F.expr(f"min_by({oy}, _pk)").alias(oy),
-        )
-        .withColumn(okey, F.col("_pk") % F.lit(_PACK))
-        .select(*cols, ox, oy, okey)
-    )
+    """Nearest candidate per ``key``: one row of ``cols..., ox, oy, okey``.
+    The distance ``d`` enters :func:`packed_pick` quantised as
+    ``floor(d * S)`` with ``S = (2^31 - 1) / max_d``, where ``max_d``
+    bounds every candidate distance (3*cs covers the 3x3 cell
+    neighborhood). Granularity is max_d / 2^31 (~1.4e-9 relative), below
+    which two DISTINCT distances tie and break by okey; exact double ties
+    quantize equal on both engines, so the (d, okey) oracle order holds
+    for any physically distinguishable data. ``nn_dist`` is recomputed
+    exactly by the caller, never quantised. Pass ``cols=[key]`` for a bare
+    pick; the other ``cols`` ride as carries."""
+    s = float((PACK // 2 - 1) / max_d)
+    score = F.floor(d * F.lit(s)).cast("long")
+    carry = [c for c in cols if c != key]
+    return packed_pick(cand, key, score, okey, carry, (ox, oy)).select(*cols, ox, oy, okey)
 
 
 def _sizes(cs: float) -> list[float]:

@@ -14,15 +14,12 @@ hash uniform (functions/masksql.py:swap_u) — equivalent in distribution to
 the reference's rng.choice, but order- and partitioning-independent, and
 expressible as an exact SQL oracle.
 
-Scale note: the pick is ``min`` over ONE packed BIGINT ``h2 * 2^32 + aid``
-(h2 < 2^31 is the integer hash the uniform divides from; u = h2 / 2^31 is
-monotone in h2, so (h2, aid) lexicographic == the oracle's ORDER BY u, aid).
-``min_by(ax, pk)`` / ``min_by(ay, pk)`` ride the same packed BIGINT in the
-same HashAggregate with map-side partials (the earlier ``min(struct(...))``
-formulation forced a SortAggregate that sorted the entire exploded
-candidate set by pid, ~50x slower at bench scale; the earlier min+join-back
-re-joined the address dimension per query). Precondition: 0 <= aid < 2^32
-(packed key must stay < 2^63; (2^31-1)*2^32 + (2^32-1) == 2^63-1 exactly).
+Scale note: the pick is :func:`knn.packed_pick` with the integer hash h2
+as the score (h2 < 2^31 is the integer the uniform divides from; u =
+h2 / 2^31 is monotone in h2, so (h2, aid) lexicographic == the oracle's
+ORDER BY u, aid): one HashAggregate with map-side partials whose
+``min_by`` takes return the winner's coordinates with no join back to the
+address dimension. Precondition: 0 <= aid < 2^32.
 """
 
 from __future__ import annotations
@@ -31,6 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import rng
 from .distance_join import _core_then_payload, distance_join
+from .knn import packed_pick
 
 
 def locationswap(
@@ -60,19 +58,11 @@ def locationswap(
     meta.validate_point_layer(address, akey, ax, ay)
     meta.validate_crs((df, x), (address, ax))     # reference tools.py:172-180
 
-    # Probe-side explode (explode_side="left"): the address dimension stays
-    # ONE row per cell, so a planner/explicit broadcast builds the minimal
-    # hash relation and — at scale — a stored/bucketed address table scans
-    # exchange-free while only the exploded probe side moves (the shape
-    # measured fastest and most stable at 32 cores: BENCH/NOTES.md,
-    # "Bucketed-dimension experiment").
-    # Exploding the dimension instead multiplies the build side ring² times.
     # cs = high/2 roughly halves candidate pairs vs the 1-ring cs=high
     # default (pi*(r + 0.6cs)² candidate area shrinks toward the disk), at
     # the cost of a (2*ceil(r/cs)+1)²-cell probe explode — measured optimum
     # at bench scale (OPTIMIZATION_r06.md, q_locationswap: the 1-JVM cs
     # sweep 500/250/167).
-    from ..functions import rng as _rng
     from ..functions.masksql import swap_pick_parts
 
     # Pre-staged pick-key halves: each side's two-prime fold is a projection
@@ -81,14 +71,12 @@ def locationswap(
     # mod-mul folds to one BIGINT add (exact and order-independent in
     # int64 — bit-identical to the inline swap_pick_key the oracle keeps).
     pp, ap = swap_pick_parts(key, akey)
-    PACK = 1 << 32
-    _A = _rng._and_m
 
     def swap(pts: DataFrame) -> DataFrame:
         # ONE shape: a LEFT OUTER candidate join (annulus predicate inside
         # the join condition, so zero-candidate points survive
-        # null-extended) + ONE aggregate keyed by ``key``, run on the bare
-        # (key, x, y) frame; payload columns join back once afterwards
+        # null-extended) + ONE pick aggregate keyed by ``key``, run on the
+        # bare (key, x, y) frame; payload columns join back once afterwards
         # (distance_join._core_then_payload). The annulus runs in SQUARED
         # space (distance_join(annulus_low=), sq_threshold_le):
         # bit-identical pair set, no sqrt per candidate pair — the old
@@ -100,56 +88,25 @@ def locationswap(
             address.select(akey, ax, ay).withColumn("_swa", F.expr(ap)),
             radius=high,
             lx=x, ly=y, rx=ax, ry=ay, salt=salt, cs=float(high) / 2.0,
-            explode_side="left",
             annulus_low=float(low),
             how="left",
         )
-        # Micro-staged hash (same trick as the donut stages): the inlined
-        # one-expression rendering blows whole-stage codegen's method limit
-        # on the joined row (interpreted fallback is ~30x slower on the hot
-        # join); three tiny columns execute the identical arithmetic, in the
-        # Spark-side AND dialect (rng._and_m — bit-equal, cheaper codegen).
-        cand = (
-            cand.withColumn(
-                "_t", F.expr(_rng.t_sql("_swp + _swa", _rng.TAG_SWAP, seed, fast=True))
-            )
-            .withColumn(
-                "_g",
-                F.expr(_A(f"{_A('_t * _t')} + {_A(f'_t * {_rng.B1}')} + {_rng.C1}")),
-            )
-            .withColumn(
-                "_h2",
-                F.expr(_A(f"{_A('_g * _g')} + {_A(f'_g * {_rng.B2}')} + {_rng.C2}")),
-            )
-        )
-        # min_by rides the SAME packed-BIGINT ordering key in the SAME
-        # HashAggregate (partial_min_by map-side combines like partial_min),
-        # so the winner's coordinates come out of the pick aggregate itself
-        # — no equi-join back to the address dimension (one broadcast build
-        # + probe per query; a full dimension join at 100 TB). The packed
-        # key is unique per (point, address) candidate (it embeds akey), so
-        # min_by is deterministic; the coordinates are the candidate row's
-        # own ax/ay. (x, y) are constant per key (unique row keys), so they
-        # come out as min() AGGREGATES over equal values (bit-identical)
-        # rather than grouping keys — double grouping keys pay a
-        # normalize-NaN/zero wrapper PER PAIR ROW on the ~250M-row candidate
-        # stream and triple the hash-table key width; as plain buffers they
-        # cost one compare per row and the grouping key stays one BIGINT.
-        # Null-extended probe rows carry a null _pk, which min_by ignores
-        # (all-null group => null swap => UNMASKED=1).
+        # Micro-staged hash (rng.staged, as the donut stages), in the
+        # Spark-side AND dialect: the inlined one-expression rendering blows
+        # whole-stage codegen's method limit on the joined row.
+        for name, expr in rng.staged(
+            "_h2", "_swp + _swa", rng.TAG_SWAP, seed, fast=True, unit=False
+        ):
+            cand = cand.withColumn(name, F.expr(expr))
+        # (x, y) are constant per key (unique row keys): packed_pick carries
+        # them. A null-extended probe row has null (ax, ay), so a point with
+        # no candidate keeps its location and gets UNMASKED=1.
         return (
-            cand.withColumn("_pk", F.col("_h2") * F.lit(PACK) + F.col(akey))
-            .groupBy(key)
-            .agg(
-                F.min(x).alias(x),
-                F.min(y).alias(y),
-                F.expr(f"min_by({ax}, _pk)").alias("_swap_x"),
-                F.expr(f"min_by({ay}, _pk)").alias("_swap_y"),
-            )
-            .withColumn("UNMASKED", F.when(F.col("_swap_x").isNull(), 1).otherwise(0))
-            .withColumn(x, F.coalesce("_swap_x", x))
-            .withColumn(y, F.coalesce("_swap_y", y))
-            .drop("_swap_x", "_swap_y")
+            packed_pick(cand, key, F.col("_h2"), akey, carry=(x, y), take=(ax, ay))
+            .withColumn("UNMASKED", F.when(F.col(ax).isNull(), 1).otherwise(0))
+            .withColumn(x, F.coalesce(ax, x))
+            .withColumn(y, F.coalesce(ay, y))
+            .select(key, x, y, "UNMASKED")
         )
 
     out = _core_then_payload(df, [key, x, y], key, swap)

@@ -9,10 +9,12 @@ A mask run =
 Resume: ``run_mask`` is idempotent — if the manifest says complete and the
 recorded output checksum re-verifies, the write is skipped entirely; a torn
 run (no manifest, stale _STARTED marker) is overwritten atomically
-(parquet overwrite). The iterative drivers (street_k; donut containment
-rounds) additionally log per-iteration metrics so re-entry with the same
-master seed replays the identical trajectory from the last completed step
-(reference's replay contract, atlas.py:229-233, extended to disk).
+(parquet overwrite). A rerun with the same master seed reproduces the
+identical output (reference's replay contract, atlas.py:229-233), but it
+reruns in full: nothing replays from a logged step. Of the
+iterative drivers only street_k reports per-iteration metrics (its
+``on_iteration`` callback, which :class:`IterationLog` can persist as
+JSON); donut's containment rounds log nothing.
 """
 
 from __future__ import annotations

@@ -14,9 +14,8 @@ the donut mask below needs no join at all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from ..functions import rng
 from ..operators.donut import donut
 
 
@@ -157,15 +156,3 @@ def dedup_stream(
         .dropDuplicatesWithinWatermark(["_digest"])
     )
 
-
-def demo_stream(spark: SparkSession, low: float = 100.0, high: float = 500.0, seed: int = 42):
-    """Rate-source demo: synthesize geotagged rows, mask them, return the
-    streaming DataFrame (caller picks the sink)."""
-    src = spark.readStream.format("rate").option("rowsPerSecond", 1000).load()
-    pts = src.select(
-        F.col("value").alias("pid"),
-        F.expr(f"({rng.u_sql('value', 101, 1234)}) * 2.0e4").alias("x"),
-        F.expr(f"({rng.u_sql('value', 102, 1234)}) * 1.0e4").alias("y"),
-        "timestamp",
-    )
-    return mask_stream(pts, low, high, seed)

@@ -345,3 +345,9 @@ def test_svg_renderers(spark, tmp_path):
     root2 = ET.fromstring(svg2)
     tags = {e.tag.split("}")[-1] for e in root2}
     assert "polyline" in tags and "polygon" in tags  # curve + envelope
+
+    # A20 analogue of the reference's Atlas.scatter: one dot per point
+    svg3 = viz.render_scatter_svg(m, path=str(tmp_path / "scatter.svg"))
+    root3 = ET.fromstring(svg3)
+    assert sum(1 for e in root3 if e.tag.endswith("circle")) == 120
+    assert open(tmp_path / "scatter.svg").read() == svg3

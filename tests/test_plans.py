@@ -245,6 +245,51 @@ def test_nearest_neighbor_argmin_hash_aggregates(spark, monkeypatch):
     assert "HashAggregate" in plan
 
 
+def test_packed_pick_carries_hash_aggregate(spark, monkeypatch):
+    """knn.packed_pick's preconditions, gated: a non-key DOUBLE carry rides
+    the pick as a hash-aggregable min() buffer and comes out unchanged, the
+    winner is the (score, id) argmin, and a string payload on
+    nearest_neighbor stays out of the candidate stream (a string min()
+    carry would plan a SortAggregate)."""
+    import numpy as np
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from maskmypy_spark.operators import knn
+    from maskmypy_spark.operators.distance_join import dist_sql
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", lambda self, *a, **kw: self)
+    pdf = fixtures.sensitive_points_pdf(150, seed=42)
+    pts = spark.createDataFrame(pdf).withColumn("w", F.col("x") / 7.0)
+    others = pts.selectExpr("pid AS nn_id", "x AS nn_x", "y AS nn_y")
+    cand = pts.crossJoin(others).where("pid != nn_id")
+    score = F.floor(F.expr(dist_sql("x", "y", "nn_x", "nn_y"))).cast("long")
+    picked = knn.packed_pick(cand, "pid", score, "nn_id", carry=("w",), take=("nn_x",))
+    plan = _plan(picked)
+    assert "SortAggregate" not in plan
+    assert "HashAggregate" in plan
+    got = {r["pid"]: (r["w"], r["nn_id"], r["nn_x"]) for r in picked.collect()}
+    x, y = pdf["x"].to_numpy(), pdf["y"].to_numpy()
+    for i in range(len(pdf)):
+        d = np.floor(np.sqrt((x - x[i]) * (x - x[i]) + (y - y[i]) * (y - y[i])))
+        d[i] = np.inf
+        j = int(np.lexsort((np.arange(len(pdf)), d))[0])
+        assert got[i] == (x[i] / 7.0, j, x[j])
+
+    withp = pts.drop("w").withColumn(
+        "caption", F.concat(F.lit("pt "), F.col("pid").cast("string"))
+    )
+    nn = knn.nearest_neighbor(withp, others, cs=300.0, exclude_self=True)
+    plan = _plan(nn)
+    assert "SortAggregate" not in plan
+    assert "HashAggregate" in plan
+    rows = nn.collect()
+    assert {r["pid"]: r["caption"] for r in rows} == {i: f"pt {i}" for i in range(150)}
+    bare = knn.nearest_neighbor(pts.drop("w"), others, cs=300.0, exclude_self=True)
+    assert {r["pid"]: r["nn_id"] for r in rows} == {
+        r["pid"]: r["nn_id"] for r in bare.collect()
+    }
+
+
 def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypatch):
     """r4 q_voronoi_nn regression gate: Catalyst's size estimate ignores the
     9x cell explode, so under the session's 64 MB auto-broadcast threshold a

@@ -16,7 +16,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from .functions import geometry
 from .operators.distance_join import _core_then_payload, dist_sql, distance_join
-from .operators.knn import nearest_neighbor
+from .operators.escalate import materialize
+from .operators.knn import _extent, nearest_neighbor
 from .operators.pip import _bbox_cols, _bbox_join
 
 SENS_PREFIX = "_s_"
@@ -464,15 +465,13 @@ def ripleys_k(
     from .functions.rng import TAG_KSAMPLE, TAG_SIM, TAG_SIM_Y, u_sql
 
     spark = df.sparkSession
-    b = df.agg(
-        F.min(x).alias("x0"), F.max(x).alias("x1"),
-        F.min(y).alias("y0"), F.max(y).alias("y1"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    n = b.n
-    area = (b.x1 - b.x0) * (b.y1 - b.y0)
+    x0, x1, y0, y1, n0 = _extent(df, x, y)
+    if n0 < 2:
+        raise ValueError(f"ripleys_k: K needs >= 2 points, got {n0}")
+    n = n0
+    area = (x1 - x0) * (y1 - y0)
     if not max_dist:
-        max_dist = min(b.x1 - b.x0, b.y1 - b.y0) / 4.0
+        max_dist = min(x1 - x0, y1 - y0) / 4.0
     if not min_dist:
         min_dist = max_dist / steps
     import numpy as np
@@ -483,19 +482,19 @@ def ripleys_k(
 
         m_target = max(2, int(math.sqrt(max_pairs / frac)))
         p = m_target / n
-        df = df.where(
-            F.expr(u_sql(key, TAG_KSAMPLE, seed)) < F.lit(float(p))
-        ).localCheckpoint(eager=False)
-        n = df.count()
+        df, n = materialize(
+            df.where(F.expr(u_sql(key, TAG_KSAMPLE, seed)) < F.lit(float(p))),
+            n=F.count(F.lit(1)),
+        )
         if n < 2:
             raise ValueError(
                 f"ripleys_k: seeded thinning left {n} point(s) (target m≈"
-                f"{m_target} of {b.n}); K needs >= 2 — raise max_pairs or "
+                f"{m_target} of {n0}); K needs >= 2 — raise max_pairs or "
                 "pass max_pairs=None to skip thinning on this input"
             )
         warnings.warn(
             f"ripleys_k: candidate volume at max_dist={max_dist:.6g} would be "
-            f"~{frac:.3g} * n^2 pairs; thinned {b.n} -> {n} points "
+            f"~{frac:.3g} * n^2 pairs; thinned {n0} -> {n} points "
             f"(seeded hash sample, unbiased under independent thinning). "
             "Pass max_pairs=None for the exact reference behavior or a "
             "smaller explicit max_dist.",
@@ -532,8 +531,8 @@ def ripleys_k(
     sim_pts = pts.select(
         "_sim",
         F.expr(kexpr).alias(key),
-        (F.lit(float(b.x0)) + F.expr(u_sql(kexpr, TAG_SIM, seed)) * (b.x1 - b.x0)).alias(x),
-        (F.lit(float(b.y0)) + F.expr(u_sql(kexpr, TAG_SIM_Y, seed)) * (b.y1 - b.y0)).alias(y),
+        (F.lit(float(x0)) + F.expr(u_sql(kexpr, TAG_SIM, seed)) * (x1 - x0)).alias(x),
+        (F.lit(float(y0)) + F.expr(u_sql(kexpr, TAG_SIM_Y, seed)) * (y1 - y0)).alias(y),
     )
     spairs = distance_join(
         sim_pts,
@@ -697,10 +696,10 @@ def evaluate(
     # averages because the key join is 1:1-complete — the reference's own
     # index-alignment contract, analysis.py:82-105).
     sx, sy = SENS_PREFIX + x, SENS_PREFIX + y
-    disp = displacement_from_payload(
+    disp = materialize(displacement_from_payload(
         _with_sensitive(sensitive, candidate, key, x, y), x, y, sx, sy,
         drop_original=False,
-    ).localCheckpoint(eager=True)
+    ))
     if assert_complete:
         # count AND distinct-count in one aggregate: equal row counts alone
         # would let a drop+duplicate pair cancel out undetected

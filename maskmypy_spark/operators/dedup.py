@@ -26,11 +26,12 @@ import warnings
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..functions.rng import u_sql
+from .escalate import materialize
 from .knn import PACK, packed_pick
 
 TOKENIZE = r"\s+"
@@ -109,13 +110,11 @@ def _dup_ngram_col(tcol: str, n: int):
     """Gopher dup-n-gram fraction (0.0 under ``n`` tokens) over a
     PRE-PROJECTED token-array column ``tcol``, projected in the caller's
     OWN select so the tokenization runs once per row (CollapseProject
-    keeps non-cheap multi-referenced aliases staged)."""
+    keeps non-cheap multi-referenced aliases staged). The empty gram
+    array's 0/0 is NULL under ``try_divide`` and reads as 0.0."""
     grams = F.expr(_grams_sql(tcol, n))
-    cnt = F.size(F.col(tcol)) - F.lit(n - 1)
-    return F.when(
-        cnt >= 1,
-        F.round(F.lit(1.0) - F.size(F.array_distinct(grams)) / F.size(grams), 6),
-    ).otherwise(F.lit(0.0))
+    ratio = F.try_divide(F.size(F.array_distinct(grams)), F.size(grams))
+    return F.coalesce(F.round(F.lit(1.0) - ratio, 6), F.lit(0.0))
 
 
 def doc_repetition(
@@ -519,11 +518,10 @@ def ngram_jaccard_pairs(
     denominator |A|+|B|-|A∩B| still counts dropped shingles, so a capped
     run only UNDER-estimates jaccard (no false positives).
 
-    The shingle index materializes once, through an EAGER
-    ``localCheckpoint``: its job runs when this function is CALLED, no cache
-    entry outlives the call, and an executor lost afterwards makes a later
-    action over the result fail instead of recomputing."""
-    sh = shingles(df, key, text, n).localCheckpoint(eager=True)
+    The shingle index materializes once, through
+    :func:`escalate.materialize` (eager: its job runs when this function
+    is CALLED)."""
+    sh = materialize(shingles(df, key, text, n))
     kept = sh
     if max_shingle_df == "auto":
         max_shingle_df = max(4096, int(df.count() * 0.01))
@@ -680,7 +678,7 @@ def _lsh_band_candidates(
     # longs per doc, no text — the standard LSH index a production system
     # persists anyway — so checkpointing it is a narrow per-doc index, not
     # a corpus-payload materialization.
-    bv = bv.localCheckpoint(eager=True)
+    bv = materialize(bv)
     return _band_pairs(bv, key).select("d1", "d2").distinct()
 
 
@@ -714,15 +712,10 @@ def minhash_lsh_pairs(
     NOT push the semi-join beneath) is never re-evaluated, saving a full
     corpus pass of gate metrics per query. Defaults to ``df``.
 
-    Three stages materialize through ``localCheckpoint(eager=True)``: the
+    Three stages materialize through :func:`escalate.materialize`: the
     band index, the candidate pairs and the candidate docs' shingle sets.
-    Each runs its job when this function is CALLED, before the caller's
-    own action, and keeps its blocks only in executor storage with the
-    lineage cut, so an executor lost afterwards makes a later action over
-    the result fail instead of recomputing."""
-    cand = _lsh_band_candidates(
-        df, num_hashes, bands, key, text, n, hasher
-    ).localCheckpoint(eager=True)
+    Each runs its job when this function is CALLED."""
+    cand = materialize(_lsh_band_candidates(df, num_hashes, bands, key, text, n, hasher))
     return _set_jaccard(
         cand, shingle_source if shingle_source is not None else df,
         key, text, n, threshold,
@@ -737,8 +730,8 @@ def _set_jaccard(
     (guide §3 "pre-filter the big side when selective"): ``src``
     semi-join-reduces to the candidate ids BEFORE tokenization, so the set
     table is bounded by the candidates, never the corpus. Each doc's set
-    (array_distinct of its n-grams) and its size are built once behind an
-    eager ``localCheckpoint``, and each pair scores |A ∩ B| as
+    (array_distinct of its n-grams) and its size are built once behind
+    :func:`escalate.materialize`, and each pair scores |A ∩ B| as
     size(array_intersect) — no shingle strings shuffle, and no per-pair
     count aggregate or size join runs. Pairs sharing no shingle are
     dropped (_c > 0), as :func:`_jaccard`'s shingle join emits no row for
@@ -748,12 +741,11 @@ def _set_jaccard(
         .unionByName(cand.select(F.col("d2").alias(key)))
         .distinct()
     )
-    sets = (
+    sets = materialize(
         src.join(cd, key, "leftsemi")
         .select(key, tokens_col(text).alias("_t"))
         .select(key, F.expr(f"array_distinct({_grams_sql('_t', n)})").alias("_s"))
         .select(key, "_s", F.size("_s").alias("_n"))
-        .localCheckpoint(eager=True)
     )
     a, b = (
         sets.select(
@@ -901,38 +893,25 @@ def dedup_clusters(
                 pa.table({"doc_id": doc, "cluster_id": cid}),
                 StructType([StructField("doc_id", kt), StructField("cluster_id", kt)]),
             )
-    edges = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct().localCheckpoint(eager=True)
-    labels = (
-        edges.select("a")
-        .distinct()
-        .withColumn("label", F.col("a"))
-        .localCheckpoint(eager=True)
+    edges = materialize(
+        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     )
+    labels = materialize(edges.select("a").distinct().withColumn("label", F.col("a")))
     for _ in range(max_iter):
         nbr = edges.join(
             labels.select(F.col("a").alias("b"), F.col("label").alias("_nl")), "b"
         ).groupBy("a").agg(F.min("_nl").alias("_best"))
-        # the changed-count rides the round's own materialization job as an
-        # Observation metric (VERDICT r04 next #8) — no per-round probe job
-        obs = Observation()
-        labels = (
-            labels.join(nbr, "a", "left")
-            .select(
+        # the changed-count is a metric of the round's own checkpoint job —
+        # no per-round probe job (a NULL _best changes nothing)
+        labels, n_chg = materialize(
+            labels.join(nbr, "a", "left").select(
                 "a",
-                F.least(F.col("label"), F.coalesce("_best", F.col("label"))).alias(
-                    "label"
-                ),
-                (F.col("label") != F.least(
-                    F.col("label"), F.coalesce("_best", F.col("label"))
-                )).alias("_chg"),
-            )
-            .observe(obs, F.sum(F.col("_chg").cast("long")).alias("_n_chg"))
-            .select("a", "label")
-            .localCheckpoint(eager=True)
+                F.least(F.col("label"), F.coalesce("_best", F.col("label"))).alias("label"),
+                (F.col("_best") < F.col("label")).alias("_chg"),
+            ),
+            n_chg=F.sum(F.col("_chg").cast("long")),
         )
-        if (obs.get["_n_chg"] or 0) == 0:
+        if n_chg == 0:
             break
     else:
         raise RuntimeError(f"dedup_clusters did not converge in {max_iter} rounds")
@@ -1147,18 +1126,15 @@ def ivf_cosine_nn(
     # L2-normalize once (cosine == dot product afterwards); the divisor is
     # floored at 1e-12 so a zero-norm embedding maps to the zero vector
     # (cos 0 against everything) instead of NULL elements that silently
-    # vanish from results. localCheckpoint (not cache) materializes the
-    # normalized frame once for its ~4 downstream consumers and leaves no
-    # persistent cache entry behind when the operator's result is dropped.
-    e = (
-        _vectors(emb, key, vec)
-        .select(
+    # vanish from results. The normalized frame materializes once for its
+    # ~4 downstream consumers (escalate.materialize, not cache).
+    e = materialize(
+        _vectors(emb, key, vec).select(
             "_id",
             F.expr(
                 f"transform(_v, v -> v / greatest(sqrt({_dot('_v', '_v')}), 1.0e-12))"
             ).alias("_v"),
         )
-        .localCheckpoint(eager=True)
     )
 
     if centroids is not None:

@@ -20,8 +20,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions import masksql, rng
-from .escalate import escalate
+from .escalate import escalate, materialize
 from .pip import pip_join
+from .snap import _snap_post
 
 
 def _apply_stages(df: DataFrame, stages: list[tuple[str, str]]) -> DataFrame:
@@ -66,23 +67,15 @@ def donut(
         # reference masks/donut.py:91-92
         raise ValueError("Minimum displacement distance is greater than or equal to maximum.")
     seed = rng.gen_seed() if not seed else seed  # falsy-seed quirk preserved (donut.py:74)
-    if snap_to_streets and street_nodes is None:
-        raise ValueError("snap_to_streets=True requires street_nodes (node_id, nx, ny).")
+    post = _snap_post(snap_to_streets, street_nodes, key, x, y)
     from ..functions import meta
 
     meta.validate_point_layer(df, key, x, y)  # reference tools.py:165-169
     if street_nodes is not None:  # reference tools.py:172-180
         meta.validate_crs((df, x), (street_nodes, "nx"))
 
-    def _post(out: DataFrame) -> DataFrame:
-        if not snap_to_streets:
-            return out
-        from .snap import snap_to_nodes
-
-        return snap_to_nodes(out, street_nodes, key=key, x=x, y=y)
-
     if container is None:
-        return _post(_offsets(df, key, low, high, seed, distribution, 0, x, y))
+        return post(_offsets(df, key, low, high, seed, distribution, 0, x, y))
 
     # --- containment variant (reference donut.py:152-168) ---
     # container_cell_size switches the PIP joins to the cell-indexed shuffle
@@ -90,15 +83,18 @@ def donut(
     home = pip_join(
         df, container, key=key, x=x, y=y, cell_size=container_cell_size
     ).select(key, F.col("poly_id").alias("_home"))
-    # ONE PIP execution: checkpoint the joined fact table, then run the
-    # duplicate/orphan validations against the materialized result (the
-    # earlier form recomputed the PIP join three times).
-    pts = df.join(home, key, "left").localCheckpoint(eager=True)
+    # ONE PIP execution: materialize the joined fact table, counting the
+    # orphans on that job; the duplicate check is a job of its own over the
+    # checkpoint (DISTINCT is not allowed in an observed metric) and raises
+    # first.
+    pts, orphans = materialize(
+        df.join(home, key, "left"), orphans=F.count_if(F.col("_home").isNull())
+    )
     if not pts.groupBy(key).count().where("count > 1").isEmpty():
         raise ValueError(
             "Points intersect multiple container polygons. Container polygons must not overlap."
         )
-    if not pts.where(F.col("_home").isNull()).isEmpty():
+    if orphans:
         # The reference crashes on container-less points (donut.py:157-158);
         # we raise an explicit error with the same de-facto contract.
         raise ValueError("Every point must intersect exactly one container polygon.")
@@ -159,4 +155,4 @@ def donut(
         .withColumn(y, F.expr(f"{y} + _offy"))
         .drop(*(n for n, _ in rstages), "_batt", "_home")
     )
-    return _post(out)
+    return post(out)

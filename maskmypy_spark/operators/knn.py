@@ -132,6 +132,18 @@ def _pin(broadcast_others: bool, n: int | None) -> str:
     return "right" if broadcast_others else "left" if _bcast(n) else "merge"
 
 
+def _extent(df: DataFrame, x: str, y: str) -> tuple:
+    """``(x0, x1, y0, y1, n)``: the bounding box and row count of ``df``'s
+    points, in one aggregate job. An empty frame (or one with no non-null
+    coordinate) reads as the zero box with n = 0, never as NULL bounds."""
+    x0, x1, y0, y1, n = df.agg(
+        F.min(x), F.max(x), F.min(y), F.max(y), F.count(F.lit(1))
+    ).collect()[0]
+    if None in (x0, x1, y0, y1):
+        return 0.0, 0.0, 0.0, 0.0, 0
+    return x0, x1, y0, y1, n
+
+
 def estimate_cell_size(df: DataFrame, x: str = "x", y: str = "y") -> float:
     """~3x the expected NN spacing from GLOBAL density. Under the old
     SortAggregate argmin, tight 1x cells won (smaller sort inputs); with
@@ -140,13 +152,9 @@ def estimate_cell_size(df: DataFrame, x: str = "x", y: str = "y") -> float:
     resolve most points in round one and ran ~1.4x faster at bench scale
     (exactness is guaranteed by the escalation loop at ANY cs; results are
     cs-independent, gated by the plan tests)."""
-    r = df.agg(
-        F.min(x).alias("x0"), F.max(x).alias("x1"),
-        F.min(y).alias("y0"), F.max(y).alias("y1"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    area = max((r.x1 - r.x0) * (r.y1 - r.y0), 1e-9)
-    return 3.0 * math.sqrt(area / max(r.n, 1))
+    x0, x1, y0, y1, n = _extent(df, x, y)
+    area = max((x1 - x0) * (y1 - y0), 1e-9)
+    return 3.0 * math.sqrt(area / max(n, 1))
 
 
 def knn_join(
@@ -294,13 +302,10 @@ def nearest_neighbor(
         # Brute-force the (tiny) residue; the pack scale must bound ALL pair
         # distances, so take the union-bbox diagonal (two scalar aggregates
         # over the residue + the dimension).
-        rb = remaining.agg(F.min(x), F.max(x), F.min(y), F.max(y)).first()
-        ob = others.agg(F.min(ox), F.max(ox), F.min(oy), F.max(oy)).first()
-        if None in (*rb, *ob):
-            # Degenerate input: one side is empty (its bbox aggregates are
-            # NULL) — there are no candidate neighbors, so return nothing
-            # for the residue (possibly an empty result, matching the
-            # struct-argmin path).
+        rb, ob = _extent(remaining, x, y), _extent(others, ox, oy)
+        if not (rb[4] and ob[4]):
+            # Degenerate input: one side is empty — there are no candidate
+            # neighbors, so return nothing for the residue.
             return None
         diag = math.hypot(
             max(rb[1], ob[1]) - min(rb[0], ob[0]),

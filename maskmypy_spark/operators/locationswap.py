@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions import rng
 from .distance_join import _core_then_payload, distance_join
 from .knn import packed_pick
+from .snap import _snap_post
 
 
 def locationswap(
@@ -50,8 +51,7 @@ def locationswap(
     if low >= high:
         raise ValueError("Minimum displacement distance is larger than or equal to maximum.")
     seed = rng.gen_seed() if not seed else seed
-    if snap_to_streets and street_nodes is None:
-        raise ValueError("snap_to_streets=True requires street_nodes (node_id, nx, ny).")
+    post = _snap_post(snap_to_streets, street_nodes, key, x, y)
     from ..functions import meta
 
     meta.validate_point_layer(df, key, x, y)      # reference tools.py:165-169
@@ -109,9 +109,5 @@ def locationswap(
             .select(key, x, y, "UNMASKED")
         )
 
-    out = _core_then_payload(df, [key, x, y], key, swap)
-    if snap_to_streets:  # reference masks/locationswap.py:73-74
-        from .snap import snap_to_nodes
-
-        out = snap_to_nodes(out, street_nodes, key=key, x=x, y=y)
-    return out
+    # snap: reference masks/locationswap.py:73-74
+    return post(_core_then_payload(df, [key, x, y], key, swap))

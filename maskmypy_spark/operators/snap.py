@@ -8,6 +8,8 @@ voronoi (``snap_to_streets=True``, e.g. masks/donut.py:82-83).
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, functions as F
 
 from .knn import nearest_neighbor
@@ -38,3 +40,17 @@ def snap_to_nodes(
         .withColumn(y, F.col(ny))
         .drop(node_key, nx, ny, "nn_dist")
     )
+
+
+def _snap_post(
+    snap_to_streets: bool, street_nodes: DataFrame | None, key: str, x: str, y: str
+) -> Callable[[DataFrame], DataFrame]:
+    """The ``snap_to_streets`` post-step of donut, locationswap and voronoi:
+    raises up front when snapping lacks ``street_nodes`` (node_id, nx,
+    ny), and returns the step to apply to the masked frame (identity when
+    not snapping)."""
+    if not snap_to_streets:
+        return lambda out: out
+    if street_nodes is None:
+        raise ValueError("snap_to_streets=True requires street_nodes (node_id, nx, ny).")
+    return lambda out: snap_to_nodes(out, street_nodes, key=key, x=x, y=y)

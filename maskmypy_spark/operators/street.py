@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import rng
+from .escalate import materialize
 from .knn import nearest_neighbor
 
 
@@ -386,10 +387,10 @@ def street_k(
 
     ``region_size`` routes every iteration through :func:`street_by_region`
     instead of the driver-bounded :func:`street` — the continent-scale loop
-    (no ``max_graph_nodes`` wall). Each iteration's mask is checkpointed
-    once (certificate aggregate + k-join read the same materialization, so
-    the cogrouped Dijkstra never re-runs), the per-row ``region_exact``
-    certificate is aggregated into the iteration metrics as
+    (no ``max_graph_nodes`` wall). Each iteration's mask materializes once
+    (:func:`escalate.materialize`; the k-join reads it, so the cogrouped
+    Dijkstra never re-runs), the mean of the per-row ``region_exact``
+    certificate rides that job into the iteration metrics as
     ``region_exact_frac``, and the column is dropped before k-verification
     so both paths feed identical schemas downstream. ``margin`` passes
     through (default 8 * max_length — see street_by_region's bound)."""
@@ -401,28 +402,21 @@ def street_k(
     while True:
         extra = {}
         if region_size is not None:
-            # one materialization per iteration: certificate aggregate (when
-            # requested) + k-join read the checkpoint, the cogrouped
-            # Dijkstra never re-runs; the previous iteration's checkpoint
-            # blocks free via the ContextCleaner once its reference drops
-            mr = street_by_region(
-                df, low, low + spread, nodes, edges, region_size,
-                margin=margin, max_length=max_length, seed=seed,
-                key=key, x=x, y=y,
-            ).localCheckpoint(eager=True)
-            if on_iteration is not None:
-                # the certificate aggregate is an extra job — only pay it
-                # when someone consumes the metrics
-                # avg over zero rows is NULL — coalesce so an empty masked
-                # frame reports 0.0 instead of float(None) raising TypeError
-                extra["region_exact_frac"] = float(
-                    mr.agg(
-                        F.coalesce(
-                            F.avg(F.col("region_exact").cast("double")),
-                            F.lit(0.0),
-                        )
-                    ).collect()[0][0]
-                )
+            # one materialization per iteration: the k-join reads the
+            # checkpoint, so the cogrouped Dijkstra never re-runs, and the
+            # certificate fraction is a metric of the same job (an empty
+            # frame's NULL average reads as 0); the previous iteration's
+            # checkpoint blocks free via the ContextCleaner once its
+            # reference drops
+            mr, frac = materialize(
+                street_by_region(
+                    df, low, low + spread, nodes, edges, region_size,
+                    margin=margin, max_length=max_length, seed=seed,
+                    key=key, x=x, y=y,
+                ),
+                frac=F.avg(F.col("region_exact").cast("double")),
+            )
+            extra["region_exact_frac"] = float(frac)
             masked = mr.drop("region_exact")
         else:
             masked = street(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .knn import nearest_neighbor
+from .snap import _snap_post
 
 
 def voronoi(
@@ -29,8 +30,7 @@ def voronoi(
     snap_to_streets: bool = False,
     street_nodes: DataFrame | None = None,
 ) -> DataFrame:
-    if snap_to_streets and street_nodes is None:
-        raise ValueError("snap_to_streets=True requires street_nodes (node_id, nx, ny).")
+    post = _snap_post(snap_to_streets, street_nodes, key, x, y)
     others = df.select(
         F.col(key).alias("_vkey"), F.col(x).alias("_vx"), F.col(y).alias("_vy")
     )
@@ -38,13 +38,8 @@ def voronoi(
         df, others, key=key, x=x, y=y, okey="_vkey", ox="_vx", oy="_vy",
         cs=cs, exclude_self=True,
     )
-    out = (
+    return post(  # snap: reference masks/voronoi.py:21-24, 49-50
         nn.withColumn(x, F.expr(f"({x} + _vx) / 2.0"))
         .withColumn(y, F.expr(f"({y} + _vy) / 2.0"))
         .drop("_vkey", "_vx", "_vy", "nn_dist")
     )
-    if snap_to_streets:  # reference masks/voronoi.py:21-24, 49-50
-        from .snap import snap_to_nodes
-
-        out = snap_to_nodes(out, street_nodes, key=key, x=x, y=y)
-    return out

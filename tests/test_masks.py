@@ -452,3 +452,58 @@ def test_adaptive_radius_join_salted_and_plain_equal(points, addresses):
         for i in np.where(d <= r["_radius"])[0]:
             want.add((r["pid"], int(aid[i])))
     assert a == want
+
+
+@pytest.mark.parametrize(
+    "op", ["voronoi", "nnd", "nnd_delta", "ripleys_k", "ripleys_k_one_point"]
+)
+def test_empty_input_gives_empty_output(spark, op):
+    """No point in, no point out: the masks return 0 rows and the NND
+    stats are NULL, where the extent aggregate's NULL bounds used to raise
+    TypeError. Ripley's K needs two points and says so."""
+    schema = "pid long, x double, y double"
+    empty = spark.createDataFrame([], schema)
+    if op.startswith("ripleys_k"):
+        pts = spark.createDataFrame([(1, 0.0, 0.0)], schema) if op.endswith("point") else empty
+        with pytest.raises(ValueError, match=">= 2 points"):
+            analysis.ripleys_k(pts)
+    elif op == "voronoi":
+        assert voronoi(empty).collect() == []
+    else:
+        out = analysis.nnd(empty) if op == "nnd" else analysis.nnd_delta(empty, empty)
+        rows = out.collect()
+        assert len(rows) == 1 and all(v is None for v in rows[0])
+
+
+def _grid_containers(spark, rect=2000.0):
+    rows = [
+        (ix * 10 + iy, [
+            {"x": ix * rect, "y": iy * rect}, {"x": (ix + 1) * rect, "y": iy * rect},
+            {"x": (ix + 1) * rect, "y": (iy + 1) * rect}, {"x": ix * rect, "y": (iy + 1) * rect},
+        ])
+        for ix in range(10)
+        for iy in range(5)
+    ]
+    return spark.createDataFrame(rows, "poly_id long, ring array<struct<x:double,y:double>>")
+
+
+def test_escalation_job_budget(spark, points):
+    """One collect of ``voronoi`` runs at most 12 Spark jobs and one of
+    ``donut(container=)`` at most 24: each escalation round's residue count
+    and donut's orphan count are metrics of a checkpoint job, so a count
+    job of their own fails the ceiling."""
+    sc = spark.sparkContext
+    points.count()  # the fixture's cache build is not the operators'
+    cont = _grid_containers(spark)
+    for name, run, budget in (
+        ("voronoi", lambda: voronoi(points), 12),
+        ("donut", lambda: donut(points, 50.0, 800.0, seed=31, container=cont), 24),
+    ):
+        group = f"escalation_job_budget_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = run().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(rows) == 400 and len(jobs) <= budget, (name, len(jobs))

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .functions import geometry
+from .functions.masksql import _project
 from .operators.distance_join import _core_then_payload, dist_sql, distance_join
 from .operators.escalate import materialize
 from .operators.knn import _extent, nearest_neighbor
@@ -63,7 +64,7 @@ def with_original(
     """Copy the coordinates into payload columns BEFORE masking, so the
     masked output still carries the originals (masks pass payload through
     untouched) and displacement needs no join."""
-    return df.withColumn(ox, F.col(x)).withColumn(oy, F.col(y))
+    return _project(df, sets={ox: x, oy: y})
 
 
 def displacement_from_payload(
@@ -74,8 +75,9 @@ def displacement_from_payload(
     """Join-free displacement: per-row distance masked vs the original
     coordinates carried as payload by :func:`with_original`. Identical
     values to :func:`displacement`, zero shuffle."""
-    out = masked.withColumn(col, F.expr(dist_sql(x, y, ox, oy)))
-    return out.drop(ox, oy) if drop_original else out
+    return _project(
+        masked, sets={col: dist_sql(x, y, ox, oy)}, drop=(ox, oy) if drop_original else ()
+    )
 
 
 # Metric column lists, shared by the one-metric public functions below and
@@ -166,11 +168,10 @@ def nnd_delta(
     the ungrouped okey bound). The bound is enforced at runtime: a key
     outside [0, 2^31) raises inside the projection (``assert_true`` folded
     into the uid expression — no extra job) instead of silently colliding
-    across sides."""
-    from .operators.knn import estimate_cell_size
-
-    if cs is None:
-        cs = estimate_cell_size(sensitive, x, y)
+    across sides. Without ``cs``, nearest_neighbor sizes the cells from its
+    one extent job over BOTH layers, at the density of one non-empty layer
+    (the union's count over its number of non-empty sides), so an empty
+    layer costs no rounds and two full layers keep one layer's spacing."""
     k = F.col(key)
     bound_ok = (k >= 0) & (k < F.lit(1 << 31))
     guard = F.coalesce(
@@ -465,7 +466,7 @@ def ripleys_k(
     from .functions.rng import TAG_KSAMPLE, TAG_SIM, TAG_SIM_Y, u_sql
 
     spark = df.sparkSession
-    x0, x1, y0, y1, n0 = _extent(df, x, y)
+    x0, x1, y0, y1, n0, _ = _extent(df, x, y)
     if n0 < 2:
         raise ValueError(f"ripleys_k: K needs >= 2 points, got {n0}")
     n = n0

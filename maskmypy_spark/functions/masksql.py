@@ -18,8 +18,47 @@ Donut semantics transcribed from /root/reference/maskmypy/masks/donut.py:
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING, Iterable
+
 from . import rng
 from .rng import flit
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
+
+
+def _project(
+    df: DataFrame,
+    stages: Iterable[tuple[str, str]] = (),
+    sets: dict[str, str] | None = None,
+    drop: Iterable[str] = (),
+) -> DataFrame:
+    """The one projection of an ordered ``(name, sql)`` stage list (such as
+    :func:`donut_stages` or ``rng.staged`` produce): ``df``
+    with each ``sets`` column (name -> sql) replaced in place or appended,
+    the ``drop`` columns left out and the stage columns gone, in ``df``'s
+    column order. It is ONE ``selectExpr``: each stage and set reads the
+    stages before it as lateral column aliases, so the whole list is one
+    plan analysis and one call into the JVM where a ``withColumn`` per
+    stage re-analyses a growing plan each time. Catalyst still splits the
+    list into one Project per dependency level, which keeps each hash stage
+    its own small codegen expression (rng.staged). A set reads the input
+    column it replaces, never another set's new value (an input column
+    shadows a lateral alias), so stage names must be new columns."""
+    stages, sets, drop = list(stages), sets or {}, set(drop)
+    clash = {n for n, _ in stages} & set(df.columns)
+    if clash:
+        raise ValueError(f"stage names shadow input columns: {sorted(clash)}")
+
+    def q(c: str) -> str:
+        return "`" + c.replace("`", "``") + "`"
+
+    out = df.selectExpr(
+        *[f"{e} AS {q(n)}" for n, e in stages],
+        *[f"{sets[c]} AS {q(c)}" if c in sets else q(c) for c in df.columns if c not in drop],
+        *[f"{e} AS {q(c)}" for c, e in sets.items() if c not in df.columns],
+    )
+    return out.drop(*(n for n, _ in stages)) if stages else out
 
 
 def donut_stages(
@@ -32,8 +71,9 @@ def donut_stages(
     fast: bool = False,
 ) -> list[tuple[str, str]]:
     """Ordered (column_name, sql_expr) stages computing offx/offy for the
-    donut mask. Each expr may reference previously defined names; apply with
-    sequential ``withColumn`` (Spark) or nested CTEs (oracle SQL).
+    donut mask. Each expr may reference previously defined names; apply as
+    one projection (Spark: :func:`_project`) or nested CTEs
+    (oracle SQL).
 
     ``fast=True`` renders the mod-2^31 stages as bitwise ANDs — the
     Spark-side dialect (rng._and_m): bit-identical integers, one AND instead

@@ -147,8 +147,8 @@ def staged(
     """The hash as ordered (column_name, sql_expr) stages ``_t<name>`` ->
     ``_g<name>`` -> ``name``, where ``name`` is the uniform u in [0, 1) or,
     with ``unit=False``, the integer h2 in [0, 2^31) that u divides (pick
-    keys). Apply with sequential ``withColumn`` (Spark) or nested CTEs
-    (oracle SQL). One inlined expression per draw blows whole-stage
+    keys). Apply as one projection (Spark: ``masksql._project``) or
+    nested CTEs (oracle SQL). One inlined expression per draw blows whole-stage
     codegen's 64 KB method limit (interpreted fallback, ~4x slower); the
     stages keep each expression tiny and run the same integer sequence as
     :func:`u_sql`. ``fast=True`` renders each mod-2^31 as a bitwise AND

@@ -394,23 +394,20 @@ def language_id(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataF
     'und' when nothing matches. Pure JVM column expressions (lower + split
     + filter + size) — one pass, no shuffle, no Python."""
     toks = F.split(F.trim(F.lower(F.col(text))), TOKENIZE)
-    out = df.select(key, toks.alias("_t"))
     langs = sorted(LANG_PROFILES)  # alphabetical => tie-break by rank below
-    for lang in langs:
-        words = LANG_PROFILES[lang]
-        out = out.withColumn(
-            f"_s_{lang}",
-            # NULL text => score 0 => 'und' (aligned with the DuckDB
-            # oracle's coalesce; the explicit isNotNull guard is immune to
-            # the legacy size(NULL) = -1 config, where -1/-1 would score 1)
-            F.when(
-                F.col("_t").isNotNull(),
-                F.round(
-                    F.size(F.filter(F.col("_t"), lambda t: t.isin(*words))) / F.size("_t"),
-                    6,
-                ),
-            ).otherwise(F.lit(0.0)),
-        )
+
+    def share(words):
+        # NULL text => score 0 => 'und' (aligned with the DuckDB oracle's
+        # coalesce; the explicit isNotNull guard is immune to the legacy
+        # size(NULL) = -1 config, where -1/-1 would score 1)
+        return F.when(
+            F.col("_t").isNotNull(),
+            F.round(F.size(F.filter(F.col("_t"), lambda t: t.isin(*words))) / F.size("_t"), 6),
+        ).otherwise(F.lit(0.0))
+
+    out = df.select(key, toks.alias("_t")).withColumns(
+        {f"_s_{lang}": share(LANG_PROFILES[lang]) for lang in langs}
+    )
     # max over (score, rank): rank descends alphabetically, so equal scores
     # resolve to the alphabetically-first language.
     choices = F.array(

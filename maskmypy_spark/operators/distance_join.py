@@ -35,6 +35,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import cells
+from ..functions.masksql import _project
 from ..functions.rng import flit
 
 
@@ -122,36 +123,40 @@ def explode_pruned_ring(
     max radius, so the guard never fires on contract inputs)."""
     w = 2 * max_n + 1
     c = flit(cs)
-    out = df.withColumn("_rgi", F.explode(F.array(*[F.lit(i) for i in range(w * w)])))
     dx = f"(_rgi DIV {w} - {max_n})"
     dy = f"(_rgi % {w} - {max_n})"
+    # Per point, before the explode: the in-cell offsets, the base cell,
+    # the slackened squared radius and (per-row rings) the guarded ring
+    # count, so each exploded row runs only the short filter below.
+    pre = {
+        "_fx": f"(({x}) - floor(({x}) / {c}) * {c})",
+        "_fy": f"(({y}) - floor(({y}) / {c}) * {c})",
+        "_cb": cells.cell_sql(x, y, cs),
+        "_rr": f"(({r_sql}) * ({r_sql}) * 1.000000001E0 + 1.0E-9)",
+    }
 
-    def gap(d: str, v: str) -> str:
-        f = f"(({v}) - floor(({v}) / {c}) * {c})"
+    def gap(d: str, f: str) -> str:
         return (
             f"CASE WHEN {d} > 0 THEN CAST({d} AS DOUBLE) * {c} - {f}"
             f" WHEN {d} < 0 THEN CAST(-{d} - 1 AS DOUBLE) * {c} + {f}"
             f" ELSE CAST(0.0 AS DOUBLE) END"
         )
 
-    mx, my = gap(dx, x), gap(dy, y)
-    rr = f"(({r_sql}) * ({r_sql}) * 1.000000001E0 + 1.0E-9)"
-    keep = f"({mx}) * ({mx}) + ({my}) * ({my}) <= {rr}"
+    mx, my = gap(dx, "_fx"), gap(dy, "_fy")
+    keep = f"({mx}) * ({mx}) + ({my}) * ({my}) <= _rr"
     if n_sql is not None:
-        guard = (
-            f"coalesce(CAST(assert_true(({n_sql}) <= {max_n}, "
+        pre["_rn"] = (
+            f"({n_sql}) + coalesce(CAST(assert_true(({n_sql}) <= {max_n}, "
             f"'distance_join: per-row ring exceeds the declared max radius "
             f"(raise radius= to the true per-row maximum)') AS INT), 0)"
         )
-        keep = (
-            f"abs({dx}) <= ({n_sql}) + {guard} AND abs({dy}) <= ({n_sql}) "
-            f"AND {keep}"
-        )
-    base = cells.cell_sql(x, y, cs)
-    return (
-        out.where(F.expr(keep))
-        .withColumn("_cell", F.expr(f"({base}) + {dx} * {cells.CELL_K} + {dy}"))
-        .drop("_rgi")
+        keep = f"abs({dx}) <= _rn AND abs({dy}) <= _rn AND {keep}"
+    idx = ", ".join(map(str, range(w * w)))
+    out = _project(df, sets=pre).withColumn("_rgi", F.expr(f"explode(array({idx}))"))
+    return _project(
+        out.where(keep),
+        sets={"_cell": f"_cb + {dx} * {cells.CELL_K} + {dy}"},
+        drop=("_rgi", *pre),
     )
 
 
@@ -182,7 +187,9 @@ def cell_join(
     those rows too); for inner joins it is the same plan as a filter.
 
     ``pin`` picks the physical join. 'right' broadcasts a dimension build
-    side. 'left' broadcasts a probe side the caller has COUNTED small (a
+    side: one the caller declares small, or a kNN ``others`` layer that
+    the call's extent job COUNTED under knn.RESIDUE_BROADCAST_ROWS.
+    'left' broadcasts a probe side the caller has COUNTED small (a
     driver-side bound like street's max_graph_nodes, never a planner
     estimate), so the build side streams map-side instead of re-shuffling.
     'merge' pins the shuffled sort-merge join for fact x fact joins:
@@ -194,10 +201,17 @@ def cell_join(
 
     Output: the probe columns then the build columns, without ``_cell``,
     ``_sk`` and the build side's copy of any same-named key."""
-    keys = [("_cell", "_cell"), *on]
+    # The build side's copy of a same-named ``on`` key joins under a private
+    # name: when both sides derive from one frame (nnd_delta's group
+    # column) the copies share one attribute, and ``rt[col]`` could bind,
+    # or drop, the probe side's copy instead.
+    dup = {rc: "_r" + rc for lc, rc in on if lc == rc}
+    if dup:
+        rt = rt.withColumnsRenamed(dup)
+    keys = [("_cell", "_cell"), *[(lc, dup.get(rc, rc)) for lc, rc in on]]
     if salt > 1:
         lt = lt.withColumn("_sk", (F.xxhash64(x, y) % salt + salt) % salt)
-        rt = rt.withColumn("_sk", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
+        rt = rt.withColumn("_sk", F.expr(f"explode(array({', '.join(map(str, range(salt)))}))"))
         keys.insert(1, ("_sk", "_sk"))
     if pin == "right":
         rt = F.broadcast(rt)
@@ -207,10 +221,7 @@ def cell_join(
         lt = lt.hint("merge")
     jc = reduce(lambda p, q: p & q, [lt[lc] == rt[rc] for lc, rc in keys])
     j = lt.join(rt, jc if cond is None else jc & cond, how)
-    for lc, rc in keys:
-        if lc == rc:
-            j = j.drop(rt[rc])
-    return j.drop("_cell", "_sk")
+    return j.drop("_cell", "_sk", *dup.values())  # by name: both sides' copies
 
 
 def _explode_box(df: DataFrame, cs: float, pad: float = 0.0) -> DataFrame:
@@ -334,9 +345,10 @@ def distance_join(
         # every finite radius with r^2 finite — the operator's domain.
         # The band bounds are per-probe-row projections (2 multiplies)
         # computed once before the pair stream.
-        lt = lt.withColumn(
-            "_rlo", F.expr(f"({r}) * ({r}) * {flit(1.0 - 2.0 ** -48)}")
-        ).withColumn("_rhi", F.expr(f"({r}) * ({r}) * {flit(1.0 + 2.0 ** -48)}"))
+        lt = _project(lt, sets={
+            "_rlo": f"({r}) * ({r}) * {flit(1.0 - 2.0 ** -48)}",
+            "_rhi": f"({r}) * ({r}) * {flit(1.0 + 2.0 ** -48)}",
+        })
         pred = (
             f"(({sq}) <= _rlo OR (({sq}) <= _rhi AND "
             f"{dist_sql(lx, ly, rx, ry)} <= ({r})))"
@@ -353,11 +365,8 @@ def distance_join(
         rt = right.withColumnRenamed(right_cell_col, "_cell")
     else:
         rt = right.withColumn("_cell", F.expr(cells.cell_sql(rx, ry, cs)))
-    return (
-        cell_join(
-            lt, rt, lx, ly, salt=salt, pin="right" if broadcast_right else None,
-            on=extra_on or (), how=how, cond=F.expr(pred),
-        )
-        .withColumn("dist", F.expr(dist_sql(lx, ly, rx, ry)))
-        .drop("_rlo", "_rhi")
+    j = cell_join(
+        lt, rt, lx, ly, salt=salt, pin="right" if broadcast_right else None,
+        on=extra_on or (), how=how, cond=F.expr(pred),
     )
+    return _project(j, sets={"dist": dist_sql(lx, ly, rx, ry)}, drop=("_rlo", "_rhi"))

@@ -25,19 +25,11 @@ from .pip import pip_join
 from .snap import _snap_post
 
 
-def _apply_stages(df: DataFrame, stages: list[tuple[str, str]]) -> DataFrame:
-    for name, expr in stages:
-        df = df.withColumn(name, F.expr(expr))
-    return df
-
-
 def _offsets(df, key, low, high, seed, distribution, attempt, x, y) -> DataFrame:
     # fast=True: Spark-side AND dialect for the mod-2^31 stages (bit-equal
     # integers, cheaper codegen); the oracle CTEs keep the portable text.
     stages = masksql.donut_stages(key, low, high, seed, distribution, attempt, fast=True)
-    out = _apply_stages(df, stages)
-    out = out.withColumn(x, F.expr(f"{x} + _offx")).withColumn(y, F.expr(f"{y} + _offy"))
-    return out.drop(*(n for n, _ in stages))
+    return masksql._project(df, stages, {x: f"{x} + _offx", y: f"{y} + _offy"})
 
 
 def donut(
@@ -114,17 +106,13 @@ def donut(
         # collide across points and the semantics stay identical to the
         # oracle's range(0, max_attempts) unnest.
         a0 = rnd * BLOCK
-        att = remaining.withColumn("_att", F.explode(F.array(
-            *[F.lit(a) for a in range(a0, min(a0 + BLOCK, max_attempts))]
-        )))
+        atts = ", ".join(map(str, range(a0, min(a0 + BLOCK, max_attempts))))
+        att = remaining.withColumn("_att", F.expr(f"explode(array({atts}))"))
         stages = masksql.donut_stages(key, low, high, seed, distribution, attempt="_att", fast=True)
-        cand = (
-            _apply_stages(att, stages)
-            .withColumn("_mx", F.expr(f"{x} + _offx"))
-            .withColumn("_my", F.expr(f"{y} + _offy"))
-            .drop(*(n for n, _ in stages))
-            .withColumn("_ck", F.col(key) * (max_attempts + 1) + F.col("_att"))
-        )
+        cand = masksql._project(att, stages, {
+            "_mx": f"{x} + _offx", "_my": f"{y} + _offy",
+            "_ck": f"{key} * {max_attempts + 1} + _att",
+        })
         landed = pip_join(
             cand, container, key="_ck", x="_mx", y="_my",
             cell_size=container_cell_size,
@@ -149,10 +137,6 @@ def donut(
     # at the picked attempt — a pure codegen projection, bit-identical to
     # the candidate that won.
     rstages = masksql.donut_stages(key, low, high, seed, distribution, attempt="_batt", fast=True)
-    out = (
-        _apply_stages(out, rstages)
-        .withColumn(x, F.expr(f"{x} + _offx"))
-        .withColumn(y, F.expr(f"{y} + _offy"))
-        .drop(*(n for n, _ in rstages), "_batt", "_home")
-    )
-    return post(out)
+    return post(masksql._project(
+        out, rstages, {x: f"{x} + _offx", y: f"{y} + _offy"}, drop=("_batt", "_home")
+    ))

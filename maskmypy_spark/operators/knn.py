@@ -121,10 +121,15 @@ def _sizes(cs: float) -> list[float]:
     return list(accumulate(repeat(3.0, MAX_ROUNDS - 1), operator.mul, initial=cs))
 
 
-def _bcast(n: int | None) -> bool:
-    """Whether a residue COUNTED at ``n`` rows is broadcast: its 3x3 ring
-    explode stays within RESIDUE_BROADCAST_ROWS."""
-    return n is not None and 9 * n <= RESIDUE_BROADCAST_ROWS
+def _bcast(n: int | None, per: int = 9) -> bool:
+    """Whether a side COUNTED at ``n`` rows is broadcast: its build rows,
+    ``per`` to a counted row, stay within RESIDUE_BROADCAST_ROWS. A
+    residue is built as its 3x3 ring explode (9 per row, the case the
+    bound was sized on). A neighbor layer ``others`` is never exploded, so
+    it counts 1 row per row, or ``salt`` rows when a salted join copies it
+    to every salt value; that use of the bound is not separately measured:
+    the benchmark's one counted ``others`` (~23k rows) sits far below it."""
+    return n is not None and per * n <= RESIDUE_BROADCAST_ROWS
 
 
 def _pin(broadcast_others: bool, n: int | None) -> str:
@@ -132,29 +137,36 @@ def _pin(broadcast_others: bool, n: int | None) -> str:
     return "right" if broadcast_others else "left" if _bcast(n) else "merge"
 
 
-def _extent(df: DataFrame, x: str, y: str) -> tuple:
-    """``(x0, x1, y0, y1, n)``: the bounding box and row count of ``df``'s
-    points, in one aggregate job. An empty frame (or one with no non-null
-    coordinate) reads as the zero box with n = 0, never as NULL bounds."""
-    x0, x1, y0, y1, n = df.agg(
-        F.min(x), F.max(x), F.min(y), F.max(y), F.count(F.lit(1))
-    ).collect()[0]
-    if None in (x0, x1, y0, y1):
-        return 0.0, 0.0, 0.0, 0.0, 0
-    return x0, x1, y0, y1, n
+def _extent(df: DataFrame, x: str, y: str, group: str | None = None) -> tuple:
+    """``(x0, x1, y0, y1, n, g)``: the bounding box and row count of
+    ``df``'s points and the number ``g`` of non-empty ``group``s (1 without
+    ``group``), in one aggregate job. ``g`` is HyperLogLog's
+    approx_count_distinct: exact for a handful of groups, and it needs no
+    second exchange. An empty frame (or one with no non-null coordinate)
+    reads as the zero box with n = g = 0, never as NULL bounds."""
+    g = F.approx_count_distinct(group) if group else F.lit(1)
+    row = df.agg(F.min(x), F.max(x), F.min(y), F.max(y), F.count(F.lit(1)), g).collect()[0]
+    return (0.0, 0.0, 0.0, 0.0, 0, 0) if None in row[:4] else tuple(row)
 
 
-def estimate_cell_size(df: DataFrame, x: str = "x", y: str = "y") -> float:
-    """~3x the expected NN spacing from GLOBAL density. Under the old
-    SortAggregate argmin, tight 1x cells won (smaller sort inputs); with
-    the packed-BIGINT hash-aggregate the per-candidate cost is tiny and
-    the round-trip overhead of escalation rounds dominates — 3x cells
-    resolve most points in round one and ran ~1.4x faster at bench scale
-    (exactness is guaranteed by the escalation loop at ANY cs; results are
-    cs-independent, gated by the plan tests)."""
-    x0, x1, y0, y1, n = _extent(df, x, y)
+def _size_others(others, ox, oy, cs, broadcast_others, salt, group=None) -> tuple:
+    """``(cs, broadcast_others, extent)`` of a kNN call. A caller's ``cs``
+    keeps its plan: no job, no extent. Otherwise ONE :func:`_extent` job
+    over ``others`` gives cs as ~3x the expected NN spacing from the
+    density of one ``group`` (under the old SortAggregate argmin, tight 1x
+    cells won; with the packed-BIGINT hash-aggregate the per-candidate cost
+    is tiny and the round-trip overhead of escalation rounds dominates, so
+    3x cells resolve most points in round one and ran ~1.4x faster at
+    bench scale; exactness holds at ANY cs, gated by the plan tests), and
+    the row count: an ``others`` COUNTED small by :func:`_bcast` (salt
+    copies included) is broadcast to every round (never the exploded probe
+    side), and a counted-empty one settles the call with no round at all."""
+    if cs is not None:
+        return cs, broadcast_others, None
+    ext = x0, x1, y0, y1, n, g = _extent(others, ox, oy, group)
     area = max((x1 - x0) * (y1 - y0), 1e-9)
-    return 3.0 * math.sqrt(area / max(n, 1))
+    cs = 3.0 * math.sqrt(area / max(n / max(g, 1), 1))
+    return cs, broadcast_others or _bcast(n, max(salt, 1)), ext
 
 
 def knn_join(
@@ -184,8 +196,7 @@ def knn_join(
     cs-independence and salted-equivalence gates, the same guarantees
     ``nearest_neighbor`` carries). ``salt`` scatters hot cells across
     reducers (see ``distance_join.cell_join``)."""
-    if cs is None:
-        cs = estimate_cell_size(others, ox, oy)
+    cs, broadcast_others, ext = _size_others(others, ox, oy, cs, broadcast_others, salt)
     sizes = _sizes(cs)
     d = F.expr(dist_sql(x, y, ox, oy))
     xcond = (F.col(okey) != F.col(key)) if exclude_self else None
@@ -226,6 +237,8 @@ def knn_join(
             cand = cand.where(xcond)
         return topk(cand).select(*out)
 
+    if ext and not ext[4]:
+        return step(points.select(key, x, y), 0, None)[0].where(F.lit(False))
     return escalate(points.select(key, x, y), step, fallback, MAX_ROUNDS, key=key)
 
 
@@ -264,9 +277,13 @@ def nearest_neighbor(
     on the (key, x, y[, group]) projection and the payload joins back once
     at the end (distance_join._core_then_payload). Bare frames skip that
     join.
+
+    ``cs=None`` sizes the cells from one extent job over ``others`` (at
+    the density of one non-empty ``group``), whose
+    count also broadcasts a small ``others`` and ends the call on an empty
+    one (:func:`_size_others`); a caller's ``cs`` keeps the plan as asked.
     """
-    if cs is None:
-        cs = estimate_cell_size(others, ox, oy)
+    cs, broadcast_others, ext = _size_others(others, ox, oy, cs, broadcast_others, salt, group)
     sizes = _sizes(cs)
     on = [(group, group)] if group else []
     d = F.expr(dist_sql(x, y, ox, oy))
@@ -300,9 +317,10 @@ def nearest_neighbor(
 
     def fallback(remaining):
         # Brute-force the (tiny) residue; the pack scale must bound ALL pair
-        # distances, so take the union-bbox diagonal (two scalar aggregates
-        # over the residue + the dimension).
-        rb, ob = _extent(remaining, x, y), _extent(others, ox, oy)
+        # distances, so take the union-bbox diagonal (a scalar aggregate
+        # over the residue, and the dimension's round-0 extent when cs was
+        # estimated from it).
+        rb, ob = _extent(remaining, x, y), ext or _extent(others, ox, oy)
         if not (rb[4] and ob[4]):
             # Degenerate input: one side is empty — there are no candidate
             # neighbors, so return nothing for the residue.
@@ -320,7 +338,9 @@ def nearest_neighbor(
         picked = _argmin_pick_rows(cand, d, key, [key], okey, ox, oy, diag)
         return remaining.join(picked, key, "inner").withColumn("nn_dist", d)
 
-    core = [key, x, y] + ([group] if group else [])
-    return _core_then_payload(
-        points, core, key, lambda probe: escalate(probe, step, fallback, MAX_ROUNDS)
-    )
+    def run(probe: DataFrame) -> DataFrame:
+        if ext and not ext[4]:
+            return step(probe, 0, None)[0].where(F.lit(False))
+        return escalate(probe, step, fallback, MAX_ROUNDS)
+
+    return _core_then_payload(points, [key, x, y] + ([group] if group else []), key, run)

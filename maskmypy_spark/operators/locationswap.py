@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import rng
+from ..functions.masksql import _project
 from .distance_join import _core_then_payload, distance_join
 from .knn import packed_pick
 from .snap import _snap_post
@@ -84,8 +85,8 @@ def locationswap(
         # by Catalyst and evaluated the sqrt TWICE per candidate
         # (join-condition codegen has no common-subexpression elimination).
         cand = distance_join(
-            pts.withColumn("_swp", F.expr(pp)),
-            address.select(akey, ax, ay).withColumn("_swa", F.expr(ap)),
+            _project(pts, sets={"_swp": pp}),
+            address.selectExpr(akey, ax, ay, f"{ap} AS _swa"),
             radius=high,
             lx=x, ly=y, rx=ax, ry=ay, salt=salt, cs=float(high) / 2.0,
             annulus_low=float(low),
@@ -94,19 +95,18 @@ def locationswap(
         # Micro-staged hash (rng.staged, as the donut stages), in the
         # Spark-side AND dialect: the inlined one-expression rendering blows
         # whole-stage codegen's method limit on the joined row.
-        for name, expr in rng.staged(
-            "_h2", "_swp + _swa", rng.TAG_SWAP, seed, fast=True, unit=False
-        ):
-            cand = cand.withColumn(name, F.expr(expr))
+        *st, (h2, e) = rng.staged("_h2", "_swp + _swa", rng.TAG_SWAP, seed, fast=True, unit=False)
+        cand = _project(cand, st, {h2: e})
         # (x, y) are constant per key (unique row keys): packed_pick carries
         # them. A null-extended probe row has null (ax, ay), so a point with
         # no candidate keeps its location and gets UNMASKED=1.
-        return (
-            packed_pick(cand, key, F.col("_h2"), akey, carry=(x, y), take=(ax, ay))
-            .withColumn("UNMASKED", F.when(F.col(ax).isNull(), 1).otherwise(0))
-            .withColumn(x, F.coalesce(ax, x))
-            .withColumn(y, F.coalesce(ay, y))
-            .select(key, x, y, "UNMASKED")
+        return _project(
+            packed_pick(cand, key, F.col(h2), akey, carry=(x, y), take=(ax, ay)),
+            sets={
+                x: f"coalesce({ax}, {x})", y: f"coalesce({ay}, {y})",
+                "UNMASKED": f"CASE WHEN {ax} IS NULL THEN 1 ELSE 0 END",
+            },
+            drop=("_pk", ax, ay, akey),
         )
 
     # snap: reference masks/locationswap.py:73-74

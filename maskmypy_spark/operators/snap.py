@@ -10,8 +10,9 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
+from ..functions.masksql import _project
 from .knn import nearest_neighbor
 
 
@@ -35,11 +36,7 @@ def snap_to_nodes(
         df, nodes, key=key, x=x, y=y, okey=node_key, ox=nx, oy=ny,
         cs=cs, broadcast_others=broadcast_nodes,
     )
-    return (
-        nn.withColumn(x, F.col(nx))
-        .withColumn(y, F.col(ny))
-        .drop(node_key, nx, ny, "nn_dist")
-    )
+    return _project(nn, sets={x: nx, y: ny}, drop=(node_key, nx, ny, "nn_dist"))
 
 
 def _snap_post(

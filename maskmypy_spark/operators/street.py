@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import rng
+from ..functions.masksql import _project
 from .escalate import materialize
 from .knn import nearest_neighbor
 
@@ -190,11 +191,7 @@ def street(
     )
 
     out = snapped.join(resolved, ["_sn_id", "_target"])
-    return (
-        out.withColumn(x, F.col("_mx"))
-        .withColumn(y, F.col("_my"))
-        .drop("_sn_id", "_target", "_mx", "_my")
-    )
+    return _project(out, sets={x: "_mx", y: "_my"}, drop=("_sn_id", "_target", "_mx", "_my"))
 
 
 def street_by_region(

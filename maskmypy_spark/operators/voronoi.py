@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.masksql import _project
 from .knn import nearest_neighbor
 from .snap import _snap_post
 
@@ -38,8 +39,7 @@ def voronoi(
         df, others, key=key, x=x, y=y, okey="_vkey", ox="_vx", oy="_vy",
         cs=cs, exclude_self=True,
     )
-    return post(  # snap: reference masks/voronoi.py:21-24, 49-50
-        nn.withColumn(x, F.expr(f"({x} + _vx) / 2.0"))
-        .withColumn(y, F.expr(f"({y} + _vy) / 2.0"))
-        .drop("_vkey", "_vx", "_vy", "nn_dist")
-    )
+    return post(_project(  # snap: reference masks/voronoi.py:21-24, 49-50
+        nn, sets={x: f"({x} + _vx) / 2.0", y: f"({y} + _vy) / 2.0"},
+        drop=("_vkey", "_vx", "_vy", "nn_dist"),
+    ))

@@ -56,6 +56,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark's DataFrame debugging captures the Python call site of
+        # every Column-API call, about 6 py4j round trips each; operators
+        # build hundreds of columns per call. Off: an analysis error no
+        # longer names the Python line (its call-site fragment), only the
+        # JVM-side message.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
     # deploy/experiment hook: semicolon-separated key=value pairs applied

@@ -487,17 +487,50 @@ def _grid_containers(spark, rect=2000.0):
     return spark.createDataFrame(rows, "poly_id long, ring array<struct<x:double,y:double>>")
 
 
-def test_escalation_job_budget(spark, points):
+def test_empty_knn_side_runs_no_round(spark, points):
+    """An empty neighbor layer settles a kNN call on the one extent job that
+    sizes its cells: ``nearest_neighbor`` and ``knn_join`` against it run
+    no escalation round and no fallback, and ``nnd_delta(empty, points)``
+    sizes its cells from both layers, so the empty side costs no rounds.
+    (Sized from the empty layer alone, the floor cell size ran all 12
+    rounds and the brute-force fallback.)"""
+    from maskmypy_spark.operators.knn import knn_join, nearest_neighbor
+
+    sc = spark.sparkContext
+    points.count()
+    none = points.selectExpr("pid AS nn_id", "x AS nn_x", "y AS nn_y").where("false")
+    for name, run, budget in (
+        ("nearest_neighbor", lambda: nearest_neighbor(points, none).collect(), 1),
+        ("knn_join", lambda: knn_join(points, none, 2).collect(), 1),
+        ("nnd_delta", lambda: analysis.nnd_delta(points.where("false"), points).collect(), 14),
+    ):
+        group = f"empty_knn_side_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= budget, (name, len(jobs))
+        assert len(rows) == (1 if name == "nnd_delta" else 0), (name, rows)
+
+
+def test_escalation_job_budget(spark, points, monkeypatch):
     """One collect of ``voronoi`` runs at most 12 Spark jobs and one of
     ``donut(container=)`` at most 24: each escalation round's residue count
     and donut's orphan count are metrics of a checkpoint job, so a count
-    job of their own fails the ceiling."""
+    job of their own fails the ceiling. ``nnd_delta(points, points)`` runs
+    at most 12, and its cells are sized at ONE layer's density: the same
+    cell size as ``nnd(points)``, not the union's (1/sqrt(2) of it)."""
+    from maskmypy_spark.operators import knn
+
     sc = spark.sparkContext
     points.count()  # the fixture's cache build is not the operators'
     cont = _grid_containers(spark)
-    for name, run, budget in (
-        ("voronoi", lambda: voronoi(points), 12),
-        ("donut", lambda: donut(points, 50.0, 800.0, seed=31, container=cont), 24),
+    for name, run, budget, n_rows in (
+        ("voronoi", lambda: voronoi(points), 12, 400),
+        ("donut", lambda: donut(points, 50.0, 800.0, seed=31, container=cont), 24, 400),
+        ("nnd_delta", lambda: analysis.nnd_delta(points, points), 12, 1),
     ):
         group = f"escalation_job_budget_{name}"
         sc.setJobGroup(group, group)
@@ -506,4 +539,10 @@ def test_escalation_job_budget(spark, points):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert len(rows) == 400 and len(jobs) <= budget, (name, len(jobs))
+        assert len(rows) == n_rows and len(jobs) <= budget, (name, len(jobs))
+
+    sizes, seen = knn._sizes, []
+    monkeypatch.setattr(knn, "_sizes", lambda cs: seen.append(cs) or sizes(cs))
+    analysis.nnd(points).collect()
+    analysis.nnd_delta(points, points).collect()
+    assert len(seen) == 2 and seen[0] == seen[1], seen

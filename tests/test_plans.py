@@ -304,10 +304,14 @@ def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypat
     9x cell explode, so under the session's 64 MB auto-broadcast threshold a
     mid-size self-join planned a BroadcastHashJoin that built a hash
     relation from the EXPLODED probe side — millions of rows through the
-    driver, once per escalation round. With broadcast_others=False the cell
-    join must stay a shuffled SortMergeJoin at ANY size estimate (tiny test
-    inputs are exactly the trigger condition: both sides sit far below the
-    threshold, so without the merge hint the planner always broadcasts)."""
+    driver, once per escalation round. With broadcast_others=False and a
+    caller's ``cs`` the cell join must stay a shuffled SortMergeJoin at ANY
+    size estimate (tiny test inputs are exactly the trigger condition: both
+    sides sit far below the threshold, so without the merge hint the
+    planner always broadcasts). The one broadcast the caller does not ask
+    for is ``others`` COUNTED small by the ``cs=None`` extent job
+    (``test_nearest_neighbor_broadcasts_counted_small_others``); every call
+    here passes ``cs``, so that job never runs."""
     from maskmypy_spark.operators.knn import knn_join
     from maskmypy_spark.operators.voronoi import voronoi
 
@@ -379,6 +383,97 @@ def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypat
         )
     )
     assert lines and all("BroadcastHashJoin" in ln for ln in lines), lines
+
+
+def test_nearest_neighbor_broadcasts_counted_small_others(spark, monkeypatch):
+    """With ``cs=None`` the extent job that sizes the cells also COUNTS
+    ``others``: under knn.RESIDUE_BROADCAST_ROWS every round's cell join
+    broadcasts ``others`` as its build side (BuildRight) and the exploded
+    probe side is never broadcast; with the bound at 0 the unbounded round
+    stays a SortMergeJoin, and a salted call counts its salt copies against
+    the bound. Results are the same either way."""
+    from maskmypy_spark.operators import knn
+
+    _stub_materialize(monkeypatch)
+    pts = spark.createDataFrame(fixtures.sensitive_points_pdf(200, seed=42))
+    others = pts.selectExpr("pid AS nn_id", "x AS nn_x", "y AS nn_y")
+
+    def cell_joins(df):
+        # the join lines (simple mode names the build side) and the
+        # broadcast nodes' inputs (formatted mode): ``others``' columns
+        joins = [
+            ln for ln in _plan(df, mode="simple").splitlines() if "Join" in ln and "_cell" in ln
+        ]
+        nodes = _plan(df).split("\n\n")
+        exch = [n for n in nodes if "BroadcastExchange" in n.split("\n", 1)[0]]
+        return joins, exch
+
+    nn = knn.nearest_neighbor(pts, others, exclude_self=True)
+    joins, exch = cell_joins(nn)
+    assert joins and all("BroadcastHashJoin" in j and "BuildRight" in j for j in joins), joins
+    assert exch and all("nn_x" in e and "_rgi" not in e for e in exch), exch
+    got = {tuple(r) for r in nn.select("pid", "nn_id", "nn_dist").collect()}
+
+    monkeypatch.setattr(knn, "RESIDUE_BROADCAST_ROWS", 0)
+    nn = knn.nearest_neighbor(pts, others, exclude_self=True)
+    joins, _ = cell_joins(nn)
+    assert joins and all("SortMergeJoin" in j for j in joins), joins
+    assert {tuple(r) for r in nn.select("pid", "nn_id", "nn_dist").collect()} == got
+    assert len(got) == 200
+
+    # A salted join copies the build side ``salt`` times, and the count
+    # includes the copies: 200 rows fit a bound of 400, 4 x 200 do not.
+    monkeypatch.setattr(knn, "RESIDUE_BROADCAST_ROWS", 400)
+    joins, _ = cell_joins(knn.nearest_neighbor(pts, others, exclude_self=True))
+    assert all("BuildRight" in j for j in joins), joins
+    nn = knn.nearest_neighbor(pts, others, exclude_self=True, salt=4)
+    joins, _ = cell_joins(nn)
+    assert joins and not any("BuildRight" in j for j in joins), joins
+    assert {tuple(r) for r in nn.select("pid", "nn_id", "nn_dist").collect()} == got
+
+
+def test_plan_build_budget(spark, monkeypatch):
+    """Building an operator's plan constructs few DataFrames: each stage
+    list is ONE projection (masksql._project), not a ``withColumn``
+    per stage that re-analyses the growing plan. Counted as
+    ``DataFrame.__init__`` calls (PySpark runs two per frame) at build time,
+    before any action. With a ``withColumn`` per stage the counts were
+    donut 34, k-frame 76, locationswap 46 and ring 8."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from maskmypy_spark import analysis
+    from maskmypy_spark.operators.distance_join import explode_pruned_ring
+    from maskmypy_spark.operators.locationswap import locationswap
+
+    pts = spark.range(1, 1001).selectExpr(
+        "id AS pid", "CAST(id AS DOUBLE) AS x", "CAST(id % 37 AS DOUBLE) AS y"
+    )
+    addr = pts.selectExpr("pid AS aid", "x AS ax", "y AS ay")
+    built = [0]
+    init = DataFrame.__init__
+
+    def counting(self, *a, **k):
+        built[0] += 1
+        init(self, *a, **k)
+
+    monkeypatch.setattr(DataFrame, "__init__", counting)
+
+    def k_frame():  # perfbench's mask -> slim k-verify
+        m = donut(analysis.with_original(pts), 100.0, 500.0, seed=42)
+        return analysis.k_anonymity_address(
+            pts, m.drop("_orig_x", "_orig_y"), addr, max_radius=500.0,
+            disp=analysis.displacement_from_payload(m), slim=True,
+        )
+
+    for name, build, budget in (
+        ("donut", lambda: donut(pts, 100.0, 500.0, seed=42), 4),
+        ("k_frame", k_frame, 36),
+        ("locationswap", lambda: locationswap(pts, 100.0, 500.0, addr, seed=42), 32),
+        ("ring", lambda: explode_pruned_ring(pts, "x", "y", 250.0, 2, "250.0D"), 8),
+    ):
+        built[0] = 0
+        build()
+        assert built[0] <= budget, (name, built[0])
 
 
 def test_nearest_neighbor_results_cs_independent(spark):

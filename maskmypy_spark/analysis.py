@@ -657,7 +657,6 @@ def checksum(df: DataFrame, cols: list[str] | None = None, dp: int = 9) -> str:
 def evaluate(
     sensitive: DataFrame,
     candidate: DataFrame,
-    address: DataFrame | None = None,
     key: str = "pid",
     x: str = "x",
     y: str = "y",
@@ -676,9 +675,8 @@ def evaluate(
 
     ``population`` dispatches like the reference (:68-74), through
     :func:`k_anonymity`: a ``ring`` column means polygon disaggregation
-    (k_anonymity_polygon), (ax, ay) means address points. ``address`` is the
-    address-points shorthand kept from the engine's original API. Returns a
-    plain dict like the reference; each stat is a tiny agg job.
+    (k_anonymity_polygon), (ax, ay) means address points. Returns a plain
+    dict like the reference; each stat is a tiny agg job.
 
     Completeness contract: ``central_drift`` and the sensitive-side mean
     center are derived from the inner-joined displacement frame, so they
@@ -744,11 +742,10 @@ def evaluate(
             ripleys_k(sensitive, key=key, x=x, y=y),
             ripleys_k(candidate, key=key, x=x, y=y),
         )
-    pop = population if population is not None else address
-    if pop is not None:
+    if population is not None:
         # the bare (key, x, y, _distance) frame: no payload join-back
         kdf = k_anonymity(
-            sensitive, candidate, pop, population_column, key, x, y,
+            sensitive, candidate, population, population_column, key, x, y,
             akey=akey, ax=ax, ay=ay, disp=disp.select(key, x, y, "_distance"),
         )
         # k summary + the three satisfaction levels: ONE aggregate job

@@ -20,8 +20,10 @@ equi-keys plus the exact pair predicate, for inner or left outer joins.
 Scale design:
  - shuffle key = cell id; AQE skew-join splits hot cells at runtime, and
    ``salt`` adds explicit pre-salting for known-hot data (north rule).
- - ``broadcast_right=True`` for small build sides (containers, road nodes)
-   avoids the shuffle entirely.
+ - ``broadcast_right=True`` for a small build side the caller declares
+   (the streaming k-verify's address table) avoids the shuffle entirely;
+   containers go through ``pip`` and road nodes through ``knn``, whose
+   extent job counts them.
  - cell size defaults to the radius => ring = 1 => 9-cell expansion, the
    sweet spot between shuffle fan-out (9x) and per-cell candidate volume.
 """
@@ -187,8 +189,9 @@ def cell_join(
     those rows too); for inner joins it is the same plan as a filter.
 
     ``pin`` picks the physical join. 'right' broadcasts a dimension build
-    side: one the caller declares small, or a kNN ``others`` layer that
-    the call's extent job COUNTED under knn.RESIDUE_BROADCAST_ROWS.
+    side: a kNN ``others`` layer that the call's extent job COUNTED under
+    knn.RESIDUE_BROADCAST_ROWS, or the one ``distance_join`` caller that
+    declares its side small (``broadcast_right``: ``k_verify_stream``).
     'left' broadcasts a probe side the caller has COUNTED small (a
     driver-side bound like street's max_graph_nodes, never a planner
     estimate), so the build side streams map-side instead of re-shuffling.

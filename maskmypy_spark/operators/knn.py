@@ -132,9 +132,9 @@ def _bcast(n: int | None, per: int = 9) -> bool:
     return n is not None and per * n <= RESIDUE_BROADCAST_ROWS
 
 
-def _pin(broadcast_others: bool, n: int | None) -> str:
+def _pin(bcast_others: bool, n: int | None) -> str:
     """cell_join pin of a round over a residue of ``n`` rows."""
-    return "right" if broadcast_others else "left" if _bcast(n) else "merge"
+    return "right" if bcast_others else "left" if _bcast(n) else "merge"
 
 
 def _extent(df: DataFrame, x: str, y: str, group: str | None = None) -> tuple:
@@ -149,24 +149,29 @@ def _extent(df: DataFrame, x: str, y: str, group: str | None = None) -> tuple:
     return (0.0, 0.0, 0.0, 0.0, 0, 0) if None in row[:4] else tuple(row)
 
 
-def _size_others(others, ox, oy, cs, broadcast_others, salt, group=None) -> tuple:
-    """``(cs, broadcast_others, extent)`` of a kNN call. A caller's ``cs``
-    keeps its plan: no job, no extent. Otherwise ONE :func:`_extent` job
-    over ``others`` gives cs as ~3x the expected NN spacing from the
-    density of one ``group`` (under the old SortAggregate argmin, tight 1x
-    cells won; with the packed-BIGINT hash-aggregate the per-candidate cost
-    is tiny and the round-trip overhead of escalation rounds dominates, so
-    3x cells resolve most points in round one and ran ~1.4x faster at
-    bench scale; exactness holds at ANY cs, gated by the plan tests), and
-    the row count: an ``others`` COUNTED small by :func:`_bcast` (salt
-    copies included) is broadcast to every round (never the exploded probe
-    side), and a counted-empty one settles the call with no round at all."""
-    if cs is not None:
-        return cs, broadcast_others, None
+def _size_others(others, ox, oy, cs, salt, group=None) -> tuple:
+    """``(cs, bcast_others, extent)`` of a kNN call: the one place a call
+    chooses its plan, from ONE :func:`_extent` job over ``others``. Without
+    a caller's ``cs``, cs is ~3x the expected NN spacing at the density of
+    one ``group`` (under the old SortAggregate argmin, tight 1x cells won;
+    with the packed-BIGINT hash-aggregate the per-candidate cost is tiny
+    and the round-trip overhead of escalation rounds dominates, so 3x cells
+    resolve most points in round one and ran ~1.4x faster at bench scale;
+    exactness holds at ANY cs, gated by the plan tests). The spacing is
+    the larger of sqrt(area / m) and the box's long side over m: on
+    collinear points the area is 0, and the first alone would leave cs at
+    the floor, below the spacing the 12 tripling rounds can reach. The
+    row count decides the rest, with or without a caller's ``cs``: an
+    ``others`` COUNTED small by :func:`_bcast` (salt copies included) is
+    broadcast to every round and to the fallback (never the exploded
+    probe side), and a counted-empty one settles the call with no round
+    at all."""
     ext = x0, x1, y0, y1, n, g = _extent(others, ox, oy, group)
-    area = max((x1 - x0) * (y1 - y0), 1e-9)
-    cs = 3.0 * math.sqrt(area / max(n / max(g, 1), 1))
-    return cs, broadcast_others or _bcast(n, max(salt, 1)), ext
+    if cs is None:
+        m = max(n / max(g, 1), 1)
+        area = max((x1 - x0) * (y1 - y0), 1e-9)
+        cs = 3.0 * max(math.sqrt(area / m), max(x1 - x0, y1 - y0) / m)
+    return cs, _bcast(n, max(salt, 1)), ext
 
 
 def knn_join(
@@ -181,7 +186,6 @@ def knn_join(
     oy: str = "nn_y",
     cs: float | None = None,
     exclude_self: bool = False,
-    broadcast_others: bool = False,
     salt: int = 0,
 ) -> DataFrame:
     """Exact k-nearest-neighbors join (k rows per point, rank 1..k) by the
@@ -195,8 +199,10 @@ def knn_join(
     unbounded sort buffer (plan-gated in tests/test_plans.py alongside the
     cs-independence and salted-equivalence gates, the same guarantees
     ``nearest_neighbor`` carries). ``salt`` scatters hot cells across
-    reducers (see ``distance_join.cell_join``)."""
-    cs, broadcast_others, ext = _size_others(others, ox, oy, cs, broadcast_others, salt)
+    reducers (see ``distance_join.cell_join``). As in ``nearest_neighbor``,
+    one extent job over ``others`` chooses the plan (:func:`_size_others`)
+    and a caller's ``cs`` sets only the cell size."""
+    cs, bcast_others, ext = _size_others(others, ox, oy, cs, salt)
     sizes = _sizes(cs)
     d = F.expr(dist_sql(x, y, ox, oy))
     xcond = (F.col(okey) != F.col(key)) if exclude_self else None
@@ -214,7 +220,7 @@ def knn_join(
         cs_r = sizes[rnd]
         t = topk(_cell_candidates(
             remaining, others, x, y, ox, oy, cs_r, salt,
-            _pin(broadcast_others, n), cond=xcond,
+            _pin(bcast_others, n), cond=xcond,
         ))
         # converged iff the point HAS k candidates and its k-th dist <= cs.
         # Both facts come from window aggregates over the SAME (key)
@@ -232,12 +238,12 @@ def knn_join(
 
     def fallback(remaining):
         # brute-force the (tiny) unconverged residue
-        cand = remaining.crossJoin(F.broadcast(others) if broadcast_others else others)
+        cand = remaining.crossJoin(F.broadcast(others) if bcast_others else others)
         if exclude_self:
             cand = cand.where(xcond)
         return topk(cand).select(*out)
 
-    if ext and not ext[4]:
+    if not ext[4]:
         return step(points.select(key, x, y), 0, None)[0].where(F.lit(False))
     return escalate(points.select(key, x, y), step, fallback, MAX_ROUNDS, key=key)
 
@@ -253,7 +259,6 @@ def nearest_neighbor(
     oy: str = "nn_y",
     cs: float | None = None,
     exclude_self: bool = False,
-    broadcast_others: bool = False,
     salt: int = 0,
     group: str | None = None,
 ) -> DataFrame:
@@ -278,12 +283,12 @@ def nearest_neighbor(
     at the end (distance_join._core_then_payload). Bare frames skip that
     join.
 
-    ``cs=None`` sizes the cells from one extent job over ``others`` (at
-    the density of one non-empty ``group``), whose
-    count also broadcasts a small ``others`` and ends the call on an empty
-    one (:func:`_size_others`); a caller's ``cs`` keeps the plan as asked.
+    Every call runs one extent job over ``others`` (:func:`_size_others`):
+    its count broadcasts a small ``others`` and ends the call on an empty
+    one, and ``cs=None`` sizes the cells from it (at the density of one
+    non-empty ``group``). A caller's ``cs`` sets only the cell size.
     """
-    cs, broadcast_others, ext = _size_others(others, ox, oy, cs, broadcast_others, salt, group)
+    cs, bcast_others, ext = _size_others(others, ox, oy, cs, salt, group)
     sizes = _sizes(cs)
     on = [(group, group)] if group else []
     d = F.expr(dist_sql(x, y, ox, oy))
@@ -303,7 +308,7 @@ def nearest_neighbor(
         how = "inner" if _bcast(n) else "left"
         cand = _cell_candidates(
             remaining, others, x, y, ox, oy, cs_r, salt,
-            _pin(broadcast_others, n), on, how, xcond,
+            _pin(bcast_others, n), on, how, xcond,
         )
         if how == "inner":
             picked = _argmin_pick_rows(cand, d, key, [key], okey, ox, oy, 3.0 * cs_r)
@@ -318,19 +323,19 @@ def nearest_neighbor(
     def fallback(remaining):
         # Brute-force the (tiny) residue; the pack scale must bound ALL pair
         # distances, so take the union-bbox diagonal (a scalar aggregate
-        # over the residue, and the dimension's round-0 extent when cs was
-        # estimated from it).
-        rb, ob = _extent(remaining, x, y), ext or _extent(others, ox, oy)
-        if not (rb[4] and ob[4]):
-            # Degenerate input: one side is empty — there are no candidate
-            # neighbors, so return nothing for the residue.
+        # over the residue, and the call's extent of ``others``, which is
+        # never empty here).
+        rb = _extent(remaining, x, y)
+        if not rb[4]:
+            # Degenerate residue: no point has coordinates, so none has a
+            # neighbor.
             return None
         diag = math.hypot(
-            max(rb[1], ob[1]) - min(rb[0], ob[0]),
-            max(rb[3], ob[3]) - min(rb[2], ob[2]),
+            max(rb[1], ext[1]) - min(rb[0], ext[0]),
+            max(rb[3], ext[3]) - min(rb[2], ext[2]),
         ) + 1.0
         oth = others.withColumnRenamed(group, "_og") if group else others
-        cand = remaining.crossJoin(F.broadcast(oth) if broadcast_others else oth)
+        cand = remaining.crossJoin(F.broadcast(oth) if bcast_others else oth)
         if group:
             cand = cand.where(F.col(group) == F.col("_og")).drop("_og")
         if exclude_self:
@@ -339,7 +344,7 @@ def nearest_neighbor(
         return remaining.join(picked, key, "inner").withColumn("nn_dist", d)
 
     def run(probe: DataFrame) -> DataFrame:
-        if ext and not ext[4]:
+        if not ext[4]:
             return step(probe, 0, None)[0].where(F.lit(False))
         return escalate(probe, step, fallback, MAX_ROUNDS)
 

@@ -155,8 +155,7 @@ def street(
         )
     )
     snapped = nearest_neighbor(
-        df, valid_nodes, key=key, x=x, y=y,
-        okey="_sn_id", ox="_sn_x", oy="_sn_y", broadcast_others=True,
+        df, valid_nodes, key=key, x=x, y=y, okey="_sn_id", ox="_sn_x", oy="_sn_y"
     ).drop("_sn_x", "_sn_y", "nn_dist")
 
     # per-row target node count from the hash-RNG: low + floor(u*(high-low))
@@ -379,8 +378,7 @@ def street_k(
     """Adaptive privacy loop (reference masks/street.py:82-192): escalate
     (low, high) until k-satisfaction(min_k) >= suppression, then suppress
     sub-min_k points. Each iteration is one Spark job chain; per-iteration
-    metrics go to ``on_iteration`` (the lineage manifest hooks in here,
-    making the loop resumable at iteration granularity).
+    metrics go to ``on_iteration`` (reported only: a rerun starts over).
 
     ``region_size`` routes every iteration through :func:`street_by_region`
     instead of the driver-bounded :func:`street` — the continent-scale loop

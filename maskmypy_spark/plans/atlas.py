@@ -151,10 +151,8 @@ class Atlas:
         stats: dict = {}
         if evaluate:
             stats = analysis.evaluate(
-                self.sensitive, masked,
-                address=self.population,
-                key=self.key, x=self.x, y=self.y,
-                skip_slow=skip_slow_evaluators,
+                self.sensitive, masked, population=self.population,
+                key=self.key, x=self.x, y=self.y, skip_slow=skip_slow_evaluators,
             )
         if "UNMASKED" in masked.columns:
             from pyspark.sql import functions as F

@@ -167,9 +167,7 @@ def _q_voronoi():
 
 def _q_snap():
     def q(spark: SparkSession, sf: str) -> DataFrame:
-        m = snap_to_nodes(
-            _sens(spark, sf), tables.nodes_df(spark, sf), broadcast_nodes=True
-        )
+        m = snap_to_nodes(_sens(spark, sf), tables.nodes_df(spark, sf))
         return m.select("pid", F.round("x", 6).alias("mx"), F.round("y", 6).alias("my"))
 
     sql = (
@@ -715,8 +713,7 @@ def _q_knn_join():
         from ..operators.knn import knn_join
 
         out = knn_join(
-            _sens(spark, sf), tables.nodes_df(spark, sf),
-            k=K, okey="node_id", ox="nx", oy="ny", broadcast_others=True,
+            _sens(spark, sf), tables.nodes_df(spark, sf), k=K, okey="node_id", ox="nx", oy="ny"
         )
         return out.select(
             "pid", "node_id", "rank", F.round("nn_dist", 6).alias("dist")

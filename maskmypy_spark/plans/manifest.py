@@ -3,18 +3,18 @@ lineage + exact resume (the north rule's checkpoint contract).
 
 A mask run =
   masked parquet, partitioned by coarse cell id (partition pruning for all
-  downstream spatial reads) + ``manifest.json`` recording params, master
-  seed, input/output checksums, per-partition row counts, and status.
+  downstream spatial reads) + ``manifest.json`` recording params (the
+  master seed among them), input/output checksums, per-partition row
+  counts, and status.
 
 Resume: ``run_mask`` is idempotent — if the manifest says complete and the
-recorded output checksum re-verifies, the write is skipped entirely; a torn
-run (no manifest, stale _STARTED marker) is overwritten atomically
-(parquet overwrite). A rerun with the same master seed reproduces the
-identical output (reference's replay contract, atlas.py:229-233), but it
-reruns in full: nothing replays from a logged step. Of the
-iterative drivers only street_k reports per-iteration metrics (its
-``on_iteration`` callback, which :class:`IterationLog` can persist as
-JSON); donut's containment rounds log nothing.
+recorded output checksum re-verifies, the write is skipped entirely; any
+other run (no manifest, a torn or a corrupted one) reruns in full,
+overwrites the data (parquet overwrite) and then publishes the manifest
+atomically. A rerun with the same master seed reproduces the identical
+output (reference's replay contract, atlas.py:229-233). Nothing replays
+from a logged step or iteration: ``street_k``'s ``on_iteration`` callback
+only reports each iteration's metrics to its caller.
 """
 
 from __future__ import annotations
@@ -92,23 +92,3 @@ def run_mask(
     os.replace(tmp, mpath)  # atomic publish: manifest is the commit point
     return out, man
 
-
-class IterationLog:
-    """Per-iteration checkpoint for adaptive loops (street_k)."""
-
-    def __init__(self, path: str) -> None:
-        self.path = path
-        self.entries: list[dict] = []
-        if os.path.exists(path):
-            with open(path) as f:
-                self.entries = json.load(f)
-
-    def completed(self) -> list[dict]:
-        return self.entries
-
-    def __call__(self, entry: dict) -> None:
-        self.entries.append(entry)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.entries, f, indent=2)
-        os.replace(tmp, self.path)

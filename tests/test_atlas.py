@@ -1,5 +1,5 @@
 """Lineage layer: Atlas candidates + replay checksum contract, manifest
-write/resume, street_k iteration checkpointing.
+write/resume.
 Reference idioms: /root/reference/tests/test_atlas.py (SURVEY §5.7).
 """
 
@@ -13,7 +13,7 @@ from maskmypy_spark import analysis
 from maskmypy_spark.operators.donut import donut
 from maskmypy_spark.operators.locationswap import locationswap
 from maskmypy_spark.plans.atlas import Atlas
-from maskmypy_spark.plans.manifest import IterationLog, run_mask
+from maskmypy_spark.plans.manifest import run_mask
 from maskmypy_spark.sources import fixtures
 
 
@@ -242,14 +242,3 @@ def test_run_mask_image_table_retile_and_resume(spark, tmp_path):
     m2, man2 = run_mask(spark, src, mask_fn, out)
     assert man2["resumed"]
 
-
-def test_iteration_log_checkpoints(tmp_path):
-    path = str(tmp_path / "iters.json")
-    log = IterationLog(path)
-    log({"low": 10, "k_satisfaction": 0.5})
-    log({"low": 12, "k_satisfaction": 0.95})
-    log2 = IterationLog(path)
-    assert log2.completed() == [
-        {"low": 10, "k_satisfaction": 0.5},
-        {"low": 12, "k_satisfaction": 0.95},
-    ]

@@ -489,11 +489,12 @@ def _grid_containers(spark, rect=2000.0):
 
 def test_empty_knn_side_runs_no_round(spark, points):
     """An empty neighbor layer settles a kNN call on the one extent job that
-    sizes its cells: ``nearest_neighbor`` and ``knn_join`` against it run
-    no escalation round and no fallback, and ``nnd_delta(empty, points)``
-    sizes its cells from both layers, so the empty side costs no rounds.
-    (Sized from the empty layer alone, the floor cell size ran all 12
-    rounds and the brute-force fallback.)"""
+    chooses its plan: ``nearest_neighbor`` and ``knn_join`` against it run
+    no escalation round and no fallback, with or without a caller's ``cs``,
+    and ``nnd_delta(empty, points)`` sizes its cells from both layers, so
+    the empty side costs no rounds. (Sized from the empty layer alone, the
+    floor cell size ran all 12 rounds and the brute-force fallback; with a
+    caller's ``cs`` the layer went uncounted and ran them too.)"""
     from maskmypy_spark.operators.knn import knn_join, nearest_neighbor
 
     sc = spark.sparkContext
@@ -502,6 +503,8 @@ def test_empty_knn_side_runs_no_round(spark, points):
     for name, run, budget in (
         ("nearest_neighbor", lambda: nearest_neighbor(points, none).collect(), 1),
         ("knn_join", lambda: knn_join(points, none, 2).collect(), 1),
+        ("nearest_neighbor_cs", lambda: nearest_neighbor(points, none, cs=100.0).collect(), 1),
+        ("knn_join_cs", lambda: knn_join(points, none, 2, cs=100.0).collect(), 1),
         ("nnd_delta", lambda: analysis.nnd_delta(points.where("false"), points).collect(), 14),
     ):
         group = f"empty_knn_side_{name}"
@@ -513,6 +516,34 @@ def test_empty_knn_side_runs_no_round(spark, points):
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert len(jobs) <= budget, (name, len(jobs))
         assert len(rows) == (1 if name == "nnd_delta" else 0), (name, rows)
+
+
+def test_collinear_knn_sizes_cells_at_the_spacing(spark):
+    """2,000 points on one horizontal line (spacing 10, jitter 5) have a
+    zero-area bounding box. The estimated cell size still reaches their
+    spacing (the box's long side over the count), so ``nnd`` on them runs
+    no more jobs than a run at the hand-picked ``cs=30`` (7 with the input
+    cached: two for the extent aggregate, three for the one round, two for
+    the stats), and gives its stats. (From the area alone cs sat at its
+    floor: the 12 tripling rounds never reached the spacing, and the
+    brute-force fallback took the whole residue: 57 jobs.)"""
+    n = 2000
+    x = np.arange(n) * 10.0 + np.random.default_rng(42).uniform(0.0, 5.0, n)
+    line = spark.createDataFrame(fixtures.sensitive_points_pdf(n).assign(x=x, y=5000.0)).cache()
+    line.count()  # the cache build is not nnd's
+    sc = spark.sparkContext
+    got = {}
+    for cs in (None, 30.0):
+        group = f"collinear_knn_{cs}"
+        sc.setJobGroup(group, group)
+        try:
+            stats = analysis.nnd(line, cs=cs).collect()[0]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        got[cs] = stats, len(sc.statusTracker().getJobIdsForGroup(group))
+    line.unpersist()
+    assert got[None][0] == got[30.0][0]
+    assert got[None][1] <= min(got[30.0][1], 7), got
 
 
 def test_escalation_job_budget(spark, points, monkeypatch):

@@ -8,13 +8,20 @@ A caller under ``tests/`` alone does not count either: the defs that only
 tests name are listed below, as public API (the documented operator
 surface, whose callers are the library's users) or as oracle twins and
 fixtures (the independent numpy paths and seeded inputs the tests check
-the engine against). Any other def needs a caller outside ``tests/``."""
+the engine against). Any other def needs a caller outside ``tests/``.
+
+No knob comes back unnoticed either: the settable parameters of the public
+defs in ``maskmypy_spark/operators/`` and ``analysis.py`` are counted and
+held under ``PARAM_CEILING``. A change that removes a parameter lowers the
+ceiling with it; one that adds a parameter has to raise it in the diff."""
 
 import ast
 import os
+import shutil
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SKIP_DIRS = {"__pycache__", "spark-warehouse"}
+PARAM_CEILING = 483
 
 PUBLIC_API = {
     "maskmypy_spark/analysis.py:nnd",
@@ -25,7 +32,6 @@ PUBLIC_API = {
     "maskmypy_spark/functions/viz.py:render_ripley_svg",
     "maskmypy_spark/operators/dedup.py:cosine_nn_lsh",
     "maskmypy_spark/plans/manifest.py:run_mask",
-    "maskmypy_spark/plans/manifest.py:IterationLog",
     "maskmypy_spark/sources/bucketed.py:write_bucketed",
     "maskmypy_spark/sources/bucketed.py:read_bucketed",
     "maskmypy_spark/streaming/mask_stream.py:mask_stream",
@@ -105,3 +111,35 @@ def test_gate_catches_a_planted_test_only_def(tmp_path):
     (tmp_path / "tests" / "test_planted.py").write_text("planted()\n")
     assert orphans(str(tmp_path)) == []
     assert orphans(str(tmp_path), skip_tests=True) == ["maskmypy_spark/planted.py:planted"]
+
+
+def public_params(root=ROOT) -> int:
+    """Settable parameters (every positional, keyword-only and ``*``/``**``
+    parameter) of the top-level defs without a leading ``_`` in
+    ``maskmypy_spark/operators/`` and ``maskmypy_spark/analysis.py``."""
+    pkg = os.path.join(root, "maskmypy_spark")
+    total = 0
+    for path in [*_py_files(os.path.join(pkg, "operators")), os.path.join(pkg, "analysis.py")]:
+        for node in _parse(path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and node.name[0] != "_":
+                a = node.args
+                total += len(a.posonlyargs + a.args + a.kwonlyargs) + bool(a.vararg) + bool(a.kwarg)
+    return total
+
+
+def test_public_params_under_ceiling():
+    assert public_params() <= PARAM_CEILING
+
+
+def test_param_gate_catches_a_planted_parameter(tmp_path):
+    pkg = os.path.join(ROOT, "maskmypy_spark")
+    shutil.copytree(
+        os.path.join(pkg, "operators"), tmp_path / "maskmypy_spark" / "operators",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    with open(os.path.join(pkg, "analysis.py"), encoding="utf-8") as f:
+        src = f.read()
+    planted = src.replace("def nnd(df: DataFrame,", "def nnd(df: DataFrame, knob: int = 0,", 1)
+    assert planted != src
+    (tmp_path / "maskmypy_spark" / "analysis.py").write_text(planted, encoding="utf-8")
+    assert public_params(str(tmp_path)) == public_params() + 1 > PARAM_CEILING

@@ -304,14 +304,15 @@ def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypat
     9x cell explode, so under the session's 64 MB auto-broadcast threshold a
     mid-size self-join planned a BroadcastHashJoin that built a hash
     relation from the EXPLODED probe side — millions of rows through the
-    driver, once per escalation round. With broadcast_others=False and a
-    caller's ``cs`` the cell join must stay a shuffled SortMergeJoin at ANY
-    size estimate (tiny test inputs are exactly the trigger condition: both
-    sides sit far below the threshold, so without the merge hint the
-    planner always broadcasts). The one broadcast the caller does not ask
-    for is ``others`` COUNTED small by the ``cs=None`` extent job
-    (``test_nearest_neighbor_broadcasts_counted_small_others``); every call
-    here passes ``cs``, so that job never runs."""
+    driver, once per escalation round. With the counted broadcasts off
+    (``RESIDUE_BROADCAST_ROWS = 0``) the cell join must stay a shuffled
+    SortMergeJoin at ANY size estimate (tiny test inputs are exactly the
+    trigger condition: both sides sit far below the threshold, so without
+    the merge hint the planner always broadcasts). On the default path
+    every call, a caller's ``cs`` included, COUNTS ``others`` in its extent
+    job, so the 200-row ``others`` is the build side (BuildRight) and the
+    exploded probe side is never broadcast
+    (``test_nearest_neighbor_broadcasts_counted_small_others``)."""
     from maskmypy_spark.operators.knn import knn_join
     from maskmypy_spark.operators.voronoi import voronoi
 
@@ -347,14 +348,14 @@ def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypat
     assert lines, "no cell join found in plan"
     assert all("SortMergeJoin" in ln for ln in lines), lines
 
-    # default path: round 1 (the UNBOUNDED fact x fact join — printed first,
-    # parts are unioned in round order) must still be sort-merge; later
-    # rounds MAY broadcast because the driver has COUNTED the residue under
-    # knn.RESIDUE_BROADCAST_ROWS (a bound, not a planner estimate), and results
-    # must be identical either way
+    # default path: round 1 (the UNBOUNDED join — printed first, parts are
+    # unioned in round order) builds the counted-small ``others``, never the
+    # exploded probe side; later rounds MAY broadcast because the driver has
+    # COUNTED the residue under knn.RESIDUE_BROADCAST_ROWS (a bound, not a
+    # planner estimate), and results must be identical either way
     lines = _cell_join_lines(voronoi(pts, cs=1000.0))
     assert lines, "no cell join found in plan"
-    assert "SortMergeJoin" in lines[0], lines
+    assert "BuildRight" in lines[0], lines
     assert all("NestedLoop" not in ln for ln in lines), lines
     a = {tuple(r) for r in voronoi(pts, cs=1000.0).collect()}
     b = {
@@ -373,16 +374,7 @@ def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypat
     assert lines, "no cell join found in plan"
     assert all("SortMergeJoin" in ln for ln in lines), lines
     lines = _cell_join_lines(knn_join(pts, others, k=2, cs=1000.0, exclude_self=True))
-    assert lines and "SortMergeJoin" in lines[0], lines
-
-    # the explicit dimension path still broadcasts when the caller asks
-    lines = _cell_join_lines(
-        knn_join(
-            pts, others, k=2, cs=1000.0, exclude_self=True,
-            broadcast_others=True,
-        )
-    )
-    assert lines and all("BroadcastHashJoin" in ln for ln in lines), lines
+    assert lines and "BuildRight" in lines[0], lines
 
 
 def test_nearest_neighbor_broadcasts_counted_small_others(spark, monkeypatch):

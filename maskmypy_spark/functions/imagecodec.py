@@ -197,13 +197,16 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
 
 def average_hash(img: np.ndarray) -> int:
     """64-bit average hash (deterministic, DCT-free): 8x8 block-mean
-    luminance thresholded at its mean. Signed int64 (parquet-friendly)."""
+    luminance thresholded at its mean. Signed int64 (parquet-friendly).
+    Under 8 px on a side, each block keeps at least one row and one
+    column (neighbouring blocks then share pixels) instead of averaging
+    an empty slice; 8 px or more, the blocks tile the image."""
     lum = img.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
     h, w = lum.shape
     ys = (np.arange(8) * h) // 8
     xs = (np.arange(8) * w) // 8
-    ye = np.append(ys[1:], h)
-    xe = np.append(xs[1:], w)
+    ye = np.maximum(np.append(ys[1:], h), ys + 1)
+    xe = np.maximum(np.append(xs[1:], w), xs + 1)
     blocks = np.empty((8, 8))
     for i in range(8):
         for j in range(8):

@@ -10,15 +10,24 @@ equi-join + aggregate (JVM-side), with the engine's hash family for
 sketches so results are partitioning-independent.
 
 Each text and vector primitive has one private builder every operator
-shares: :func:`_grams_sql` (word n-grams), :func:`_h60_sql` (60-bit md5
-hash), :func:`_jaccard_ratio` (the exact Jaccard filter, fed by the
-inverted-index :func:`_jaccard` or the per-doc-set :func:`_set_jaccard`),
-:func:`_bands` +
-:func:`_band_pairs` (banded pigeonhole self-join), :func:`_vectors` +
-:func:`_dot` / :func:`_cos` (vector arithmetic; ``_dot`` is the one place
-to swap the kernel) and :func:`_nearest` (the per-vector argmax, run on
-the engine's one packed-BIGINT pick, ``knn.packed_pick``, over the
-descending score ``scale - round(cos * scale)``)."""
+shares: :func:`_tokens_sql` (the word tokenizer), :func:`_grams_sql` (word
+n-grams), :func:`_h60_sql` (60-bit md5 hash), :func:`_signature_agg` (the
+per-doc MinHash aggregate), :func:`_jaccard_ratio` (the exact Jaccard
+filter, fed by the inverted-index :func:`_jaccard` or the per-doc-set
+:func:`_set_jaccard`), :func:`_bands` + :func:`_band_pairs` (banded
+pigeonhole self-join), :func:`_vectors` + :func:`_dot` / :func:`_cos`
+(vector arithmetic; ``_dot`` is the one place to swap the kernel) and
+:func:`_nearest` (the per-vector argmax, run on the engine's one
+packed-BIGINT pick, ``knn.packed_pick``, over the descending score
+``scale - round(cos * scale)``).
+
+MinHash-LSH is one pipeline, :func:`minhash_lsh_pairs`, from a
+checkpointed signature frame on: bands, candidates, exact verify. It
+checkpoints the signatures of its docs itself, or takes a caller's:
+:func:`curate_near` hands it the signatures of the gated docs with their
+gate metrics riding along, so the corpus is read once. The text builders
+render SQL strings, so a plan costs a few JVM calls, not several per
+column."""
 
 from __future__ import annotations
 
@@ -30,16 +39,23 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
-from ..functions.rng import u_sql
+from ..functions.rng import flit, u_sql
 from .escalate import materialize
-from .knn import PACK, packed_pick
+from .knn import PACK, _bcast, packed_pick
 
 TOKENIZE = r"\s+"
 STOPWORDS = ("the", "a", "an", "and", "of", "to", "in", "is", "on", "for")
 
 
+def _tokens_sql(text: str) -> str:
+    """SQL token array of string column ``text``: split on TOKENIZE after a
+    trim (the regex's backslashes doubled for the SQL string literal)."""
+    regex = TOKENIZE.replace("\\", "\\\\")
+    return f"split(trim({text}), '{regex}')"
+
+
 def tokens_col(text: str = "text"):
-    return F.split(F.trim(F.col(text)), TOKENIZE)
+    return F.expr(_tokens_sql(text))
 
 
 # GPT-2-style pretokenizer shape, RE2-safe (no lookahead — DuckDB's regex
@@ -106,15 +122,18 @@ def _h60_sql(c: str) -> str:
     return f"CAST(conv(substring(md5({c}), 1, 15), 16, 10) AS BIGINT)"
 
 
-def _dup_ngram_col(tcol: str, n: int):
-    """Gopher dup-n-gram fraction (0.0 under ``n`` tokens) over a
+def _dup_ngram_sql(tcol: str, n: int) -> str:
+    """SQL Gopher dup-n-gram fraction (0.0 under ``n`` tokens) over a
     PRE-PROJECTED token-array column ``tcol``, projected in the caller's
     OWN select so the tokenization runs once per row (CollapseProject
-    keeps non-cheap multi-referenced aliases staged). The empty gram
-    array's 0/0 is NULL under ``try_divide`` and reads as 0.0."""
-    grams = F.expr(_grams_sql(tcol, n))
-    ratio = F.try_divide(F.size(F.array_distinct(grams)), F.size(grams))
-    return F.coalesce(F.round(F.lit(1.0) - ratio, 6), F.lit(0.0))
+    keeps non-cheap multi-referenced aliases staged). The gram count is
+    ``size - n + 1`` floored at 0, so the gram array is built once; the
+    empty gram array's 0/0 is NULL under ``try_divide`` and reads as 0.0."""
+    total = f"greatest(size({tcol}) - {n - 1}, 0)"
+    return (
+        f"coalesce(round(1.0D - try_divide(size(array_distinct({_grams_sql(tcol, n)})), "
+        f"{total}), 6), 0.0D)"
+    )
 
 
 def doc_repetition(
@@ -128,12 +147,12 @@ def doc_repetition(
 
     (0.0 for documents with fewer than ``n`` tokens or NULL text). Pure
     per-document projection: tokens -> n-gram array (direct element refs,
-    :func:`_dup_ngram_col`) -> array_distinct — no explode, no shuffle,
+    :func:`_dup_ngram_sql`) -> array_distinct — no explode, no shuffle,
     nothing leaves the row. Complements :func:`doc_quality`'s ratio
     filters and the CROSS-document dedup family (this one needs no index
     at any corpus size)."""
-    return df.select(key, tokens_col(text).alias("_t")).select(
-        key, _dup_ngram_col("_t", n).alias("dup_ngram_frac")
+    return df.selectExpr(key, f"{_tokens_sql(text)} AS _t").selectExpr(
+        key, f"{_dup_ngram_sql('_t', n)} AS dup_ngram_frac"
     )
 
 
@@ -200,12 +219,14 @@ def _quality_gated(
     """The shared gate stage of the curate pipelines: per-row quality
     metrics + threshold filters (+ optional deterministic hash sample) as
     ONE projection-and-filter over the scan — nothing shuffles. Returns
-    (key, text, alpha_ratio, dup_ngram_frac)."""
-    alpha = F.expr(
+    (key, text, _t, alpha_ratio, dup_ngram_frac), where ``_t`` is the
+    doc's token array, for a later stage to reuse instead of tokenizing
+    again."""
+    alpha = (
         f"round(length(regexp_replace({text}, '[^a-zA-Z]', '')) / "
         f"CAST(nullif(length({text}), 0) AS DOUBLE), 6)"
     )
-    # Metrics ride through a SINGLE-ELEMENT explode as a PUSHDOWN BARRIER:
+    # Metrics ride through a SINGLE-ELEMENT inline as a PUSHDOWN BARRIER:
     # PushDownPredicates substitutes pushed predicates through project
     # aliases, re-inlining the staged token array as split(text) PER
     # ELEMENT REFERENCE inside the gram lambda (~2(n+1) re-splits per gram
@@ -213,31 +234,18 @@ def _quality_gated(
     # nondeterministic true-conjunct barrier gets constant-folded away).
     # A predicate over a GENERATOR output can never move below the
     # Generate, so the token array stages once, each metric evaluates once
-    # per row inside the generator struct, and the filter reads struct
-    # fields. One struct+array alloc per row; still zero shuffles.
+    # per row inside the generator struct, and the filter reads the
+    # generated columns. One struct+array alloc per row; still zero
+    # shuffles.
     gated = (
-        df.select(key, F.col(text), tokens_col(text).alias("_t"))
-        .select(
-            key,
-            F.col(text),
-            F.explode(
-                F.array(
-                    F.struct(
-                        alpha.alias("alpha_ratio"),
-                        _dup_ngram_col("_t", n).alias("dup_ngram_frac"),
-                    )
-                )
-            ).alias("_m"),
-        )
-        .select(
-            key,
-            F.col(text),
-            F.col("_m.alpha_ratio").alias("alpha_ratio"),
-            F.col("_m.dup_ngram_frac").alias("dup_ngram_frac"),
+        df.selectExpr(key, text, f"{_tokens_sql(text)} AS _t")
+        .selectExpr(
+            key, text, "_t",
+            f"inline(array(struct({alpha} AS alpha_ratio, "
+            f"{_dup_ngram_sql('_t', n)} AS dup_ngram_frac)))",
         )
         .where(
-            (F.col("alpha_ratio") >= float(min_alpha))
-            & (F.col("dup_ngram_frac") <= float(max_repetition))
+            f"alpha_ratio >= {flit(min_alpha)} AND dup_ngram_frac <= {flit(max_repetition)}"
         )
     )
     if sample_rate is not None:
@@ -265,8 +273,8 @@ def curate_near(
 
     1. quality gates (+ optional hash sample) — one projection, no shuffle;
     2. MinHash-LSH candidate pairs over the SURVIVORS + exact-Jaccard
-       verification (:func:`minhash_lsh_pairs` — one banded shuffle, never
-       all-pairs);
+       verification (:func:`minhash_lsh_pairs` over the survivors'
+       signatures — one banded shuffle, never all-pairs);
     3. connected components over the verified pairs
        (:func:`dedup_clusters`) — component sizes are bounded by real
        near-dup cliques, not the corpus; a pair graph within
@@ -276,40 +284,42 @@ def curate_near(
        near-dup pair or is its component's minimum key (= the component's
        cluster_id label).
 
-    The gated frame is scanned by both the pair derivation and the final
-    election — two passes over a projection, the standard trade against
-    materializing a corpus-scale intermediate. Returns (key, alpha_ratio,
-    dup_ngram_frac, n_near_dups) where ``n_near_dups`` is the size of the
-    keeper's duplicate cluster (1 for docs with no near-dup)."""
+    The corpus is read in ONE gated pass: each surviving doc is tokenized
+    once, its gate metrics ride the per-doc signature aggregate as min()
+    carries, and that aggregate is checkpointed (:func:`escalate.
+    materialize`, eager: its job runs when this is CALLED). The bands, the
+    candidates and the final election all read the checkpoint; the exact
+    verify reads only the candidate docs' texts. A gated doc under
+    ``shingle_n`` tokens keeps its checkpoint row with NULL signatures, so
+    it reaches the election as a singleton and never a band. Returns (key,
+    alpha_ratio, dup_ngram_frac, n_near_dups) where ``n_near_dups`` is the
+    size of the keeper's duplicate cluster (1 for docs with no near-dup)."""
     gated = _quality_gated(
         df, key, text, max_repetition, min_alpha, n, sample_rate, seed
     )
-    # shingle_source=df: every LSH candidate already passed the gate (its
-    # signature came from `gated`), so the exact verify reads candidate
-    # texts from the RAW corpus — same rows, but the gate-metric lineage
-    # (which the optimizer does not push the candidate semi-join beneath)
-    # is not re-evaluated corpus-wide a second time.
+    carry = ("alpha_ratio", "dup_ngram_frac")
+    sig = materialize(_signature_agg(
+        gated.selectExpr(
+            key, *carry, f"explode_outer({_grams_sql('_t', shingle_n)}) AS shingle"
+        ),
+        key, num_hashes, hasher, carry,
+    ))
+    # every candidate passed the gate (its signature row came from
+    # `gated`), so the verify reads candidate texts from the raw corpus
     pairs = minhash_lsh_pairs(
-        gated, threshold, num_hashes, bands, key, text, shingle_n, hasher,
-        shingle_source=df,
+        df, threshold, num_hashes, bands, key, text, shingle_n, hasher, signatures=sig
     )
-    clusters = dedup_clusters(pairs).withColumnRenamed("doc_id", "_cd")
-    csize = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("_cn"))
-    # the election only needs (key, metrics) — drop the text payload before
-    # the cluster joins so the corpus text never enters their shuffles
+    # one row per clustered doc, with its cluster's size: a keeper keeps
+    # its row (and the size), any other clustered doc drops
+    clusters = dedup_clusters(pairs).selectExpr(
+        f"doc_id AS {key}", "cluster_id AS _cid",
+        "count(1) OVER (PARTITION BY cluster_id) AS _cn",
+    )
     return (
-        gated.select(key, "alpha_ratio", "dup_ngram_frac")
-        .join(
-            clusters.withColumnRenamed("_cd", key), key, "left"
-        )
-        .where(F.col("cluster_id").isNull() | (F.col("cluster_id") == F.col(key)))
-        .join(csize.withColumnRenamed("cluster_id", key), key, "left")
-        .select(
-            key,
-            "alpha_ratio",
-            "dup_ngram_frac",
-            F.coalesce(F.col("_cn"), F.lit(1)).cast("long").alias("n_near_dups"),
-        )
+        sig.selectExpr(key, *carry)
+        .join(clusters, key, "left")
+        .where(f"_cid IS NULL OR _cid = {key}")
+        .selectExpr(key, *carry, "CAST(coalesce(_cn, 1) AS BIGINT) AS n_near_dups")
     )
 
 
@@ -466,14 +476,9 @@ def _jaccard_ratio(counted: DataFrame, threshold: float) -> DataFrame:
     """The exact Jaccard filter both verifies share: from (d1, d2, _c =
     |A ∩ B|, _na = |A|, _nb = |B|) rows, returns (d1, d2, jaccard) with
     the 6 dp-rounded jaccard >= threshold."""
-    return (
-        counted.withColumn(
-            "jaccard",
-            F.round(F.col("_c") / (F.col("_na") + F.col("_nb") - F.col("_c")), 6),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
-    )
+    return counted.selectExpr(
+        "d1", "d2", "round(_c / (_na + _nb - _c), 6) AS jaccard"
+    ).where(f"jaccard >= {flit(threshold)}")
 
 
 def _jaccard(common: DataFrame, sh: DataFrame, key: str, threshold: float) -> DataFrame:
@@ -517,11 +522,19 @@ def ngram_jaccard_pairs(
 
     The shingle index materializes once, through
     :func:`escalate.materialize` (eager: its job runs when this function
-    is CALLED)."""
-    sh = materialize(shingles(df, key, text, n))
-    kept = sh
+    is CALLED), and "auto" reads the corpus size off that same job: each
+    doc adds one weight-1 row, its first gram, or (key, NULL) for a doc
+    with none, and the per-(doc, shingle) dedup keeps the max weight."""
+    sh, n_docs = materialize(
+        df.selectExpr(key, f"{_tokens_sql(text)} AS _t")
+        .selectExpr(key, f"posexplode_outer({_grams_sql('_t', n)}) AS (_p, shingle)")
+        .groupBy(key, "shingle")
+        .agg(F.expr("max(CAST(coalesce(_p, 0) = 0 AS INT)) AS _w")),
+        n_docs=F.sum("_w"),
+    )
+    sh = kept = sh.where("shingle IS NOT NULL").select(key, "shingle")
     if max_shingle_df == "auto":
-        max_shingle_df = max(4096, int(df.count() * 0.01))
+        max_shingle_df = max(4096, int(n_docs * 0.01))
     if max_shingle_df is not None:
         # The hot set must fit executor memory anyway (it is the anti-join's
         # broadcast build side), so collecting it is no new bound: one
@@ -623,59 +636,59 @@ def minhash_signatures(
     corpus-scale shingle strings — the per-doc partial min then combines
     map-side and only one partial row per (doc, map partition) reaches
     the exchange (guide §2 "remove shuffles outright")."""
-    sh = shingles(df, key, text, n, distinct=False)
+    return _signature_agg(
+        shingles(df, key, text, n, distinct=False), key, num_hashes, hasher
+    )
+
+
+def _signature_agg(
+    sh: DataFrame, key: str, num_hashes: int, hasher: str, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """The per-doc MinHash aggregate of a (key, *carry, shingle) stream:
+    (key, *carry, mh_0, ...), each ``carry`` column kept as its min(). A
+    NULL shingle (an outer explode's row for a doc with no n-gram) hashes
+    to NULL, so such a doc gets NULL signatures: the xxhash64 terms are
+    guarded, as xxhash64(NULL, i) is not NULL. The aggregates are one
+    struct in one SQL expression, so the plan costs a few JVM calls
+    instead of several per hash."""
     if hasher == "md5":
-        hp = f"({_h60_sql('shingle')} % {MINHASH_P})"
-        mh = [
-            F.expr(f"({hp} * {a} + {b}) % {MINHASH_P}")
-            for a, b in minhash_coeffs(num_hashes)
-        ]
+        sh = sh.selectExpr("*", f"{_h60_sql('shingle')} % {MINHASH_P} AS _hp")
+        mh = [f"(_hp * {a} + {b}) % {MINHASH_P}" for a, b in minhash_coeffs(num_hashes)]
     elif hasher == "xxhash64":
-        mh = [F.xxhash64(F.col("shingle"), F.lit(i)) for i in range(num_hashes)]
+        mh = [
+            f"CASE WHEN shingle IS NOT NULL THEN xxhash64(shingle, {i}) END"
+            for i in range(num_hashes)
+        ]
     else:
         raise ValueError("hasher must be 'xxhash64' or 'md5'")
-    return sh.groupBy(key).agg(*[F.min(h).alias(f"mh_{i}") for i, h in enumerate(mh)])
+    aggs = [f"min({c}) AS {c}" for c in carry] + [f"min({h}) AS mh_{i}" for i, h in enumerate(mh)]
+    return sh.groupBy(key).agg(F.expr(f"struct({', '.join(aggs)}) AS _g")).selectExpr(key, "_g.*")
 
 
 def _lsh_band_candidates(
-    df: DataFrame,
-    num_hashes: int,
-    bands: int,
-    key: str,
-    text: str,
-    n: int,
-    hasher: str,
+    sig: DataFrame, num_hashes: int, bands: int, key: str, hasher: str
 ) -> DataFrame:
-    """Distinct (d1 < d2) candidate pairs from ONE exploded band self-join
-    (VERDICT r04 next #6): the b band keys explode into (band_idx,
-    band_key) rows and self-join once — the same pigeonhole shape as
-    hamming_pairs — instead of b sequential joins over the banded frame
-    (b small scans, but b shuffle stages). Both hashers already fold the
-    band index into the key, so _b in the join condition is
-    belt-and-braces, not semantics. Plan-gated separately
-    (tests/test_dedup.py::test_minhash_lsh_single_banded_shuffle) because
-    minhash_lsh_pairs checkpoints this stage's output."""
+    """Distinct (d1 < d2) candidate pairs of the signature frame ``sig``
+    (its docs with NULL signatures left out) from ONE exploded band
+    self-join (VERDICT r04 next #6): the b band keys explode into
+    (band_idx, band_key) rows and self-join once — the same pigeonhole
+    shape as hamming_pairs — instead of b sequential joins over the banded
+    frame (b small scans, but b shuffle stages). Both hashers already fold
+    the band index into the key, so _b in the join condition is
+    belt-and-braces, not semantics. ``hasher='md5'`` keys a band on its
+    collision-free concatenated signature values, so band membership is
+    EXACTLY "all r signature values equal", as in the DuckDB oracle. The
+    bands are recomputed on each side of the self-join from ``sig``, which
+    callers checkpoint: b hashes per doc are cheaper than a second
+    checkpoint. Plan-gated separately
+    (tests/test_dedup.py::test_minhash_lsh_single_banded_shuffle)."""
     rows = num_hashes // bands
-    sig = minhash_signatures(df, num_hashes, key, text, n, hasher)
-    mh = [F.col(f"mh_{i}") for i in range(num_hashes)]
-    band_cols = [
-        (
-            F.concat_ws(",", F.lit(str(b)), *mh[b * rows:(b + 1) * rows])
-            if hasher == "md5"
-            else F.xxhash64(F.lit(b), *mh[b * rows:(b + 1) * rows])
-        ).alias(f"band_{b}")
-        for b in range(bands)
-    ]
-    banded = sig.select(key, *band_cols)
-    bv = _bands(banded, {key: F.col(key)}, [F.col(f"band_{b}") for b in range(bands)])
-    # The self-join consumes bv TWICE; without a materialization each side
-    # re-executes the whole signature pipeline (tokenize -> shingle ->
-    # num_hashes mins) over the corpus — measured as a full duplicate pass
-    # at 1M docs. The banded frame is (key, band_idx, band_key): bands
-    # longs per doc, no text — the standard LSH index a production system
-    # persists anyway — so checkpointing it is a narrow per-doc index, not
-    # a corpus-payload materialization.
-    bv = materialize(bv)
+
+    def band(b):
+        mh = ", ".join(f"mh_{i}" for i in range(b * rows, (b + 1) * rows))
+        return f"concat_ws(',', '{b}', {mh})" if hasher == "md5" else f"xxhash64({b}, {mh})"
+
+    bv = _bands(sig.where("mh_0 IS NOT NULL"), {key: key}, [band(b) for b in range(bands)])
     return _band_pairs(bv, key).select("d1", "d2").distinct()
 
 
@@ -688,7 +701,7 @@ def minhash_lsh_pairs(
     text: str = "text",
     n: int = 3,
     hasher: str = "xxhash64",
-    shingle_source: DataFrame | None = None,
+    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs via banded MinHash-LSH, then EXACT Jaccard
     verification of candidates only (no false positives; false-negative
@@ -700,23 +713,24 @@ def minhash_lsh_pairs(
     signature rows (instead of their xxhash64), so band membership is
     EXACTLY "all r signature values equal" on both engines.
 
-    ``shingle_source`` optionally names the frame the exact verify reads
-    candidate texts from; it must agree with ``df`` on (key, text) for
-    every key of ``df``. Pass the PRE-FILTER corpus when ``df`` is an
-    expensively-derived view (curate_near's quality-gated frame): every
-    candidate id came from ``df``'s signatures, so the semi-join below
-    keeps exactly the same docs — but the filter lineage (which Spark does
-    NOT push the semi-join beneath) is never re-evaluated, saving a full
-    corpus pass of gate metrics per query. Defaults to ``df``.
+    ``signatures`` optionally is a checkpointed signature frame the caller
+    already holds: (key, ..., mh_0, ...) as :func:`_signature_agg` builds
+    it over the ``n``-gram shingles with ``hasher``, a doc with no shingle
+    holding NULL signatures (it never bands). The signatures are then not
+    computed again, and ``df`` only supplies the candidates' texts; it
+    must hold (key, text) for every key of ``signatures``.
+    :func:`curate_near` passes its gated signature checkpoint, which
+    carries the gate metrics, with the raw corpus.
 
     Three stages materialize through :func:`escalate.materialize`: the
-    band index, the candidate pairs and the candidate docs' shingle sets.
-    Each runs its job when this function is CALLED."""
-    cand = materialize(_lsh_band_candidates(df, num_hashes, bands, key, text, n, hasher))
-    return _set_jaccard(
-        cand, shingle_source if shingle_source is not None else df,
-        key, text, n, threshold,
+    signatures (unless given), the candidate pairs and the candidate docs'
+    shingle sets (the last two counted on their own jobs). Each runs its
+    job when this function is CALLED."""
+    sig = signatures if signatures is not None else materialize(
+        minhash_signatures(df, num_hashes, key, text, n, hasher)
     )
+    cand = _lsh_band_candidates(sig, num_hashes, bands, key, hasher)
+    return _set_jaccard(cand, df, key, text, n, threshold)
 
 
 def _set_jaccard(
@@ -727,51 +741,65 @@ def _set_jaccard(
     (guide §3 "pre-filter the big side when selective"): ``src``
     semi-join-reduces to the candidate ids BEFORE tokenization, so the set
     table is bounded by the candidates, never the corpus. Each doc's set
-    (array_distinct of its n-grams) and its size are built once behind
-    :func:`escalate.materialize`, and each pair scores |A ∩ B| as
-    size(array_intersect) — no shingle strings shuffle, and no per-pair
-    count aggregate or size join runs. Pairs sharing no shingle are
-    dropped (_c > 0), as :func:`_jaccard`'s shingle join emits no row for
-    them."""
-    cd = (
-        cand.select(F.col("d1").alias(key))
-        .unionByName(cand.select(F.col("d2").alias(key)))
-        .distinct()
+    (array_distinct of its n-grams) and its size are built once, and each
+    pair scores |A ∩ B| as size(array_intersect) — no shingle strings
+    shuffle, and no per-pair count aggregate runs. Pairs
+    sharing no shingle are dropped (_c > 0), as :func:`_jaccard`'s shingle
+    join emits no row for them.
+
+    The candidates and the set table each materialize
+    (:func:`escalate.materialize`), counted on their own checkpoint jobs,
+    and every broadcast below is decided on those counts
+    (``knn._bcast``): the candidate ids (two per pair) go to the
+    semi-join, so ``src`` keeps its own partitions and its text never
+    shuffles; the candidate pairs and the set sizes go to the verify; the
+    sets go to it when their rows AND their shingle total are within the
+    bound (set rows are wide). The verify streams the set table's
+    partitions, one side of each pair, and evaluates array_intersect once
+    per pair behind a single-element explode (the :func:`_quality_gated`
+    barrier: Catalyst would otherwise inline ``_c`` into both filters and
+    the output). The second side's size joins last, so the jaccard filter
+    is that join's condition and the verified pairs are its output rows,
+    which perfbench's traced fold reads (``dedup.lsh.verified_pairs``).
+
+    The set broadcast borrows ``RESIDUE_BROADCAST_ROWS``, a bound sized
+    on exploded point rows; on a shingle total it is not measured. The
+    workloads sit far to either side of it: perfbench's ``curate`` (7,000
+    docs; 3,000 set rows holding 116,000 shingles) broadcasts the sets,
+    and ``bench_extra.py``'s 1M-doc corpus (428,571 set rows, 16.6M
+    shingles) takes the sort-merge verify, its candidate ids, pairs and
+    sizes still broadcast."""
+    cand, n_cand = materialize(cand, n=F.count(F.lit(1)))
+    ids = cand.selectExpr(f"explode(array(d1, d2)) AS {key}")
+    sets, n_sets, n_sh = materialize(
+        src.join(F.broadcast(ids) if _bcast(n_cand, per=2) else ids, key, "leftsemi")
+        .selectExpr(key, f"{_tokens_sql(text)} AS _t")
+        .selectExpr(key, f"array_distinct({_grams_sql('_t', n)}) AS _s")
+        .selectExpr(key, "_s", "size(_s) AS _n"),
+        n=F.count(F.lit(1)),
+        sh=F.sum("_n"),
     )
-    sets = materialize(
-        src.join(cd, key, "leftsemi")
-        .select(key, tokens_col(text).alias("_t"))
-        .select(key, F.expr(f"array_distinct({_grams_sql('_t', n)})").alias("_s"))
-        .select(key, "_s", F.size("_s").alias("_n"))
+    small = _bcast(n_sets, per=1)
+    a = sets.selectExpr(f"{key} AS d1", "_s AS _s1", "_n AS _na")
+    b = sets.selectExpr(f"{key} AS d2", "_s AS _s2")
+    nb = sets.selectExpr(f"{key} AS d2", "_n AS _nb")
+    counted = (
+        a.join(F.broadcast(cand) if _bcast(n_cand, per=1) else cand, "d1")
+        .join(F.broadcast(b) if small and _bcast(n_sh, per=1) else b, "d2")
+        .selectExpr("d1", "d2", "_na", "explode(array(size(array_intersect(_s1, _s2)))) AS _c")
+        .where("_c > 0")
     )
-    a, b = (
-        sets.select(
-            F.col(key).alias(f"d{i}"), F.col("_s").alias(f"_s{i}"), F.col("_n").alias(nc)
-        )
-        for i, nc in ((1, "_na"), (2, "_nb"))
-    )
-    return _jaccard_ratio(
-        cand.join(a, "d1")
-        .join(b, "d2")
-        .select(
-            "d1", "d2", F.size(F.array_intersect("_s1", "_s2")).alias("_c"), "_na", "_nb"
-        )
-        .where(F.col("_c") > 0),
-        threshold,
-    )
+    return _jaccard_ratio(counted.join(F.broadcast(nb) if small else nb, "d2"), threshold)
 
 
-def _bands(df: DataFrame, cols: dict[str, Column], values: list[Column]) -> DataFrame:
-    """One row per band: (``cols``' names, _b = band index, _v = the
-    band's value from ``values``) via a single struct-array explode."""
-    return df.select(
-        *[c.alias(name) for name, c in cols.items()],
-        F.explode(
-            F.array(
-                *[F.struct(F.lit(b).alias("b"), v.alias("v")) for b, v in enumerate(values)]
-            )
-        ).alias("_band"),
-    ).select(*cols, F.col("_band.b").alias("_b"), F.col("_band.v").alias("_v"))
+def _bands(df: DataFrame, cols: dict[str, str], values: list[str]) -> DataFrame:
+    """One row per band: (``cols``' names, each from its SQL, _b = band
+    index, _v = the band's value from the SQL ``values``) via a single
+    struct-array inline, in one projection."""
+    structs = ", ".join(f"struct({b} AS _b, {v} AS _v)" for b, v in enumerate(values))
+    return df.selectExpr(
+        *[f"{c} AS {name}" for name, c in cols.items()], f"inline(array({structs}))"
+    )
 
 
 def _band_pairs(bv: DataFrame, key: str, carry: tuple[str, ...] = ()) -> DataFrame:
@@ -779,12 +807,10 @@ def _band_pairs(bv: DataFrame, key: str, carry: tuple[str, ...] = ()) -> DataFra
     agreeing on (_b, _v), one row per shared band; each ``carry`` column
     ``c`` rides along as ``c1`` / ``c2``."""
     l, r = (
-        bv.select(
-            F.col(key).alias(f"d{s}"), *[F.col(c).alias(f"{c}{s}") for c in carry], "_b", "_v"
-        )
+        bv.selectExpr(f"{key} AS d{s}", *[f"{c} AS {c}{s}" for c in carry], "_b", "_v")
         for s in (1, 2)
     )
-    return l.join(r, ["_b", "_v"]).where(F.col("d1") < F.col("d2"))
+    return l.join(r, ["_b", "_v"]).where("d1 < d2")
 
 
 def hamming_pairs(
@@ -814,8 +840,8 @@ def hamming_pairs(
         width = w if b < bands - 1 else 64 - w * (bands - 1)
         lo = b * w
         mask = -1 if width == 64 else (1 << width) - 1
-        parts.append(F.shiftright(F.col(col), lo).bitwiseAND(F.lit(mask)))
-    bv = _bands(df, {"_hk": F.col(key), "_h": F.col(col)}, parts)
+        parts.append(f"shiftright({col}, {lo}) & {mask}")
+    bv = _bands(df, {"_hk": key, "_h": col}, parts)
     return (
         _band_pairs(bv, "_hk", ("_h",))
         .withColumn(

@@ -69,7 +69,7 @@ def test_minhash_lsh_single_banded_shuffle(docs):
     # the candidate stage is checkpointed inside minhash_lsh_pairs (its
     # bounded output feeds two consumers), which cuts it out of the final
     # explain — gate the stage's own plan via the extracted builder
-    lsh = dedup._lsh_band_candidates(docs, 32, 8, "doc_id", "text", 3, "xxhash64")
+    lsh = dedup._lsh_band_candidates(dedup.minhash_signatures(docs), 32, 8, "doc_id", "xxhash64")
     ham = dedup.hamming_pairs(dedup.simhash64(docs), "simhash")
     for df in (lsh, ham):
         buf = io.StringIO()
@@ -150,21 +150,160 @@ def test_curate_near_gate_stage_has_no_shuffle(docs):
 
 
 def test_curate_near_job_budget(spark, docs):
-    """One curate_near collect runs a bounded number of Spark jobs: 15 at
-    4 and 8 cores (38 with the exploded-shingle verify and per-round label
+    """One curate_near collect runs a bounded number of Spark jobs: 14 at
+    4 and 8 cores (15 with a second gate pass and two cluster joins in the
+    election, 38 with the exploded-shingle verify and per-round label
     propagation). A per-round loop coming back adds jobs per round and
     fails the ceiling."""
-    sc = spark.sparkContext
     docs.count()  # the fixture's cache build is not curate_near's
-    sc.setJobGroup("curate_near_job_budget", "curate_near job budget")
+    rows, jobs = _jobs(spark, "curate_near_job_budget", lambda: dedup.curate_near(
+        docs, min_alpha=0.0, max_repetition=1.0, threshold=0.7
+    ).collect())
+    assert rows and jobs <= 14, jobs
+
+
+def _jobs(spark, group, fn):
+    """(fn(), the number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
     try:
-        rows = dedup.curate_near(
-            docs, min_alpha=0.0, max_repetition=1.0, threshold=0.7
-        ).collect()
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("curate_near_job_budget")
-    assert rows and len(jobs) <= 18, len(jobs)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _plan(df, mode="formatted"):
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain(mode=mode)
+    return buf.getvalue()
+
+
+@pytest.mark.parametrize("hasher", ["xxhash64", "md5"])
+def test_curate_near_short_gated_doc_survives(spark, docs, hasher):
+    """A doc that passes the gates with fewer than shingle_n tokens has no
+    signature and no band: it reaches the election as a singleton
+    (n_near_dups = 1), and so does its exact copy."""
+    short = spark.createDataFrame(
+        [(3000, "alpha beta"), (3001, "alpha beta")], docs.schema
+    )
+    out = {
+        r["doc_id"]: r["n_near_dups"]
+        for r in dedup.curate_near(
+            docs.unionByName(short), min_alpha=0.0, max_repetition=1.0,
+            threshold=0.7, hasher=hasher,
+        ).collect()
+    }
+    assert out[3000] == 1 and out[3001] == 1
+    assert 2000 not in out and out[7] >= 2
+
+
+def test_curate_near_election_reads_only_checkpoints(docs):
+    """The frame curate_near returns reads the signature checkpoint (which
+    carries the gate metrics) and the cluster table, never the docs: the
+    gate runs once per doc."""
+    out = dedup.curate_near(docs, min_alpha=0.0, max_repetition=1.0, threshold=0.7)
+    leaves = out._jdf.queryExecution().optimizedPlan().collectLeaves()
+    names = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+    assert "LogicalRDD" in names and names <= {"LogicalRDD", "LocalRelation"}, names
+
+
+def test_curate_near_never_shuffles_text(spark, docs, monkeypatch):
+    """No Exchange of any curate_near job carries the text column: the
+    candidate semi-join broadcasts the counted-small candidate ids, so the
+    docs keep their partitions, and nothing after it reads the text. The
+    jobs are the checkpoints, the cluster collect over the pairs and the
+    final action."""
+    frames = []
+    real_mat, real_clusters = dedup.materialize, dedup.dedup_clusters
+
+    def mat(df, **metrics):
+        frames.append(df)
+        return real_mat(df, **metrics)
+
+    def clusters(pairs, *a, **k):
+        frames.append(pairs)
+        return real_clusters(pairs, *a, **k)
+
+    monkeypatch.setattr(dedup, "materialize", mat)
+    monkeypatch.setattr(dedup, "dedup_clusters", clusters)
+    frames.append(dedup.curate_near(docs, min_alpha=0.0, max_repetition=1.0, threshold=0.7))
+    assert len(frames) == 5
+    for df in frames:
+        plan = _plan(df)
+        for node in plan.split("\n\n"):
+            head = node.strip().splitlines()[0] if node.strip() else ""
+            if "Exchange" in head and not head.startswith("+-"):
+                assert "text#" not in node, node
+
+
+def test_set_verify_intersects_once(spark):
+    """The verify evaluates array_intersect once per pair: behind the
+    single-element explode, the filters and the jaccard read its count.
+    The second side's sizes join after it, so the jaccard filter is that
+    join's condition and the verified pairs are one join node's output
+    rows (perfbench's tracing fold counts dedup.lsh.verified_pairs off
+    it)."""
+    src = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "x y z w")], "doc_id long, text string"
+    )
+    cand = spark.createDataFrame([(1, 2), (1, 3)], "d1 long, d2 long")
+    out = dedup._set_jaccard(cand, src, "doc_id", "text", 3, 0.2)
+    plan = _plan(out, "simple")
+    assert plan.count("array_intersect(") == 1
+    joins = [ln for ln in plan.splitlines() if "Join" in ln and "_nb#" in ln and " >= " in ln]
+    assert len(joins) == 1, plan
+    assert [tuple(r) for r in out.collect()] == [(1, 2, 0.5)]
+
+
+def test_set_verify_unbroadcast_same_rows(spark, docs, monkeypatch):
+    """With the counted broadcasts off (``RESIDUE_BROADCAST_ROWS = 0``) and
+    the planner's own broadcasts off, the candidate semi-join and every
+    verify join take their shuffled plans, the ones a corpus over the
+    bound takes. _set_jaccard, minhash_lsh_pairs and curate_near return
+    the same rows as on the default (broadcast) path."""
+    from maskmypy_spark.operators import knn
+
+    def runs():
+        sig = dedup.materialize(dedup.minhash_signatures(docs))
+        cand = dedup._lsh_band_candidates(sig, 32, 8, "doc_id", "xxhash64")
+        verify = dedup._set_jaccard(cand, docs, "doc_id", "text", 3, 0.5)
+        return _plan(verify), [
+            sorted(verify.collect()),
+            sorted(dedup.minhash_lsh_pairs(docs, 0.5, hasher="md5").collect()),
+            sorted(dedup.curate_near(
+                docs, min_alpha=0.0, max_repetition=1.0, threshold=0.7
+            ).collect()),
+        ]
+
+    default_plan, default = runs()
+    assert "BroadcastHashJoin" in default_plan
+    monkeypatch.setattr(knn, "RESIDUE_BROADCAST_ROWS", 0)
+    conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        shuffled_plan, shuffled = runs()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", conf)
+    assert "Broadcast" not in shuffled_plan and "SortMergeJoin" in shuffled_plan
+    assert all(default) and shuffled == default
+
+
+def test_ngram_jaccard_auto_cap_runs_no_count_job(spark, docs):
+    """max_shingle_df="auto" reads the corpus size off the shingle
+    checkpoint's own job: it runs as many jobs as the same cap given (9;
+    11 with a separate count), with identical pairs."""
+    docs.count()  # the fixture's cache build is not the call's
+    auto, n_auto = _jobs(spark, "ngram_auto", lambda: dedup.ngram_jaccard_pairs(docs, 0.7).collect())
+    given, n_given = _jobs(
+        spark, "ngram_given", lambda: dedup.ngram_jaccard_pairs(docs, 0.7, max_shingle_df=4096).collect()
+    )
+    assert sorted(auto) == sorted(given) and len(auto) >= 5
+    assert n_auto == n_given <= 9, (n_auto, n_given)
 
 
 def test_simhash_hamming_close_for_neardups(docs):
@@ -359,7 +498,8 @@ def test_set_verify_md5_matches_oracle(spark):
     from test_contract import SF, _duck, _norm
 
     docs_sf = tables.load(spark, SF, "documents")
-    cand = dedup._lsh_band_candidates(docs_sf, 32, 8, "doc_id", "text", 3, "md5")
+    sig = dedup.minhash_signatures(docs_sf, 32, hasher="md5")
+    cand = dedup._lsh_band_candidates(sig, 32, 8, "doc_id", "md5")
     t = contract.JACCARD_T
     got = sorted(dedup._set_jaccard(cand, docs_sf, "doc_id", "text", 3, t).collect())
     assert got == sorted(_explode_verify(cand, docs_sf, t).collect())

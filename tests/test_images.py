@@ -38,6 +38,26 @@ def test_average_hash_deterministic_and_sensitive():
     assert h1 != imagecodec.average_hash(img2)
 
 
+def test_average_hash_small_images():
+    """Under 8 px a side each block keeps at least one pixel row and
+    column: random 6x8 images hash apart (each hashed to 0 when their
+    blocks averaged empty slices, with a "Mean of empty slice" warning),
+    and images of 8 px or more keep their block layout (the integer
+    oracle's equal-sized blocks)."""
+    import warnings
+
+    from maskmypy_spark.plans import media_oracle
+
+    rs = np.random.RandomState(4)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        small = [imagecodec.average_hash(rs.randint(0, 256, (6, 8, 3), dtype=np.uint8)) for _ in range(3)]
+    assert len(set(small)) == 3, small
+    for h, w in [(8, 8), (16, 24)]:
+        img = rs.randint(0, 256, (h, w, 3), dtype=np.uint8)
+        assert imagecodec.average_hash(img) == media_oracle.avg_hash_exact(img), (h, w)
+
+
 def test_fixture_generation_deterministic(spark):
     a = fixtures.sensitive_images(spark, 60, seed=42).orderBy("pid").collect()
     b = fixtures.sensitive_images(spark, 60, seed=42).orderBy("pid").collect()

@@ -135,6 +135,7 @@ def main() -> None:
         "unit": "sec",
         "docs": meta["docs"],
         "kept": meta["kept"],
+        "hash": meta["hash"],
         "docs_per_sec": round(meta["docs"] / best, 1),
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         "protocol": {

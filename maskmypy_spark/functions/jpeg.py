@@ -246,7 +246,13 @@ def _quantize_planes(
     h, w, _ = img.shape
     mh, mw = 8 * vmax, 8 * hmax  # MCU pixel dims
     ph, pw = (h + mh - 1) // mh * mh, (w + mw - 1) // mw * mw
-    rgb = np.pad(img.astype(np.float64), ((0, ph - h), (0, pw - w), (0, 0)), "edge")
+    # mirror padding: edge replication turns a tiny image into a few flat
+    # steps whose coefficient rounding errors add up coherently (a 2x2
+    # gray image at quality 100 came back 2 off); a mirrored lattice
+    # spreads them out and halves the mean edge-block error
+    rgb = np.pad(
+        img.astype(np.float64), ((0, ph - h), (0, pw - w), (0, 0)), "symmetric"
+    )
     r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
     ycc = np.stack(
         [
@@ -1076,4 +1082,35 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         [y + 1.402 * cr, y - 0.344136 * cb - 0.714136 * cr, y + 1.772 * cb],
         axis=2,
     )
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
+    return np.clip(np.round(_gamut_clip(rgb)), 0, 255).astype(np.uint8)
+
+
+_LUMA = np.array([0.299, 0.587, 0.114])
+
+
+def _gamut_clip(rgb: np.ndarray) -> np.ndarray:
+    """Bring out-of-range colors into [0, 255] without changing their luma.
+
+    Subsampled chroma on busy content reconstructs colors outside the RGB
+    cube; a per-channel clamp of those shifts their luma by whatever was
+    cut off (a 2x32 noise image at 4:2:2, quality 98 loses ~11 dB of luma
+    PSNR that way). Each such pixel instead goes to the nearest point of
+    the cube with the decoded luma: ``clip(x + lam * _LUMA)`` for the
+    ``lam`` that restores it, found by bisection (luma is monotone in
+    ``lam``). In-range pixels are untouched."""
+    out = (rgb < 0.0) | (rgb > 255.0)
+    bad = out.any(axis=-1)
+    if not bad.any():
+        return rgb
+    x = rgb[bad]
+    target = np.clip(x @ _LUMA, 0.0, 255.0)
+    lo = np.full(len(x), -1e4)
+    hi = np.full(len(x), 1e4)
+    for _ in range(48):
+        mid = (lo + hi) / 2
+        below = np.clip(x + mid[:, None] * _LUMA, 0.0, 255.0) @ _LUMA < target
+        lo = np.where(below, mid, lo)
+        hi = np.where(below, hi, mid)
+    rgb = rgb.copy()
+    rgb[bad] = np.clip(x + ((lo + hi) / 2)[:, None] * _LUMA, 0.0, 255.0)
+    return rgb

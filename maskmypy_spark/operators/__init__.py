@@ -6,6 +6,6 @@ from .knn import nearest_neighbor  # noqa: F401
 from .locationswap import locationswap  # noqa: F401
 from .pip import pip_join, polygon_edges  # noqa: F401
 from .snap import snap_to_nodes  # noqa: F401
-from .street import street, street_by_region, street_k  # noqa: F401
+from .street import street, street_k  # noqa: F401
 from .suppress import suppress  # noqa: F401
 from .voronoi import voronoi  # noqa: F401

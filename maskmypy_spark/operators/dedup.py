@@ -80,19 +80,23 @@ def doc_tokens(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataFr
 
 def doc_quality(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
     """Heuristic quality scores: alphabetic ratio, stopword ratio, mean
-    token length — the standard cheap pre-filters of web-scale corpora."""
+    token length — the standard cheap pre-filters of web-scale corpora. A
+    zero denominator (the empty text) gives a NULL ratio, as in
+    :func:`_quality_gated`, instead of failing the query."""
     toks = tokens_col(text)
+    n_chars = F.nullif(F.length(text), F.lit(0))
+    n_toks = F.nullif(F.size(toks), F.lit(0))
     return df.select(
         key,
         F.round(
-            F.length(F.regexp_replace(text, "[^a-zA-Z]", "")) / F.length(text), 6
+            F.length(F.regexp_replace(text, "[^a-zA-Z]", "")) / n_chars, 6
         ).alias("alpha_ratio"),
         F.round(
-            F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))) / F.size(toks),
+            F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))) / n_toks,
             6,
         ).alias("stopword_ratio"),
         F.round(
-            F.length(F.regexp_replace(text, r"\s+", "")) / F.size(toks), 6
+            F.length(F.regexp_replace(text, r"\s+", "")) / n_toks, 6
         ).alias("mean_token_len"),
     )
 

@@ -192,9 +192,9 @@ def cell_join(
     side: a kNN ``others`` layer that the call's extent job COUNTED under
     knn.RESIDUE_BROADCAST_ROWS, or the one ``distance_join`` caller that
     declares its side small (``broadcast_right``: ``k_verify_stream``).
-    'left' broadcasts a probe side the caller has COUNTED small (a
-    driver-side bound like street's max_graph_nodes, never a planner
-    estimate), so the build side streams map-side instead of re-shuffling.
+    'left' broadcasts a probe side the caller has COUNTED small (a kNN
+    residue counted on its round's checkpoint, never a planner estimate),
+    so the build side streams map-side instead of re-shuffling.
     'merge' pins the shuffled sort-merge join for fact x fact joins:
     Catalyst's sizeInBytes ignores the ring explode, so a mid-size exploded
     side sneaks under the 64 MB auto-broadcast threshold and the planner

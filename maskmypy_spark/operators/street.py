@@ -17,12 +17,32 @@ Reference: /root/reference/maskmypy/masks/street.py:202-293.
    |dist - target_distance|. Engine tie-breaks by (distance, node_id) —
    deterministic under any partitioning (networkx's heap order is not).
 
-Execution: roads are a broadcast CSR (numpy int/float arrays — the graph is
-a small dimension vs the point fact table); snapping is the exact kNN join;
-Dijkstras run ONCE PER DISTINCT (snapped node, target) pair via
-applyInPandas, then equi-join back to points — at scale, millions of points
-collapse onto the (bounded) set of road nodes, so Dijkstra work is O(nodes),
-not O(points).
+Execution: no copy of the graph reaches the driver. One checkpoint joins
+every edge to its endpoints' coordinates; its job also reads the
+endpoints' extent, the count of snap-valid edges and the ratio
+``r = min(length / hypot(endpoints))`` over the edges with hypot > 0.
+Snap-valid nodes are the distinct endpoints of the edges with length <=
+max_length (a distributed semi-join), and snapping is the exact kNN join
+against them. Dijkstras run ONCE PER DISTINCT (snapped node, target) pair
+— millions of points collapse onto the road nodes, so Dijkstra work is
+O(nodes), not O(points) — each on the subgraph of its snapped node's
+region: with region size = margin, an edge goes to every region whose
+3x3 block of cells holds both of its endpoints, so the subgraph holds
+every edge whose endpoints both lie within ``margin`` of the snapped
+node. The picks equi-join back to the points.
+
+Certificate: a path is at least ``r`` times as long as the straight line
+between its ends (triangle inequality, edge by edge), so a Dijkstra whose
+final cutoff is C settles, and relaxes edges of, nodes within C / r of
+its start only. A pair with ``C <= r * margin`` (less a 1e-9 relative
+slack for rounding) therefore saw the same nodes and edges at each of its
+cutoffs as the whole graph shows, so it made the same decisions and
+picked the same node: it is settled. The others escalate
+(``escalate.escalate``) with the margin doubled each round; the round
+whose margin covers the endpoints' extent runs on the whole graph as one
+group and settles every pair. That holds for any non-negative edge
+weights: weights in other units or a "tunnel" edge lower r (more pairs
+escalate), and r = 0 starts at the whole-graph round.
 """
 
 from __future__ import annotations
@@ -33,78 +53,141 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import rng
+from ..functions import cells, rng
 from ..functions.masksql import _project
-from .escalate import materialize
+from .escalate import escalate, materialize
 from .knn import nearest_neighbor
 
+# Relative slack on the certificate, far above the float rounding of a
+# path sum, the ratio r and the region cells, so rounding can only make a
+# pair escalate, never certify one.
+_SLACK = 1.0 - 1e-9
+_PAIRS = ["_sn_id", "_sn_x", "_sn_y", "_target"]
+_PICKS = (
+    "_sn_id long, _sn_x double, _sn_y double, _target int, _mx double, _my double, _cut double"
+)
 
-def build_csr(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame, max_length: float):
-    """Dense-index CSR adjacency + node coordinate arrays (driver-side;
-    broadcast to executors via task closure / sc.broadcast)."""
-    ids = nodes_pdf["node_id"].to_numpy(np.int64)
-    order = np.argsort(ids)
-    ids = ids[order]
-    xs = nodes_pdf["nx"].to_numpy(np.float64)[order]
-    ys = nodes_pdf["ny"].to_numpy(np.float64)[order]
-    remap = {int(v): i for i, v in enumerate(ids)}
-    src = edges_pdf["src"].map(remap).to_numpy()
-    dst = edges_pdf["dst"].map(remap).to_numpy()
+
+def build_csr(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame):
+    """Dense-index CSR adjacency + node coordinate arrays of one subgraph.
+    ``nodes_pdf`` (node_id, nx, ny) may repeat a node; its dense index is
+    its rank among the sorted distinct ids. The ids and the adjacency are
+    Python lists: the Dijkstra loop reads them element by element, at about
+    half the cost of numpy scalar indexing."""
+    ids, first = np.unique(nodes_pdf["node_id"].to_numpy(np.int64), return_index=True)
+    xs = nodes_pdf["nx"].to_numpy(np.float64)[first]
+    ys = nodes_pdf["ny"].to_numpy(np.float64)[first]
+    src = np.searchsorted(ids, edges_pdf["src"].to_numpy(np.int64))
+    dst = np.searchsorted(ids, edges_pdf["dst"].to_numpy(np.int64))
     w = edges_pdf["length"].to_numpy(np.float64)
     s = np.argsort(src, kind="stable")
     src, dst, w = src[s], dst[s], w[s]
     indptr = np.searchsorted(src, np.arange(len(ids) + 1))
-    # global node validity: >=1 incident edge with length <= max_length
-    valid = np.zeros(len(ids), dtype=bool)
-    ok = w <= max_length
-    valid[src[ok]] = True
-    valid[dst[ok]] = True
     return {
-        "ids": ids, "xs": xs, "ys": ys,
-        "indptr": indptr, "indices": dst, "weights": w, "valid": valid,
+        "ids": ids.tolist(), "xs": xs, "ys": ys,
+        "indptr": indptr.tolist(), "indices": dst.tolist(), "weights": w.tolist(),
     }
 
 
-def _dijkstra_pick(csr, start_dense: int, target: int, max_length: float):
+def _dijkstra_pick(csr, start_dense: int, target: int, max_length: float, balls=None):
     """First `target` nodes by network distance (cutoff-doubling), then the
     node minimizing (|d - mean|, node_id). Returns (dense node index,
-    final cutoff) — the cutoff bounds the explored ball, which
-    street_by_region uses to certify boundary-independence.
+    final cutoff) — the cutoff bounds the explored ball, which street
+    uses to certify a regional run. ``balls`` (cutoff -> the ball's
+    (distance, node_id)-sorted items) caches one start node's balls across
+    its targets: a ball depends on the start and the cutoff only.
 
     Termination: if the reachable set stops growing between doublings (the
     snapped node's connected component has fewer than `target` nodes), fall
     back to the mean over what exists — the reference's identical loop
     (masks/street.py:257-262) would spin forever on such a component; here
     it would hang a distributed task, so the guard is mandatory."""
-    indptr, indices, weights = csr["indptr"], csr["indices"], csr["weights"]
+    indptr, indices, weights, ids = csr["indptr"], csr["indices"], csr["weights"], csr["ids"]
+    balls = {} if balls is None else balls
     cutoff = max_length
     prev_reached = -1
     while True:
-        dist: dict[int, float] = {}
-        heap = [(0.0, start_dense)]
-        while heap:
-            d, u = heapq.heappop(heap)
-            if u in dist:
-                continue
-            if d > cutoff:
-                continue
-            dist[u] = d
-            for e in range(indptr[u], indptr[u + 1]):
-                v = indices[e]
-                nd = d + weights[e]
-                if nd <= cutoff and v not in dist:
-                    heapq.heappush(heap, (nd, v))
-        if len(dist) >= target:
+        if cutoff not in balls:
+            dist: dict[int, float] = {}
+            heap = [(0.0, start_dense)]
+            while heap:
+                d, u = heapq.heappop(heap)
+                if u in dist:
+                    continue
+                if d > cutoff:
+                    continue
+                dist[u] = d
+                for e in range(indptr[u], indptr[u + 1]):
+                    v = indices[e]
+                    nd = d + weights[e]
+                    if nd <= cutoff and v not in dist:
+                        heapq.heappush(heap, (nd, v))
+            balls[cutoff] = sorted(dist.items(), key=lambda kv: (kv[1], ids[kv[0]]))
+        items = balls[cutoff]
+        if len(items) >= target:
             break
-        if len(dist) == prev_reached:
+        if len(items) == prev_reached:
             break  # exhausted the connected component; use all reachable
-        prev_reached = len(dist)
+        prev_reached = len(items)
         cutoff *= 2.0
-    n_take = min(target, len(dist))
-    items = sorted(dist.items(), key=lambda kv: (kv[1], csr["ids"][kv[0]]))[:n_take]
-    mean_d = sum(d for _, d in items) / n_take
-    best = min(items, key=lambda kv: (abs(kv[1] - mean_d), csr["ids"][kv[0]]))
+    items = items[:target]
+    mean_d = sum(d for _, d in items) / len(items)
+    best = min(items, key=lambda kv: (abs(kv[1] - mean_d), ids[kv[0]]))
     return best[0], cutoff
+
+
+def _pick_round(pairs: DataFrame, eg: DataFrame, margin: float | None, max_length: float):
+    """Every distinct pair of ``pairs`` with its pick (_mx, _my) and final
+    cutoff (_cut), from a Dijkstra on the subgraph of the edges ``eg`` in
+    its snapped node's region of size ``margin`` (an edge lies in the
+    regions whose 3x3 block holds both of its endpoints' cells), or on the
+    whole graph as one group when ``margin`` is None."""
+    if margin is None:
+        keyed = pairs.withColumn("_region", F.lit(0))
+        graph = eg.withColumn("_region", F.lit(0))
+    else:
+        keyed = pairs.withColumn("_region", F.expr(cells.cell_sql("_sn_x", "_sn_y", margin)))
+        k = cells.CELL_K
+        graph = eg.selectExpr(
+            "*",
+            f"{cells.cell_sql('_ax', '_ay', margin)} AS _ca",
+            f"{cells.cell_sql('_bx', '_by', margin)} AS _cb",
+            f"explode(array({', '.join(map(str, cells.ring_offsets(1)))})) AS _o",
+        ).selectExpr(*eg.columns, "_ca + _o AS _region", "_cb").where(
+            f"abs(_region DIV {k} - _cb DIV {k}) <= 1 AND abs(_region % {k} - _cb % {k}) <= 1"
+        ).drop("_cb")
+
+    def pick(_key, prs: pd.DataFrame, g: pd.DataFrame) -> pd.DataFrame:
+        if prs.empty:  # a region the graph reaches but no pair does
+            return prs[_PAIRS].assign(_mx=0.0, _my=0.0, _cut=0.0)
+        ends = pd.DataFrame({
+            "node_id": np.concatenate([g["src"], g["dst"], prs["_sn_id"]]),
+            "nx": np.concatenate([g["_ax"], g["_bx"], prs["_sn_x"]]),
+            "ny": np.concatenate([g["_ay"], g["_by"], prs["_sn_y"]]),
+        })
+        csr = build_csr(ends, g)
+        starts = np.searchsorted(csr["ids"], prs["_sn_id"].to_numpy(np.int64))
+        targets = prs["_target"].to_numpy(np.int64)
+        dense = np.empty(len(prs), np.int64)
+        cut = np.empty(len(prs))
+        last = -1
+        for i in np.argsort(starts, kind="stable"):
+            if starts[i] != last:  # one start node's balls at a time
+                balls, last = {}, starts[i]
+            dense[i], cut[i] = _dijkstra_pick(
+                csr, int(starts[i]), int(targets[i]), max_length, balls
+            )
+        return prs[_PAIRS].assign(_mx=csr["xs"][dense], _my=csr["ys"][dense], _cut=cut)
+
+    # one pinned partition per core: AQE would coalesce a small shuffle onto
+    # one core, and each further Python task pays its own start-up. The
+    # distinct runs on the region partitioning, with no exchange of its own.
+    n = pairs.sparkSession.sparkContext.defaultParallelism
+    return (
+        keyed.repartition(n, "_region").distinct().groupBy("_region")
+        .cogroup(graph.repartition(n, "_region").groupBy("_region"))
+        .applyInPandas(pick, schema=_PICKS)
+    )
 
 
 def street(
@@ -118,45 +201,48 @@ def street(
     key: str = "pid",
     x: str = "x",
     y: str = "y",
-    max_graph_nodes: int = 20_000_000,
 ) -> DataFrame:
     """Mask points onto the road network (all payload columns preserved).
-
-    The road graph is a driver-materialized broadcast dimension — fine for
-    city/region graphs, a hard wall for continent-scale networks.
-    ``max_graph_nodes`` makes that assumption explicit: exceeding it raises
-    instead of silently OOMing the driver (at the default bound the CSR is
-    ~1 GB of numpy arrays)."""
+    Exact at any graph size (see the module docstring); raises ValueError
+    when no edge is as short as ``max_length``, so no node is snap-valid."""
     if low >= high:
         raise ValueError("Minimum target node count must be below maximum.")
     seed = rng.gen_seed() if not seed else seed
+    max_length = float(max_length)
 
-    spark = df.sparkSession
-    n_nodes = nodes.count()
-    if n_nodes > max_graph_nodes:
+    ends = [
+        nodes.select(
+            F.col("node_id").alias(e), F.col("nx").alias(f"_{c}x"), F.col("ny").alias(f"_{c}y")
+        )
+        for e, c in (("src", "a"), ("dst", "b"))
+    ]
+    h = F.hypot(F.col("_bx") - F.col("_ax"), F.col("_by") - F.col("_ay"))
+    eg, span, r, n_ok = materialize(
+        edges.select("src", "dst", "length").join(ends[0], "src").join(ends[1], "dst"),
+        span=F.greatest(
+            F.max(F.greatest("_ax", "_bx")) - F.min(F.least("_ax", "_bx")),
+            F.max(F.greatest("_ay", "_by")) - F.min(F.least("_ay", "_by")),
+        ),
+        r=F.min(F.when(h > 0, F.col("length") / h)),
+        n_ok=F.sum((F.col("length") <= F.lit(max_length)).cast("long")),
+    )
+    if not n_ok:
         raise ValueError(
-            f"Road graph has {n_nodes} nodes > max_graph_nodes={max_graph_nodes}; "
-            "the street mask materializes the graph on the driver. Use "
-            "street_by_region(...) (fully distributed, per-region subgraphs) "
-            "or raise the bound explicitly."
+            f"street: no edge has length <= max_length={max_length}, so no road "
+            "node is snap-valid."
         )
-    nodes_pdf = nodes.toPandas()
-    edges_pdf = edges.toPandas()
-    csr = build_csr(nodes_pdf, edges_pdf, max_length)
-    bc = spark.sparkContext.broadcast(csr)
 
-    valid_nodes = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "_sn_id": csr["ids"][csr["valid"]],
-                "_sn_x": csr["xs"][csr["valid"]],
-                "_sn_y": csr["ys"][csr["valid"]],
-            }
-        )
+    # snap-valid nodes, checkpointed once for the kNN call's extent job and
+    # its rounds
+    ok = eg.where(F.col("length") <= F.lit(max_length))
+    valid_nodes = materialize(
+        ok.select(
+            F.col("src").alias("_sn_id"), F.col("_ax").alias("_sn_x"), F.col("_ay").alias("_sn_y")
+        ).unionByName(ok.select("dst", "_bx", "_by").toDF("_sn_id", "_sn_x", "_sn_y")).distinct()
     )
     snapped = nearest_neighbor(
         df, valid_nodes, key=key, x=x, y=y, okey="_sn_id", ox="_sn_x", oy="_sn_y"
-    ).drop("_sn_x", "_sn_y", "nn_dist")
+    ).drop("nn_dist")
 
     # per-row target node count from the hash-RNG: low + floor(u*(high-low))
     snapped = snapped.withColumn(
@@ -169,190 +255,26 @@ def street(
         ).cast("int"),
     )
 
-    configs = snapped.select("_sn_id", "_target").distinct()
+    # margins double from 8 * max_length, with a relative headroom of 1e-6
+    # so that a cutoff (max_length * 2^k) equal to the nominal margin
+    # certifies on straight-line lengths (r = 1 up to rounding); the last
+    # round's margin covers the extent and runs on the whole graph
+    margin = 8.0 * max_length * (1.0 + 1e-6)
+    rounds = 1
+    while r > 0 and 0 < margin * 2 ** (rounds - 1) < span:
+        rounds += 1
 
-    def run_configs(it):
-        csr_l = bc.value
-        remap = {int(v): i for i, v in enumerate(csr_l["ids"])}
-        for pdf in it:
-            outs = []
-            for nid, tgt in zip(pdf["_sn_id"], pdf["_target"]):
-                dense, _ = _dijkstra_pick(csr_l, remap[int(nid)], int(tgt), max_length)
-                outs.append(
-                    (int(nid), int(tgt), float(csr_l["xs"][dense]), float(csr_l["ys"][dense]))
-                )
-            yield pd.DataFrame(
-                outs, columns=["_sn_id", "_target", "_mx", "_my"]
-            )
+    def step(pairs, rnd, _n):
+        if rnd == rounds - 1:
+            return _pick_round(pairs, eg, None, max_length), F.lit(True)
+        m = margin * 2**rnd
+        return _pick_round(pairs, eg, m, max_length), F.col("_cut") <= F.lit(_SLACK * r * m)
 
-    resolved = configs.repartition(max(8, spark.sparkContext.defaultParallelism)).mapInPandas(
-        run_configs, schema="_sn_id long, _target int, _mx double, _my double"
+    resolved = escalate(snapped.select(*_PAIRS), step, lambda _: None, rounds)
+    out = snapped.drop("_sn_x", "_sn_y").join(
+        resolved.select("_sn_id", "_target", "_mx", "_my"), ["_sn_id", "_target"]
     )
-
-    out = snapped.join(resolved, ["_sn_id", "_target"])
     return _project(out, sets={x: "_mx", y: "_my"}, drop=("_sn_id", "_target", "_mx", "_my"))
-
-
-def street_by_region(
-    df: DataFrame,
-    low: int,
-    high: int,
-    nodes: DataFrame,
-    edges: DataFrame,
-    region_size: float,
-    margin: float | None = None,
-    max_length: float = 1000.0,
-    seed: int | None = None,
-    key: str = "pid",
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
-    """Street mask WITHOUT the driver-materialized graph bound — the
-    continent-scale path ``street`` points to at street.py:132-137.
-
-    Fully distributed: points hash into coarse grid regions
-    (``region_size``); every road node replicates to the regions within
-    ``margin`` of it (cell-ring explode); edges follow when BOTH endpoints
-    are present; one ``cogroup().applyInPandas`` then snaps + Dijkstra-picks
-    each region against its LOCAL subgraph — no driver collect, no
-    broadcast, graph memory per task = one region's margin-expanded
-    subgraph.
-
-    Node snap-validity is computed GLOBALLY first (one distributed
-    semi-join: >=1 incident edge <= max_length) and shipped as a flag, so
-    boundary truncation cannot flip it.
-
-    Semantics vs :func:`street`: identical whenever a point's snap distance
-    plus its final Dijkstra cutoff fits inside ``margin`` (everything the
-    global algorithm would explore is present in the local subgraph). The
-    output column ``region_exact`` certifies that bound PER ROW — rows
-    where it is False (points near a region border with an unusually deep
-    exploration) may differ from the global mask; re-run those few through
-    ``street`` or enlarge ``margin``. Default margin = 8 * max_length
-    (three cutoff doublings beyond the snap ball).
-    """
-    import math as _math
-
-    if low >= high:
-        raise ValueError("Minimum target node count must be below maximum.")
-    seed = rng.gen_seed() if not seed else seed
-    margin = float(margin if margin is not None else 8.0 * max_length)
-
-    from ..functions import cells
-
-    ok = edges.where(F.col("length") <= float(max_length))
-    valid_ids = (
-        ok.select(F.col("src").alias("node_id"))
-        .unionByName(ok.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .withColumn("_valid", F.lit(1))
-    )
-    nodes_v = nodes.join(valid_ids, "node_id", "left").withColumn(
-        "_valid", F.coalesce("_valid", F.lit(0))
-    )
-
-    ring = max(1, int(_math.ceil(margin / float(region_size))))
-    ncell = F.expr(cells.cell_sql("nx", "ny", float(region_size)))
-    repn = nodes_v.withColumn(
-        "_region",
-        F.explode(F.array(*[ncell + F.lit(o) for o in cells.ring_offsets(ring)])),
-    )
-    rep_src = repn.select(F.col("node_id").alias("src"), "_region")
-    rep_dst = repn.select(F.col("node_id").alias("dst"), "_region")
-    repe = edges.join(rep_src, "src").join(rep_dst, ["dst", "_region"])
-
-    # nodes + edges as ONE discriminated frame (cogroup takes two sides)
-    graph = repn.select(
-        "_region",
-        F.lit(0).alias("_kind"),
-        F.col("node_id").alias("_a"),
-        F.col("nx").alias("_u"),
-        F.col("ny").alias("_v"),
-        F.col("_valid").cast("double").alias("_w"),
-    ).unionByName(
-        repe.select(
-            "_region",
-            F.lit(1).alias("_kind"),
-            F.col("src").alias("_a"),
-            F.col("dst").cast("double").alias("_u"),
-            F.col("length").alias("_v"),
-            F.lit(0.0).alias("_w"),
-        )
-    )
-
-    pts = df.withColumn("_region", F.expr(cells.cell_sql(x, y, float(region_size))))
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", region_exact boolean"
-    cols = list(df.columns)
-    xi, yi = cols.index(x), cols.index(y)
-    span = int(high - low)
-
-    def mask_region(_k, pts_pdf, graph_pdf):
-        if len(pts_pdf) == 0:
-            return pts_pdf[cols].assign(region_exact=np.zeros(0, dtype=bool))
-        nmask = graph_pdf["_kind"].to_numpy() == 0
-        npdf = pd.DataFrame(
-            {
-                "node_id": graph_pdf.loc[nmask, "_a"].to_numpy(np.int64),
-                "nx": graph_pdf.loc[nmask, "_u"].to_numpy(np.float64),
-                "ny": graph_pdf.loc[nmask, "_v"].to_numpy(np.float64),
-            }
-        )
-        valid = graph_pdf.loc[nmask, "_w"].to_numpy(np.float64) > 0.5
-        epdf = pd.DataFrame(
-            {
-                "src": graph_pdf.loc[~nmask, "_a"].to_numpy(np.int64),
-                "dst": graph_pdf.loc[~nmask, "_u"].to_numpy(np.int64),
-                "length": graph_pdf.loc[~nmask, "_v"].to_numpy(np.float64),
-            }
-        )
-        if not valid.any():
-            raise ValueError(
-                "street_by_region: a region has points but no snap-valid "
-                "node within margin — enlarge margin or region_size."
-            )
-        csr = build_csr(npdf, epdf, max_length)
-        # build_csr recomputes validity from the TRUNCATED subgraph; ship
-        # the global flag instead (aligned to build_csr's id sort)
-        order = np.argsort(npdf["node_id"].to_numpy(np.int64))
-        csr["valid"] = valid[order]
-        remap = {int(v): i for i, v in enumerate(csr["ids"])}
-
-        vxs = csr["xs"][csr["valid"]]
-        vys = csr["ys"][csr["valid"]]
-        vids = csr["ids"][csr["valid"]]
-        pids = pts_pdf[key].to_numpy(np.int64)
-        pxs = pts_pdf[x].to_numpy(np.float64)
-        pys = pts_pdf[y].to_numpy(np.float64)
-        us = rng.u_np(pids, rng.TAG_STREET_N, seed)
-        targets = (low + np.floor(us * span)).astype(np.int64)
-
-        out = pts_pdf[cols].copy()
-        exact = np.zeros(len(pts_pdf), dtype=bool)
-        mxs = np.empty(len(pts_pdf))
-        mys = np.empty(len(pts_pdf))
-        for i in range(len(pts_pdf)):
-            d2 = (vxs - pxs[i]) ** 2 + (vys - pys[i]) ** 2
-            # deterministic (dist, node_id) argmin over the local candidates
-            j = np.lexsort((vids, d2))[0]
-            snap_d = float(np.sqrt(d2[j]))
-            dense, cutoff = _dijkstra_pick(
-                csr, remap[int(vids[j])], int(targets[i]), max_length
-            )
-            mxs[i] = csr["xs"][dense]
-            mys[i] = csr["ys"][dense]
-            exact[i] = snap_d + cutoff <= margin
-        out.iloc[:, xi] = mxs
-        out.iloc[:, yi] = mys
-        out["region_exact"] = exact
-        return out
-
-    return (
-        pts.groupBy("_region")
-        .cogroup(graph.groupBy("_region"))
-        .applyInPandas(mask_region, schema=out_schema)
-    )
 
 
 def street_k(
@@ -372,58 +294,26 @@ def street_k(
     x: str = "x",
     y: str = "y",
     on_iteration=None,
-    region_size: float | None = None,
-    margin: float | None = None,
 ) -> DataFrame:
     """Adaptive privacy loop (reference masks/street.py:82-192): escalate
     (low, high) until k-satisfaction(min_k) >= suppression, then suppress
-    sub-min_k points. Each iteration is one Spark job chain; per-iteration
-    metrics go to ``on_iteration`` (reported only: a rerun starts over).
-
-    ``region_size`` routes every iteration through :func:`street_by_region`
-    instead of the driver-bounded :func:`street` — the continent-scale loop
-    (no ``max_graph_nodes`` wall). Each iteration's mask materializes once
-    (:func:`escalate.materialize`; the k-join reads it, so the cogrouped
-    Dijkstra never re-runs), the mean of the per-row ``region_exact``
-    certificate rides that job into the iteration metrics as
-    ``region_exact_frac``, and the column is dropped before k-verification
-    so both paths feed identical schemas downstream. ``margin`` passes
-    through (default 8 * max_length — see street_by_region's bound)."""
+    sub-min_k points. Each iteration is one :func:`street` mask and its
+    k-verification; per-iteration metrics go to ``on_iteration`` (reported
+    only: a rerun starts over)."""
     from .. import analysis
     from .suppress import suppress as suppress_op
 
     seed = rng.gen_seed() if not seed else seed
     low = start
     while True:
-        extra = {}
-        if region_size is not None:
-            # one materialization per iteration: the k-join reads the
-            # checkpoint, so the cogrouped Dijkstra never re-runs, and the
-            # certificate fraction is a metric of the same job (an empty
-            # frame's NULL average reads as 0); the previous iteration's
-            # checkpoint blocks free via the ContextCleaner once its
-            # reference drops
-            mr, frac = materialize(
-                street_by_region(
-                    df, low, low + spread, nodes, edges, region_size,
-                    margin=margin, max_length=max_length, seed=seed,
-                    key=key, x=x, y=y,
-                ),
-                frac=F.avg(F.col("region_exact").cast("double")),
-            )
-            extra["region_exact_frac"] = float(frac)
-            masked = mr.drop("region_exact")
-        else:
-            masked = street(
-                df, low, low + spread, nodes, edges,
-                max_length=max_length, seed=seed, key=key, x=x, y=y,
-            )
+        masked = street(
+            df, low, low + spread, nodes, edges,
+            max_length=max_length, seed=seed, key=key, x=x, y=y,
+        )
         kdf = analysis.k_anonymity_address(df, masked, address, key=key, x=x, y=y)
         sat = analysis.k_satisfaction_value(kdf, min_k)
         if on_iteration is not None:
-            on_iteration(
-                {"low": low, "high": low + spread, "k_satisfaction": sat, **extra}
-            )
+            on_iteration({"low": low, "high": low + spread, "k_satisfaction": sat})
         if sat >= suppression:
             return suppress_op(kdf, min_k, x=x, y=y)
         low += increment

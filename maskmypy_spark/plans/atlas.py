@@ -41,7 +41,6 @@ def _resolve_builtin_mask(name: str):
         "locationswap": ops.locationswap,
         "voronoi": ops.voronoi,
         "street": ops.street,
-        "street_by_region": ops.street_by_region,
         "street_k": ops.street_k,
         "snap_to_nodes": ops.snap_to_nodes,
         "suppress": ops.suppress,

@@ -209,7 +209,7 @@ def _street_resolved() -> tuple[tuple[int, int, int], ...]:
 
     Independently re-derived from the road fixture with a dense Bellman-Ford
     fixpoint (vs the engine's per-config cutoff-doubling heap Dijkstra,
-    operators/street.py:66-103): relaxation composes edge weights left-to-
+    operators/street.py:92-136): relaxation composes edge weights left-to-
     right along the winning path exactly as Dijkstra's d + w does, so the
     fixpoint doubles are bit-equal and the (|d - mean|, node_id) pick is
     reproduced float-for-float. The engine's cutoff-doubling reachable-set

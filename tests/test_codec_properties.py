@@ -3,7 +3,7 @@ adversarial shapes and values the fixture corpus never produces. No Spark
 session needed; each property runs in milliseconds."""
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from maskmypy_spark.functions import adpcm, imagecodec, jpeg
@@ -134,6 +134,9 @@ def test_jpeg_progressive_eobn_runs_decode():
     quality=st.sampled_from([50, 75, 90, 98, 100]),
     ss=st.sampled_from(["420", "422"]),
 )
+# out-of-range colors from averaged noise chroma: a per-channel clamp lost
+# ~11 dB of luma here (39.4 dB)
+@example(h=2, w=32, seed=6935, quality=98, ss="422")
 def test_jpeg_subsampled_roundtrip_any_shape(h, w, seed, quality, ss):
     """4:2:0 / 4:2:2 layouts survive any shape (odd dims, sub-MCU images)
     and keep the LUMA channel within the same fidelity as 4:4:4 — chroma
@@ -154,6 +157,7 @@ def test_jpeg_subsampled_roundtrip_any_shape(h, w, seed, quality, ss):
     w=st.integers(1, 40),
     seed=st.integers(0, 2**31 - 1),
 )
+@example(h=2, w=2, seed=182)  # came back 2 off the source with edge padding
 def test_jpeg_420_gray_equals_444_within_rounding(h, w, seed):
     """Constant-chroma (grayscale) content: subsampling is lossless, so the
     4:2:0 decode must agree with the 4:4:4 decode at quality 100 up to the

@@ -28,6 +28,20 @@ def docs(spark):
     return spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"])).cache()
 
 
+def test_doc_quality_empty_text_gives_null_ratio(spark, docs):
+    """An empty-string doc no longer fails the query with DIVIDE_BY_ZERO:
+    its alpha_ratio (0 characters) is NULL; its one empty token gives 0.0
+    token ratios, as the DuckDB oracle's split does; every other row is
+    unchanged."""
+    empty = spark.createDataFrame([(3000, "")], docs.schema)
+    got = {r["doc_id"]: r for r in dedup.doc_quality(docs.unionByName(empty)).collect()}
+    want = {r["doc_id"]: r for r in dedup.doc_quality(docs).collect()}
+    e = got.pop(3000)
+    assert e["alpha_ratio"] is None
+    assert (e["stopword_ratio"], e["mean_token_len"]) == (0.0, 0.0)
+    assert got == want
+
+
 def test_dedup_exact_finds_planted_duplicate(docs):
     groups = dedup.dedup_exact(docs).where("n_dups > 1").collect()
     assert len(groups) == 1

@@ -213,71 +213,96 @@ def test_voronoi_midpoint_and_determinism(points):
         assert mm.at[pid, "y"] == pytest.approx((py + ys[q]) / 2, abs=1e-9)
 
 
-def test_street_independent_oracle(spark, roads):
+def test_street_independent_oracle(spark, roads, monkeypatch):
     """End-to-end street-mask oracle: an INDEPENDENT pure-Python
     re-derivation (brute-force NN snap, dict-based Dijkstra with cutoff
     doubling, mean-distance pick, same documented tie-breaks) must produce
-    the exact coordinates the distributed operator emits."""
+    the exact coordinates the distributed operator emits. Three inputs:
+    the fixture; its edge lengths halved, so every edge is shorter than
+    its straight line (length/hypot ratio r = 0.5); and targets deep
+    enough that the regional Dijkstra escalates at least one margin
+    round (its rounds are counted through the step it hands escalate)."""
     import heapq
+    import importlib
 
     from maskmypy_spark.functions import rng as _rng
     from maskmypy_spark.sources import fixtures as _fx
 
-    nodes, edges = roads
+    street_mod = importlib.import_module("maskmypy_spark.operators.street")
+    real_escalate = street_mod.escalate
+    rounds: list[int] = []
+
+    def counting_escalate(remaining, step, fallback, n_rounds, key=None):
+        def counted(rem, rnd, n):
+            rounds.append(rnd)
+            return step(rem, rnd, n)
+
+        return real_escalate(remaining, counted, fallback, n_rounds, key=key)
+
+    monkeypatch.setattr(street_mod, "escalate", counting_escalate)
+
+    nodes, _ = roads
     npdf = nodes.toPandas()
-    epdf = edges.toPandas()
+    coord = {int(r.node_id): (float(r.nx), float(r.ny)) for r in npdf.itertuples()}
     pts_pdf = _fx.sensitive_points_pdf(60, seed=42)
     pts = spark.createDataFrame(pts_pdf)
-    LOW_N, HIGH_N, MAXLEN, SEED_S = 8, 14, 400.0, 77
+    base = _fx.road_edges_pdf(npdf, spacing=300.0)
+    MAXLEN, SEED_S = 400.0, 77
 
-    masked = {
-        r["pid"]: (r["x"], r["y"])
-        for r in street(pts, LOW_N, HIGH_N, nodes, edges,
-                        max_length=MAXLEN, seed=SEED_S).collect()
-    }
+    def check(epdf, low_n, high_n):
+        rounds.clear()
+        edges = spark.createDataFrame(epdf)
+        masked = {
+            r["pid"]: (r["x"], r["y"])
+            for r in street_mod.street(pts, low_n, high_n, nodes, edges,
+                                       max_length=MAXLEN, seed=SEED_S).collect()
+        }
 
-    # --- independent re-derivation (plain dicts, no CSR, no Spark) ---
-    coord = {int(r.node_id): (float(r.nx), float(r.ny)) for r in npdf.itertuples()}
-    adj: dict[int, list[tuple[int, float]]] = {}
-    valid = set()
-    for r in epdf.itertuples():
-        adj.setdefault(int(r.src), []).append((int(r.dst), float(r.length)))
-        if r.length <= MAXLEN:
-            valid.add(int(r.src)); valid.add(int(r.dst))
+        # --- independent re-derivation (plain dicts, no CSR, no Spark) ---
+        adj: dict[int, list[tuple[int, float]]] = {}
+        valid = set()
+        for r in epdf.itertuples():
+            adj.setdefault(int(r.src), []).append((int(r.dst), float(r.length)))
+            if r.length <= MAXLEN:
+                valid.add(int(r.src)); valid.add(int(r.dst))
 
-    def dijkstra_pick(start: int, target: int) -> int:
-        cutoff, prev = MAXLEN, -1
-        while True:
-            dist: dict[int, float] = {}
-            heap = [(0.0, start)]
-            while heap:
-                d, u = heapq.heappop(heap)
-                if u in dist or d > cutoff:
-                    continue
-                dist[u] = d
-                for v, wgt in adj.get(u, []):
-                    if v not in dist and d + wgt <= cutoff:
-                        heapq.heappush(heap, (d + wgt, v))
-            if len(dist) >= target or len(dist) == prev:
-                break
-            prev = len(dist)
-            cutoff *= 2.0
-        take = min(target, len(dist))
-        items = sorted(dist.items(), key=lambda kv: (kv[1], kv[0]))[:take]
-        mean_d = sum(d for _, d in items) / take
-        return min(items, key=lambda kv: (abs(kv[1] - mean_d), kv[0]))[0]
+        def dijkstra_pick(start: int, target: int) -> int:
+            cutoff, prev = MAXLEN, -1
+            while True:
+                dist: dict[int, float] = {}
+                heap = [(0.0, start)]
+                while heap:
+                    d, u = heapq.heappop(heap)
+                    if u in dist or d > cutoff:
+                        continue
+                    dist[u] = d
+                    for v, wgt in adj.get(u, []):
+                        if v not in dist and d + wgt <= cutoff:
+                            heapq.heappush(heap, (d + wgt, v))
+                if len(dist) >= target or len(dist) == prev:
+                    break
+                prev = len(dist)
+                cutoff *= 2.0
+            take = min(target, len(dist))
+            items = sorted(dist.items(), key=lambda kv: (kv[1], kv[0]))[:take]
+            mean_d = sum(d for _, d in items) / take
+            return min(items, key=lambda kv: (abs(kv[1] - mean_d), kv[0]))[0]
 
-    import numpy as np2
+        for r in pts_pdf.itertuples():
+            # snap: nearest VALID node, ties by (distance, node_id)
+            best = min(
+                ((np.hypot(coord[n][0] - r.x, coord[n][1] - r.y), n) for n in valid),
+            )
+            u = _rng.u_np(np.array([int(r.pid)]), _rng.TAG_STREET_N, SEED_S)[0]
+            target = low_n + int(np.floor(u * (high_n - low_n)))
+            picked = dijkstra_pick(best[1], int(target))
+            assert masked[r.pid] == coord[picked], f"pid {r.pid}"
+        return len(rounds)
 
-    for r in pts_pdf.itertuples():
-        # snap: nearest VALID node, ties by (distance, node_id)
-        best = min(
-            ((np2.hypot(coord[n][0] - r.x, coord[n][1] - r.y), n) for n in valid),
-        )
-        u = _rng.u_np(np2.array([int(r.pid)]), _rng.TAG_STREET_N, SEED_S)[0]
-        target = LOW_N + int(np2.floor(u * (HIGH_N - LOW_N)))
-        picked = dijkstra_pick(best[1], int(target))
-        assert masked[r.pid] == coord[picked], f"pid {r.pid}"
+    assert check(base, 8, 14) >= 1
+    assert check(base.assign(length=base["length"] / 2.0), 8, 14) >= 1
+    # ~300 nodes lie beyond the first margin (8 * max_length) of the grid
+    assert check(base, 250, 300) >= 2
 
 
 def test_street_k_adaptive_loop(points, roads, addresses):
@@ -303,42 +328,6 @@ def test_street_k_adaptive_loop(points, roads, addresses):
         assert sup["x"].nunique() == 1 and sup["y"].nunique() == 1
 
 
-def test_street_k_region_path(points, roads, addresses, monkeypatch):
-    """VERDICT r03 'What's missing' #3: street_k(region_size=) routes every
-    iteration through the cogrouped street_by_region path — no driver graph
-    bound (street() provably never called), region_exact_frac in the
-    iteration metrics, and parity with the global loop (margin covers the
-    whole fixture box, so every row is certificate-exact)."""
-    import importlib
-
-    street_mod = importlib.import_module("maskmypy_spark.operators.street")
-
-    nodes, edges = roads
-    kw = dict(
-        min_k=3, start=8, stop=60, spread=4, suppression=0.6,
-        max_length=400.0, seed=21, nodes=nodes, edges=edges,
-    )
-    g = street_mod.street_k(points, addresses, **kw).toPandas()
-
-    def _no_driver_street(*a, **k):
-        raise AssertionError(
-            "street_k(region_size=) must not call the driver-bounded street()"
-        )
-
-    monkeypatch.setattr(street_mod, "street", _no_driver_street)
-    iters = []
-    r = street_mod.street_k(
-        points, addresses, on_iteration=iters.append,
-        region_size=3000.0, margin=25000.0, **kw,
-    ).toPandas()
-    assert iters and all(it["region_exact_frac"] == 1.0 for it in iters)
-    gs = g.sort_values("pid").reset_index(drop=True)
-    rs = r.sort_values("pid").reset_index(drop=True)
-    assert list(gs.columns) == list(rs.columns)
-    for c in ("pid", "x", "y", "SUPPRESSED"):
-        assert gs[c].tolist() == rs[c].tolist(), c
-
-
 def test_street_masks_to_nodes(points, roads, addresses):
     """Engine contract for M3 (reference masks/street.py semantics with the
     documented order-free substitution): output coincides with road nodes,
@@ -358,33 +347,39 @@ def test_street_masks_to_nodes(points, roads, addresses):
     assert analysis.checksum(street(points, 5, 10, nodes, edges, max_length=400.0, seed=3)) == analysis.checksum(m1)
 
 
-def test_street_by_region_matches_global(points, roads):
-    """street_by_region (the beyond-driver-bound path street.py:132-137
-    points to): identical coordinates to the global street mask wherever
-    the per-row region_exact certificate holds, near-total coverage at a
-    sane margin, and it works where street()'s driver bound refuses."""
-    from maskmypy_spark.operators.street import street_by_region
+def test_street_builds_no_driver_graph(spark, points, roads, monkeypatch):
+    """The street mask never copies the road graph to the driver: no
+    toPandas/collect/count of the graph frames, no DataFrame.toPandas at
+    all and no SparkContext.broadcast while it runs. Its output still
+    lands on road nodes, one row per point."""
+    from pyspark import SparkContext
+    from pyspark.sql import DataFrame
+
+    def refuse(*a, **k):
+        raise AssertionError("street copied data to the driver")
 
     nodes, edges = roads
-    g = {
-        r["pid"]: (r["x"], r["y"])
-        for r in street(points, 10, 20, nodes, edges, max_length=500.0, seed=7).collect()
-    }
-    rows = street_by_region(
-        points, 10, 20, nodes, edges, region_size=3000.0,
-        max_length=500.0, seed=7,
-    ).collect()
-    assert len(rows) == len(g)
-    exact = [r for r in rows if r["region_exact"]]
-    assert len(exact) / len(rows) > 0.9  # interior points dominate
-    for r in exact:
-        assert (r["x"], r["y"]) == g[r["pid"]]
+    node_set = {(r["nx"], r["ny"]) for r in nodes.collect()}
+    g_nodes, g_edges = nodes.select("*"), edges.select("*")
+    with monkeypatch.context() as m:
+        for frame in (g_nodes, g_edges):
+            for method in ("toPandas", "collect", "count"):
+                m.setattr(frame, method, refuse)
+        m.setattr(DataFrame, "toPandas", refuse)
+        m.setattr(SparkContext, "broadcast", refuse)
+        out = street(points, 10, 20, g_nodes, g_edges, max_length=500.0, seed=7)
+        rows = out.collect()
+    assert len(rows) == points.count()
+    assert {(r["x"], r["y"]) for r in rows} <= node_set
 
-    # the driver-materialized path refuses a graph over its bound; the
-    # region path is the documented escape hatch
-    with pytest.raises(ValueError, match="max_graph_nodes"):
-        street(points, 10, 20, nodes, edges, max_length=500.0, seed=7,
-               max_graph_nodes=100)
+
+def test_street_without_snap_valid_node_raises(points, roads):
+    """max_length below every edge length leaves no snap-valid node: a
+    named ValueError, read from the extent aggregate's count of valid
+    edges, instead of an empty-frame error or a silently empty mask."""
+    nodes, edges = roads
+    with pytest.raises(ValueError, match="no edge has length <= max_length"):
+        street(points, 10, 20, nodes, edges, max_length=10.0, seed=7)
 
 
 def test_mark_unmasked_idiom(spark, points):

@@ -21,7 +21,7 @@ import shutil
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SKIP_DIRS = {"__pycache__", "spark-warehouse"}
-PARAM_CEILING = 483
+PARAM_CEILING = 467
 
 PUBLIC_API = {
     "maskmypy_spark/analysis.py:nnd",

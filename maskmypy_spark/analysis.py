@@ -136,13 +136,13 @@ def central_drift(
     )
 
 
-def nnd(df: DataFrame, key: str = "pid", x: str = "x", y: str = "y", cs: float | None = None) -> DataFrame:
+def nnd(df: DataFrame, key: str = "pid", x: str = "x", y: str = "y") -> DataFrame:
     """Nearest-neighbor-distance stats (analysis.py:222-237) via the exact
     kNN self-join — distributed replacement for pointpats.PointPattern."""
     others = df.select(F.col(key).alias("_nk"), F.col(x).alias("_nx"), F.col(y).alias("_ny"))
     nn = nearest_neighbor(
         df.select(key, x, y), others, key=key, x=x, y=y,
-        okey="_nk", ox="_nx", oy="_ny", cs=cs, exclude_self=True,
+        okey="_nk", ox="_nx", oy="_ny", exclude_self=True,
     )
     return nn.agg(
         F.min("nn_dist").alias("nnd_min"),
@@ -153,7 +153,7 @@ def nnd(df: DataFrame, key: str = "pid", x: str = "x", y: str = "y", cs: float |
 
 def nnd_delta(
     sensitive: DataFrame, candidate: DataFrame, key: str = "pid",
-    x: str = "x", y: str = "y", cs: float | None = None,
+    x: str = "x", y: str = "y",
 ) -> DataFrame:
     """after - before of each NND stat, 6 dp (analysis.py:240-263).
 
@@ -168,10 +168,10 @@ def nnd_delta(
     the ungrouped okey bound). The bound is enforced at runtime: a key
     outside [0, 2^31) raises inside the projection (``assert_true`` folded
     into the uid expression — no extra job) instead of silently colliding
-    across sides. Without ``cs``, nearest_neighbor sizes the cells from its
-    one extent job over BOTH layers, at the density of one non-empty layer
-    (the union's count over its number of non-empty sides), so an empty
-    layer costs no rounds and two full layers keep one layer's spacing."""
+    across sides. nearest_neighbor sizes the cells from its one extent job
+    over BOTH layers, at the density of one non-empty layer (the union's
+    count over its number of non-empty sides), so an empty layer costs no
+    rounds and two full layers keep one layer's spacing."""
     k = F.col(key)
     bound_ok = (k >= 0) & (k < F.lit(1 << 31))
     guard = F.coalesce(
@@ -201,7 +201,7 @@ def nnd_delta(
     )
     nn = nearest_neighbor(
         u.select("_side", "_ndk", x, y), others, key="_ndk", x=x, y=y,
-        okey="_nk", ox="_nx", oy="_ny", cs=cs, exclude_self=True,
+        okey="_nk", ox="_nx", oy="_ny", exclude_self=True,
         group="_side",
     )
     s = F.col("_side")
@@ -234,8 +234,6 @@ def k_anonymity_address(
     salt: int = 0,
     disp: DataFrame | None = None,
     slim: bool = False,
-    cs: float | None = None,
-    addr_cell_col: str | None = None,
 ) -> DataFrame:
     """Address-based spatial k-anonymity (reference analysis.py:582-596):
     k = 1 + #addresses within the closed disk of radius = per-point
@@ -258,29 +256,13 @@ def k_anonymity_address(
     ``disp`` optionally reuses a precomputed displacement frame (a
     DataFrame with a ``_distance`` column from :func:`displacement`) so
     composite evaluations don't run the pid-join twice.
-
-    ``addr_cell_col`` names a precomputed cell-id column on ``address``
-    (requires pinning ``cs`` to the value it was computed at) — the stored-
-    dimension pattern: an address table persisted with its cell index
-    (ideally bucketed on it, sources/bucketed.py) joins exchange-free on
-    the build side. See distance_join(right_cell_col=).
     """
-    if addr_cell_col is not None and cs is None:
-        # A stored cell index is only valid at the cell size it was built
-        # with; letting cs default silently (radius / 2 inside
-        # distance_join) would join on MISMATCHED grids and undercount k —
-        # a silent privacy-metric error, so refuse loudly (ADVICE r05 #1).
-        raise ValueError(
-            "addr_cell_col requires cs= pinned to the cell size the stored "
-            "index was computed at (cells.cell_sql(ax, ay, cs))."
-        )
     if disp is not None:
         cand = disp.withColumnRenamed("_distance", "_radius")
     else:
         cand = displacement(sensitive, candidate, key, x, y, col="_radius")
     if max_radius is None:
         max_radius = cand.agg(F.max("_radius")).collect()[0][0] or 1.0
-    addr_cols = [akey, ax, ay] + ([addr_cell_col] if addr_cell_col else [])
 
     def count(pts: DataFrame) -> DataFrame:
         # adaptive per-row ring (left_radius_col): each point probes only
@@ -304,10 +286,9 @@ def k_anonymity_address(
         # caller left, that machinery was removed; git history keeps it
         # for a regime where per-pair work dominates fixed stage costs.
         pairs = distance_join(
-            pts, address.select(*addr_cols),
+            pts, address.select(akey, ax, ay),
             radius=float(max_radius), lx=x, ly=y, rx=ax, ry=ay, salt=salt,
-            left_radius_col="_radius", cs=cs, right_cell_col=addr_cell_col,
-            how="left",
+            left_radius_col="_radius", how="left",
         )
         return pairs.groupBy(key).agg(
             F.min(x).alias(x),

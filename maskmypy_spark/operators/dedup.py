@@ -1,7 +1,7 @@
 """Training-data pipeline operators over document / embedding tables:
 deduplication (exact, n-gram Jaccard, MinHash-LSH, SimHash), text metrics
 (tokens, quality, language-ID), similarity search (brute-force cosine kNN +
-LSH-bucketed ANN).
+random-hyperplane LSH ANN).
 
 Not part of the MaskMyPy reference — these are the large-scale data-prep
 operators the engine adds for its 100 TB target workload. Everything is

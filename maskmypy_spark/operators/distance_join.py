@@ -281,7 +281,6 @@ def distance_join(
     salt: int = 0,
     extra_on: list[tuple[str, str]] | None = None,
     left_radius_col: str | None = None,
-    right_cell_col: str | None = None,
     how: str = "inner",
     annulus_low: float | None = None,
 ) -> DataFrame:
@@ -294,11 +293,9 @@ def distance_join(
 
     The LEFT (probe) side carries the neighbor-ring expansion and the right
     side stays ONE row per cell: a dimension (addresses, nodes) then builds
-    the minimal hash relation, and a stored/bucketed one scans
-    exchange-free while only the exploded probe side moves (the shape
-    measured fastest and most stable at 32 cores: BENCH/NOTES.md,
-    "Bucketed-dimension experiment"). A self-join (Ripley's K) is
-    symmetric, so the side makes no difference there.
+    the minimal hash relation while only the exploded probe side moves. A
+    self-join (Ripley's K) is symmetric, so the side makes no difference
+    there.
 
     ``left_radius_col`` switches to the PER-ROW-radius variant (the
     k-verification shape): the join predicate becomes ``dist <=
@@ -319,13 +316,6 @@ def distance_join(
     shape of locationswap, analysis.k_anonymity_address and
     streaming.k_verify_stream: a single aggregate over the pair stream,
     with no join back to the probe table.
-
-    ``right_cell_col`` = the 100 TB dimension pattern: a stored address/
-    node table persists its cell index once (cells.cell_sql at the SAME cs
-    — the caller owns cs agreement), ideally written BUCKETED on it
-    (sources/bucketed.py), so recurring joins scan the build side
-    exchange-free instead of re-tagging + re-shuffling it every query
-    (BENCH/NOTES.md, "Bucketed-dimension experiment", measures the effect).
     """
     per_row = left_radius_col is not None
     if annulus_low is not None and per_row:
@@ -364,10 +354,7 @@ def distance_join(
         if annulus_low is not None:
             pred = f"({pred} AND ({sq}) > {flit(sq_threshold_le(float(annulus_low)))})"
         lt = explode_pruned_ring(left, lx, ly, cs, ring, flit(radius))
-    if right_cell_col:
-        rt = right.withColumnRenamed(right_cell_col, "_cell")
-    else:
-        rt = right.withColumn("_cell", F.expr(cells.cell_sql(rx, ry, cs)))
+    rt = right.withColumn("_cell", F.expr(cells.cell_sql(rx, ry, cs)))
     j = cell_join(
         lt, rt, lx, ly, salt=salt, pin="right" if broadcast_right else None,
         on=extra_on or (), how=how, cond=F.expr(pred),

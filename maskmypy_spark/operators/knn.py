@@ -149,28 +149,33 @@ def _extent(df: DataFrame, x: str, y: str, group: str | None = None) -> tuple:
     return (0.0, 0.0, 0.0, 0.0, 0, 0) if None in row[:4] else tuple(row)
 
 
-def _size_others(others, ox, oy, cs, salt, group=None) -> tuple:
+def _size_others(others, ox, oy, salt, group=None) -> tuple:
     """``(cs, bcast_others, extent)`` of a kNN call: the one place a call
-    chooses its plan, from ONE :func:`_extent` job over ``others``. Without
-    a caller's ``cs``, cs is ~3x the expected NN spacing at the density of
-    one ``group`` (under the old SortAggregate argmin, tight 1x cells won;
-    with the packed-BIGINT hash-aggregate the per-candidate cost is tiny
-    and the round-trip overhead of escalation rounds dominates, so 3x cells
-    resolve most points in round one and ran ~1.4x faster at bench scale;
-    exactness holds at ANY cs, gated by the plan tests). The spacing is
-    the larger of sqrt(area / m) and the box's long side over m: on
-    collinear points the area is 0, and the first alone would leave cs at
-    the floor, below the spacing the 12 tripling rounds can reach. The
-    row count decides the rest, with or without a caller's ``cs``: an
-    ``others`` COUNTED small by :func:`_bcast` (salt copies included) is
-    broadcast to every round and to the fallback (never the exploded
-    probe side), and a counted-empty one settles the call with no round
-    at all."""
+    chooses its plan, from ONE :func:`_extent` job over ``others``. cs is
+    ~3x the expected NN spacing at the density of one ``group`` (under the
+    old SortAggregate argmin, tight 1x cells won; with the packed-BIGINT
+    hash-aggregate the per-candidate cost is tiny and the round-trip
+    overhead of escalation rounds dominates, so 3x cells resolve most
+    points in round one and ran ~1.4x faster at bench scale; exactness
+    holds at ANY cs, gated by the plan tests). The spacing is the larger of
+    sqrt(area / m) and the box's long side over m: on collinear points the
+    area is 0, and the first alone would leave cs at the floor, below the
+    spacing the 12 tripling rounds can reach. The row count decides the
+    rest: an ``others`` COUNTED small by :func:`_bcast` (salt copies
+    included) is broadcast to every round and to the fallback (never the
+    exploded probe side), and a counted-empty one settles the call with no
+    round at all. A box that is not finite (a NaN or infinite coordinate
+    in ``others``) sizes no grid, so it raises here rather than as an
+    unresolvable cell expression at plan time."""
     ext = x0, x1, y0, y1, n, g = _extent(others, ox, oy, group)
-    if cs is None:
-        m = max(n / max(g, 1), 1)
-        area = max((x1 - x0) * (y1 - y0), 1e-9)
-        cs = 3.0 * max(math.sqrt(area / m), max(x1 - x0, y1 - y0) / m)
+    if not all(map(math.isfinite, ext[:4])):
+        raise ValueError(
+            f"kNN neighbor layer: coordinates ({ox}, {oy}) must be finite, "
+            f"got the extent x [{x0}, {x1}], y [{y0}, {y1}]"
+        )
+    m = max(n / max(g, 1), 1)
+    area = max((x1 - x0) * (y1 - y0), 1e-9)
+    cs = 3.0 * max(math.sqrt(area / m), max(x1 - x0, y1 - y0) / m)
     return cs, _bcast(n, max(salt, 1)), ext
 
 
@@ -184,7 +189,6 @@ def knn_join(
     okey: str = "nn_id",
     ox: str = "nn_x",
     oy: str = "nn_y",
-    cs: float | None = None,
     exclude_self: bool = False,
     salt: int = 0,
 ) -> DataFrame:
@@ -200,9 +204,9 @@ def knn_join(
     cs-independence and salted-equivalence gates, the same guarantees
     ``nearest_neighbor`` carries). ``salt`` scatters hot cells across
     reducers (see ``distance_join.cell_join``). As in ``nearest_neighbor``,
-    one extent job over ``others`` chooses the plan (:func:`_size_others`)
-    and a caller's ``cs`` sets only the cell size."""
-    cs, bcast_others, ext = _size_others(others, ox, oy, cs, salt)
+    one extent job over ``others`` chooses the plan and sizes the cells
+    (:func:`_size_others`)."""
+    cs, bcast_others, ext = _size_others(others, ox, oy, salt)
     sizes = _sizes(cs)
     d = F.expr(dist_sql(x, y, ox, oy))
     xcond = (F.col(okey) != F.col(key)) if exclude_self else None
@@ -257,7 +261,6 @@ def nearest_neighbor(
     okey: str = "nn_id",
     ox: str = "nn_x",
     oy: str = "nn_y",
-    cs: float | None = None,
     exclude_self: bool = False,
     salt: int = 0,
     group: str | None = None,
@@ -285,10 +288,10 @@ def nearest_neighbor(
 
     Every call runs one extent job over ``others`` (:func:`_size_others`):
     its count broadcasts a small ``others`` and ends the call on an empty
-    one, and ``cs=None`` sizes the cells from it (at the density of one
-    non-empty ``group``). A caller's ``cs`` sets only the cell size.
+    one, and its box sizes the cells (at the density of one non-empty
+    ``group``).
     """
-    cs, bcast_others, ext = _size_others(others, ox, oy, cs, salt, group)
+    cs, bcast_others, ext = _size_others(others, ox, oy, salt, group)
     sizes = _sizes(cs)
     on = [(group, group)] if group else []
     d = F.expr(dist_sql(x, y, ox, oy))

@@ -25,15 +25,12 @@ def snap_to_nodes(
     node_key: str = "node_id",
     nx: str = "nx",
     ny: str = "ny",
-    cs: float | None = None,
 ) -> DataFrame:
     from ..functions import meta
 
     meta.validate_point_layer(df, key, x, y)  # reference tools.py:165-169
     meta.validate_crs((df, x), (nodes, nx))   # reference tools.py:172-180
-    nn = nearest_neighbor(
-        df, nodes, key=key, x=x, y=y, okey=node_key, ox=nx, oy=ny, cs=cs
-    )
+    nn = nearest_neighbor(df, nodes, key=key, x=x, y=y, okey=node_key, ox=nx, oy=ny)
     return _project(nn, sets={x: nx, y: ny}, drop=(node_key, nx, ny, "nn_dist"))
 
 

@@ -27,7 +27,6 @@ def voronoi(
     key: str = "pid",
     x: str = "x",
     y: str = "y",
-    cs: float | None = None,
     snap_to_streets: bool = False,
     street_nodes: DataFrame | None = None,
 ) -> DataFrame:
@@ -37,7 +36,7 @@ def voronoi(
     )
     nn = nearest_neighbor(
         df, others, key=key, x=x, y=y, okey="_vkey", ox="_vx", oy="_vy",
-        cs=cs, exclude_self=True,
+        exclude_self=True,
     )
     return post(_project(  # snap: reference masks/voronoi.py:21-24, 49-50
         nn, sets={x: f"({x} + _vx) / 2.0", y: f"({y} + _vy) / 2.0"},

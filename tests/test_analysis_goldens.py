@@ -216,7 +216,7 @@ def test_nnd_delta_fused_matches_separate(spark):
     assert got["nnd_mean_delta"] == round(a["nnd_mean"] - b["nnd_mean"], 6)
 
 
-def test_nnd_delta_cs_independent(spark):
+def test_nnd_delta_cs_independent(spark, knn_cs):
     """The fused nnd_delta equals the two separate nnd() runs at ANY
     starting cell size. A small cs sends most points through later
     escalation rounds; a point that meets no cell-mate in a round must keep
@@ -232,7 +232,8 @@ def test_nnd_delta_cs_independent(spark):
     a = analysis.nnd(cand).collect()[0]
     want = tuple(round(a[f"nnd_{s}"] - b[f"nnd_{s}"], 6) for s in ("min", "max", "mean"))
     for cs in (25.0, 150.0, None):
-        assert tuple(analysis.nnd_delta(pts, cand, cs=cs).collect()[0]) == want, cs
+        with knn_cs(cs):
+            assert tuple(analysis.nnd_delta(pts, cand).collect()[0]) == want, cs
 
 
 def test_ripley_scale_guard(spark):

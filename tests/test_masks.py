@@ -3,6 +3,9 @@ to the engine: statistical bounds, seed determinism, input immutability,
 containment invariants, street-node coincidence.
 """
 
+import io
+from contextlib import redirect_stdout
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -482,30 +485,31 @@ def _grid_containers(spark, rect=2000.0):
     return spark.createDataFrame(rows, "poly_id long, ring array<struct<x:double,y:double>>")
 
 
-def test_empty_knn_side_runs_no_round(spark, points):
+def test_empty_knn_side_runs_no_round(spark, points, knn_cs):
     """An empty neighbor layer settles a kNN call on the one extent job that
     chooses its plan: ``nearest_neighbor`` and ``knn_join`` against it run
-    no escalation round and no fallback, with or without a caller's ``cs``,
-    and ``nnd_delta(empty, points)`` sizes its cells from both layers, so
-    the empty side costs no rounds. (Sized from the empty layer alone, the
-    floor cell size ran all 12 rounds and the brute-force fallback; with a
-    caller's ``cs`` the layer went uncounted and ran them too.)"""
+    no escalation round and no fallback, at the estimated cell size or a
+    set one (``knn_cs``), and ``nnd_delta(empty, points)`` sizes its cells
+    from both layers, so the empty side costs no rounds. (Sized from the
+    empty layer alone, the floor cell size ran all 12 rounds and the
+    brute-force fallback.)"""
     from maskmypy_spark.operators.knn import knn_join, nearest_neighbor
 
     sc = spark.sparkContext
     points.count()
     none = points.selectExpr("pid AS nn_id", "x AS nn_x", "y AS nn_y").where("false")
-    for name, run, budget in (
-        ("nearest_neighbor", lambda: nearest_neighbor(points, none).collect(), 1),
-        ("knn_join", lambda: knn_join(points, none, 2).collect(), 1),
-        ("nearest_neighbor_cs", lambda: nearest_neighbor(points, none, cs=100.0).collect(), 1),
-        ("knn_join_cs", lambda: knn_join(points, none, 2, cs=100.0).collect(), 1),
-        ("nnd_delta", lambda: analysis.nnd_delta(points.where("false"), points).collect(), 14),
+    for name, cs, run, budget in (
+        ("nearest_neighbor", None, lambda: nearest_neighbor(points, none).collect(), 1),
+        ("knn_join", None, lambda: knn_join(points, none, 2).collect(), 1),
+        ("nearest_neighbor_cs", 100.0, lambda: nearest_neighbor(points, none).collect(), 1),
+        ("knn_join_cs", 100.0, lambda: knn_join(points, none, 2).collect(), 1),
+        ("nnd_delta", None, lambda: analysis.nnd_delta(points.where("false"), points).collect(), 14),
     ):
         group = f"empty_knn_side_{name}"
         sc.setJobGroup(group, group)
         try:
-            rows = run()
+            with knn_cs(cs):
+                rows = run()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
@@ -513,13 +517,13 @@ def test_empty_knn_side_runs_no_round(spark, points):
         assert len(rows) == (1 if name == "nnd_delta" else 0), (name, rows)
 
 
-def test_collinear_knn_sizes_cells_at_the_spacing(spark):
+def test_collinear_knn_sizes_cells_at_the_spacing(spark, knn_cs):
     """2,000 points on one horizontal line (spacing 10, jitter 5) have a
     zero-area bounding box. The estimated cell size still reaches their
     spacing (the box's long side over the count), so ``nnd`` on them runs
-    no more jobs than a run at the hand-picked ``cs=30`` (7 with the input
-    cached: two for the extent aggregate, three for the one round, two for
-    the stats), and gives its stats. (From the area alone cs sat at its
+    no more jobs than a run at a hand-picked cell size of 30 (7 with the
+    input cached: two for the extent aggregate, three for the one round,
+    two for the stats), and gives its stats. (From the area alone cs sat at its
     floor: the 12 tripling rounds never reached the spacing, and the
     brute-force fallback took the whole residue: 57 jobs.)"""
     n = 2000
@@ -532,13 +536,45 @@ def test_collinear_knn_sizes_cells_at_the_spacing(spark):
         group = f"collinear_knn_{cs}"
         sc.setJobGroup(group, group)
         try:
-            stats = analysis.nnd(line, cs=cs).collect()[0]
+            with knn_cs(cs):
+                stats = analysis.nnd(line).collect()[0]
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         got[cs] = stats, len(sc.statusTracker().getJobIdsForGroup(group))
     line.unpersist()
     assert got[None][0] == got[30.0][0]
     assert got[None][1] <= min(got[30.0][1], 7), got
+
+
+def test_non_finite_knn_layer_raises(spark, points):
+    """A NaN or infinite coordinate in the neighbor layer leaves no finite
+    box to size the cells from: ``nearest_neighbor``, and ``voronoi``
+    (whose neighbor layer is its input), raise a ValueError naming the
+    layer's coordinate columns after the call's one extent job, instead of
+    failing on an unresolvable cell expression while the plan is built."""
+    from maskmypy_spark.operators.knn import nearest_neighbor
+
+    for bad in (float("nan"), float("inf")):
+        layer = points.unionByName(spark.createDataFrame([(400, bad, 5000.0)], points.schema))
+        others = layer.selectExpr("pid AS nn_id", "x AS nn_x", "y AS nn_y")
+        with pytest.raises(ValueError, match=r"\(nn_x, nn_y\) must be finite"):
+            nearest_neighbor(points, others)
+        with pytest.raises(ValueError, match=r"\(_vx, _vy\) must be finite"):
+            voronoi(layer)
+
+
+def test_locationswap_salted_matches_unsalted(points, addresses):
+    """``salt`` only scatters hot cells of the annulus join over sub-keys:
+    the salted plan carries them, and its result checksums equal to the
+    default call's."""
+    salted = locationswap(points, 100.0, 500.0, addresses, seed=7, salt=4)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        salted.explain(mode="simple")
+    assert "_sk" in buf.getvalue()
+    assert analysis.checksum(salted) == analysis.checksum(
+        locationswap(points, 100.0, 500.0, addresses, seed=7)
+    )
 
 
 def test_escalation_job_budget(spark, points, monkeypatch):

@@ -190,7 +190,7 @@ def test_locationswap_bare_joinfree_and_payload_paths_agree(spark):
     assert any(r[3] == 1 for r in a)  # isolated points -> UNMASKED
 
 
-def test_nearest_neighbor_unbounded_round_has_no_fact_join_back(spark, monkeypatch):
+def test_nearest_neighbor_unbounded_round_has_no_fact_join_back(spark, monkeypatch, knn_cs):
     """The unbounded escalation rounds carry the probe row through the
     argmin aggregate as grouping keys (LEFT OUTER cell join), so a
     single-round nearest_neighbor plans exactly ONE join — the cell join.
@@ -203,7 +203,8 @@ def test_nearest_neighbor_unbounded_round_has_no_fact_join_back(spark, monkeypat
     monkeypatch.setattr(knn, "RESIDUE_BROADCAST_ROWS", 0)
     pts = spark.createDataFrame(fixtures.sensitive_points_pdf(200, seed=42))
     others = pts.selectExpr("pid AS nn_id", "x AS nn_x", "y AS nn_y")
-    nn = knn.nearest_neighbor(pts, others, cs=50000.0, exclude_self=True)
+    with knn_cs(50000.0):
+        nn = knn.nearest_neighbor(pts, others, exclude_self=True)
     simple = _plan(nn, mode="simple")
     n_joins = sum(1 for ln in simple.splitlines() if "Join" in ln)
     assert n_joins == 1, simple
@@ -211,7 +212,7 @@ def test_nearest_neighbor_unbounded_round_has_no_fact_join_back(spark, monkeypat
     assert len(rows) == 200
 
 
-def test_nearest_neighbor_argmin_hash_aggregates(spark, monkeypatch):
+def test_nearest_neighbor_argmin_hash_aggregates(spark, monkeypatch, knn_cs):
     """The kNN argmin must plan as HashAggregate — min(struct) forced a
     SortAggregate over the 9x exploded candidate set on the voronoi/snap/NND
     hot paths (CLAUDE.md invariant; round-2 verdict item 1). The
@@ -223,7 +224,8 @@ def test_nearest_neighbor_argmin_hash_aggregates(spark, monkeypatch):
 
     _stub_materialize(monkeypatch)
     pts = spark.createDataFrame(fixtures.sensitive_points_pdf(200, seed=42))
-    plan = _plan(voronoi(pts, cs=1000.0))
+    with knn_cs(1000.0):
+        plan = _plan(voronoi(pts))
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -236,7 +238,8 @@ def test_nearest_neighbor_argmin_hash_aggregates(spark, monkeypatch):
         F.expr("CAST(concat('img', CAST(pid AS STRING)) AS BINARY)").alias("image"),
     )
     withp = pts.join(payload, "pid")
-    plan = _plan(voronoi(withp, cs=1000.0))
+    with knn_cs(1000.0):
+        plan = _plan(voronoi(withp))
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan
 
@@ -246,17 +249,19 @@ def test_nearest_neighbor_argmin_hash_aggregates(spark, monkeypatch):
             for r in df.collect()
         }
 
-    got = rows(voronoi(withp, cs=1000.0))
-    assert got == rows(voronoi(pts, cs=1000.0).join(payload, "pid"))
+    with knn_cs(1000.0):
+        got = rows(voronoi(withp))
+        assert got == rows(voronoi(pts).join(payload, "pid"))
     assert len(got) == 200
 
     nodes = spark.createDataFrame(fixtures.road_nodes_pdf(500))
-    plan = _plan(snap_to_nodes(pts, nodes, cs=1000.0))
+    with knn_cs(1000.0):
+        plan = _plan(snap_to_nodes(pts, nodes))
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan
 
 
-def test_packed_pick_carries_hash_aggregate(spark, monkeypatch):
+def test_packed_pick_carries_hash_aggregate(spark, monkeypatch, knn_cs):
     """knn.packed_pick's preconditions, gated: a non-key DOUBLE carry rides
     the pick as a hash-aggregable min() buffer and comes out unchanged, the
     winner is the (score, id) argmin, and a string payload on
@@ -287,19 +292,21 @@ def test_packed_pick_carries_hash_aggregate(spark, monkeypatch):
     withp = pts.drop("w").withColumn(
         "caption", F.concat(F.lit("pt "), F.col("pid").cast("string"))
     )
-    nn = knn.nearest_neighbor(withp, others, cs=300.0, exclude_self=True)
+    with knn_cs(300.0):
+        nn = knn.nearest_neighbor(withp, others, exclude_self=True)
     plan = _plan(nn)
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan
     rows = nn.collect()
     assert {r["pid"]: r["caption"] for r in rows} == {i: f"pt {i}" for i in range(150)}
-    bare = knn.nearest_neighbor(pts.drop("w"), others, cs=300.0, exclude_self=True)
+    with knn_cs(300.0):
+        bare = knn.nearest_neighbor(pts.drop("w"), others, exclude_self=True)
     assert {r["pid"]: r["nn_id"] for r in rows} == {
         r["pid"]: r["nn_id"] for r in bare.collect()
     }
 
 
-def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypatch):
+def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypatch, knn_cs):
     """r4 q_voronoi_nn regression gate: Catalyst's size estimate ignores the
     9x cell explode, so under the session's 64 MB auto-broadcast threshold a
     mid-size self-join planned a BroadcastHashJoin that built a hash
@@ -309,9 +316,9 @@ def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypat
     SortMergeJoin at ANY size estimate (tiny test inputs are exactly the
     trigger condition: both sides sit far below the threshold, so without
     the merge hint the planner always broadcasts). On the default path
-    every call, a caller's ``cs`` included, COUNTS ``others`` in its extent
-    job, so the 200-row ``others`` is the build side (BuildRight) and the
-    exploded probe side is never broadcast
+    every call COUNTS ``others`` in its extent job, whatever cell size it
+    then runs at, so the 200-row ``others`` is the build side (BuildRight)
+    and the exploded probe side is never broadcast
     (``test_nearest_neighbor_broadcasts_counted_small_others``)."""
     from maskmypy_spark.operators.knn import knn_join
     from maskmypy_spark.operators.voronoi import voronoi
@@ -332,7 +339,7 @@ def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypat
     from maskmypy_spark.operators.knn import nearest_neighbor
 
     def no_residue_broadcast(build):
-        with monkeypatch.context() as m:
+        with monkeypatch.context() as m, knn_cs(1000.0):
             m.setattr(knn, "RESIDUE_BROADCAST_ROWS", 0)
             return build()
 
@@ -343,7 +350,7 @@ def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypat
     # rounds) must stay sort-merge at any size estimate — the original r4
     # gate, unchanged
     lines = _cell_join_lines(no_residue_broadcast(
-        lambda: nearest_neighbor(pts, others, cs=1000.0, exclude_self=True)
+        lambda: nearest_neighbor(pts, others, exclude_self=True)
     ))
     assert lines, "no cell join found in plan"
     assert all("SortMergeJoin" in ln for ln in lines), lines
@@ -353,15 +360,17 @@ def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypat
     # exploded probe side; later rounds MAY broadcast because the driver has
     # COUNTED the residue under knn.RESIDUE_BROADCAST_ROWS (a bound, not a
     # planner estimate), and results must be identical either way
-    lines = _cell_join_lines(voronoi(pts, cs=1000.0))
+    with knn_cs(1000.0):
+        lines = _cell_join_lines(voronoi(pts))
     assert lines, "no cell join found in plan"
     assert "BuildRight" in lines[0], lines
     assert all("NestedLoop" not in ln for ln in lines), lines
-    a = {tuple(r) for r in voronoi(pts, cs=1000.0).collect()}
+    with knn_cs(1000.0):
+        a = {tuple(r) for r in voronoi(pts).collect()}
     b = {
         tuple(r)
         for r in no_residue_broadcast(
-            lambda: nearest_neighbor(pts, others, cs=1000.0, exclude_self=True)
+            lambda: nearest_neighbor(pts, others, exclude_self=True)
         )
         .select("pid")
         .collect()
@@ -369,16 +378,17 @@ def test_nearest_neighbor_cell_join_never_broadcasts_fact_sides(spark, monkeypat
     assert len(a) == 200 and {r[0] for r in a} == {r[0] for r in b}
 
     lines = _cell_join_lines(no_residue_broadcast(
-        lambda: knn_join(pts, others, k=2, cs=1000.0, exclude_self=True)
+        lambda: knn_join(pts, others, k=2, exclude_self=True)
     ))
     assert lines, "no cell join found in plan"
     assert all("SortMergeJoin" in ln for ln in lines), lines
-    lines = _cell_join_lines(knn_join(pts, others, k=2, cs=1000.0, exclude_self=True))
+    with knn_cs(1000.0):
+        lines = _cell_join_lines(knn_join(pts, others, k=2, exclude_self=True))
     assert lines and "BuildRight" in lines[0], lines
 
 
 def test_nearest_neighbor_broadcasts_counted_small_others(spark, monkeypatch):
-    """With ``cs=None`` the extent job that sizes the cells also COUNTS
+    """The extent job that sizes the cells also COUNTS
     ``others``: under knn.RESIDUE_BROADCAST_ROWS every round's cell join
     broadcasts ``others`` as its build side (BuildRight) and the exploded
     probe side is never broadcast; with the bound at 0 the unbounded round
@@ -468,22 +478,22 @@ def test_plan_build_budget(spark, monkeypatch):
         assert built[0] <= budget, (name, built[0])
 
 
-def test_nearest_neighbor_results_cs_independent(spark):
+def test_nearest_neighbor_results_cs_independent(spark, knn_cs):
     """The starting cell size is a pure performance knob: results must be
     identical at any cs (the escalation loop guarantees exactness; the
     quantized argmin's granularity is sub-micrometer at every round)."""
     from maskmypy_spark.operators.voronoi import voronoi
 
     pts = spark.createDataFrame(fixtures.sensitive_points_pdf(400, seed=42))
-    outs = [
-        {tuple(r) for r in voronoi(pts, cs=cs).collect()}
-        for cs in (150.0, 450.0, 1350.0, None)
-    ]
+    outs = []
+    for cs in (150.0, 450.0, 1350.0, None):
+        with knn_cs(cs):
+            outs.append({tuple(r) for r in voronoi(pts).collect()})
     assert all(o == outs[0] for o in outs[1:])
     assert len(outs[0]) == 400
 
 
-def test_nearest_neighbor_salted_join_shape(spark, monkeypatch):
+def test_nearest_neighbor_salted_join_shape(spark, monkeypatch, knn_cs):
     """salt=4 must appear in the shuffle key (hot-cell scatter) and leave
     results identical to the unsalted plan."""
     from maskmypy_spark.operators.knn import knn_join, nearest_neighbor
@@ -494,20 +504,22 @@ def test_nearest_neighbor_salted_join_shape(spark, monkeypatch):
     # one dense cluster: all points mapped into a ~50m blob + sparse rest
     dense = pts.selectExpr("pid", "x % 50 + 1000.0 AS x", "y % 50 + 1000.0 AS y")
     others = dense.selectExpr("pid AS nn_id", "x AS nn_x", "y AS nn_y")
-    salted = nearest_neighbor(dense, others, cs=200.0, exclude_self=True, salt=4)
-    plain = nearest_neighbor(dense, others, cs=200.0, exclude_self=True)
+    with knn_cs(200.0):
+        salted = nearest_neighbor(dense, others, exclude_self=True, salt=4)
+        plain = nearest_neighbor(dense, others, exclude_self=True)
     assert "_sk" in _plan(salted, mode="simple")
     a = {tuple(r) for r in salted.select("pid", "nn_id", "nn_dist").collect()}
     b = {tuple(r) for r in plain.select("pid", "nn_id", "nn_dist").collect()}
     assert a == b
-    ks = knn_join(dense, others, k=2, cs=200.0, exclude_self=True, salt=4)
-    kp = knn_join(dense, others, k=2, cs=200.0, exclude_self=True)
+    with knn_cs(200.0):
+        ks = knn_join(dense, others, k=2, exclude_self=True, salt=4)
+        kp = knn_join(dense, others, k=2, exclude_self=True)
     a = {tuple(r) for r in ks.select("pid", "nn_id", "rank").collect()}
     b = {tuple(r) for r in kp.select("pid", "nn_id", "rank").collect()}
     assert a == b
 
 
-def test_knn_join_cs_independent_and_window_bounded(spark, monkeypatch):
+def test_knn_join_cs_independent_and_window_bounded(spark, monkeypatch, knn_cs):
     """knn_join carries nearest_neighbor's guarantees (VERDICT r03 next #6):
     results identical at any starting cell size (the k-th-distance
     convergence proof makes cs a pure performance knob), and the per-round
@@ -520,18 +532,18 @@ def test_knn_join_cs_independent_and_window_bounded(spark, monkeypatch):
 
     pts = spark.createDataFrame(fixtures.sensitive_points_pdf(400, seed=42))
     others = pts.selectExpr("pid AS nn_id", "x AS nn_x", "y AS nn_y")
-    outs = [
-        {
-            tuple(r)
-            for r in knn_join(pts, others, k=3, cs=cs, exclude_self=True).collect()
-        }
-        for cs in (150.0, 450.0, 1350.0, None)
-    ]
+    outs = []
+    for cs in (150.0, 450.0, 1350.0, None):
+        with knn_cs(cs):
+            outs.append({
+                tuple(r) for r in knn_join(pts, others, k=3, exclude_self=True).collect()
+            })
     assert all(o == outs[0] for o in outs[1:])
     assert len(outs[0]) == 1200
 
     _stub_materialize(monkeypatch)
-    plan = _plan(knn_join(pts, others, k=3, cs=450.0, exclude_self=True))
+    with knn_cs(450.0):
+        plan = _plan(knn_join(pts, others, k=3, exclude_self=True))
     assert "SortAggregate" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     # the rank<=k filter must push into the Window as a group limit: the
@@ -622,88 +634,6 @@ def test_k_anonymity_address_payload_joins_back_once(spark):
     )
     assert got == want and len(got) == 200
     assert len({r[-1] for r in got}) > 1  # k varies across the fixture
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """sources/bucketed.py: two tables bucketed on the join key with the
-    same bucket count join WITHOUT an Exchange on either side — the
-    persisted-shuffle co-location that saves re-moving the fact table on
-    every query at 100 TB. A plain parquet read of the same files (no
-    bucket spec) must show the Exchange, proving the gate is meaningful."""
-    from maskmypy_spark.sources import bucketed
-
-    pts = spark.createDataFrame(fixtures.sensitive_points_pdf(2000, seed=42))
-    k = pts.selectExpr("pid", "CAST(pid % 7 AS INT) AS k_anonymity")
-    bucketed.write_bucketed(pts, "t_pts_b", str(tmp_path / "pts_b"), "pid", 8)
-    bucketed.write_bucketed(k, "t_k_b", str(tmp_path / "k_b"), "pid", 8)
-    # disable auto-broadcast: at test scale the dim side broadcasts (which
-    # also disables bucketed scans); the gate targets the at-scale shuffle
-    # path where neither side fits in a broadcast
-    with_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = bucketed.read_bucketed(spark, "t_pts_b").join(
-            bucketed.read_bucketed(spark, "t_k_b"), "pid"
-        )
-        plan = _plan(j)
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
-        # broadcast is off, so ANY Exchange here would be a shuffle
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-        assert j.count() == 2000
-
-        # control: the same files WITHOUT the bucket spec shuffle both sides
-        raw = spark.read.parquet(str(tmp_path / "pts_b")).join(
-            spark.read.parquet(str(tmp_path / "k_b")), "pid"
-        )
-        assert "Exchange" in _plan(raw)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", with_thresh)
-        spark.sql("DROP TABLE IF EXISTS t_pts_b")
-        spark.sql("DROP TABLE IF EXISTS t_k_b")
-
-
-def test_k_verify_bucketed_address_exchange_free(spark, tmp_path):
-    """distance_join(right_cell_col=) + a cell-bucketed address table: the
-    k-verification build side scans exchange-free (its cell index was
-    persisted at write time), values identical to the computed-cell path.
-    One Exchange disappears vs the plain plan — at 100 TB that is the
-    recurring re-shuffle of the whole stored dimension."""
-    from maskmypy_spark import analysis
-    from maskmypy_spark.functions import cells
-    from maskmypy_spark.operators.donut import donut
-    from maskmypy_spark.sources import bucketed
-
-    CS = 250.0  # radius 500 / 2 — pinned, so the stored cell index is valid
-    pts = spark.createDataFrame(fixtures.sensitive_points_pdf(500, seed=42))
-    addr = spark.createDataFrame(fixtures.addresses_pdf(3000, seed=43))
-    addr_c = addr.withColumn("cell", F.expr(cells.cell_sql("ax", "ay", CS)))
-    bucketed.write_bucketed(addr_c, "t_addr_c", str(tmp_path / "addr_c"), "cell", 8)
-
-    m = donut(analysis.with_original(pts), 100.0, 500.0, seed=42)
-    disp = analysis.displacement_from_payload(m)
-
-    def kv(address, **kw):
-        return analysis.k_anonymity_address(
-            pts, m.drop("_orig_x", "_orig_y"), address, max_radius=500.0,
-            disp=disp, slim=True, cs=CS, **kw
-        ).select("pid", "k_anonymity")
-
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plain = kv(addr)
-        buck = kv(bucketed.read_bucketed(spark, "t_addr_c"), addr_cell_col="cell")
-        p_plain, p_buck = _plan(plain), _plan(buck)
-        assert "Bucketed: true" in p_buck, p_buck
-        n_ex = lambda p: p.count(") Exchange")
-        assert n_ex(p_buck) == n_ex(p_plain) - 1, (p_plain, p_buck)
-        a = {tuple(r) for r in plain.collect()}
-        b = {tuple(r) for r in buck.collect()}
-        assert a == b and len(a) == 500
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql("DROP TABLE IF EXISTS t_addr_c")
 
 
 def test_mask_filter_pushdown_to_scan(spark):
